@@ -72,14 +72,10 @@ object BarrierExprs {
         builder))
     }
 
-  def registerOnLiveSession(): Unit =
-    SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-
-  /** `c`, evaluated exactly once where it is projected. */
-  def evalOnce(c: Column): Column = {
-    registerOnLiveSession()
-    call_function("eval_once", c)
-  }
+  /** `c`, evaluated exactly once where it is projected. `eval_once`
+    * resolves in the session of the frame the column lands in, so the
+    * caller must have run [[register]] on that frame's `sparkSession` —
+    * not on the thread's active session, which may be another one.
+    */
+  def evalOnce(c: Column): Column = call_function("eval_once", c)
 }

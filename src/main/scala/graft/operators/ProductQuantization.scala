@@ -127,6 +127,7 @@ object ProductQuantization {
   def encode(vectors: DataFrame, idCol: String, vecCol: String,
       cb: Codebook): DataFrame = {
     graft.expressions.VectorHashExprs.register(vectors.sparkSession)
+    graft.expressions.BarrierExprs.register(vectors.sparkSession)
     vectors.select(col(idCol).as("id"),
       codesCol(transform(col(vecCol), x => x.cast("double")), cb)
         .as("codes"))
@@ -217,6 +218,7 @@ object ProductQuantization {
     TopK.requireIntegral(queries, idCol, "ivfpqTopK")
     val (m, _, sd) = checkCodebook(cb)
     graft.expressions.VectorHashExprs.register(corpus.sparkSession)
+    graft.expressions.BarrierExprs.register(corpus.sparkSession)
     val cents = if (coarse != null) coarse
       else Similarity.kmeansCentroids(corpus, idCol, vecCol, numCoarse)
     // ONE narrow projection computes the coarse cid AND the m codes —

@@ -588,6 +588,7 @@ object Similarity {
   def assignCentroidsJoin(docs: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, keepVec: Boolean = false): DataFrame = {
     graft.expressions.VectorHashExprs.register(docs.sparkSession)
+    graft.expressions.BarrierExprs.register(docs.sparkSession)
     // an empty centroid set would silently assign nothing and a
     // downstream dedup would "succeed" having deduplicated nothing —
     // the kernel path throws on construction; match it
@@ -633,6 +634,7 @@ object Similarity {
       vecCol: String, k: Int, numCentroids: Int = 16, nprobe: Int = 4,
       centroids: Array[(Int, Array[Double])] = null): DataFrame = {
     graft.expressions.VectorHashExprs.register(corpus.sparkSession)
+    graft.expressions.BarrierExprs.register(corpus.sparkSession)
     val cents = if (centroids != null) centroids
       else kmeansCentroids(corpus, idCol, vecCol, numCentroids)
 

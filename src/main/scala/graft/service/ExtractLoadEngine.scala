@@ -1,5 +1,9 @@
 package graft.service
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, ThreadFactory}
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -26,17 +30,25 @@ import graft.sources.GeoJsonZipSource
   *   5. stats refresh (A3; computed from the cached parse, one shuffle),
   *   6. success/failure response (K10).
   *
-  * Spark-action budget per load: ONE aggregation over the cached parse
-  * (layer/kind counts — replaces the reference-era per-layer isEmpty
-  * probes), ONE small header collect (rows ≈ entries per archive,
-  * bounded by archive layout, not data volume), one write per non-empty
-  * layer, one stats agg, two metadata writes, one response append.
+  * Spark-action budget per load: ONE parse action — the header collect
+  * (rows ≈ entries per archive, bounded by archive layout, not data
+  * volume) builds the cached parse, and each header's `feature_count`
+  * says which layers are live. Then every write of steps 3-5 is
+  * submitted AT ONCE: one write per non-empty layer, the `dataset` and
+  * `extension_file` upserts and the stats upsert. The writes are
+  * independent (distinct tables, each a dynamic overwrite with its own
+  * staging directory), and each is a small job, so running them back to
+  * back would leave most cores idle. Then one response append.
   *
   * Failure anywhere → failure response; a replay overwrites the same
   * partitions, which is how the reference's transaction-rollback intent
-  * is preserved at Spark scale (no cross-table ACID needed).
+  * is preserved at Spark scale (no cross-table ACID needed). A failed
+  * write does not cancel the others: the load waits for every write to
+  * return before it reports the first failure, so nothing of the load
+  * is still running once its response is published.
   */
 class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
+  import ExtractLoadEngine.Write
   import spark.implicits._
 
   val warehouse = new Warehouse(spark, warehouseRoot)
@@ -44,19 +56,26 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
   // ---- A2: per-stage wall-clock metrics ---------------------------------
   // The reference times every stage (`console.time` at
   // `extract-load-service.ts:301,322,327-336,360,...`); same points here:
-  // pre_clean (A1), parse_count (the one counts action), write_features
+  // pre_clean (A1), parse_count (the one parse action), write_features
   // (all layer writes), metadata (K8/K9), stats (A3), process_files total.
-  private val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
+  // A stage holds the wall interval its calls covered, from the first
+  // start to the last end: the writes of a stage overlap, so the sum of
+  // their durations could exceed the load's own wall time.
+  private val intervals = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
 
   /** Stage wall times (seconds) of the most recent load on this engine. */
-  def lastStageTimings: Map[String, Double] = timings.synchronized(timings.toMap)
+  def lastStageTimings: Map[String, Double] = intervals.synchronized(
+    intervals.map { case (stage, (t0, t1)) => stage -> (t1 - t0) / 1e9 }.toMap)
 
   private def timed[T](stage: String)(body: => T): T = {
     val t0 = System.nanoTime()
     try body
-    finally timings.synchronized {
-      timings(stage) =
-        timings.getOrElse(stage, 0.0) + (System.nanoTime() - t0) / 1e9
+    finally {
+      val t1 = System.nanoTime()
+      intervals.synchronized {
+        val (a, b) = intervals.getOrElse(stage, (t0, t1))
+        intervals(stage) = (math.min(a, t0), math.max(b, t1))
+      }
     }
   }
 
@@ -91,7 +110,7 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
   def processOswDataset(msg: QueueMessage): Unit = timed("process_files") {
     val datasetId = msg.data.tdei_dataset_id
     val userId = msg.data.user_id
-    timings.synchronized(timings.clear())
+    intervals.synchronized(intervals.clear())
 
     // A1: idempotent pre-clean across every table.
     timed("pre_clean")(warehouse.deleteDatasetRecords(datasetId))
@@ -100,83 +119,79 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
     val parsed = GeoJsonZipSource.read(spark, msg.data.file_upload_path, transform = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE action: per-(layer, kind) counts. Presence of any header row
-      // ⇔ at least one valid .geojson entry; feature counts decide which
-      // layer tables get a write.
-      val counts: Map[(String, String), Long] = timed("parse_count")(parsed
-        .groupBy($"layer", $"kind").count().collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
-      if (!counts.keys.exists(_._2 == "header"))
+      // ONE action: the header records, one per entry — bounded by archive
+      // layout (a few entries per ZIP), safe to collect. It also builds
+      // the cached parse that every write below reads. Presence of any
+      // header ⇔ at least one valid .geojson entry; the headers' feature
+      // counts decide which layer tables get a write.
+      val headers = timed("parse_count")(
+        parsed.filter($"kind" === "header").collect().sortBy(_.entry_seq))
+      if (headers.isEmpty)
         throw new RuntimeException("No valid .geojson files found in dataset archive.")
-      val featureCount: String => Long = l => counts.getOrElse((l, "feature"), 0L)
+      val featureCount: Map[String, Long] =
+        headers.groupMapReduce(_.layer)(_.feature_count)(_ + _)
 
       val features = parsed.filter($"kind" === "feature")
-
-      // Header rows: one per entry — bounded by archive layout (a few
-      // entries per ZIP), safe to collect.
-      val headers = parsed.filter($"kind" === "header")
-        .select($"entry_path", $"entry_seq", $"layer", $"header")
-        .collect()
-        .sortBy(_.getAs[Int]("entry_seq"))
 
       // Extension-file id allocation: dense per-dataset sequence in entry
       // order (driver-side; the reference memoizes the DB-generated id,
       // `extract-load-service.ts:59,123,456-458`).
-      val extEntries = headers.filter(_.getAs[String]("layer") == "extension")
+      val extEntries = headers.filter(_.layer == Layer.Extension.name)
       val extIds: Map[String, Int] =
-        extEntries.zipWithIndex.map { case (r, i) => r.getString(0) -> (i + 1) }.toMap
+        extEntries.zipWithIndex.map { case (h, i) => h.entry_path -> (i + 1) }.toMap
 
-      // 3. per-layer feature writes (K1–K7) — no isEmpty probes: the
-      // single counts aggregation already told us which layers are live.
-      Layer.all.foreach { layer =>
-        if (featureCount(layer.name) > 0) {
-          val slice = features.filter($"layer" === layer.name)
-          val out =
-            if (layer == Layer.Extension) {
-              val idMap = typedLit(extIds)
-              slice.select(
-                lit(datasetId).as("tdei_dataset_id"),
-                element_at(idMap, $"entry_path").as("ext_file_id"),
-                $"feature",
-                lit(userId).as("requested_by"))
-            } else
-              slice.select(
-                lit(datasetId).as("tdei_dataset_id"),
-                $"feature",
-                lit(userId).as("requested_by"))
-          timed("write_features")(warehouse.writeFeatures(layer.table, out))
-        }
+      // 3. per-layer feature writes (K1–K7), non-empty layers only.
+      val live = Layer.all.filter(l => featureCount.getOrElse(l.name, 0L) > 0)
+      val layerWrites = live.map { layer =>
+        val slice = features.filter($"layer" === layer.name)
+        val out =
+          if (layer == Layer.Extension) {
+            val idMap = typedLit(extIds)
+            slice.select(
+              lit(datasetId).as("tdei_dataset_id"),
+              element_at(idMap, $"entry_path").as("ext_file_id"),
+              $"feature",
+              lit(userId).as("requested_by"))
+          } else
+            slice.select(
+              lit(datasetId).as("tdei_dataset_id"),
+              $"feature",
+              lit(userId).as("requested_by"))
+        Write("write_features", () => warehouse.writeFeatures(layer.table, out))
       }
 
       // 4a. dataset metadata row (K8): last entry per layer wins, matching
       // the reference's sequential per-entry UPDATEs.
       val infoByLayer: Map[String, String] =
-        headers.filter(_.getAs[String]("layer") != "extension").map { r =>
-          r.getAs[String]("layer") -> additionalInfo(r.getAs[String]("header"))
-        }.toMap // toMap keeps the LAST value per key
-
+        headers.filter(_.layer != Layer.Extension.name)
+          .map(h => h.layer -> additionalInfo(h.header))
+          .toMap // toMap keeps the LAST value per key
       val metaCols = Layer.routingOrder.map { l =>
         lit(infoByLayer.get(l.name).orNull).cast(StringType).as(l.metaColumn.get)
       }
       val datasetRow = spark.range(1).select(
         (metaCols :+ lit(datasetId).as("tdei_dataset_id")): _*)
-      timed("metadata")(warehouse.upsertByDataset("dataset", datasetRow))
+      val datasetWrite = Write("metadata", () => warehouse.upsertByDataset("dataset", datasetRow))
 
       // 4b. extension_file rows (K9): name = basename sans extension.
-      if (extEntries.nonEmpty) {
-        val rows = extEntries.map { r =>
-          val path = r.getString(0)
-          (extIds(path), baseNameNoExt(path),
-            additionalInfo(r.getAs[String]("header")), userId)
-        }.toSeq
-        val extDf = rows.toDF("id", "name", "file_meta", "requested_by")
+      val extFileWrite = Option.when(extEntries.nonEmpty) {
+        val extDf = extEntries.toSeq
+          .map(h => (extIds(h.entry_path), baseNameNoExt(h.entry_path),
+            additionalInfo(h.header), userId))
+          .toDF("id", "name", "file_meta", "requested_by")
           .withColumn("tdei_dataset_id", lit(datasetId))
-        timed("metadata")(warehouse.upsertByDataset("extension_file", extDf))
+        Write("metadata", () => warehouse.upsertByDataset("extension_file", extDf))
       }
 
       // 5. stats refresh (A3) — from the cached parse, not a table re-read.
-      if (Layer.all.exists(l => featureCount(l.name) > 0))
-        timed("stats")(updateStats(datasetId, features))
+      val statsWrite = Option.when(layerWrites.nonEmpty) {
+        val stats = aggregateStats(
+          features.select(element_at(tableByLayer, $"layer").as("layer_table"), $"feature"),
+          datasetId)
+        Write("stats", () => warehouse.upsertByDataset("stats", stats))
+      }
+
+      writeAll(layerWrites ++ Seq(datasetWrite) ++ extFileWrite ++ statsWrite)
     } finally parsed.unpersist()
   }
 
@@ -184,11 +199,9 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
     * serialized as the JSON written to the dataset-info columns.
     */
   private[service] def additionalInfo(headerJson: String): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(headerJson)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val node = ExtractLoadEngine.mapper.readTree(headerJson).asInstanceOf[ObjectNode]
     node.remove("features"); node.remove("type")
-    mapper.writeValueAsString(node)
+    ExtractLoadEngine.mapper.writeValueAsString(node)
   }
 
   /** `path.parse(file_name).name` (`extract-load-service.ts:531`). */
@@ -217,19 +230,19 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
     (lon, lat)
   }
 
+  private val tableByLayer = typedLit(Layer.all.map(l => l.name -> l.table).toMap)
+
   /** A3 replacement: the reference calls an opaque stored procedure
     * (`content.tdei_update_osw_stats`); this engine's contract is a
-    * per-dataset aggregation — feature counts per layer table and
-    * geometry type, plus the bounding box of feature anchor positions.
-    * One shuffle (the groupBy), partial aggregation map-side, computed
-    * from the already-cached parsed features.
+    * per-dataset aggregation over (`layer_table`, `feature`) rows —
+    * feature counts per layer table and geometry type, plus the bounding
+    * box of feature anchor positions. One shuffle (the groupBy), partial
+    * aggregation map-side.
     */
-  private def updateStats(datasetId: String,
-      features: org.apache.spark.sql.Dataset[graft.sources.ParsedRecord]): Unit = {
-    val tableByLayer = typedLit(Layer.all.map(l => l.name -> l.table).toMap)
+  private def aggregateStats(rows: DataFrame, datasetId: String): DataFrame = {
     val (lon, lat) = anchor($"feature")
-    val stats = features
-      .select(element_at(tableByLayer, $"layer").as("layer_table"),
+    rows
+      .select($"layer_table",
         get_json_object($"feature", "$.geometry.type").as("geometry_type"),
         lon.as("__lon"), lat.as("__lat"))
       .groupBy($"layer_table", $"geometry_type")
@@ -237,7 +250,6 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
         min($"__lon").as("min_lon"), max($"__lon").as("max_lon"),
         min($"__lat").as("min_lat"), max($"__lat").as("max_lat"))
       .withColumn("tdei_dataset_id", lit(datasetId))
-    warehouse.upsertByDataset("stats", stats)
   }
 
   /** Legacy entry: stats from the stored tables (used when refreshing
@@ -245,22 +257,50 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
     */
   def updateStats(datasetId: String): Unit = {
     val perLayer = Layer.all.map(_.table).distinct.flatMap { t =>
-      if (warehouse.partitionExists(t, datasetId)) {
-        val (lon, lat) = anchor($"feature")
+      if (warehouse.partitionExists(t, datasetId))
         Some(spark.read.schema(warehouse.tableSchema(t)).parquet(warehouse.partitionPath(t, datasetId))
-          .select(lit(t).as("layer_table"),
-            get_json_object($"feature", "$.geometry.type").as("geometry_type"),
-            lon.as("__lon"), lat.as("__lat")))
-      } else None
+          .select(lit(t).as("layer_table"), $"feature"))
+      else None
     }
     if (perLayer.isEmpty) return
-    val all = perLayer.reduce(_ unionAll _)
-    val stats = all
-      .groupBy($"layer_table", $"geometry_type")
-      .agg(count(lit(1)).as("feature_count"),
-        min($"__lon").as("min_lon"), max($"__lon").as("max_lon"),
-        min($"__lat").as("min_lat"), max($"__lat").as("max_lat"))
-      .withColumn("tdei_dataset_id", lit(datasetId))
-    warehouse.upsertByDataset("stats", stats)
+    warehouse.upsertByDataset("stats", aggregateStats(perLayer.reduce(_ unionAll _), datasetId))
   }
+
+  /** Run the writes of one load at once, on a pool made for this load and
+    * shut down after it. The pool's threads are created here, in the
+    * calling thread, so they inherit its Spark local properties (job
+    * group, scheduler pool) and active session. Waits for every write,
+    * then rethrows the first failure in submission order, with the
+    * others attached as suppressed.
+    */
+  private def writeAll(writes: Seq[Write]): Unit = {
+    val pool = Executors.newFixedThreadPool(writes.size, ExtractLoadEngine.writerThreads)
+    try {
+      val inFlight = writes.map { w =>
+        pool.submit(new Callable[Unit] { def call(): Unit = timed(w.stage)(w.run()) })
+      }
+      val failures = inFlight.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
+  }
+}
+
+object ExtractLoadEngine {
+
+  /** Name of the threads that run a load's writes. */
+  private[graft] val WriterThreadName = "extract-load-write"
+
+  private val writerThreads: ThreadFactory = r => new Thread(r, WriterThreadName)
+
+  /** Shared by every load: an ObjectMapper is thread-safe once configured. */
+  private val mapper = new ObjectMapper()
+
+  /** One table write of a load, timed under `stage`. */
+  private final case class Write(stage: String, run: () => Unit)
 }

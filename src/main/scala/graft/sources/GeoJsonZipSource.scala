@@ -21,6 +21,12 @@ import graft.model.Layer
   * its features; root-level scalar header keys as a JSON object in
   * `header` — the reference's single-pass header capture, including keys
   * that appear AFTER the `features` array).
+  *
+  * A header record also carries `feature_count`, the number of feature
+  * records its entry emitted (0 on feature records). Collecting the
+  * header records alone therefore yields the per-layer feature counts:
+  * no aggregation over the features is needed to learn which layers a
+  * load must write.
   */
 final case class ParsedRecord(
     zip_path: String,
@@ -29,7 +35,8 @@ final case class ParsedRecord(
     layer: String,
     kind: String,
     feature: String,
-    header: String
+    header: String,
+    feature_count: Long
 )
 
 /** ZIP + GeoJSON source (reference S2–S7).
@@ -148,7 +155,8 @@ object GeoJsonZipSource {
 
   /** Single-pass parse of one FeatureCollection stream: emits each element
     * of the root `features` array as a compact-JSON "feature" record, then
-    * one trailing "header" record with the captured root scalars.
+    * one trailing "header" record with the captured root scalars and the
+    * number of feature records emitted before it.
     * Only one feature tree is in memory at a time.
     */
   def entryRecords(zipPath: String, entryPath: String, entrySeq: Int,
@@ -163,6 +171,7 @@ object GeoJsonZipSource {
       private var headerEmitted = false
       private var inFeatures = false
       private var rootStarted = false
+      private var features = 0L
 
       private def capture(key: String): Unit = {
         // reference: stringValue skipped when value == "FeatureCollection";
@@ -191,8 +200,9 @@ object GeoJsonZipSource {
             else {
               var node = mapper.readTree[com.fasterxml.jackson.databind.JsonNode](parser)
               if (transform) node = GeoFunctions.processGeometryNode(node, layer)
+              features += 1
               nextRec = ParsedRecord(zipPath, entryPath, entrySeq, layer,
-                "feature", mapper.writeValueAsString(node), null)
+                "feature", mapper.writeValueAsString(node), null, 0L)
             }
           } else {
             val t = parser.nextToken()
@@ -200,7 +210,7 @@ object GeoJsonZipSource {
               if (!headerEmitted) {
                 headerEmitted = true
                 nextRec = ParsedRecord(zipPath, entryPath, entrySeq, layer,
-                  "header", null, mapper.writeValueAsString(header))
+                  "header", null, mapper.writeValueAsString(header), features)
               } else return
             } else if (!rootStarted) {
               // tolerate any root shape; only objects produce fields

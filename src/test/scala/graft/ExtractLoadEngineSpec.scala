@@ -4,6 +4,9 @@ import java.io.{ByteArrayOutputStream, FileOutputStream}
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -254,5 +257,69 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ds = engine.warehouse.table("dataset").collect()(0)
     assert(ds.getAs[String]("node_info") == """{"name":"second"}""")
     assert(engine.warehouse.table("node").count() == 2)
+  }
+
+  test("stage timings are wall intervals: overlapping writes never exceed the load") {
+    val engine = mkEngine()
+    assert(engine.processRequest(request(writeZip(canonicalZip))).success)
+    val t = engine.lastStageTimings
+    assert(Seq("pre_clean", "parse_count", "write_features", "metadata", "stats",
+      "process_files").forall(t.contains), t)
+    assert(t("write_features") <= t("process_files"), t)
+    assert(t("metadata") <= t("process_files") && t("stats") <= t("process_files"), t)
+  }
+
+  test("a failed write: translated failure, every other write returned, nothing leaked") {
+    // content_zone as a plain file: the zone write cannot create its
+    // table directory, while the other writes of the load run beside it
+    val root = Files.createTempDirectory("graft-wh")
+    Files.writeString(root.resolve("content_zone"), "not a table")
+    val engine = new ExtractLoadEngine(spark, root.toString)
+    val resp = engine.processRequest(request(writeZip(canonicalZip)))
+    assert(!resp.success && resp.status == 500, resp)
+    assert(resp.message.startsWith("Error loading the data : ") &&
+      resp.message.contains("content_zone"), resp.message)
+    val published = engine.warehouse.table("response").collect()
+    assert(published.length == 1 && !published(0).getAs[Boolean]("success"))
+    // the other writes were not cancelled: each ran to its end and
+    // committed, so no table holds a staging directory
+    assert(engine.warehouse.table("node").count() == 3)
+    val staging = Files.walk(root).iterator().asScala
+      .filter(_.getFileName.toString.startsWith(".spark-staging-")).toList
+    assert(staging.isEmpty, staging)
+    val writers = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName == ExtractLoadEngine.WriterThreadName)
+    writers.foreach(_.join(10000))
+    assert(writers.forall(!_.isAlive), writers.map(_.getName))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("every job of a load runs in the caller's job group; one parse action") {
+    val engine = mkEngine()
+    val path = writeZip(canonicalZip)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("load-under-test", "one canonical load")
+      try assert(engine.processRequest(request(path)).success)
+      finally sc.clearJobGroup()
+      // the bus delivers events in order: once the marker job's start
+      // arrives, every job of the load has been seen
+      sc.setJobGroup("marker", "listener barrier")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    val load = groups.asScala.toList.takeWhile(_ != "marker")
+    assert(load.forall(_ == "load-under-test"), load)
+    // parse (repartition + collect), 4 layer writes, dataset and
+    // extension_file upserts, stats (aggregate + write), response append
+    assert(load.size == 11, load)
   }
 }

@@ -57,6 +57,23 @@ class ProductQuantizationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(6L) == null, got.toString)
   }
 
+  test("encode resolves eval_once in the frame's session, not the thread's active one") {
+    val own = spark.newSession()
+    val other = spark.newSession()
+    val df = {
+      import own.implicits._
+      Seq((1L, Seq(1.0, 1.0, 0.0, 4.0))).toDF("vec_id", "embedding")
+    }
+    @volatile var got: scala.util.Try[Seq[Any]] = null
+    val caller = new Thread(() => {
+      SparkSession.setActiveSession(other)
+      got = scala.util.Try(
+        PQ.encode(df, "vec_id", "embedding", cb).collect().toSeq.map(_.getSeq[Any](1).toList))
+    })
+    caller.start(); caller.join()
+    assert(got.get == Seq(List(0, 0)))
+  }
+
   test("adcTopK: distances are exact table sums; self and degenerates excluded") {
     val df = vecs(
       (1L, Seq(1.0, 1.0, 0.0, 4.0)),
