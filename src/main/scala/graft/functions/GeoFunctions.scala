@@ -184,6 +184,125 @@ object GeoFunctions extends Serializable {
     catch { case _: Exception => coordsJson }
   }
 
+  // ---- stats (A3) -------------------------------------------------------
+  // The stats of a load fold over the feature trees the parse already
+  // holds. Each definition reads a tree the way a JSON-path lookup reads
+  // the feature text the load stores: a number Jackson cannot write as a
+  // number (a double that overflowed to infinity) is stored as a string.
+
+  /** `key` of an object node; null when `node` is no object or the value
+    * is missing or JSON null.
+    */
+  private def member(node: JsonNode, key: String): JsonNode =
+    if (node == null || !node.isObject) null
+    else {
+      val v = node.get(key)
+      if (v == null || v.isNull) null else v
+    }
+
+  /** `geometry.type` of a feature: a string's own text, any other value
+    * as compact JSON, null when the feature has no geometry or type.
+    */
+  def geometryType(feature: JsonNode): String = {
+    val t = member(member(feature, "geometry"), "type")
+    if (t == null) null
+    else if (t.isTextual) t.asText
+    else if (nonFinite(t)) t.asDouble.toString
+    else mapper.writeValueAsString(t)
+  }
+
+  /** Anchor position of a feature, the basis of the stats bbox: follow
+    * first elements from `geometry.coordinates` down to the first
+    * non-array; `lon` is that element when it is a number, `lat` the
+    * element after it when that is one too. A string `coordinates` is
+    * read as the JSON text it holds. Anything else has no anchor.
+    */
+  def anchor(feature: JsonNode): (Option[Double], Option[Double]) = {
+    val coords = member(member(feature, "geometry"), "coordinates")
+    if (coords == null) (None, None)
+    else if (coords.isTextual) anchorText(coords.asText)
+    else {
+      var a = coords
+      while (a.isArray && a.size > 0 && a.get(0).isArray) a = a.get(0)
+      if (!a.isArray || a.size == 0) (None, None)
+      else {
+        val lon = coordinate(a.get(0))
+        (lon, if (lon.isDefined && a.size > 1) coordinate(a.get(1)) else None)
+      }
+    }
+  }
+
+  /** A double Jackson writes as a string ("Infinity"): one that
+    * overflowed when it was parsed.
+    */
+  private def nonFinite(n: JsonNode): Boolean =
+    (n.isDouble || n.isFloat) && !n.asDouble.isFinite
+
+  /** A number as the stored text reads back: its value, which for a
+    * huge integer is infinity; none for a non-finite double.
+    */
+  private def coordinate(n: JsonNode): Option[Double] =
+    if (n.isNumber && !nonFinite(n)) Some(n.asDouble) else None
+
+  private val lonText = java.util.regex.Pattern.compile("""^\[+\s*([-+0-9.eE]+)""")
+  private val latText =
+    java.util.regex.Pattern.compile("""^\[+\s*[-+0-9.eE]+\s*,\s*([-+0-9.eE]+)""")
+
+  private def anchorText(coords: String): (Option[Double], Option[Double]) = {
+    def num(p: java.util.regex.Pattern): Option[Double] = {
+      val m = p.matcher(coords)
+      if (!m.find()) None
+      else try Some(java.lang.Double.parseDouble(m.group(1)))
+      catch { case _: NumberFormatException => None }
+    }
+    (num(lonText), num(latText))
+  }
+
+  /** Feature count and anchor bbox of the features of one geometry type:
+    * one stats row before its table and dataset are named. Min and max
+    * ignore missing anchors, like SQL aggregates ignore nulls.
+    */
+  final case class GeometryStats(geometry_type: String, feature_count: Long,
+      min_lon: Option[Double], max_lon: Option[Double],
+      min_lat: Option[Double], max_lat: Option[Double]) {
+    def merge(o: GeometryStats): GeometryStats = {
+      import GeometryStats.pick
+      GeometryStats(geometry_type, feature_count + o.feature_count,
+        pick(min_lon, o.min_lon)(_ < _), pick(max_lon, o.max_lon)(_ > _),
+        pick(min_lat, o.min_lat)(_ < _), pick(max_lat, o.max_lat)(_ > _))
+    }
+  }
+
+  object GeometryStats {
+    /** The stats of one feature. */
+    def of(feature: JsonNode): GeometryStats = {
+      val (lon, lat) = anchor(feature)
+      GeometryStats(geometryType(feature), 1L, lon, lon, lat, lat)
+    }
+
+    /** The stats of one stored feature string; text that is no JSON has
+      * neither type nor anchor.
+      */
+    def of(featureJson: String): GeometryStats =
+      of(if (featureJson == null) null
+        else try mapper.readTree(featureJson)
+        catch { case _: java.io.IOException => null })
+
+    /** Merge the stats that share a key, in first-seen key order. */
+    def fold[K](parts: IterableOnce[(K, GeometryStats)]): Seq[(K, GeometryStats)] = {
+      val byKey = scala.collection.mutable.LinkedHashMap[K, GeometryStats]()
+      parts.iterator.foreach { case (k, s) =>
+        byKey.updateWith(k)(o => Some(o.fold(s)(_.merge(s))))
+      }
+      byKey.toSeq
+    }
+
+    /** `b` when `a` is missing or `b` beats it, else `a`. */
+    private def pick(a: Option[Double], b: Option[Double])(
+        beats: (Double, Double) => Boolean): Option[Double] =
+      if (a.isEmpty || (b.isDefined && beats(b.get, a.get))) b else a
+  }
+
   // ---- Column API -------------------------------------------------------
 
   val stripZUdf = udf((c: String) => stripZJson(c))

@@ -32,7 +32,10 @@ import org.apache.spark.sql.functions._
   * Design for 100 TB: one shard in memory at a time inside
   * `mapPartitions`; the CD walk is O(#entries); `maxEntryBytes`
   * refuses oversized members BEFORE inflating; deflate inflates to
-  * exactly the declared size (wrong-size streams refuse).
+  * exactly the declared size (wrong-size streams refuse). The walk is
+  * two steps — [[listZip]] (the central directory, no member data)
+  * and [[openMember]] (one member, streamed and verified) — so a
+  * caller that needs no whole member can stream each one instead.
   */
 object Zip {
 
@@ -77,9 +80,11 @@ object Zip {
   private def le64(b: Array[Byte], o: Int): Long =
     le32(b, o) | (le32(b, o + 4) << 32)
 
-  /** Random-access view of one archive — the column operator wraps a
-    * byte array, the path-level source (`sources.ZipShardSource`)
-    * wraps a seekable Hadoop stream, and BOTH run [[walkZip]], so the
+  /** Random-access view of one archive — the column operator and
+    * `sources.GeoJsonZipSource.expand` wrap a byte array, the
+    * path-level sources (`sources.ZipShardSource`,
+    * `sources.GeoJsonZipSource.read`) wrap a seekable Hadoop stream,
+    * and ALL of them run [[listZip]] and [[openMember]], so the
     * honesty contracts cannot drift.
     */
   private[graft] trait ZipReader {
@@ -107,19 +112,44 @@ object Zip {
     catch { case _: MalformedShardException => None }
   }
 
-  /** The SINGLE ZIP state machine over random access: locate the
-    * EOCD (through ≤64 KiB of trailing comment), follow the ZIP64
-    * locator/record when sentinel fields demand it, materialize the
-    * CENTRAL directory (≤ `maxCdBytes` — the authoritative member
-    * list), then per member seek to its local header, read the
-    * compressed bytes, inflate to exactly the declared size, and
-    * verify the CRC-32. Residency is the CD plus ONE member.
-    * Structural violations throw [[MalformedShardException]]; the
-    * column operator maps that to emit-nothing.
+  /** One file member as the central directory lists it: name, method
+    * (0 stored, 8 deflate), declared CRC-32, compressed and
+    * uncompressed sizes, and the absolute offset of its data.
+    */
+  private[graft] final case class ZipMember(name: String, method: Int,
+      crc: Long, compSize: Long, size: Long, dataOff: Long)
+
+  /** Materialize every file member: [[listZip]], refuse any member
+    * over `maxEntryBytes` before reading one, then read each member
+    * through [[openMember]] into an array of its declared size.
+    * Residency is the CD plus ONE member. Violations throw
+    * [[MalformedShardException]]; the column operator maps that to
+    * emit-nothing.
     */
   private[graft] def walkZip(in: ZipReader, maxEntryBytes: Int,
       maxCdBytes: Int, shard: String)
       : Iterator[(String, Array[Byte], String)] = {
+    val members = listZip(in, maxCdBytes, shard)
+    members.find(_.size > maxEntryBytes).foreach { m =>
+      throw new MalformedShardException(s"$shard: member of ${m.size} " +
+        s"bytes over the $maxEntryBytes cap")
+    }
+    members.iterator.map { m =>
+      (m.name, materialize(in, m, shard),
+        if (m.method == 0) "stored" else "deflate")
+    }
+  }
+
+  /** The SINGLE ZIP listing over random access: locate the EOCD
+    * (through ≤64 KiB of trailing comment), follow the ZIP64
+    * locator/record when sentinel fields demand it, materialize the
+    * CENTRAL directory (≤ `maxCdBytes` — the authoritative member
+    * list), check each member's local header and that no two members'
+    * data overlap. Reads no member data; directory entries are
+    * skipped. Structural violations throw [[MalformedShardException]].
+    */
+  private[graft] def listZip(in: ZipReader, maxCdBytes: Int,
+      shard: String): Vector[ZipMember] = {
     def fail(why: String): Nothing =
       throw new MalformedShardException(s"$shard: $why")
     val fileLen = in.length
@@ -184,8 +214,7 @@ object Zip {
         s"$maxCdBytes cap")
     val cd = new Array[Byte](cdSize.toInt)
     in.readFully(cdOff, cd, 0, cdSize.toInt)
-    val out = Vector
-      .newBuilder[(String, Int, Long, Long, Long, Long)]
+    val out = Vector.newBuilder[ZipMember]
     val ranges = Vector.newBuilder[(Long, Long)] // member [lho, dataEnd)
     var pos = 0L
     var i = 0L
@@ -240,9 +269,6 @@ object Zip {
       }
       val name = new String(cd, o + 46, nameLen, "UTF-8")
       if (!name.endsWith("/")) {
-        if (uncompSize > maxEntryBytes)
-          fail(s"member of $uncompSize bytes over the " +
-            s"$maxEntryBytes cap")
         // deflate worst-case expansion bound: a compSize far beyond
         // it is a crafted field, not compression
         if (compSize > uncompSize + (uncompSize >> 9) + 4096)
@@ -258,7 +284,7 @@ object Zip {
         val dataOff = lho + 30 + le16(lh, 26) + le16(lh, 28)
         if (dataOff + compSize > fileLen) fail("member data overruns")
         ranges += ((lho, dataOff + compSize))
-        out += ((name, method, crc, compSize, uncompSize, dataOff))
+        out += ZipMember(name, method, crc, compSize, uncompSize, dataOff)
       }
       pos += 46 + nameLen + extraLen + commentLen
       i += 1
@@ -273,61 +299,106 @@ object Zip {
         fail("overlapping member data")
       j += 1
     }
-    // phase 2, LAZY: member bytes read + verified one at a time —
-    // residency stays CD + one member whatever the archive size
-    out.result().iterator.map {
-      case (name, method, crc, compSize, uncompSize, dataOff) =>
-        val comp = new Array[Byte](compSize.toInt)
-        in.readFully(dataOff, comp, 0, compSize.toInt)
-        if (method == 0) {
-          if (compSize != uncompSize)
-            fail("stored member with unequal sizes")
-          if (!crcOk(comp, crc)) fail("member CRC mismatch")
-          (name, comp, "stored")
-        } else if (method == 8) {
-          val data = inflateRaw(comp, 0, comp.length,
-            uncompSize.toInt).getOrElse(fail("corrupt deflate stream"))
-          if (!crcOk(data, crc)) fail("member CRC mismatch")
-          (name, data, "deflate")
-        } else fail(s"unknown compression method $method")
+    out.result()
+  }
+
+  /** Stream one member's bytes: stored data as it lies, deflate data
+    * inflated as it is read, in chunks of at most 64 KiB, so a member
+    * of any size costs one chunk of memory. Reaching the end verifies
+    * the size and CRC-32 the central directory declared; a mismatch, a
+    * corrupt or truncated deflate stream, or an unknown method throws
+    * [[MalformedShardException]].
+    */
+  private[graft] def openMember(in: ZipReader, m: ZipMember,
+      shard: String): java.io.InputStream = new MemberStream(in, m, shard)
+
+  private final class MemberStream(in: ZipReader, m: ZipMember,
+      shard: String) extends java.io.InputStream {
+    private def fail(why: String): Nothing =
+      throw new MalformedShardException(s"$shard: ${m.name}: $why")
+    if (m.method != 0 && m.method != 8)
+      fail(s"unknown compression method ${m.method}")
+    if (m.method == 0 && m.compSize != m.size)
+      fail("stored member with unequal sizes")
+    private val inf =
+      if (m.method == 8) new java.util.zip.Inflater(true) else null
+    private val chunk = if (inf == null) null
+      else new Array[Byte](math.max(1L, math.min(m.compSize, 1L << 16)).toInt)
+    private val crc = new java.util.zip.CRC32()
+    private var consumed = 0L // compressed bytes taken from the archive
+    private var produced = 0L
+    private var ended = false
+
+    private def take(buf: Array[Byte], off: Int, len: Int): Int = {
+      val n = math.min(len.toLong, m.compSize - consumed).toInt
+      if (n > 0) in.readFully(m.dataOff + consumed, buf, off, n)
+      consumed += n
+      n
     }
-  }
 
-  private def crcOk(data: Array[Byte], declared: Long): Boolean = {
-    val c = new java.util.zip.CRC32()
-    c.update(data)
-    c.getValue == declared
-  }
-
-  /** Raw (nowrap) inflate to EXACTLY `expected` bytes. */
-  private def inflateRaw(bytes: Array[Byte], off: Int, len: Int,
-      expected: Int): Option[Array[Byte]] = {
-    val inf = new java.util.zip.Inflater(true)
-    try {
-      inf.setInput(bytes, off, len)
-      val out = new Array[Byte](expected)
-      var pos = 0
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(out, pos, expected - pos)
-          catch { case _: java.util.zip.DataFormatException => return None }
-        if (inf.needsDictionary()) return None
-        pos += n
-        if (n == 0 && !inf.finished()) {
-          if (pos == expected) {
-            // either exactly done (finished on next probe) or overrun
-            val probe = new Array[Byte](1)
-            val extra =
-              try inf.inflate(probe)
-              catch {
-                case _: java.util.zip.DataFormatException => return None
-              }
-            if (extra > 0 || !inf.finished()) return None
-          } else return None // starved mid-stream
+    private def inflate(b: Array[Byte], off: Int, len: Int): Int = {
+      var n = 0
+      while (n == 0) {
+        n = try inf.inflate(b, off, len) catch {
+          case _: java.util.zip.DataFormatException =>
+            fail("corrupt deflate stream")
+        }
+        if (n == 0) {
+          if (inf.finished()) return -1
+          if (inf.needsDictionary()) fail("corrupt deflate stream")
+          if (inf.needsInput()) {
+            val c = take(chunk, 0, chunk.length)
+            if (c == 0) fail("corrupt deflate stream") // input ran out
+            inf.setInput(chunk, 0, c)
+          }
         }
       }
-      if (pos != expected) None else Some(out)
-    } finally inf.end()
+      n
+    }
+
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      if (ended) return -1
+      if (len == 0) return 0
+      val n = if (inf == null) take(b, off, len) else inflate(b, off, len)
+      if (n <= 0) {
+        ended = true
+        close()
+        if (produced != m.size) fail("member size differs from the " +
+          "central directory")
+        if (crc.getValue != m.crc) fail("member CRC mismatch")
+        -1
+      } else {
+        produced += n
+        if (produced > m.size) fail("member longer than declared")
+        crc.update(b, off, n)
+        n
+      }
+    }
+
+    override def read(): Int = {
+      val one = new Array[Byte](1)
+      if (read(one, 0, 1) < 0) -1 else one(0) & 0xFF
+    }
+
+    override def close(): Unit = if (inf != null) inf.end()
+  }
+
+  /** One member's bytes in an array of its declared size, verified. */
+  private def materialize(in: ZipReader, m: ZipMember,
+      shard: String): Array[Byte] = {
+    val out = new Array[Byte](m.size.toInt)
+    val s = openMember(in, m, shard)
+    try {
+      var pos = 0
+      while (pos < out.length) {
+        val n = s.read(out, pos, out.length - pos)
+        if (n < 0) throw new MalformedShardException(s"$shard: ${m.name}: " +
+          "member shorter than declared")
+        pos += n
+      }
+      s.read() // the end: verifies the size and the CRC-32
+      out
+    } finally s.close()
   }
 
   // ---- encoder (round-trip twin; also the fixture/smoke builder) -----

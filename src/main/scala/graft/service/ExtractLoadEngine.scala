@@ -4,14 +4,16 @@ import java.util.concurrent.{Callable, ExecutionException, Executors, ThreadFact
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.PartitionPruningRDD
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.GeoFunctions.GeometryStats
 import graft.model.{Layer, LoadResponse, QueueMessage}
 import graft.sinks.Warehouse
-import graft.sources.GeoJsonZipSource
+import graft.sources.{GeoJsonZipSource, ParsedRecord}
 
 /** The extract-load pipeline (reference
   * `src/service/extract-load-service.ts:242-345`), Spark-first.
@@ -27,18 +29,22 @@ import graft.sources.GeoJsonZipSource
   *      (K9; ids are a per-dataset dense sequence in archive entry
   *      order — the reference's DB sequence is opaque, so the contract
   *      here is ours),
-  *   5. stats refresh (A3; computed from the cached parse, one shuffle),
+  *   5. stats refresh (A3; a local fold of the header records, which
+  *      carry each entry's stats),
   *   6. success/failure response (K10).
   *
   * Spark-action budget per load: ONE parse action — the header collect
   * (rows ≈ entries per archive, bounded by archive layout, not data
-  * volume) builds the cached parse, and each header's `feature_count`
-  * says which layers are live. Then every write of steps 3-5 is
-  * submitted AT ONCE: one write per non-empty layer, the `dataset` and
-  * `extension_file` upserts and the stats upsert. The writes are
-  * independent (distinct tables, each a dynamic overwrite with its own
-  * staging directory), and each is a small job, so running them back to
-  * back would leave most cores idle. Then one response append.
+  * volume) builds the cached parse, one task per `.geojson` entry. Each
+  * header's `feature_count` says which layers are live, and its `stats`
+  * hold the entry's counts and anchor bboxes per geometry type, so the
+  * stats rows need no pass over the features. Then every write of
+  * steps 3-5 is submitted AT ONCE: one write per non-empty layer, and
+  * the `dataset`, `extension_file` and `stats` upserts of rows built in
+  * this process. The writes are independent (distinct tables, each a
+  * dynamic overwrite with its own staging directory), and each is a
+  * small job, so running them back to back would leave most cores idle.
+  * Then one response append. No step of a load shuffles.
   *
   * Failure anywhere → failure response; a replay overwrites the same
   * partitions, which is how the reference's transaction-rollback intent
@@ -58,26 +64,13 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
   // `extract-load-service.ts:301,322,327-336,360,...`); same points here:
   // pre_clean (A1), parse_count (the one parse action), write_features
   // (all layer writes), metadata (K8/K9), stats (A3), process_files total.
-  // A stage holds the wall interval its calls covered, from the first
-  // start to the last end: the writes of a stage overlap, so the sum of
-  // their durations could exceed the load's own wall time.
-  private val intervals = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
+  // Each load keeps its own clock; loads may run at once on one engine.
+  @volatile private var lastTimings = Map.empty[String, Double]
 
-  /** Stage wall times (seconds) of the most recent load on this engine. */
-  def lastStageTimings: Map[String, Double] = intervals.synchronized(
-    intervals.map { case (stage, (t0, t1)) => stage -> (t1 - t0) / 1e9 }.toMap)
-
-  private def timed[T](stage: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    try body
-    finally {
-      val t1 = System.nanoTime()
-      intervals.synchronized {
-        val (a, b) = intervals.getOrElse(stage, (t0, t1))
-        intervals(stage) = (math.min(a, t0), math.max(b, t1))
-      }
-    }
-  }
+  /** Stage wall times (seconds) of the load that finished last on this
+    * engine, all from that one load.
+    */
+  def lastStageTimings: Map[String, Double] = lastTimings
 
   def processRequest(msg: QueueMessage): LoadResponse = {
     // failures route through the terminal error translation
@@ -107,17 +100,25 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
     resp
   }
 
-  def processOswDataset(msg: QueueMessage): Unit = timed("process_files") {
+  def processOswDataset(msg: QueueMessage): Unit = {
+    val clock = new ExtractLoadEngine.StageClock
+    try clock.timed("process_files")(load(msg, clock))
+    finally lastTimings = clock.seconds
+  }
+
+  private def load(msg: QueueMessage, clock: ExtractLoadEngine.StageClock): Unit = {
+    import clock.timed
     val datasetId = msg.data.tdei_dataset_id
     val userId = msg.data.user_id
-    intervals.synchronized(intervals.clear())
 
     // A1: idempotent pre-clean across every table.
     timed("pre_clean")(warehouse.deleteDatasetRecords(datasetId))
 
-    // 2. streamed source with the geometry transform fused in.
-    val parsed = GeoJsonZipSource.read(spark, msg.data.file_upload_path, transform = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // 2. streamed source with the geometry transform fused in: one
+    // partition per .geojson entry.
+    val (records, layerOf) =
+      GeoJsonZipSource.readEntries(spark, msg.data.file_upload_path, transform = true)
+    val parsed = records.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // ONE action: the header records, one per entry — bounded by archive
       // layout (a few entries per ZIP), safe to collect. It also builds
@@ -125,13 +126,11 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
       // header ⇔ at least one valid .geojson entry; the headers' feature
       // counts decide which layer tables get a write.
       val headers = timed("parse_count")(
-        parsed.filter($"kind" === "header").collect().sortBy(_.entry_seq))
+        parsed.filter(_.kind == "header").collect().sortBy(_.entry_seq))
       if (headers.isEmpty)
         throw new RuntimeException("No valid .geojson files found in dataset archive.")
       val featureCount: Map[String, Long] =
         headers.groupMapReduce(_.layer)(_.feature_count)(_ + _)
-
-      val features = parsed.filter($"kind" === "feature")
 
       // Extension-file id allocation: dense per-dataset sequence in entry
       // order (driver-side; the reference memoizes the DB-generated id,
@@ -143,7 +142,11 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
       // 3. per-layer feature writes (K1–K7), non-empty layers only.
       val live = Layer.all.filter(l => featureCount.getOrElse(l.name, 0L) > 0)
       val layerWrites = live.map { layer =>
-        val slice = features.filter($"layer" === layer.name)
+        // only the cached partitions of this layer's entries
+        val name = layer.name
+        val slice = spark.createDataset(
+          PartitionPruningRDD.create(parsed, i => layerOf.lift(i).contains(name))
+            .filter(_.kind == "feature"))(ExtractLoadEngine.recordEncoder)
         val out =
           if (layer == Layer.Extension) {
             val idMap = typedLit(extIds)
@@ -169,7 +172,7 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
       val metaCols = Layer.routingOrder.map { l =>
         lit(infoByLayer.get(l.name).orNull).cast(StringType).as(l.metaColumn.get)
       }
-      val datasetRow = spark.range(1).select(
+      val datasetRow = spark.range(0, 1, 1, 1).select(
         (metaCols :+ lit(datasetId).as("tdei_dataset_id")): _*)
       val datasetWrite = Write("metadata", () => warehouse.upsertByDataset("dataset", datasetRow))
 
@@ -183,15 +186,14 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
         Write("metadata", () => warehouse.upsertByDataset("extension_file", extDf))
       }
 
-      // 5. stats refresh (A3) — from the cached parse, not a table re-read.
+      // 5. stats refresh (A3) — the fold of the headers' per-entry stats.
       val statsWrite = Option.when(layerWrites.nonEmpty) {
-        val stats = aggregateStats(
-          features.select(element_at(tableByLayer, $"layer").as("layer_table"), $"feature"),
-          datasetId)
+        val stats = statsFrame(headers.toSeq.flatMap(h =>
+          h.stats.map(tableOf(h.layer) -> _)), datasetId)
         Write("stats", () => warehouse.upsertByDataset("stats", stats))
       }
 
-      writeAll(layerWrites ++ Seq(datasetWrite) ++ extFileWrite ++ statsWrite)
+      writeAll(layerWrites ++ Seq(datasetWrite) ++ extFileWrite ++ statsWrite, clock)
     } finally parsed.unpersist()
   }
 
@@ -211,49 +213,29 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
     if (dot > 0) base.substring(0, dot) else base
   }
 
-  /** Anchor position of a feature: the first (lon, lat) pair in its
-    * coordinates tree at any nesting depth — the basis for the stats
-    * bbox (SURVEY A3: count + min/max lon/lat). Regex over the
-    * coordinates JSON: skip leading '['s, capture the first two
-    * numbers.
-    */
-  private def anchor(featureJson: org.apache.spark.sql.Column) = {
-    val coords = get_json_object(featureJson, "$.geometry.coordinates")
-    // number class includes exponent signs ("1.0E-5"); try_cast because a
-    // geometry-less/malformed feature yields "" and ANSI cast would fail
-    // the whole stats job for one bad row
-    val num = "[-+0-9.eE]+"
-    val lon = regexp_extract(coords,
-      s"^\\[+\\s*($num)", 1).try_cast("double")
-    val lat = regexp_extract(coords,
-      s"^\\[+\\s*$num\\s*,\\s*($num)", 1).try_cast("double")
-    (lon, lat)
-  }
-
-  private val tableByLayer = typedLit(Layer.all.map(l => l.name -> l.table).toMap)
+  private def tableOf(layer: String): String = Layer.all.find(_.name == layer).get.table
 
   /** A3 replacement: the reference calls an opaque stored procedure
-    * (`content.tdei_update_osw_stats`); this engine's contract is a
-    * per-dataset aggregation over (`layer_table`, `feature`) rows —
-    * feature counts per layer table and geometry type, plus the bounding
-    * box of feature anchor positions. One shuffle (the groupBy), partial
-    * aggregation map-side.
+    * (`content.tdei_update_osw_stats`); this engine's contract is, per
+    * dataset, layer table and geometry type, the feature count plus the
+    * bounding box of feature anchor positions (`GeoFunctions.anchor`).
+    * `parts` are partial stats per layer table; they merge here into the
+    * rows of a local relation, written by one task.
     */
-  private def aggregateStats(rows: DataFrame, datasetId: String): DataFrame = {
-    val (lon, lat) = anchor($"feature")
-    rows
-      .select($"layer_table",
-        get_json_object($"feature", "$.geometry.type").as("geometry_type"),
-        lon.as("__lon"), lat.as("__lat"))
-      .groupBy($"layer_table", $"geometry_type")
-      .agg(count(lit(1)).as("feature_count"),
-        min($"__lon").as("min_lon"), max($"__lon").as("max_lon"),
-        min($"__lat").as("min_lat"), max($"__lat").as("max_lat"))
+  private def statsFrame(parts: Seq[(String, GeometryStats)], datasetId: String): DataFrame =
+    GeometryStats.fold(parts.map { case (t, s) => (t, s.geometry_type) -> s })
+      .map { case ((t, _), s) =>
+        (t, s.geometry_type, s.feature_count, s.min_lon, s.max_lon, s.min_lat, s.max_lat)
+      }
+      .toDF("layer_table", "geometry_type", "feature_count",
+        "min_lon", "max_lon", "min_lat", "max_lat")
       .withColumn("tdei_dataset_id", lit(datasetId))
-  }
+      .coalesce(1)
 
   /** Legacy entry: stats from the stored tables (used when refreshing
-    * without a load in hand, mirroring the stored-proc call shape).
+    * without a load in hand, mirroring the stored-proc call shape). Each
+    * task folds its stored feature strings through the same definitions
+    * as a load; the partial stats are collected and merged here.
     */
   def updateStats(datasetId: String): Unit = {
     val perLayer = Layer.all.map(_.table).distinct.flatMap { t =>
@@ -263,7 +245,14 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
       else None
     }
     if (perLayer.isEmpty) return
-    warehouse.upsertByDataset("stats", aggregateStats(perLayer.reduce(_ unionAll _), datasetId))
+    val parts = perLayer.reduce(_ unionAll _).as[(String, String)].mapPartitions { rows =>
+      val partial = GeometryStats.fold(rows.map { case (t, f) =>
+        val s = GeometryStats.of(f)
+        (t, s.geometry_type) -> s
+      })
+      partial.iterator.map { case ((t, _), s) => (t, s) }
+    }.collect()
+    warehouse.upsertByDataset("stats", statsFrame(parts.toSeq, datasetId))
   }
 
   /** Run the writes of one load at once, on a pool made for this load and
@@ -273,11 +262,11 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
     * then rethrows the first failure in submission order, with the
     * others attached as suppressed.
     */
-  private def writeAll(writes: Seq[Write]): Unit = {
+  private def writeAll(writes: Seq[Write], clock: ExtractLoadEngine.StageClock): Unit = {
     val pool = Executors.newFixedThreadPool(writes.size, ExtractLoadEngine.writerThreads)
     try {
       val inFlight = writes.map { w =>
-        pool.submit(new Callable[Unit] { def call(): Unit = timed(w.stage)(w.run()) })
+        pool.submit(new Callable[Unit] { def call(): Unit = clock.timed(w.stage)(w.run()) })
       }
       val failures = inFlight.flatMap { f =>
         try { f.get(); None }
@@ -301,6 +290,33 @@ object ExtractLoadEngine {
   /** Shared by every load: an ObjectMapper is thread-safe once configured. */
   private val mapper = new ObjectMapper()
 
+  /** Derived once: deriving a product encoder reflects over the class. */
+  private val recordEncoder = Encoders.product[ParsedRecord]
+
   /** One table write of a load, timed under `stage`. */
   private final case class Write(stage: String, run: () => Unit)
+
+  /** Stage intervals of one load. A stage holds the wall interval its
+    * calls covered, from the first start to the last end: the writes of
+    * a stage overlap, so the sum of their durations could exceed the
+    * load's own wall time.
+    */
+  private final class StageClock {
+    private val intervals = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
+
+    def timed[T](stage: String)(body: => T): T = {
+      val t0 = System.nanoTime()
+      try body
+      finally {
+        val t1 = System.nanoTime()
+        intervals.synchronized {
+          val (a, b) = intervals.getOrElse(stage, (t0, t1))
+          intervals(stage) = (math.min(a, t0), math.max(b, t1))
+        }
+      }
+    }
+
+    def seconds: Map[String, Double] = intervals.synchronized(
+      intervals.map { case (stage, (t0, t1)) => stage -> (t1 - t0) / 1e9 }.toMap)
+  }
 }

@@ -1,18 +1,18 @@
 package graft.sources
 
-import java.io.{ByteArrayInputStream, InputStream}
-import java.util.zip.ZipInputStream
+import java.io.InputStream
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.functions.GeoFunctions
+import graft.functions.GeoFunctions.GeometryStats
 import graft.model.Layer
+import graft.operators.{MalformedShardException, Zip}
 
 /** One parsed record out of a dataset ZIP.
   *
@@ -22,11 +22,12 @@ import graft.model.Layer
   * `header` — the reference's single-pass header capture, including keys
   * that appear AFTER the `features` array).
   *
-  * A header record also carries `feature_count`, the number of feature
-  * records its entry emitted (0 on feature records). Collecting the
-  * header records alone therefore yields the per-layer feature counts:
-  * no aggregation over the features is needed to learn which layers a
-  * load must write.
+  * A header record also carries what its entry's features add up to:
+  * `feature_count`, the number of feature records the entry emitted, and
+  * `stats`, their count and anchor bbox per geometry type (feature
+  * records carry 0 and null). Collecting the header records alone
+  * therefore yields the per-layer feature counts and the load's stats
+  * rows: no aggregation over the features is needed.
   */
 final case class ParsedRecord(
     zip_path: String,
@@ -36,7 +37,8 @@ final case class ParsedRecord(
     kind: String,
     feature: String,
     header: String,
-    feature_count: Long
+    feature_count: Long,
+    stats: Seq[GeometryStats]
 )
 
 /** ZIP + GeoJSON source (reference S2–S7).
@@ -44,19 +46,27 @@ final case class ParsedRecord(
   * The reference streams a ZIP from blob storage, walks entries serially,
   * and token-streams each `.geojson` so the file is never materialized
   * (`src/service/extract-load-service.ts:210-234,298-318`). Re-expressed
-  * for Spark: archive *paths* are distributed as a `Dataset[String]`, and
-  * each task opens a Hadoop `FSDataInputStream` and walks a lazy
-  * ZipInputStream/Jackson-streaming iterator — the archive is NEVER
-  * materialized in memory, so a 50 GB ZIP costs the same executor memory
-  * as a 5 MB one (one feature tree at a time). Parallelism comes from
-  * *many archives* (one row each) — at 100 TB the unit of work is the
-  * archive, matching the reference's job-per-ZIP model; a single ZIP is
-  * inherently serial in both systems (central-directory-less stream).
+  * for Spark: [[readEntries]] lists each archive's members from its
+  * central directory before any task runs ([[Zip.listZip]], a few reads
+  * at the end of the file), and each `.geojson` member becomes one task. The task opens the archive as
+  * a seekable Hadoop stream, inflates its member as it reads
+  * ([[Zip.openMember]], CRC-verified at the end) and walks it with a
+  * Jackson-streaming iterator — no member is ever materialized, so a 50 GB
+  * entry costs the same executor memory as a 5 MB one (one feature tree at
+  * a time). Parallelism comes from entries: the six layer files of one
+  * archive parse at once, and many archives add their entries to the same
+  * job.
+  *
+  * An input that is not a readable ZIP (no end-of-central-directory
+  * record, a broken central directory or local header) contributes no
+  * entries, the way a stream walk finds none in it. A member whose data
+  * fails its CRC-32 or does not inflate fails the task.
   *
   * With `transform = true` the per-feature geometry rewrite (P7) is FUSED
   * into the parse loop: the feature tree Jackson just built is rewritten
   * in place and serialized once, instead of serialize → re-parse in a UDF
-  * downstream (which would double the dominant CPU cost at scale).
+  * downstream (which would double the dominant CPU cost at scale). The
+  * stats fold reads the same tree.
   *
   * Entry filter parity: `.geojson` suffix, skip `__MACOSX/`
   * (`extract-load-service.ts:303`). Header capture parity
@@ -73,47 +83,59 @@ object GeoJsonZipSource {
   def isGeoJsonEntry(path: String): Boolean =
     path.endsWith(".geojson") && !path.contains("__MACOSX/")
 
+  /** Largest central directory an archive may have (~46+name bytes per
+    * member: millions of members).
+    */
+  private val MaxCdBytes = 1 << 28
+
+  /** One `.geojson` member of an archive; `seq` is its position among
+    * the archive's `.geojson` members.
+    */
+  private final case class Entry(zipPath: String, seq: Int, member: Zip.ZipMember)
+
+  /** The `.geojson` members of one archive in central-directory order;
+    * none when the input is not a readable ZIP.
+    */
+  private def geoJsonMembers(in: Zip.ZipReader, zipPath: String): Seq[Zip.ZipMember] =
+    try Zip.listZip(in, MaxCdBytes, zipPath).filter(m => isGeoJsonEntry(m.name))
+    catch { case _: MalformedShardException => Nil }
+
   /** Read one or more ZIP archives (path, glob, or directory) into a
-    * DataFrame of ParsedRecord, streaming each archive from the
-    * filesystem — no whole-file materialization.
+    * Dataset of ParsedRecord: the `.geojson` members are listed up front,
+    * and each member is streamed and parsed in its own task.
     */
   def read(spark: SparkSession, path: String,
       transform: Boolean = false): Dataset[ParsedRecord] = {
     import spark.implicits._
-    val files = resolvePaths(spark, path)
-    val hconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val parallelism =
-      math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
-    spark.createDataset(files)
-      .repartition(parallelism) // one archive per task when archives ≤ cores
-      .flatMap { p =>
-        val fsPath = new Path(p)
-        val fs = fsPath.getFileSystem(hconf.value)
-        val in = fs.open(fsPath)
-        val zin = new ZipInputStream(in)
-        // Failure backstop: close at task end. The happy path closes
-        // eagerly below — a task that iterates many archives must not
-        // hold every file descriptor until the task finishes.
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => zin.close()))
-        closeOnExhaustion(expandZipStream(p, zin, transform), zin)
-      }
+    spark.createDataset(readEntries(spark, path, transform)._1)
   }
 
-  /** Driver-side resolution of a path/glob/directory into archive files.
-    * One driver RPC per load — the per-archive bytes stay on executors.
+  /** [[read]] as an RDD with one partition per `.geojson` entry, in
+    * listing order, together with the layer of each partition's entry: a
+    * consumer of one layer can read just the partitions that hold it.
     */
-  private def resolvePaths(spark: SparkSession, path: String): Seq[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matched: Seq[FileStatus] = Option(fs.globStatus(p)) match {
-      case None | Some(Array()) => throw new java.io.FileNotFoundException(path)
-      case Some(arr) => arr.toSeq
+  def readEntries(spark: SparkSession, path: String,
+      transform: Boolean): (RDD[ParsedRecord], IndexedSeq[String]) = {
+    val hconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val entries = StreamUtil.resolveFiles(spark, path).flatMap { p =>
+      val reader = new HadoopZipReader(hconf.value, p)
+      try geoJsonMembers(reader, p).zipWithIndex.map { case (m, i) =>
+        Entry(p, i, m)
+      } finally reader.close()
     }
-    matched.flatMap { st =>
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-      else Seq(st)
-    }.map(_.getPath.toString)
+    // as many slices as entries: slice i holds entry i
+    val records = spark.sparkContext.parallelize(entries, math.max(1, entries.size))
+      .flatMap { e =>
+        val reader = new HadoopZipReader(hconf.value, e.zipPath)
+        // Failure backstop: close at task end. The happy path closes
+        // eagerly once the entry's records are exhausted.
+        Option(TaskContext.get()).foreach(
+          _.addTaskCompletionListener[Unit](_ => reader.close()))
+        val member = Zip.openMember(reader, e.member, e.zipPath)
+        StreamUtil.closeOnExhaustion(
+          entryRecords(e.zipPath, e.member.name, e.seq, member, transform), reader)
+      }
+    (records, entries.map(e => Layer.route(e.member.name).name).toIndexedSeq)
   }
 
   /** Expand a (path, content) DataFrame of already-materialized ZIP blobs
@@ -125,44 +147,31 @@ object GeoJsonZipSource {
     zips
       .select("path", "content")
       .as[(String, Array[Byte])]
-      .flatMap { case (zipPath, content) =>
-        expandZipStream(zipPath,
-          new ZipInputStream(new ByteArrayInputStream(content)), transform)
-      }
+      .flatMap { case (zipPath, content) => expandZip(zipPath, content, transform) }
   }
 
-  /** Expand in-memory ZIP bytes (tests / small fixtures). */
-  def expandZip(zipPath: String, content: Array[Byte],
-      transform: Boolean = false): Iterator[ParsedRecord] =
-    expandZipStream(zipPath,
-      new ZipInputStream(new ByteArrayInputStream(content)), transform)
-
-  /** Lazily walk a ZIP stream: for each `.geojson` entry, stream its
-    * features and finish with one header record. Entries are walked
-    * serially (a streamed ZIP admits nothing else — same constraint the
-    * reference documents at `extract-load-service.ts:305-307`).
+  /** Expand in-memory ZIP bytes: the same listing as [[read]], then each
+    * `.geojson` member in turn.
     */
-  def expandZipStream(zipPath: String, zin: ZipInputStream,
-      transform: Boolean): Iterator[ParsedRecord] = {
-    val entryIt = Iterator
-      .continually(zin.getNextEntry)
-      .takeWhile(_ != null)
-      .filter(e => !e.isDirectory && isGeoJsonEntry(e.getName))
-      .zipWithIndex
-      .map { case (e, i) => entryRecords(zipPath, e.getName, i, zin, transform) }
-    entryIt.flatten
+  def expandZip(zipPath: String, content: Array[Byte],
+      transform: Boolean = false): Iterator[ParsedRecord] = {
+    if (content == null) return Iterator.empty
+    val reader = new Zip.ArrayZipReader(content)
+    geoJsonMembers(reader, zipPath).iterator.zipWithIndex.flatMap { case (m, i) =>
+      entryRecords(zipPath, m.name, i, Zip.openMember(reader, m, zipPath), transform)
+    }
   }
 
   /** Single-pass parse of one FeatureCollection stream: emits each element
     * of the root `features` array as a compact-JSON "feature" record, then
-    * one trailing "header" record with the captured root scalars and the
-    * number of feature records emitted before it.
-    * Only one feature tree is in memory at a time.
+    * one trailing "header" record with the captured root scalars, the
+    * number of feature records emitted before it and their stats per
+    * geometry type. Only one feature tree is in memory at a time.
     */
   def entryRecords(zipPath: String, entryPath: String, entrySeq: Int,
       in: InputStream, transform: Boolean = false): Iterator[ParsedRecord] = {
     val layer = Layer.route(entryPath).name
-    val parser = jsonFactory.createParser(new NonClosingInputStream(in))
+    val parser = jsonFactory.createParser(in)
     val header = mapper.createObjectNode()
 
     new Iterator[ParsedRecord] {
@@ -172,6 +181,7 @@ object GeoJsonZipSource {
       private var inFeatures = false
       private var rootStarted = false
       private var features = 0L
+      private val stats = scala.collection.mutable.LinkedHashMap[String, GeometryStats]()
 
       private def capture(key: String): Unit = {
         // reference: stringValue skipped when value == "FeatureCollection";
@@ -201,8 +211,10 @@ object GeoJsonZipSource {
               var node = mapper.readTree[com.fasterxml.jackson.databind.JsonNode](parser)
               if (transform) node = GeoFunctions.processGeometryNode(node, layer)
               features += 1
+              val s = GeometryStats.of(node)
+              stats.updateWith(s.geometry_type)(o => Some(o.fold(s)(_.merge(s))))
               nextRec = ParsedRecord(zipPath, entryPath, entrySeq, layer,
-                "feature", mapper.writeValueAsString(node), null, 0L)
+                "feature", mapper.writeValueAsString(node), null, 0L, null)
             }
           } else {
             val t = parser.nextToken()
@@ -210,7 +222,8 @@ object GeoJsonZipSource {
               if (!headerEmitted) {
                 headerEmitted = true
                 nextRec = ParsedRecord(zipPath, entryPath, entrySeq, layer,
-                  "header", null, mapper.writeValueAsString(header), features)
+                  "header", null, mapper.writeValueAsString(header), features,
+                  stats.values.toSeq)
               } else return
             } else if (!rootStarted) {
               // tolerate any root shape; only objects produce fields
@@ -243,16 +256,5 @@ object GeoJsonZipSource {
         r
       }
     }
-  }
-
-  private def closeOnExhaustion[T](it: Iterator[T],
-      closeable: java.io.Closeable): Iterator[T] =
-    StreamUtil.closeOnExhaustion(it, closeable)
-
-  /** Jackson closes the stream it parses by default; the ZipInputStream
-    * must survive to serve the next entry.
-    */
-  private final class NonClosingInputStream(in: InputStream) extends java.io.FilterInputStream(in) {
-    override def close(): Unit = () // leave the underlying zip stream open
   }
 }

@@ -1,9 +1,12 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+
+import graft.operators.{MalformedShardException, Zip}
 
 /** Shared plumbing for the streaming file sources
-  * ([[GeoJsonZipSource]], [[WarcSource]]).
+  * ([[GeoJsonZipSource]], [[WarcSource]], [[ZipShardSource]]).
   */
 private[sources] object StreamUtil {
 
@@ -54,4 +57,23 @@ private[sources] final class SerializableHadoopConf(
     value = new Configuration(false)
     value.readFields(in)
   }
+}
+
+/** [[Zip.ZipReader]] over one archive opened as a seekable Hadoop
+  * stream; the caller closes it.
+  */
+private[sources] final class HadoopZipReader(conf: Configuration,
+    path: String) extends Zip.ZipReader with java.io.Closeable {
+  private val fsPath = new Path(path)
+  private val fs = fsPath.getFileSystem(conf)
+  val length: Long = fs.getFileStatus(fsPath).getLen
+  private val stream = fs.open(fsPath)
+
+  def readFully(at: Long, buf: Array[Byte], off: Int, n: Int): Unit = {
+    if (at < 0L || at + n > length)
+      throw new MalformedShardException(s"$path: read past the archive")
+    stream.readFully(at, buf, off, n)
+  }
+
+  def close(): Unit = stream.close()
 }

@@ -1,8 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.operators.Zip
 
@@ -49,27 +48,14 @@ object ZipShardSource {
     spark.createDataset(files)
       .repartition(parallelism)
       .flatMap { p =>
-        val fsPath = new Path(p)
-        val fs = fsPath.getFileSystem(hconf.value)
-        val len = fs.getFileStatus(fsPath).getLen
-        val stream = fs.open(fsPath)
+        val reader = new HadoopZipReader(hconf.value, p)
         Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => stream.close()))
-        val reader = new Zip.ZipReader {
-          def length: Long = len
-          def readFully(at: Long, buf: Array[Byte], off: Int,
-              n: Int): Unit = {
-            if (at < 0L || at + n > len)
-              throw new graft.operators.MalformedShardException(
-                s"$p: read past the archive")
-            stream.readFully(at, buf, off, n)
-          }
-        }
+          _.addTaskCompletionListener[Unit](_ => reader.close()))
         StreamUtil.closeOnExhaustion(
           Zip.walkZip(reader, maxEntryBytes, maxCdBytes, p)
             .zipWithIndex.map { case ((name, bytes, _), i) =>
               ShardMember(p, i.toLong, name, bytes, bytes.length.toLong)
-            }, stream)
+            }, reader)
       }
   }
 }

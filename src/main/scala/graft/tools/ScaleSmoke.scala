@@ -7,9 +7,9 @@ import org.apache.spark.sql.{Column, SparkSession}
 
 /** Dev main: ingest a deliberately large archive (default 1M features
   * across two layers, ~250 MB of GeoJSON) through the full engine to
-  * demonstrate the bounded-memory streaming claim — the archive is
-  * parsed feature-by-feature off a ZipInputStream, so executor memory
-  * stays flat regardless of archive size.
+  * demonstrate the bounded-memory streaming claim — each entry is
+  * inflated as it is read and parsed feature-by-feature in its own task,
+  * so executor memory stays flat regardless of archive size.
   * Run: `sbt "runMain graft.tools.ScaleSmoke [featuresPerLayer]"`.
   */
 object ScaleSmoke {

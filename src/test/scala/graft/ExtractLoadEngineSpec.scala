@@ -299,9 +299,12 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val path = writeZip(canonicalZip)
     val sc = spark.sparkContext
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
         groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+        tasks.add(e.stageInfos.map(_.numTasks).sum)
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -318,8 +321,246 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
     val load = groups.asScala.toList.takeWhile(_ != "marker")
     assert(load.forall(_ == "load-under-test"), load)
-    // parse (repartition + collect), 4 layer writes, dataset and
-    // extension_file upserts, stats (aggregate + write), response append
-    assert(load.size == 11, load)
+    // parse (the header collect), 4 layer writes, dataset,
+    // extension_file and stats upserts, response append
+    assert(load.size == 9, load)
+    // the parse action runs one task per .geojson entry
+    assert(tasks.asScala.head == 4, tasks)
+  }
+
+  private def loadFresh(bytes: Array[Byte], id: String) = {
+    val engine = mkEngine()
+    (engine, engine.processRequest(request(writeZip(bytes), id)))
+  }
+
+  /** Dataset partitions of `id` under any content table of the engine. */
+  private def partitionsOf(engine: ExtractLoadEngine, id: String) =
+    Files.list(java.nio.file.Path.of(engine.warehouse.root)).iterator().asScala
+      .map(_.resolve(s"tdei_dataset_id=$id")).filter(Files.exists(_)).toList
+
+  test("unreadable archives: the reference's no-geojson response") {
+    // the first local header overwritten, as in a corrupt upload
+    val corrupt = canonicalZip.clone()
+    corrupt(0) = 'X'; corrupt(1) = 'X'
+    val cases = Seq(
+      "not a zip" -> "just some bytes, no archive".getBytes("UTF-8"),
+      "tail cut off" -> canonicalZip.dropRight(10),
+      "first local header overwritten" -> corrupt,
+      "corrupt archive without geojson" -> {
+        val b = zipBytes("readme.txt" -> "dataset", "__MACOSX/._nodes.geojson" -> "{}")
+        b(0) = 'X'; b(1) = 'X'; b
+      })
+    cases.foreach { case (what, bytes) =>
+      val (engine, resp) = loadFresh(bytes, "bad")
+      assert(!resp.success && resp.status == 500, what)
+      assert(resp.message ==
+        "Error loading the data : No valid .geojson files found in dataset archive.", what)
+      assert(partitionsOf(engine, "bad").isEmpty, what)
+    }
+  }
+
+  test("a .geojson member that fails its CRC or does not inflate fails the load before any write") {
+    val body = fc(Seq(point(1, 2, None, "n1"), point(3, 4, None, "n2")))
+    // stored member: one character of a property changed, JSON still valid
+    val stored = graft.operators.Zip.buildZip(Seq(
+      ("nodes.geojson", body.getBytes("UTF-8"), false),
+      ("edges.geojson", fc(Seq.empty).getBytes("UTF-8"), true)))
+    val at = new String(stored, "ISO-8859-1").indexOf("\"n2\"")
+    val badCrc = stored.clone()
+    badCrc(at + 1) = 'm'
+    // deflated member: the first block header claims the reserved type
+    val deflated = graft.operators.Zip.buildZip(Seq(
+      ("nodes.geojson", body.getBytes("UTF-8"), true)))
+    val badDeflate = deflated.clone()
+    badDeflate(30 + "nodes.geojson".length) = 0xFF.toByte
+    Seq("CRC" -> badCrc, "deflate" -> badDeflate).foreach { case (what, bytes) =>
+      val (engine, resp) = loadFresh(bytes, "broken")
+      assert(!resp.success && resp.status == 500, what)
+      assert(resp.message.startsWith("Error loading the data : "), resp.message)
+      assert(partitionsOf(engine, "broken").isEmpty, what)
+      assert(engine.warehouse.table("response").count() == 1, what)
+    }
+    // the unbroken archives load
+    Seq(stored, deflated).foreach { b =>
+      assert(loadFresh(b, "fine")._2.success)
+    }
+  }
+
+  test("STORED and data-descriptor members load") {
+    val bos = new ByteArrayOutputStream()
+    val zos = new ZipOutputStream(bos)
+    val nodes = fc(Seq(point(1, 2, Some(3), "n1"), point(4, 5, None, "n2"))).getBytes("UTF-8")
+    val crc = new java.util.zip.CRC32()
+    crc.update(nodes)
+    val storedEntry = new ZipEntry("nodes.geojson")
+    storedEntry.setMethod(ZipEntry.STORED)
+    storedEntry.setSize(nodes.length.toLong)
+    storedEntry.setCompressedSize(nodes.length.toLong)
+    storedEntry.setCrc(crc.getValue)
+    zos.putNextEntry(storedEntry)
+    zos.write(nodes)
+    zos.closeEntry()
+    // a DEFLATED entry from ZipOutputStream carries a data descriptor
+    zos.putNextEntry(new ZipEntry("edges.geojson"))
+    zos.write(fc(Seq(
+      """{"type":"Feature","geometry":{"type":"LineString","coordinates":[[0,0,1],[1,1,2]]},"properties":{"_id":"e1"}}"""))
+      .getBytes("UTF-8"))
+    zos.closeEntry()
+    zos.close()
+    val bytes = bos.toByteArray
+    val recs = GeoJsonZipSource.expandZip("z", bytes).toSeq
+    assert(recs.filter(_.kind == "header").map(r => (r.entry_path, r.feature_count)) ==
+      Seq("nodes.geojson" -> 2L, "edges.geojson" -> 1L))
+    val engine = mkEngine()
+    assert(engine.processRequest(request(writeZip(bytes))).success)
+    assert(engine.warehouse.table("node").count() == 2)
+    assert(engine.warehouse.table("edge").collect()(0).getAs[String]("feature")
+      .contains("[[0,0],[1,1]]"))
+  }
+
+  test("entry_seq, extension ids and last-header-wins follow archive order") {
+    val z = zipBytes(
+      "readme.txt" -> "skip",
+      "ext/b_curbs.geojson" -> fc(Seq(point(1, 2, None, "b")), header = Map("name" -> "\"b\"")),
+      "a_nodes.geojson" -> fc(Seq(point(1, 2, None, "a")), header = Map("name" -> "\"first\"")),
+      "__MACOSX/._x.geojson" -> "{}",
+      "ext/a_ramps.geojson" -> fc(Seq(point(3, 4, None, "r")), header = Map("name" -> "\"a\"")),
+      "b_nodes.geojson" -> fc(Seq(point(3, 4, None, "b")), header = Map("name" -> "\"second\"")))
+    val headers = GeoJsonZipSource.expandZip("z", z).filter(_.kind == "header").toSeq
+    assert(headers.map(h => (h.entry_seq, h.entry_path)) == Seq(
+      0 -> "ext/b_curbs.geojson", 1 -> "a_nodes.geojson",
+      2 -> "ext/a_ramps.geojson", 3 -> "b_nodes.geojson"))
+    val path = writeZip(z)
+    val read = GeoJsonZipSource.read(spark, path).collect()
+    assert(read.filter(_.kind == "header").sortBy(_.entry_seq).map(_.entry_path).toSeq ==
+      headers.map(_.entry_path))
+    assert(read.map(r => (r.entry_path, r.entry_seq)).toSet ==
+      GeoJsonZipSource.expandZip("z", z).map(r => (r.entry_path, r.entry_seq)).toSet)
+    val engine = mkEngine()
+    assert(engine.processRequest(request(path)).success)
+    val files = engine.warehouse.table("extension_file").collect()
+      .map(r => r.getAs[Int]("id") -> r.getAs[String]("name")).sortBy(_._1).toSeq
+    assert(files == Seq(1 -> "b_curbs", 2 -> "a_ramps"))
+    val ext = engine.warehouse.table("extension").collect()
+      .map(r => r.getAs[Int]("ext_file_id") -> r.getAs[String]("feature").contains("\"r\"")).toSet
+    assert(ext == Set(1 -> false, 2 -> true))
+    val ds = engine.warehouse.table("dataset").collect()(0)
+    assert(ds.getAs[String]("node_info") == """{"name":"second"}""")
+  }
+
+  test("concurrent loads on one engine: lastStageTimings is one whole load") {
+    val engine = mkEngine()
+    val busy = zipBytes(
+      "nodes.geojson" -> fc((0 until 3000).map(i => point(i * 1e-3, 47.0, Some(1.0), s"n$i"))),
+      "curbs.geojson" -> fc(Seq(point(1.0, 2.0, None, "c1"))))
+    val paths = Seq("c1", "c2").map(id => id -> writeZip(busy))
+    val stages = Seq("pre_clean", "parse_count", "write_features", "metadata", "stats",
+      "process_files")
+    def timedLoad(id: String, path: String): Double = {
+      val t0 = System.nanoTime()
+      assert(engine.processRequest(request(path, id)).success)
+      (System.nanoTime() - t0) / 1e9
+    }
+    val alone = (0 until 2).map(_ => timedLoad("c0", paths.head._2)).last
+    (0 until 3).foreach { _ =>
+      // the second load starts halfway through the first and ends after it
+      val walls = new java.util.concurrent.ConcurrentLinkedQueue[Double]()
+      val threads = paths.zipWithIndex.map { case ((id, path), i) =>
+        val t = new Thread(() => {
+          Thread.sleep((i * alone * 500).toLong)
+          walls.add(timedLoad(id, path))
+        })
+        t.start(); t
+      }
+      threads.foreach(_.join())
+      val t = engine.lastStageTimings
+      assert(t.keySet == stages.toSet, t)
+      assert(stages.forall(s => t(s) <= t("process_files")), t)
+      // one load's own interval, not one that spans both loads
+      assert(t("process_files") <= walls.asScala.max, (t, walls))
+    }
+  }
+
+  /** The stats aggregate the engine ran before the stats were folded
+    * into the parse: a JSON-path lookup of the geometry type and a regex
+    * over the coordinates text for the anchor.
+    */
+  private def referenceStats(rows: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions._
+    val coords = get_json_object(col("feature"), "$.geometry.coordinates")
+    val num = "[-+0-9.eE]+"
+    val lon = regexp_extract(coords, s"^\\[+\\s*($num)", 1).try_cast("double")
+    val lat = regexp_extract(coords, s"^\\[+\\s*$num\\s*,\\s*($num)", 1).try_cast("double")
+    rows
+      .select(col("layer_table"),
+        get_json_object(col("feature"), "$.geometry.type").as("geometry_type"),
+        lon.as("__lon"), lat.as("__lat"))
+      .groupBy(col("layer_table"), col("geometry_type"))
+      .agg(count(lit(1)).as("feature_count"),
+        min(col("__lon")).as("min_lon"), max(col("__lon")).as("max_lon"),
+        min(col("__lat")).as("min_lat"), max(col("__lat")).as("max_lat"))
+      .collect().toSet
+  }
+
+  private val oddFeatures: Seq[String] = {
+    def f(geometry: String) = s"""{"type":"Feature","geometry":$geometry,"properties":{}}"""
+    def g(tpe: String, coords: String) = f(s"""{"type":$tpe,"coordinates":$coords}""")
+    val huge = "1" + "0" * 400
+    Seq(
+      g("\"Point\"", "[1.5e-7,2E+3]"), g("\"Point\"", "[-3,4]"), g("\"Point\"", "[7.25,-8,9]"),
+      g("\"Point\"", "\"[5,6]\""), g("\"Point\"", "\"[ 1e3 , x ]\""), g("\"Point\"", "\"abc\""),
+      g("\"Point\"", "true"), g("\"Point\"", "null"), g("\"Point\"", "12"),
+      g("\"Point\"", "{\"a\":[1,2]}"), g("\"Point\"", "[\"1\",\"2\"]"),
+      g("\"Point\"", "[true,1]"), g("\"Point\"", "[null,2]"), g("\"Point\"", "[2,null]"),
+      g("\"LineString\"", "[[],[1,2]]"), g("\"LineString\"", "[1,[2]]"),
+      g("\"LineString\"", "[[[[7,8]]]]"), g("\"LineString\"", "[7]"),
+      g("\"LineString\"", "[]"), g("\"LineString\"", "[[0.5,1e-9],[2,3]]"),
+      g("\"Point\"", "[1e400,2]"), g("\"Point\"", "[1,1e400]"), g("\"Point\"", "[-1e400,3]"),
+      g("\"Point\"", s"[$huge,5]"), g("\"Point\"", s"[6,-$huge]"),
+      f("null"), f("[1,2]"), f("\"Point\""), """{"type":"Feature","properties":{}}""",
+      g("5", "[1,2]"), g("1.5", "[3,4]"), g("true", "[5,6]"), g("null", "[7,8]"),
+      g("{\"a\":1}", "[9,10]"), g("[\"x\",2]", "[11,12]"), g("1e400", "[13,14]"),
+      g("\"P\\u00f6int\"", "[15,16]"), """{"type":"Feature","geometry":{"coordinates":[17,18]}}""",
+      "5", "[1,2]", "\"just a string\"")
+  }
+
+  test("stats folded into the parse match the SQL aggregate over the stored features") {
+    import spark.implicits._
+    val z = zipBytes(
+      "a_nodes.geojson" -> fc(oddFeatures),
+      "edges.geojson" -> fc(oddFeatures.reverse),
+      "b_nodes.geojson" -> fc(Seq(point(-170, -80, Some(1), "x"), point(170, 80, None, "y"))),
+      "ext/curbs.geojson" -> fc(oddFeatures.take(12)))
+    def rowsOf(parts: Seq[(String, graft.functions.GeoFunctions.GeometryStats)]) =
+      graft.functions.GeoFunctions.GeometryStats
+        .fold(parts.map { case (t, s) => (t, s.geometry_type) -> s })
+        .map { case ((t, _), s) =>
+          def v(o: Option[Double]): Any = o.getOrElse(null)
+          org.apache.spark.sql.Row(t, s.geometry_type, s.feature_count,
+            v(s.min_lon), v(s.max_lon), v(s.min_lat), v(s.max_lat))
+        }
+        .toSet
+    val table = Layer.all.map(l => l.name -> l.table).toMap
+    Seq(true, false).foreach { transform =>
+      val recs = GeoJsonZipSource.expandZip("z", z, transform).toSeq
+      val folded = rowsOf(recs.filter(_.kind == "header")
+        .flatMap(h => h.stats.map(table(h.layer) -> _)))
+      val reference = referenceStats(recs.filter(_.kind == "feature")
+        .map(r => (table(r.layer), r.feature)).toDF("layer_table", "feature"))
+      assert(folded == reference, s"transform=$transform")
+    }
+    // the load's stats table, and a refresh from the stored tables
+    val engine = mkEngine()
+    assert(engine.processRequest(request(writeZip(z), "odd")).success)
+    val stored = Seq("node", "edge", "extension").map { t =>
+      engine.warehouse.table(t).select(org.apache.spark.sql.functions.lit(t).as("layer_table"),
+        $"feature")
+    }.reduce(_ union _)
+    val reference = referenceStats(stored)
+    def statsTable = engine.warehouse.table("stats").drop("tdei_dataset_id").collect().toSet
+    assert(statsTable == reference)
+    assert(reference.size > 20)
+    engine.updateStats("odd")
+    assert(statsTable == reference)
   }
 }

@@ -862,7 +862,8 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
               e.isInstanceOf[graft.expressions.SqDistExpr]) => f
         }
     for (name <- Seq("q_pq_int", "q_ivfpq_int", "q_knn_ivf_int",
-        "q_recall_ivf_int"))
+        "q_recall_ivf_int", "q_pq", "q_semantic_dedup",
+        "q_semantic_dedup_int"))
       assert(kernelInFilter(name).isEmpty,
         s"$name: centroid/distance kernel duplicated into a Filter")
     // assignCentroidsJoin (library surface, spec-pinned parity): one

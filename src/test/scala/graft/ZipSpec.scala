@@ -173,4 +173,40 @@ class ZipSpec extends AnyFunSuite with BeforeAndAfterAll {
     noExtra(cdSig + 46 + nameLen) = 0x77.toByte // extra header id
     assert(count(noExtra) === 0L)
   }
+
+  test("listZip + openMember: members stream in small reads past the " +
+      "64 KiB chunk and any member cap; the end verifies size and CRC") {
+    val rnd = new scala.util.Random(7)
+    val big = Array.tabulate[Byte](300000)(i =>
+      if (i % 7 == 0) rnd.nextInt(256).toByte else (i % 13).toByte)
+    val zip = Zip.buildZip(Seq(("big.bin", big, true),
+      ("raw.bin", big.take(70000), false)))
+    val in = new Zip.ArrayZipReader(zip)
+    val members = Zip.listZip(in, 1 << 20, "t")
+    assert(members.map(_.name) === Vector("big.bin", "raw.bin"))
+    def drain(s: java.io.InputStream, step: Int): Array[Byte] = {
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](step)
+      var n = s.read(buf)
+      while (n >= 0) { out.write(buf, 0, n); n = s.read(buf) }
+      out.toByteArray
+    }
+    assert(members(0).compSize > 65536L)
+    for (step <- Seq(1, 4093, 1 << 16)) {
+      assert(drain(Zip.openMember(in, members(0), "t"), step).toSeq === big.toSeq)
+      assert(drain(Zip.openMember(in, members(1), "t"), step).toSeq ===
+        big.take(70000).toSeq)
+    }
+    // the member cap belongs to materializing walks only
+    assert(intercept[graft.operators.MalformedShardException](
+      Zip.walkZip(in, 1000, 1 << 20, "t")).getMessage.contains("cap"))
+    // a deflate stream cut short, and a CRC that does not match
+    val short = members(0).copy(compSize = members(0).compSize / 2)
+    assert(intercept[graft.operators.MalformedShardException](
+      drain(Zip.openMember(in, short, "t"), 4096)).getMessage
+      .contains("corrupt deflate stream"))
+    val lie = members(1).copy(crc = members(1).crc ^ 1L)
+    assert(intercept[graft.operators.MalformedShardException](
+      drain(Zip.openMember(in, lie, "t"), 4096)).getMessage.contains("CRC"))
+  }
 }
