@@ -1,18 +1,18 @@
 package graft.service
 
-import java.util.concurrent.{Callable, ExecutionException, Executors, ThreadFactory}
+import java.util.UUID
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.rdd.PartitionPruningRDD
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.GeoFunctions.GeometryStats
 import graft.model.{Layer, LoadResponse, QueueMessage}
-import graft.sinks.Warehouse
+import graft.sinks.{StagedPartition, TableWriter, Warehouse}
 import graft.sources.{GeoJsonZipSource, ParsedRecord}
 
 /** The extract-load pipeline (reference
@@ -23,47 +23,50 @@ import graft.sources.{GeoJsonZipSource, ParsedRecord}
   *   2. streamed ZIP/GeoJSON expansion with the geometry transform (P7)
   *      FUSED into the parse loop (one Jackson parse + one serialize per
   *      feature — never parse-serialize-reparse),
-  *   3. per-layer writes to `content_*` tables (partitioned by dataset
-  *      id, dynamic overwrite),
+  *   3. per-layer feature files for the `content_*` tables (partitioned
+  *      by dataset id), written by the parse itself,
   *   4. header metadata → `dataset` row (K8) and `extension_file` rows
   *      (K9; ids are a per-dataset dense sequence in archive entry
   *      order — the reference's DB sequence is opaque, so the contract
   *      here is ours),
   *   5. stats refresh (A3; a local fold of the header records, which
   *      carry each entry's stats),
-  *   6. success/failure response (K10).
+  *   6. one commit of everything staged, then the success/failure
+  *      response (K10).
   *
-  * Spark-action budget per load: ONE parse action — the header collect
-  * (rows ≈ entries per archive, bounded by archive layout, not data
-  * volume) builds the cached parse, one task per `.geojson` entry. Each
-  * header's `feature_count` says which layers are live, and its `stats`
-  * hold the entry's counts and anchor bboxes per geometry type, so the
-  * stats rows need no pass over the features. Then every write of
-  * steps 3-5 is submitted AT ONCE: one write per non-empty layer, and
-  * the `dataset`, `extension_file` and `stats` upserts of rows built in
-  * this process. The writes are independent (distinct tables, each a
-  * dynamic overwrite with its own staging directory), and each is a
-  * small job, so running them back to back would leave most cores idle.
-  * Then one response append. No step of a load shuffles.
+  * Spark-action budget per load: ONE job, one task per `.geojson` entry.
+  * Each task streams its entry and writes the entry's features into one
+  * staged file of its layer's table, opened at the first feature, so an
+  * empty entry writes nothing; it returns its header record and the file.
+  * The headers' `stats` hold each entry's counts and anchor bboxes per
+  * geometry type, so the stats rows need no pass over the features. The
+  * driver then writes the `dataset`, `extension_file` and `stats` files
+  * itself, through the same [[TableWriter]], and commits every staged
+  * partition (see [[Warehouse.commit]]); the response is one more file.
+  * No step of a load shuffles or runs a second job.
   *
-  * Failure anywhere → failure response; a replay overwrites the same
-  * partitions, which is how the reference's transaction-rollback intent
-  * is preserved at Spark scale (no cross-table ACID needed). A failed
-  * write does not cancel the others: the load waits for every write to
-  * return before it reports the first failure, so nothing of the load
-  * is still running once its response is published.
+  * Failure anywhere → failure response, and the load's staging directory
+  * is deleted once no task of it is still running. Each table commits on
+  * its own, and the first failure is reported with the others attached;
+  * a replay replaces the same partitions, which is how the reference's
+  * transaction-rollback intent is preserved at Spark scale.
+  *
+  * [[lastStageTimings]] keys: `pre_clean`; `parse_count`, the parse job
+  * with its feature files; `write_features`, the commit of the content
+  * tables; `metadata`, the `dataset` and `extension_file` files and their
+  * commit; `stats`, the stats file and its commit; `process_files`, the
+  * whole load. A stage is the wall interval from its first start to its
+  * last end.
   */
 class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
-  import ExtractLoadEngine.Write
+  import ExtractLoadEngine.EntryOut
   import spark.implicits._
 
   val warehouse = new Warehouse(spark, warehouseRoot)
 
   // ---- A2: per-stage wall-clock metrics ---------------------------------
   // The reference times every stage (`console.time` at
-  // `extract-load-service.ts:301,322,327-336,360,...`); same points here:
-  // pre_clean (A1), parse_count (the one parse action), write_features
-  // (all layer writes), metadata (K8/K9), stats (A3), process_files total.
+  // `extract-load-service.ts:301,322,327-336,360,...`); same points here.
   // Each load keeps its own clock; loads may run at once on one engine.
   @volatile private var lastTimings = Map.empty[String, Double]
 
@@ -96,7 +99,7 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
             s"Error loading the data : ${er.message}",
             success = false, status = er.status)
       }
-    warehouse.appendResponses(Seq(resp).toDF())
+    warehouse.appendResponses(Seq(resp))
     resp
   }
 
@@ -116,85 +119,65 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
 
     // 2. streamed source with the geometry transform fused in: one
     // partition per .geojson entry.
-    val (records, layerOf) =
+    val (records, entryPaths) =
       GeoJsonZipSource.readEntries(spark, msg.data.file_upload_path, transform = true)
-    val parsed = records.persist(StorageLevel.MEMORY_AND_DISK)
+    if (entryPaths.isEmpty)
+      throw new RuntimeException("No valid .geojson files found in dataset archive.")
+    val layers = entryPaths.map(Layer.route)
+
+    // Extension-file id allocation: dense per-dataset sequence in entry
+    // order of the listing (the reference memoizes the DB-generated id,
+    // `extract-load-service.ts:59,123,456-458`).
+    val extIds = {
+      var n = 0
+      layers.map(l => if (l == Layer.Extension) { n += 1; n } else 0)
+    }
+
+    val loadId = UUID.randomUUID().toString
     try {
-      // ONE action: the header records, one per entry — bounded by archive
-      // layout (a few entries per ZIP), safe to collect. It also builds
-      // the cached parse that every write below reads. Presence of any
-      // header ⇔ at least one valid .geojson entry; the headers' feature
-      // counts decide which layer tables get a write.
-      val headers = timed("parse_count")(
-        parsed.filter(_.kind == "header").collect().sortBy(_.entry_seq))
-      if (headers.isEmpty)
-        throw new RuntimeException("No valid .geojson files found in dataset archive.")
-      val featureCount: Map[String, Long] =
-        headers.groupMapReduce(_.layer)(_.feature_count)(_ + _)
-
-      // Extension-file id allocation: dense per-dataset sequence in entry
-      // order (driver-side; the reference memoizes the DB-generated id,
-      // `extract-load-service.ts:59,123,456-458`).
-      val extEntries = headers.filter(_.layer == Layer.Extension.name)
-      val extIds: Map[String, Int] =
-        extEntries.zipWithIndex.map { case (h, i) => h.entry_path -> (i + 1) }.toMap
-
-      // 3. per-layer feature writes (K1–K7), non-empty layers only.
-      val live = Layer.all.filter(l => featureCount.getOrElse(l.name, 0L) > 0)
-      val layerWrites = live.map { layer =>
-        // only the cached partitions of this layer's entries
-        val name = layer.name
-        val slice = spark.createDataset(
-          PartitionPruningRDD.create(parsed, i => layerOf.lift(i).contains(name))
-            .filter(_.kind == "feature"))(ExtractLoadEngine.recordEncoder)
-        val out =
-          if (layer == Layer.Extension) {
-            val idMap = typedLit(extIds)
-            slice.select(
-              lit(datasetId).as("tdei_dataset_id"),
-              element_at(idMap, $"entry_path").as("ext_file_id"),
-              $"feature",
-              lit(userId).as("requested_by"))
-          } else
-            slice.select(
-              lit(datasetId).as("tdei_dataset_id"),
-              $"feature",
-              lit(userId).as("requested_by"))
-        Write("write_features", () => warehouse.writeFeatures(layer.table, out))
+      // 3. ONE job: each entry task writes its layer's feature file and
+      // returns its header record (rows ≈ entries per archive, bounded by
+      // archive layout, not data volume).
+      val outs = layers.indices.map { i =>
+        val table = layers(i).table
+        EntryOut(warehouse.writer(table), warehouse.stagedPartitionPath(loadId, table, datasetId),
+          extIds(i))
+      }
+      val entries = timed("parse_count")(warehouse.runJob(records) { it =>
+        ExtractLoadEngine.writeEntry(it, outs(TaskContext.getPartitionId()), userId)
+      }).toSeq
+      val headers = entries.map(_._1)
+      val content = Layer.all.map(_.table).distinct.flatMap { t =>
+        val files = entries.zip(layers).collect { case ((_, Some(f)), l) if l.table == t => f }
+        Option.when(files.nonEmpty)(StagedPartition(t, datasetId, files))
       }
 
-      // 4a. dataset metadata row (K8): last entry per layer wins, matching
-      // the reference's sequential per-entry UPDATEs.
-      val infoByLayer: Map[String, String] =
-        headers.filter(_.layer != Layer.Extension.name)
-          .map(h => h.layer -> additionalInfo(h.header))
-          .toMap // toMap keeps the LAST value per key
-      val metaCols = Layer.routingOrder.map { l =>
-        lit(infoByLayer.get(l.name).orNull).cast(StringType).as(l.metaColumn.get)
-      }
-      val datasetRow = spark.range(0, 1, 1, 1).select(
-        (metaCols :+ lit(datasetId).as("tdei_dataset_id")): _*)
-      val datasetWrite = Write("metadata", () => warehouse.upsertByDataset("dataset", datasetRow))
-
-      // 4b. extension_file rows (K9): name = basename sans extension.
-      val extFileWrite = Option.when(extEntries.nonEmpty) {
-        val extDf = extEntries.toSeq
-          .map(h => (extIds(h.entry_path), baseNameNoExt(h.entry_path),
-            additionalInfo(h.header), userId))
-          .toDF("id", "name", "file_meta", "requested_by")
-          .withColumn("tdei_dataset_id", lit(datasetId))
-        Write("metadata", () => warehouse.upsertByDataset("extension_file", extDf))
+      val metadata = timed("metadata") {
+        // 4a. dataset metadata row (K8): last entry per layer wins,
+        // matching the reference's sequential per-entry UPDATEs.
+        val infoByLayer: Map[String, String] =
+          headers.filter(_.layer != Layer.Extension.name)
+            .map(h => h.layer -> additionalInfo(h.header))
+            .toMap // toMap keeps the LAST value per key
+        val datasetRow = InternalRow.fromSeq(Layer.routingOrder.map(l =>
+          UTF8String.fromString(infoByLayer.get(l.name).orNull)))
+        // 4b. extension_file rows (K9): name = basename sans extension.
+        val extRows = headers.zip(extIds).collect { case (h, id) if id > 0 =>
+          InternalRow(id, UTF8String.fromString(baseNameNoExt(h.entry_path)),
+            UTF8String.fromString(additionalInfo(h.header)), UTF8String.fromString(userId))
+        }
+        warehouse.stageRows(loadId, "dataset", datasetId, Seq(datasetRow)).toSeq ++
+          warehouse.stageRows(loadId, "extension_file", datasetId, extRows)
       }
 
       // 5. stats refresh (A3) — the fold of the headers' per-entry stats.
-      val statsWrite = Option.when(layerWrites.nonEmpty) {
-        val stats = statsFrame(headers.toSeq.flatMap(h =>
-          h.stats.map(tableOf(h.layer) -> _)), datasetId)
-        Write("stats", () => warehouse.upsertByDataset("stats", stats))
-      }
+      val stats = timed("stats")(Option.when(content.nonEmpty)(
+        warehouse.stageRows(loadId, "stats", datasetId, statsRows(headers.flatMap(h =>
+          h.stats.map(tableOf(h.layer) -> _))))).flatten.toSeq)
 
-      writeAll(layerWrites ++ Seq(datasetWrite) ++ extFileWrite ++ statsWrite, clock)
-    } finally parsed.unpersist()
+      Warehouse.eachOnItsOwn(Seq("write_features" -> content, "metadata" -> metadata,
+        "stats" -> stats)) { case (stage, parts) => timed(stage)(warehouse.commit(loadId, parts)) }
+    } finally warehouse.discard(loadId)
   }
 
   /** Header map minus `features`/`type` (`extract-load-service.ts:494-502`),
@@ -220,22 +203,21 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
     * dataset, layer table and geometry type, the feature count plus the
     * bounding box of feature anchor positions (`GeoFunctions.anchor`).
     * `parts` are partial stats per layer table; they merge here into the
-    * rows of a local relation, written by one task.
+    * rows of the stats file.
     */
-  private def statsFrame(parts: Seq[(String, GeometryStats)], datasetId: String): DataFrame =
-    GeometryStats.fold(parts.map { case (t, s) => (t, s.geometry_type) -> s })
-      .map { case ((t, _), s) =>
-        (t, s.geometry_type, s.feature_count, s.min_lon, s.max_lon, s.min_lat, s.max_lat)
-      }
-      .toDF("layer_table", "geometry_type", "feature_count",
-        "min_lon", "max_lon", "min_lat", "max_lat")
-      .withColumn("tdei_dataset_id", lit(datasetId))
-      .coalesce(1)
+  private def statsRows(parts: Seq[(String, GeometryStats)]): Seq[InternalRow] =
+    GeometryStats.fold(parts.map { case (t, s) => (t, s.geometry_type) -> s }).map {
+      case ((t, _), s) =>
+        def v(o: Option[Double]): Any = o.getOrElse(null)
+        InternalRow(UTF8String.fromString(t), UTF8String.fromString(s.geometry_type),
+          s.feature_count, v(s.min_lon), v(s.max_lon), v(s.min_lat), v(s.max_lat))
+    }
 
   /** Legacy entry: stats from the stored tables (used when refreshing
     * without a load in hand, mirroring the stored-proc call shape). Each
     * task folds its stored feature strings through the same definitions
-    * as a load; the partial stats are collected and merged here.
+    * as a load; the partial stats are collected and merged here, and
+    * written and committed like a load's.
     */
   def updateStats(datasetId: String): Unit = {
     val perLayer = Layer.all.map(_.table).distinct.flatMap { t =>
@@ -252,54 +234,49 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
       })
       partial.iterator.map { case ((t, _), s) => (t, s) }
     }.collect()
-    warehouse.upsertByDataset("stats", statsFrame(parts.toSeq, datasetId))
-  }
-
-  /** Run the writes of one load at once, on a pool made for this load and
-    * shut down after it. The pool's threads are created here, in the
-    * calling thread, so they inherit its Spark local properties (job
-    * group, scheduler pool) and active session. Waits for every write,
-    * then rethrows the first failure in submission order, with the
-    * others attached as suppressed.
-    */
-  private def writeAll(writes: Seq[Write], clock: ExtractLoadEngine.StageClock): Unit = {
-    val pool = Executors.newFixedThreadPool(writes.size, ExtractLoadEngine.writerThreads)
-    try {
-      val inFlight = writes.map { w =>
-        pool.submit(new Callable[Unit] { def call(): Unit = clock.timed(w.stage)(w.run()) })
-      }
-      val failures = inFlight.flatMap { f =>
-        try { f.get(); None }
-        catch { case e: ExecutionException => Some(e.getCause) }
-      }
-      failures.headOption.foreach { first =>
-        failures.tail.foreach(first.addSuppressed)
-        throw first
-      }
-    } finally pool.shutdown()
+    val loadId = UUID.randomUUID().toString
+    try warehouse.commit(loadId,
+      warehouse.stageRows(loadId, "stats", datasetId, statsRows(parts.toSeq)).toSeq)
+    finally warehouse.discard(loadId)
   }
 }
 
 object ExtractLoadEngine {
 
-  /** Name of the threads that run a load's writes. */
-  private[graft] val WriterThreadName = "extract-load-write"
-
-  private val writerThreads: ThreadFactory = r => new Thread(r, WriterThreadName)
-
   /** Shared by every load: an ObjectMapper is thread-safe once configured. */
   private val mapper = new ObjectMapper()
 
-  /** Derived once: deriving a product encoder reflects over the class. */
-  private val recordEncoder = Encoders.product[ParsedRecord]
+  /** Where one entry task writes: the staged partition directory of its
+    * layer's table, and its extension-file id (0 outside the extension
+    * layer).
+    */
+  private final case class EntryOut(writer: TableWriter, dir: String, extId: Int)
 
-  /** One table write of a load, timed under `stage`. */
-  private final case class Write(stage: String, run: () => Unit)
+  /** One entry task: streams the entry's records and writes its features
+    * into one file of `out.dir`; returns the entry's header record and the
+    * file, if the entry had features.
+    */
+  private def writeEntry(records: Iterator[ParsedRecord], out: EntryOut,
+      userId: String): (ParsedRecord, Option[String]) = {
+    val tc = TaskContext.get()
+    val user = UTF8String.fromString(userId)
+    var header: ParsedRecord = null
+    val rows = records.filter { r =>
+      if (r.kind == "header") header = r
+      r.kind == "feature"
+    }.map { r =>
+      val feature = UTF8String.fromString(r.feature)
+      if (out.extId > 0) InternalRow(out.extId, feature, user) else InternalRow(feature, user)
+    }
+    val file = out.writer.write(f"${out.dir}/part-${tc.partitionId()}%05d-${tc.attemptNumber()}", rows)
+    require(header != null, "entry ended without its header record")
+    (header, file)
+  }
 
   /** Stage intervals of one load. A stage holds the wall interval its
-    * calls covered, from the first start to the last end: the writes of
-    * a stage overlap, so the sum of their durations could exceed the
-    * load's own wall time.
+    * calls covered, from the first start to the last end: the stages of
+    * a load interleave (files first, commits after), so the sum of their
+    * intervals could exceed the load's own wall time.
     */
   private final class StageClock {
     private val intervals = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()

@@ -1,67 +1,235 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types._
+import java.io.IOException
+import java.nio.file.{Files => NioFiles, NoSuchFileException}
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
 
-import graft.model.Layer
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+import scala.reflect.ClassTag
+import scala.util.{Failure, Success}
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.spark.{JobExecutionStatus, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions.{col, struct}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.model.{Layer, LoadResponse}
+
+/** Files a load staged for one dataset's partition of `table`. */
+final case class StagedPartition(table: String, datasetId: String, files: Seq[String])
 
 /** Table layout of the engine — the Spark-native replacement for the
   * reference's Postgres `content.*` schema.
   *
-  * Every per-feature table is parquet partitioned by `tdei_dataset_id`,
-  * written with dynamic partition overwrite. That makes a re-load of the
-  * same dataset idempotent — the Spark idiom replacing the reference's
-  * `delete_dataset_records_by_id($1)` pre-clean + transactional reload
+  * Every per-feature table is parquet partitioned by `tdei_dataset_id`.
+  * A write never lands in a live partition: its files are written into a
+  * staging directory, `<root>/_staging/<load id>/content_<table>/
+  * tdei_dataset_id=<id>/`, and [[commit]] then replaces each live
+  * partition by its staged one (delete, then one directory rename). That
+  * makes a re-load of the same dataset idempotent — the Spark idiom
+  * replacing the reference's `delete_dataset_records_by_id($1)`
+  * pre-clean + transactional reload
   * (`src/service/extract-load-service.ts:291-295`,
-  * `src/database/data-source.ts:33-65`). Replays overwrite exactly the
+  * `src/database/data-source.ts:33-65`). Replays replace exactly the
   * partitions they produce, so a failed load is repaired by re-running —
   * the at-least-once story the queue semantics require.
   *
+  * Files are written through one [[TableWriter]] per data schema: Spark's
+  * own parquet `OutputWriterFactory`, prepared once on the driver, which
+  * tasks and the driver write through alike. A load's feature files come
+  * from the tasks of its one parse job, its metadata files from the
+  * driver; neither pays a Spark job or the commit protocol of a
+  * `DataFrameWriter` per table.
+  *
   * Every table has a FIXED schema (the reference's DDL is fixed too), so
   * reads never rely on parquet schema inference: a table whose last
-  * partition was deleted (only `_SUCCESS` left) reads as an empty,
-  * correctly-typed DataFrame instead of failing schema inference.
+  * partition was deleted reads as an empty, correctly-typed DataFrame
+  * instead of failing schema inference.
   *
   * Scale note: partitioning by dataset id means a 1000-executor load of N
   * archives touches only its own partitions (no global shuffle, no table
-  * lock); per-layer writes are narrow maps over the parsed records.
+  * lock).
   */
 final class Warehouse(spark: SparkSession, val root: String) {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
+  private def hconf: Configuration = spark.sparkContext.hadoopConfiguration
+
   def tablePath(table: String): String = s"$root/content_$table"
 
   def tableSchema(name: String): StructType = Warehouse.schemas(name)
 
-  /** content.node / edge / zone / extension_* feature tables. */
-  def writeFeatures(table: String, df: DataFrame): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("tdei_dataset_id")
-      .parquet(tablePath(table))
+  /** Where the files of load `loadId` wait for [[commit]]. */
+  def stagingPath(loadId: String): String = s"$root/${Warehouse.Staging}/$loadId"
 
-  /** Per-dataset overwrite for keyed metadata tables (dataset, stats,
+  /** Staged directory of one dataset's partition of `table`. */
+  def stagedPartitionPath(loadId: String, table: String, datasetId: String): String =
+    Warehouse.partitionDir(stagingPath(loadId), table, datasetId)
+
+  private val writers = new ConcurrentHashMap[StructType, TableWriter]()
+
+  /** The writer of `table`'s files, prepared on first use. */
+  def writer(table: String): TableWriter =
+    writers.computeIfAbsent(Warehouse.dataSchema(table), TableWriter.prepare(spark, _))
+
+  /** content.node / edge / zone / extension_* feature tables: the
+    * partitions of `df`'s dataset ids are replaced by `df`'s rows.
+    */
+  def writeFeatures(table: String, df: DataFrame): Unit = replace(table, df)
+
+  /** Per-dataset replace for keyed metadata tables (dataset, stats,
     * extension_file): one partition per dataset id = an upsert.
     */
-  def upsertByDataset(table: String, df: DataFrame): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("tdei_dataset_id")
-      .parquet(tablePath(table))
+  def upsertByDataset(table: String, df: DataFrame): Unit = replace(table, df)
 
-  /** Append-only response log (K10). Serialized per JVM: concurrent
-    * parquet APPENDs to one directory share the committer's
-    * `_temporary/0` staging dir, and the first job's cleanup can delete
-    * the second's in-flight task files — unlike the dynamic-overwrite
-    * writes (unique `.spark-staging-<jobId>` each), appends need the
-    * lock. Responses are single rows; the serialization cost is nil.
+  /** One job writes `df`'s rows into staged files, one file per task and
+    * dataset id; then each dataset's partition is committed.
     */
-  def appendResponses(df: DataFrame): Unit = Warehouse.responseLock.synchronized {
-    df.write.mode(SaveMode.Append).parquet(tablePath("response"))
+  private def replace(table: String, df: DataFrame): Unit = {
+    val data = Warehouse.dataSchema(table)
+    val rows = df.select(struct(data.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType)): _*),
+      col(Warehouse.PartitionColumn).cast(StringType)).queryExecution.toRdd
+    val w = writer(table)
+    val width = data.size
+    val loadId = UUID.randomUUID().toString
+    val dir = stagingPath(loadId)
+    try {
+      val files = runJob(rows) { it =>
+        val tc = TaskContext.get()
+        val open = scala.collection.mutable.LinkedHashMap[String, TableWriter.File]()
+        try {
+          it.foreach { r =>
+            val id = if (r.isNullAt(1)) "" else r.getUTF8String(1).toString
+            open.getOrElseUpdate(id, w.open(f"${Warehouse.partitionDir(dir, table, id)}/" +
+              f"part-${tc.partitionId()}%05d-${tc.attemptNumber()}")).write(r.getStruct(0, width))
+          }
+          open.toSeq.map { case (id, f) => id -> f.close() }
+        } catch {
+          case e: Throwable => open.values.foreach(_.abort()); throw e
+        }
+      }
+      commit(loadId, files.toSeq.flatten.groupMap(_._1)(_._2).toSeq.map {
+        case (id, fs) => StagedPartition(table, id, fs)
+      })
+    } finally discard(loadId)
+  }
+
+  /** Writes `rows` on the driver as the one staged file of a dataset's
+    * partition of `table`; none when there are no rows.
+    */
+  def stageRows(loadId: String, table: String, datasetId: String,
+      rows: Seq[InternalRow]): Option[StagedPartition] =
+    writer(table).write(s"${stagedPartitionPath(loadId, table, datasetId)}/part-driver", rows.iterator)
+      .map(f => StagedPartition(table, datasetId, Seq(f)))
+
+  /** Runs `f` over every partition of `rdd` as one Spark job, from the
+    * calling thread (its job group and local properties apply), and
+    * returns the results in partition order. It is `SparkContext.runJob`
+    * with the job id kept: should the job fail, this returns only once
+    * the status tracker shows no task of it still running, so no task
+    * writes into a staging directory after its load discarded it.
+    */
+  private[graft] def runJob[T, U: ClassTag](rdd: RDD[T])(f: Iterator[T] => U): Array[U] = {
+    val results = new Array[U](rdd.partitions.length)
+    val job = spark.sparkContext.submitJob(rdd, f, results.indices,
+      (i: Int, u: U) => results(i) = u, ())
+    try Await.ready(job, Duration.Inf)
+    catch { case e: Throwable => job.cancel(); awaitTasks(job.jobIds); throw e }
+    job.value.get match {
+      case Success(_) => results
+      case Failure(e) => awaitTasks(job.jobIds); throw e
+    }
+  }
+
+  /** Waits until the jobs have ended and none of their stages has a
+    * running task, as far as the status tracker has heard; at most a
+    * minute, so events the listener bus dropped cannot hang a load.
+    */
+  private def awaitTasks(jobIds: Seq[Int]): Unit = {
+    val tracker = spark.sparkContext.statusTracker
+    def running(id: Int): Boolean = tracker.getJobInfo(id).forall { j =>
+      j.status == JobExecutionStatus.RUNNING ||
+        j.stageIds.exists(s => tracker.getStageInfo(s).exists(_.numActiveTasks > 0))
+    }
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (jobIds.exists(running) && System.nanoTime() < deadline) Thread.sleep(5)
+    if (jobIds.exists(running))
+      log.warn(s"jobs ${jobIds.mkString(",")} still report running tasks; discarding their files anyway")
+  }
+
+  /** Publishes staged partitions of load `loadId`. Each partition
+    * commits on its own: the first failure is rethrown once every
+    * partition was tried, with the others attached as suppressed.
+    */
+  def commit(loadId: String, parts: Seq[StagedPartition]): Unit =
+    Warehouse.eachOnItsOwn(parts)(publish(loadId, _))
+
+  /** Only the files successful tasks returned are published: anything
+    * else in the staged partition (a failed attempt's leftover, a stray)
+    * is deleted first. The live partition is deleted, then the staged
+    * one renamed into its place. The rename never targets an existing
+    * path: Hadoop would move the staged directory INTO it.
+    */
+  private def publish(loadId: String, p: StagedPartition): Unit = {
+    val staged = new Path(stagedPartitionPath(loadId, p.table, p.datasetId))
+    val live = new Path(partitionPath(p.table, p.datasetId))
+    val fs = staged.getFileSystem(hconf)
+    val keep = p.files.map(new Path(_).getName).toSet
+    val found = fs.listStatus(staged).map(_.getPath)
+    found.filterNot(f => keep(f.getName)).foreach(fs.delete(_, true))
+    val missing = keep -- found.map(_.getName)
+    if (missing.nonEmpty)
+      throw new IOException(s"staged files missing from $staged: ${missing.mkString(", ")}")
+    fs.delete(live, true)
+    Warehouse.mkdirs(fs, live.getParent)
+    if (fs.exists(live) || !fs.rename(staged, live))
+      throw new IOException(s"cannot publish $staged as $live")
+  }
+
+  /** Deletes what is left of load `loadId`'s staging directory, and the
+    * staging root once no load uses it.
+    */
+  def discard(loadId: String): Unit = {
+    val dir = new Path(stagingPath(loadId))
+    val fs = dir.getFileSystem(hconf)
+    fs.delete(dir, true)
+    Warehouse.removeIfEmpty(fs, dir.getParent)
+  }
+
+  /** Append-only response log (K10): each call writes one uniquely named
+    * file under a hidden name, then renames it into place, so readers
+    * never list a partial file and concurrent appends need no lock.
+    */
+  def appendResponses(df: DataFrame): Unit = {
+    val schema = Warehouse.schemas("response")
+    val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
+    appendResponseRows(df.select(schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType)): _*)
+      .collect().iterator.map(toRow(_).asInstanceOf[InternalRow]))
+  }
+
+  /** [[appendResponses]] of responses in hand, with no query to plan. */
+  def appendResponses(responses: Seq[LoadResponse]): Unit =
+    appendResponseRows(responses.iterator.map(r => InternalRow(UTF8String.fromString(r.messageId),
+      UTF8String.fromString(r.messageType), UTF8String.fromString(r.message), r.success, r.status)))
+
+  private def appendResponseRows(rows: Iterator[InternalRow]): Unit = {
+    val dir = tablePath("response")
+    writer("response").write(s"$dir/.${UUID.randomUUID()}", rows).foreach { hidden =>
+      val from = new Path(hidden)
+      val to = new Path(dir, "part-" + from.getName.drop(1))
+      if (!from.getFileSystem(hconf).rename(from, to))
+        throw new IOException(s"cannot publish $from as $to")
+    }
   }
 
   /** B1 JDBC parity sink: the reference's real load target is Postgres
@@ -154,8 +322,8 @@ final class Warehouse(spark: SparkSession, val root: String) {
 
   /** Idempotent JDBC re-load: pre-clean the dataset's rows, then append.
     * Running it twice with the same frame leaves the same row count —
-    * the JDBC-target equivalent of the parquet tables' dynamic partition
-    * overwrite.
+    * the JDBC-target equivalent of the parquet tables' partition
+    * replace.
     */
   def reloadFeaturesJdbc(url: String, table: String, df: DataFrame,
       datasetId: String, batchSize: Int = 1000, maxConnections: Int = 20,
@@ -185,30 +353,29 @@ final class Warehouse(spark: SparkSession, val root: String) {
 
   def tableExists(name: String): Boolean = {
     val p = new Path(tablePath(name))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    p.getFileSystem(hconf).exists(p)
   }
 
   /** Path of one dataset's partition within a table. */
   def partitionPath(table: String, datasetId: String): String =
-    s"${tablePath(table)}/tdei_dataset_id=$datasetId"
+    Warehouse.partitionDir(root, table, datasetId)
 
   def partitionExists(table: String, datasetId: String): Boolean = {
     val p = new Path(partitionPath(table, datasetId))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    p.getFileSystem(hconf).exists(p)
   }
 
-  /** Explicit cross-table pre-clean (A1). Dynamic partition overwrite
-    * already replaces partitions we re-write; this additionally removes a
-    * dataset's rows from layer tables the re-load does NOT touch (e.g. a
-    * reload that dropped a layer) — full parity with
+  /** Explicit cross-table pre-clean (A1). A commit already replaces the
+    * partitions a load writes; this additionally removes a dataset's
+    * rows from layer tables the re-load does NOT touch (e.g. a reload
+    * that dropped a layer) — full parity with
     * `delete_dataset_records_by_id`.
     */
   def deleteDatasetRecords(datasetId: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
     val tables = Layer.all.map(_.table).distinct ++
       Seq("extension_file", "dataset", "stats")
     tables.foreach { t =>
-      val dir = new Path(s"${tablePath(t)}/tdei_dataset_id=$datasetId")
+      val dir = new Path(partitionPath(t, datasetId))
       val fs = dir.getFileSystem(hconf)
       if (fs.exists(dir)) fs.delete(dir, true)
     }
@@ -255,7 +422,61 @@ final class ForeignKeyDbException(msg: String, cause: Throwable)
 
 object Warehouse {
 
-  private[sinks] val responseLock = new Object
+  /** Directory under the root that holds each load's staged files. */
+  val Staging = "_staging"
+
+  val PartitionColumn = "tdei_dataset_id"
+
+  /** `<base>/content_<table>/tdei_dataset_id=<id>`, the id escaped as
+    * Spark escapes partition values (an empty id is the default
+    * partition).
+    */
+  def partitionDir(base: String, table: String, datasetId: String): String =
+    s"$base/content_$table/${ExternalCatalogUtils.getPartitionPathString(PartitionColumn, datasetId)}"
+
+  /** The columns a table's files hold: all but the partition column, all
+    * nullable, as Spark writes parquet.
+    */
+  def dataSchema(table: String): StructType =
+    StructType(schemas(table).filter(_.name != PartitionColumn).map(_.copy(nullable = true)))
+
+  /** Runs `f` on every element, each on its own; then rethrows the first
+    * failure with the others attached as suppressed.
+    */
+  private[graft] def eachOnItsOwn[T](xs: Seq[T])(f: T => Unit): Unit = {
+    val failures = xs.flatMap { x =>
+      try { f(x); None }
+      catch { case NonFatal(e) => Some(e) }
+    }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+  }
+
+  /** Creates `dir` and its parents. A local directory is made through
+    * java.nio: Hadoop's local file system would start a `chmod` process
+    * for each level it creates. A concurrent load may remove an empty
+    * staging root between creating a parent and its child: try again.
+    */
+  private[sinks] def mkdirs(fs: FileSystem, dir: Path): Unit = {
+    def once(): Boolean = fs match {
+      case local: LocalFileSystem =>
+        try { NioFiles.createDirectories(local.pathToFile(dir).toPath); true }
+        catch { case _: NoSuchFileException => false }
+      case other => other.mkdirs(dir)
+    }
+    if (!(0 until 3).exists(_ => once())) throw new IOException(s"cannot create $dir")
+  }
+
+  /** Removes `dir` if it is an empty directory, atomically: a concurrent
+    * load that has just created a child in it keeps it.
+    */
+  private def removeIfEmpty(fs: FileSystem, dir: Path): Unit =
+    try fs match {
+      case local: LocalFileSystem => NioFiles.deleteIfExists(local.pathToFile(dir).toPath)
+      case other => other.delete(dir, false)
+    } catch { case _: IOException => () } // not empty
 
   /** Map constraint-violation SQLStates to typed errors. The original
     * SQLException may sit anywhere in a SparkException cause chain or a

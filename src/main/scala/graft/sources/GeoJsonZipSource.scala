@@ -111,8 +111,8 @@ object GeoJsonZipSource {
   }
 
   /** [[read]] as an RDD with one partition per `.geojson` entry, in
-    * listing order, together with the layer of each partition's entry: a
-    * consumer of one layer can read just the partitions that hold it.
+    * listing order, together with the entry path of each partition: the
+    * driver knows every entry and its layer before any task runs.
     */
   def readEntries(spark: SparkSession, path: String,
       transform: Boolean): (RDD[ParsedRecord], IndexedSeq[String]) = {
@@ -135,7 +135,7 @@ object GeoJsonZipSource {
         StreamUtil.closeOnExhaustion(
           entryRecords(e.zipPath, e.member.name, e.seq, member, transform), reader)
       }
-    (records, entries.map(e => Layer.route(e.member.name).name).toIndexedSeq)
+    (records, entries.map(_.member.name).toIndexedSeq)
   }
 
   /** Expand a (path, content) DataFrame of already-materialized ZIP blobs

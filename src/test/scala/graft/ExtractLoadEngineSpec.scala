@@ -287,8 +287,9 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val staging = Files.walk(root).iterator().asScala
       .filter(_.getFileName.toString.startsWith(".spark-staging-")).toList
     assert(staging.isEmpty, staging)
+    assert(stagingLeft(root.toString).isEmpty)
     val writers = Thread.getAllStackTraces.keySet.asScala
-      .filter(_.getName == ExtractLoadEngine.WriterThreadName)
+      .filter(_.getName.startsWith("extract-load"))
     writers.foreach(_.join(10000))
     assert(writers.forall(!_.isAlive), writers.map(_.getName))
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
@@ -321,9 +322,9 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
     val load = groups.asScala.toList.takeWhile(_ != "marker")
     assert(load.forall(_ == "load-under-test"), load)
-    // parse (the header collect), 4 layer writes, dataset,
-    // extension_file and stats upserts, response append
-    assert(load.size == 9, load)
+    // the parse job, whose tasks write the feature files; the metadata
+    // files, the commit and the response append run no job
+    assert(load.size == 1, load)
     // the parse action runs one task per .geojson entry
     assert(tasks.asScala.head == 4, tasks)
   }
@@ -337,6 +338,11 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def partitionsOf(engine: ExtractLoadEngine, id: String) =
     Files.list(java.nio.file.Path.of(engine.warehouse.root)).iterator().asScala
       .map(_.resolve(s"tdei_dataset_id=$id")).filter(Files.exists(_)).toList
+
+  /** Anything of the staging area left under a warehouse root. */
+  private def stagingLeft(root: String) =
+    Files.walk(java.nio.file.Path.of(root)).iterator().asScala
+      .filter(_.getFileName.toString == graft.sinks.Warehouse.Staging).toList
 
   test("unreadable archives: the reference's no-geojson response") {
     // the first local header overwritten, as in a corrupt upload
@@ -379,6 +385,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(resp.message.startsWith("Error loading the data : "), resp.message)
       assert(partitionsOf(engine, "broken").isEmpty, what)
       assert(engine.warehouse.table("response").count() == 1, what)
+      assert(stagingLeft(engine.warehouse.root).isEmpty, what)
     }
     // the unbroken archives load
     Seq(stored, deflated).foreach { b =>

@@ -1,0 +1,219 @@
+package graft
+
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{SparkException, TaskContext}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+
+import graft.model.{ExtractLoadRequest, LoadResponse, QueueMessage}
+import graft.service.ExtractLoadEngine
+import graft.sinks.{StagedPartition, Warehouse}
+
+/** The parquet side of the warehouse: staged files, the commit that
+  * publishes them, the lock-free response append, and the schema the
+  * written files carry.
+  */
+class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  // two attempts per task, so a failed attempt can be followed by one
+  // that succeeds
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4,2]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
+
+  private def freshWarehouse() =
+    new Warehouse(spark, Files.createTempDirectory("graft-wh").toString)
+
+  private def row(feature: String): InternalRow =
+    InternalRow(UTF8String.fromString(feature), UTF8String.fromString("u"))
+
+  private def features(wh: Warehouse, table: String, id: String): Set[String] =
+    wh.table(table).filter(col("tdei_dataset_id") === id).collect()
+      .map(_.getAs[String]("feature")).toSet
+
+  private def filesUnder(dir: String): List[Path] =
+    if (!Files.exists(Path.of(dir))) Nil
+    else Files.walk(Path.of(dir)).iterator().asScala.filter(Files.isRegularFile(_)).toList
+
+  test("commit publishes only the files the tasks returned, never a stray one") {
+    val wh = freshWarehouse()
+    val load = "load-1"
+    val staged = wh.stageRows(load, "node", "ds", Seq(row("a"), row("b"))).get
+    // a leftover of a failed attempt and a stray copy, in the same staged partition
+    val src = Path.of(staged.files.head)
+    Files.copy(src, src.resolveSibling("part-00000-1.snappy.parquet"))
+    Files.copy(src, src.resolveSibling("stray.parquet"))
+    wh.commit(load, Seq(staged))
+    wh.discard(load)
+    assert(wh.table("node").count() == 2)
+    val published = filesUnder(wh.partitionPath("node", "ds"))
+      .map(_.getFileName.toString).filterNot(_.endsWith(".crc"))
+    assert(published == Seq(src.getFileName.toString), published)
+    assert(!Files.exists(Path.of(wh.root, Warehouse.Staging)))
+
+    // a returned file that vanished fails the commit and keeps the live partition
+    val again = wh.stageRows("load-2", "node", "ds", Seq(row("c"))).get
+    val lost = StagedPartition("node", "ds", again.files :+ s"${again.files.head}.missing")
+    val e = intercept[java.io.IOException](wh.commit("load-2", Seq(lost)))
+    assert(e.getMessage.contains("missing"), e.getMessage)
+    wh.discard("load-2")
+    assert(features(wh, "node", "ds") == Set("a", "b"))
+  }
+
+  test("a failed task attempt's file is not published; the retried attempt's is") {
+    val wh = freshWarehouse()
+    val load = "retry"
+    val dir = wh.stagedPartitionPath(load, "node", "ds")
+    val writer = wh.writer("node")
+    val files = wh.runJob(spark.sparkContext.parallelize(Seq(1, 2), 2)) { it =>
+      val tc = TaskContext.get()
+      val n = it.next()
+      val f = writer.open(f"$dir/part-${tc.partitionId()}%05d-${tc.attemptNumber()}")
+      f.write(InternalRow(UTF8String.fromString(s"f$n-${tc.attemptNumber()}"), UTF8String.fromString("u")))
+      // the first attempt of task 1 leaves a whole file behind, then fails
+      if (n == 2 && tc.attemptNumber() == 0) { f.close(); sys.error("first attempt fails") }
+      f.close()
+    }
+    assert(filesUnder(dir).count(_.toString.endsWith(".parquet")) == 3)
+    wh.commit(load, Seq(StagedPartition("node", "ds", files.toSeq)))
+    wh.discard(load)
+    assert(features(wh, "node", "ds") == Set("f1-0", "f2-1"))
+  }
+
+  test("each partition commits on its own; the first failure carries the others") {
+    val wh = freshWarehouse()
+    // two tables whose directory is a plain file cannot take a partition
+    Seq("zone", "edge").foreach(t => Files.writeString(Path.of(wh.tablePath(t)), "not a table"))
+    val load = "partial"
+    val parts = Seq("zone", "node", "edge").map(t => wh.stageRows(load, t, "ds", Seq(row(t))).get)
+    val e = intercept[Exception](wh.commit(load, parts))
+    wh.discard(load)
+    assert(e.getMessage.contains("content_zone"), e.getMessage)
+    assert(e.getSuppressed.length == 1 && e.getSuppressed.head.getMessage.contains("content_edge"),
+      e.getSuppressed.toSeq)
+    assert(features(wh, "node", "ds") == Set("node"))
+    assert(!Files.exists(Path.of(wh.root, Warehouse.Staging)))
+  }
+
+  test("a commit replaces the live partition and never nests the staged one in it") {
+    val wh = freshWarehouse()
+    (1 to 3).foreach { i =>
+      val load = s"load-$i"
+      wh.commit(load, wh.stageRows(load, "node", "ds", (1 to i).map(j => row(s"$i-$j"))).toSeq)
+      wh.discard(load)
+      assert(features(wh, "node", "ds") == (1 to i).map(j => s"$i-$j").toSet)
+      val nested = Files.walk(Path.of(wh.partitionPath("node", "ds"))).iterator().asScala
+        .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("tdei_dataset_id=")).toList
+      assert(nested.size == 1, nested)
+    }
+    // another dataset's partition is left alone
+    wh.commit("other", wh.stageRows("other", "node", "ds2", Seq(row("x"))).toSeq)
+    wh.discard("other")
+    assert(features(wh, "node", "ds") == Set("3-1", "3-2", "3-3"))
+  }
+
+  test("a failed job returns once no task of it runs, so discarding leaves no staging") {
+    val wh = freshWarehouse()
+    val load = "failed"
+    val dir = wh.stagingPath(load)
+    val e = intercept[SparkException] {
+      wh.runJob(spark.sparkContext.parallelize(Seq(1, 2), 2)) { it =>
+        if (it.next() == 1) sys.error("entry 1 is broken")
+        // a task that does not look for its kill flag and writes late
+        Thread.sleep(1000)
+        val p = Path.of(dir, "late", "file")
+        Files.createDirectories(p.getParent)
+        Files.writeString(p, "late")
+      }
+    }
+    assert(e.getMessage.contains("entry 1 is broken"))
+    wh.discard(load)
+    // past the late write: had the job returned before its last task
+    // ended, that write would have recreated the staging directory
+    Thread.sleep(1500)
+    assert(!Files.exists(Path.of(wh.root, Warehouse.Staging)), filesUnder(wh.root))
+  }
+
+  test("writeFeatures and upsertByDataset replace exactly the partitions of their rows") {
+    import spark.implicits._
+    val wh = freshWarehouse()
+    val first = Seq(("a1", "u", "A"), ("b1", "u", "B"), ("b2", "u", "B"))
+      .toDF("feature", "requested_by", "tdei_dataset_id").repartition(2)
+    wh.writeFeatures("node", first)
+    assert(features(wh, "node", "A") == Set("a1") && features(wh, "node", "B") == Set("b1", "b2"))
+    // columns in another order, and only dataset B
+    wh.writeFeatures("node", Seq(("B", "b3", "u")).toDF("tdei_dataset_id", "feature", "requested_by"))
+    assert(features(wh, "node", "A") == Set("a1") && features(wh, "node", "B") == Set("b3"))
+    wh.upsertByDataset("extension_file",
+      Seq((1, "curbs", "{}", "u", "A")).toDF("id", "name", "file_meta", "requested_by", "tdei_dataset_id"))
+    assert(wh.table("extension_file").collect().map(_.getAs[String]("name")).toSeq == Seq("curbs"))
+    assert(!Files.exists(Path.of(wh.root, Warehouse.Staging)))
+  }
+
+  test("response appends need no lock: 2 threads x 10 give 20 rows, never a partial file") {
+    import spark.implicits._
+    val wh = freshWarehouse()
+    wh.appendResponses(Seq(LoadResponse("seed", "w", "m", success = true)).toDF())
+    @volatile var appending = true
+    val seen = new ConcurrentLinkedQueue[Long]()
+    val reader = new Thread(() => while (appending) seen.add(wh.table("response").count()))
+    reader.start()
+    val writers = (0 until 2).map { c =>
+      // one thread appends frames, the other responses in hand
+      val t = new Thread(() => (0 until 10).foreach { i =>
+        val r = LoadResponse(s"m-$c-$i", "w", "m", success = c == 0)
+        if (c == 0) wh.appendResponses(Seq(r).toDF()) else wh.appendResponses(Seq(r))
+      })
+      t.start(); t
+    }
+    writers.foreach(_.join())
+    appending = false
+    reader.join()
+    // every read succeeded (a partial parquet file fails to read) and
+    // never counted more rows than were appended
+    assert(seen.asScala.forall(n => n >= 1 && n <= 21), seen)
+    val rows = wh.table("response").collect()
+    assert(rows.length == 21)
+    assert(rows.map(_.getAs[String]("messageId")).toSet.size == 21)
+    val hidden = Files.list(Path.of(wh.tablePath("response"))).iterator().asScala
+      .map(_.getFileName.toString).filter(n => n.startsWith(".") && !n.endsWith(".crc")).toList
+    assert(hidden.isEmpty, hidden)
+  }
+
+  test("every table a load writes reads back with its fixed schema by inference") {
+    def fc(features: String*) =
+      s"""{"type":"FeatureCollection","name":"f","features":[${features.mkString(",")}]}"""
+    def point(id: String) =
+      s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[1.5,2.5,3]},"properties":{"_id":"$id"}}"""
+    val names = Seq("nodes", "edges", "points", "lines", "polygons", "zones", "ext/curbs")
+    val zip = graft.operators.Zip.buildZip(names.map(n =>
+      (s"$n.geojson", fc(point(n)).getBytes("UTF-8"), true)))
+    val file = Files.createTempFile("graft-schema", ".zip")
+    Files.write(file, zip)
+    val engine = new ExtractLoadEngine(spark, Files.createTempDirectory("graft-wh").toString)
+    val resp = engine.processRequest(QueueMessage("m", "w",
+      ExtractLoadRequest("osw", file.toString, "ds-schema", "u")))
+    assert(resp.success, resp.message)
+    val wh = engine.warehouse
+    def shape(s: StructType): Seq[(String, DataType)] = s.fields.toSeq.map(f => f.name -> f.dataType)
+    val tables = Warehouse.schemas.keySet.toSeq.sorted
+    assert(tables.forall(wh.tableExists), tables.filterNot(wh.tableExists))
+    tables.foreach { t =>
+      assert(shape(spark.read.parquet(wh.tablePath(t)).schema) == shape(Warehouse.schemas(t)), t)
+    }
+  }
+}
