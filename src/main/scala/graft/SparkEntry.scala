@@ -199,7 +199,6 @@ object SparkEntry {
     // AudioSpec), which paid an interpreted lambda walk per sample per
     // row just to BUILD the fixture (~1.2 s of each audio query at
     // sf0.1 before any operator ran).
-    graft.expressions.AudioExprs.register(docs.sparkSession)
     docs.select(col("doc_id").as("id"),
       graft.expressions.AudioExprs
         .syntheticPcmNative(col("doc_id"), n, classed).as("samples"))
@@ -223,7 +222,6 @@ object SparkEntry {
     // Native fixture kernel — same rationale and parity pin as
     // [[syntheticPcm]] (the auto-classed arrays run to 1105 samples,
     // the costliest interpreted fixture in the bench).
-    graft.expressions.AudioExprs.register(docs.sparkSession)
     docs.select(col("doc_id").as("id"),
       graft.expressions.AudioExprs
         .syntheticPcmAutoNative(col("doc_id")).as("samples"))
@@ -2232,7 +2230,6 @@ object SparkEntry {
         .select(col("doc_id"))),
 
     "q_ngram_jaccard" -> ((s, dir) => {
-      graft.expressions.TextHashExprs.register(s)
       val docs = t(s, dir, "documents")
       val a = docs.select(col("doc_id").as("a_id"), col("text").as("a_text"))
       val b = docs.select((col("doc_id") - 1L).as("a_id"),
@@ -2989,7 +2986,6 @@ object SparkEntry {
     // through the REAL integer stats expressions: peak, zero
     // crossings, total energy, 4 x 64-sample window energies
     "q_audio_stats" -> ((s, dir) => {
-      graft.expressions.AudioExprs.register(s)
       val pcm = syntheticPcm(t(s, dir, "documents"), n = 256,
         classed = false)
       pcm.select(col("id") +:
@@ -3060,7 +3056,6 @@ object SparkEntry {
     // oracle). The jingle-detection composition on top of this is
     // spec-pinned in AudioSpec
     "q_audio_segments" -> ((s, dir) => {
-      graft.expressions.AudioExprs.register(s)
       val segs = Audio.segmentClips(
         syntheticWavDocs(t(s, dir, "documents")), "id", "content",
         segmentFrames = 64)
@@ -3081,7 +3076,6 @@ object SparkEntry {
     // block-pigeonhole pair machinery as the image path; every step
     // exact integer, replicated in DuckDB HUGEINT arithmetic
     "q_audio_near_dup" -> ((s, dir) => {
-      graft.expressions.AudioExprs.register(s)
       Dedup.hamming64NearDupPairs(
         syntheticPcm(t(s, dir, "documents"), n = 65 * 4, classed = true)
           .select(col("id"), Audio.audioFingerprint64(
@@ -3096,7 +3090,6 @@ object SparkEntry {
     // expressions -> gradient fingerprint -> the same pair machinery;
     // window arithmetic replicates as (n + 64) // 65 in SQL
     "q_audio_near_dup_auto" -> ((s, dir) => {
-      graft.expressions.AudioExprs.register(s)
       Dedup.hamming64NearDupPairs(
         syntheticPcmAutoClassed(t(s, dir, "documents"))
           .select(col("id"), Audio.audioFingerprint64(
@@ -3113,7 +3106,6 @@ object SparkEntry {
     // decode + sidecar lifecycle around this kernel is spec-pinned in
     // AudioSpec
     "q_audio_admission" -> ((s, dir) => {
-      graft.expressions.AudioExprs.register(s)
       val sigs = syntheticPcmAutoClassed(t(s, dir, "documents"))
         .select(col("id"), Audio.audioFingerprint64(
           graft.expressions.AudioExprs.energiesNative(col("samples"),
@@ -4629,7 +4621,6 @@ object SparkEntry {
     // ---- P4/P5/P7 geometry (oracle-checked through synthetic features) --
 
     "q_geo_point" -> ((s, dir) => {
-      graft.expressions.ProcessGeometryExpr.register(s)
       pointFeatures(s, dir)
       .select(col("l_orderkey"), col("l_linenumber"),
         graft.expressions.ProcessGeometryExpr
@@ -4769,7 +4760,6 @@ object SparkEntry {
           col("n_members"), col("exts"), col("total_bytes"))),
 
     "q_geo_linestring" -> ((s, dir) => {
-      graft.expressions.ProcessGeometryExpr.register(s)
       lineFeatures(s, dir)
       .select(col("l_orderkey"), col("l_linenumber"),
         graft.expressions.ProcessGeometryExpr

@@ -1,13 +1,11 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native single-pass kernel for the audio energy-profile hot path.
@@ -396,7 +394,7 @@ object AudioExprs {
       s"expected a boolean literal, got $other")
   }
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[expressions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "audio_energies_native" ->
       (es => AudioEnergiesExpr(es(0), es(1), intLit(es(2)))),
     "audio_stats_native" -> (es => AudioStatsExpr(es(0))),
@@ -405,39 +403,22 @@ object AudioExprs {
       (es => SyntheticPcmExpr(es(0), intLit(es(1)), boolLit(es(2)))),
     "synthetic_pcm_auto_native" -> (es => SyntheticPcmAutoExpr(es(0))))
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
-
-  /** Session-extension hook (see [[GraftExtensions]]). */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[AudioKernels.type].getName, name),
-        builder))
-    }
-
   import org.apache.spark.sql.functions.{lit => slit}
 
   def energiesNative(samples: Column, window: Column,
       nWindows: Int): Column =
-    call_function("audio_energies_native", samples,
+    GraftFunctions("audio_energies_native", samples,
       window.cast("int"), slit(nWindows))
 
   def statsNative(samples: Column): Column =
-    call_function("audio_stats_native", samples)
+    GraftFunctions("audio_stats_native", samples)
 
   def fingerprint64Native(energies: Column): Column =
-    call_function("audio_fingerprint64_native", energies)
+    GraftFunctions("audio_fingerprint64_native", energies)
 
   def syntheticPcmNative(id: Column, n: Int, classed: Boolean): Column =
-    call_function("synthetic_pcm_native", id, slit(n), slit(classed))
+    GraftFunctions("synthetic_pcm_native", id, slit(n), slit(classed))
 
   def syntheticPcmAutoNative(id: Column): Column =
-    call_function("synthetic_pcm_auto_native", id)
+    GraftFunctions("synthetic_pcm_auto_native", id)
 }

@@ -1,11 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.DataType
 
 /** Optimizer barrier: an identity pass-through the optimizer must not
@@ -51,31 +49,10 @@ case class EvalOnceExpr(child: Expression) extends UnaryExpression {
 
 object BarrierExprs {
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[expressions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "eval_once" -> (es => EvalOnceExpr(es(0))),
   )
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
-
-  /** Session-extension hook (see [[GraftExtensions]]). */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[EvalOnceExpr].getName, name),
-        builder))
-    }
-
-  /** `c`, evaluated exactly once where it is projected. `eval_once`
-    * resolves in the session of the frame the column lands in, so the
-    * caller must have run [[register]] on that frame's `sparkSession` —
-    * not on the thread's active session, which may be another one.
-    */
-  def evalOnce(c: Column): Column = call_function("eval_once", c)
+  /** `c`, evaluated exactly once where it is projected. */
+  def evalOnce(c: Column): Column = GraftFunctions("eval_once", c)
 }

@@ -1,11 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-/** Session registration for Spark's OWN bloom-filter expressions.
+/** SQL names for Spark's OWN bloom-filter expressions.
   *
   * `BloomFilterAggregate` / `BloomFilterMightContain` are the engine's
   * runtime-filter machinery (injected by `InjectRuntimeFilter` for
@@ -25,16 +23,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
   */
 object BloomExprs {
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[expressions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "bloom_filter_agg_graft" -> (es => new BloomFilterAggregate(es(0), es(1), es(2))),
     "might_contain_graft" -> (es => BloomFilterMightContain(es(0), es(1))),
   )
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
 }

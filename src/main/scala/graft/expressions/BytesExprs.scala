@@ -1,12 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** One-pass byte-array kernels.
@@ -78,34 +76,10 @@ case class BinaryConcatExpr(child: Expression) extends UnaryExpression {
 
 object BytesExprs {
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[expressions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "concat_binaries_native" -> (es => BinaryConcatExpr(es(0))),
   )
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
-
-  /** Session-extension hook (see [[GraftExtensions]]). */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[BytesKernels.type].getName, name),
-        builder))
-    }
-
-  def registerOnLiveSession(): Unit =
-    SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-
-  def concatBinaries(arr: Column): Column = {
-    registerOnLiveSession()
-    call_function("concat_binaries_native", arr)
-  }
+  def concatBinaries(arr: Column): Column =
+    GraftFunctions("concat_binaries_native", arr)
 }

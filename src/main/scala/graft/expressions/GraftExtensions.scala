@@ -1,28 +1,14 @@
 package graft.expressions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point: deploy with
   * `spark.sql.extensions=graft.expressions.GraftExtensions` and every
   * session (including ones the library never touches directly — Thrift
-  * server, notebooks) gets the engine's native functions without a
-  * per-session `register` call.
+  * server, notebooks) can call the engine's native functions from SQL
+  * text without a per-session [[GraftFunctions.register]] call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("process_geometry_native"),
-      new ExpressionInfo(classOf[ProcessGeometryExpr].getName,
-        "process_geometry_native"),
-      exprs => ProcessGeometryExpr(exprs(0), exprs(1))))
-    TextHashExprs.injectInto(ext)
-    TextQualityExprs.injectInto(ext)
-    ImageExprs.injectInto(ext)
-    BytesExprs.injectInto(ext)
-    VectorHashExprs.injectInto(ext)
-    AudioExprs.injectInto(ext)
-    BarrierExprs.injectInto(ext)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.injectInto(ext)
 }

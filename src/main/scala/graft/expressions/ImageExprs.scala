@@ -1,13 +1,11 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native kernels for the perceptual image hashes and the synthetic
@@ -180,44 +178,16 @@ case class AHash64Expr(child: Expression) extends GridHashExpr {
 
 object ImageExprs {
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[expressions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "synthetic_luma_grid_native" -> (es => LumaGridExpr(es(0))),
     "dhash64_native" -> (es => DHash64Expr(es(0))),
     "ahash64_native" -> (es => AHash64Expr(es(0))),
   )
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
-
-  /** Session-extension hook (see [[GraftExtensions]]). */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[ImageKernels.type].getName, name),
-        builder))
-    }
-
-  def registerOnLiveSession(): Unit =
-    SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-
-  def lumaGridNative(id: Column): Column = {
-    registerOnLiveSession()
-    call_function("synthetic_luma_grid_native", id)
-  }
-  def dHash64Native(grid: Column): Column = {
-    registerOnLiveSession()
-    call_function("dhash64_native", grid)
-  }
-  def aHash64Native(grid: Column): Column = {
-    registerOnLiveSession()
-    call_function("ahash64_native", grid)
-  }
+  def lumaGridNative(id: Column): Column =
+    GraftFunctions("synthetic_luma_grid_native", id)
+  def dHash64Native(grid: Column): Column =
+    GraftFunctions("dhash64_native", grid)
+  def aHash64Native(grid: Column): Column =
+    GraftFunctions("ahash64_native", grid)
 }

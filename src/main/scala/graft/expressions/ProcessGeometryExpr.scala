@@ -1,10 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -52,15 +51,11 @@ case class ProcessGeometryExpr(left: Expression, right: Expression)
 
 object ProcessGeometryExpr {
 
-  /** Column API over the native expression (resolved through the
-    * session's function registry — call `register(spark)` once).
-    */
-  def process_geometry_native(feature: Column, layer: Column): Column =
-    call_function("process_geometry_native", feature, layer)
+  private[expressions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "process_geometry_native" -> (es => ProcessGeometryExpr(es(0), es(1))),
+  )
 
-  /** Register as a SQL-callable function on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "process_geometry_native",
-      exprs => ProcessGeometryExpr(exprs(0), exprs(1)), "built-in")
+  /** Column API over the native expression. */
+  def process_geometry_native(feature: Column, layer: Column): Column =
+    GraftFunctions("process_geometry_native", feature, layer)
 }

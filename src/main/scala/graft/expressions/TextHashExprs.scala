@@ -2,13 +2,11 @@ package graft.expressions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -359,9 +357,8 @@ case class SimHash64Expr(child: Expression) extends TextKernelExpr {
     copy(child = c)
 }
 
-/** Column API + per-session registration for the kernel expressions.
-  * `register` is idempotent (checked, not createOrReplace) so operators
-  * can call it on every invocation without log noise.
+/** Column API over the kernel expressions (bound through
+  * [[GraftFunctions]]).
   */
 object TextHashExprs {
 
@@ -369,7 +366,7 @@ object TextHashExprs {
     e.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
       .value.asInstanceOf[Number].intValue
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[expressions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "ngrams_native" -> (es => NgramsNativeExpr(es(0), lit(es(1)))),
     "ngram_hashes_native" -> (es => NgramHashesExpr(es(0), lit(es(1)),
       es(2).asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
@@ -380,35 +377,18 @@ object TextHashExprs {
     "trigram_hash_rows_native" -> (es => TrigramHashRowsExpr(es(0))),
   )
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
-
-  /** Session-extension hook (see [[GraftExtensions]]). */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[TextKernels.type].getName, name),
-        builder))
-    }
-
   import org.apache.spark.sql.functions.{lit => slit}
 
   def ngramsNative(text: Column, n: Int): Column =
-    call_function("ngrams_native", text, slit(n))
+    GraftFunctions("ngrams_native", text, slit(n))
   def ngramHashes(text: Column, n: Int, distinct: Boolean): Column =
-    call_function("ngram_hashes_native", text, slit(n), slit(distinct))
+    GraftFunctions("ngram_hashes_native", text, slit(n), slit(distinct))
   def minhashSig(text: Column, numHashes: Int): Column =
-    call_function("minhash_sig_native", text, slit(numHashes))
+    GraftFunctions("minhash_sig_native", text, slit(numHashes))
   def simhash64Native(text: Column): Column =
-    call_function("simhash64_native", text)
+    GraftFunctions("simhash64_native", text)
   def bigramHashRows(text: Column): Column =
-    call_function("bigram_hash_rows_native", text)
+    GraftFunctions("bigram_hash_rows_native", text)
   def trigramHashRows(text: Column): Column =
-    call_function("trigram_hash_rows_native", text)
+    GraftFunctions("trigram_hash_rows_native", text)
 }

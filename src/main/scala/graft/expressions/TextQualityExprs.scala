@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -167,48 +165,18 @@ case class QualityScoreExpr(child: Expression) extends TextQualityExpr {
     copy(child = c)
 }
 
-/** Column API + per-session registration (idempotent, like
-  * [[TextHashExprs.register]]).
+/** Column API over the quality kernels (bound through
+  * [[GraftFunctions]]).
   */
 object TextQualityExprs {
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[expressions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "lang_id_native" -> (es => LangIdExpr(es(0))),
     "quality_score_native" -> (es => QualityScoreExpr(es(0))),
   )
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
-
-  /** Session-extension hook (see [[GraftExtensions]]). */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[TextQualityKernels.type].getName, name),
-        builder))
-    }
-
-  /** Register on whatever session is live — these helpers only see a
-    * Column, and every caller builds plans under a live session (the
-    * Audio.statsColumns precedent).
-    */
-  def registerOnLiveSession(): Unit =
-    SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .foreach(register)
-
-  def langIdNative(text: Column): Column = {
-    registerOnLiveSession()
-    call_function("lang_id_native", text)
-  }
-  def qualityScoreNative(text: Column): Column = {
-    registerOnLiveSession()
-    call_function("quality_score_native", text)
-  }
+  def langIdNative(text: Column): Column =
+    GraftFunctions("lang_id_native", text)
+  def qualityScoreNative(text: Column): Column =
+    GraftFunctions("quality_score_native", text)
 }

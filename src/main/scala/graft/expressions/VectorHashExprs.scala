@@ -1,13 +1,11 @@
 package graft.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native single-pass kernels for the vector-similarity hot paths.
@@ -484,9 +482,9 @@ case class NearestCentroidsExpr(child: Expression, flat: Array[Double],
     copy(child = c)
 }
 
-/** Column API + per-session registration, mirroring [[TextHashExprs]].
-  * The scalar literal args of the SQL forms are fixed at resolution
-  * time (function builders read them as literals).
+/** Column API over the vector kernels, mirroring [[TextHashExprs]].
+  * The scalar args are fixed when the expression is built (the
+  * builders read them as literals).
   */
 object VectorHashExprs {
 
@@ -515,7 +513,7 @@ object VectorHashExprs {
         s"centroid ids, got ${other.sql}")
   }
 
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[expressions] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_sim_native" -> (es => CosineSimExpr(es(0), es(1))),
     "sq_dist_native" -> (es => SqDistExpr(es(0), es(1))),
     "lsh_sig_native" -> (es =>
@@ -530,33 +528,16 @@ object VectorHashExprs {
     }),
   )
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
-
-  /** Session-extension hook (see [[GraftExtensions]]). */
-  def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    builders.foreach { case (name, builder) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[VectorKernels.type].getName, name),
-        builder))
-    }
-
   import org.apache.spark.sql.functions.{lit => slit}
 
   def cosineSim(a: Column, b: Column): Column =
-    call_function("cosine_sim_native", a, b)
+    GraftFunctions("cosine_sim_native", a, b)
   def sqDistNative(a: Column, b: Column): Column =
-    call_function("sq_dist_native", a, b)
+    GraftFunctions("sq_dist_native", a, b)
   def lshSigNative(v: Column, planes: Int, tables: Int, dim: Int): Column =
-    call_function("lsh_sig_native", v, slit(planes), slit(tables), slit(dim))
+    GraftFunctions("lsh_sig_native", v, slit(planes), slit(tables), slit(dim))
   def lshSigIntNative(v: Column, planes: Int, tables: Int, dim: Int): Column =
-    call_function("lsh_sig_int_native", v, slit(planes), slit(tables), slit(dim))
+    GraftFunctions("lsh_sig_int_native", v, slit(planes), slit(tables), slit(dim))
 
   /** The `n` nearest of `cents` (as (cid, centroid) pairs, any order —
     * sorted by cid here to satisfy the kernel's ordering contract) for
@@ -566,7 +547,7 @@ object VectorHashExprs {
   def nearestCentroidsNative(v: Column,
       cents: Array[(Int, Array[Double])], n: Int): Column = {
     val sorted = cents.sortBy(_._1)
-    call_function("nearest_centroids_native", v,
+    GraftFunctions("nearest_centroids_native", v,
       org.apache.spark.sql.functions.typedlit(sorted.map(_._2)),
       org.apache.spark.sql.functions.typedlit(sorted.map(_._1)),
       slit(n))

@@ -2,7 +2,7 @@ package graft.functions
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** Geometry transforms of the extract-load pipeline.
@@ -313,12 +313,4 @@ object GeoFunctions extends Serializable {
   def process_geometry(feature: Column, layer: Column): Column =
     processGeometryUdf(feature, layer)
   def first_elevation(coords: Column): Column = firstElevationUdf(coords)
-
-  /** Register SQL-callable names on a session. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("strip_z", (c: String) => stripZJson(c))
-    spark.udf.register("process_geometry",
-      (f: String, l: String) => processGeometry(f, l))
-    spark.udf.register("first_elevation", (c: String) => firstElevation(c))
-  }
 }

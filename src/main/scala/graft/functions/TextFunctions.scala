@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.expressions.GraftFunctions
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, n-grams, quality stats, fingerprints, language ID.
   *
@@ -22,26 +24,17 @@ object TextFunctions {
     filter(split(trim(text), "\\s+"), t => length(t) > 0)
 
   /** [[tokens]] via the native one-pass kernel — bit-identical
-    * (NativeKernelParitySpec), registered on the live session like the
-    * other kernel Column helpers.
+    * (NativeKernelParitySpec).
     */
-  def tokensNative(text: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.expressions.TextHashExprs.register)
+  def tokensNative(text: Column): Column =
     graft.expressions.TextHashExprs.ngramsNative(text, 1)
-  }
 
   /** Token count via the native tokenizer kernel (one codegen loop —
     * the HOF form above is interpreted per row); null → null like
     * size(tokens(null)), empty → 0. Parity-pinned.
     */
-  def tokenCount(text: Column): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.expressions.TextHashExprs.register)
+  def tokenCount(text: Column): Column =
     size(graft.expressions.TextHashExprs.ngramsNative(text, 1))
-  }
 
   /** BPE-ish subword token count: a GPT-2-style pre-tokenizer regex —
     * common contractions, space-prefixed letter runs, digit runs,
@@ -117,7 +110,6 @@ object TextFunctions {
     * qualityScore(null) is the constant below).
     */
   def qualityScore(text: Column): Column = {
-    graft.expressions.TextQualityExprs.registerOnLiveSession()
     val nullScore = {
       val swScore = 1.0 - math.abs(0.0 - 0.15)
       1.0 * 0.4 + 1.0 * 0.3 + swScore * 0.3
@@ -237,9 +229,8 @@ object TextFunctions {
       struct(array_repeat(lit(0), 64).as("c"), lit(0).as("n")),
       (acc, h) => struct(
         zip_with(acc("c"), bitIdx,
-          // Scala's shiftright only takes a literal shift; the SQL
-          // function accepts a column operand
-          (c, j) => c + call_function("shiftright", h, j)
+          // functions.shiftright only takes a literal shift
+          (c, j) => c + GraftFunctions.shiftRight(h, j)
             .bitwiseAND(1).cast("int")).as("c"),
         (acc("n") + lit(1)).as("n")),
       acc => aggregate(
@@ -334,7 +325,6 @@ object TextFunctions {
     * en-first priority order survives).
     */
   def langId(text: Column): Column = {
-    graft.expressions.TextQualityExprs.registerOnLiveSession()
     coalesce(
       graft.expressions.TextQualityExprs.langIdNative(text), lit("en"))
   }

@@ -896,12 +896,7 @@ object Audio {
     // aggregate(sequence(0,63)) fold ran 64 lambda applications with
     // two boxed element_at walks per row; values are bit-identical
     // (parity pinned in AudioSpec, incl. the null-array → 0 contract).
-    // Registration rides the active/default session: this helper only
-    // sees a Column, and every caller builds plans under a live session.
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .foreach(graft.expressions.AudioExprs.register)
-    call_function("audio_fingerprint64_native", energies)
+    graft.expressions.AudioExprs.fingerprint64Native(energies)
   }
 
   /** Exact per-clip stats over a decoded sample array: frame count,
@@ -912,9 +907,6 @@ object Audio {
     * [[graft.expressions.AudioEnergiesExpr]] — spec-pinned
     * bit-identical to the HOF reference folds [[zeroCrossings]] /
     * [[windowEnergies]], which stay as the replication recipe).
-    * Requires `AudioExprs.register` on the session — [[audioStats]]
-    * does it; standalone callers register once (or deploy
-    * `GraftExtensions`).
     */
   def statsColumns(samples: Column, window: Int,
       nWindows: Int): Seq[Column] = {
@@ -936,7 +928,6 @@ object Audio {
   def audioStats(df: DataFrame, idCol: String, binCol: String,
       window: Int = 64, nWindows: Int = 4,
       maxFrames: Int = 1 << 20): DataFrame = {
-    graft.expressions.AudioExprs.register(df.sparkSession)
     val dec = decodePcm16(df, idCol, binCol, maxFrames).toDF()
       .filter(col("decoded"))
     dec.select(col("id") +: col("sampleRate").as("sample_rate") +:
@@ -978,7 +969,6 @@ object Audio {
     require(window >= 0, "window must be >= 0 (0 = auto per clip)")
     require(canonicalRate >= 0,
       "canonicalRate must be >= 0 (0 = no rate normalization)")
-    graft.expressions.AudioExprs.register(df.sparkSession)
     val win =
       if (window == 0) autoWindow(col("samples")) else lit(window)
     decodeMono(df, idCol, binCol, maxFrames, canonicalRate).toDF()

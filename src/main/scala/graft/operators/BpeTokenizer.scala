@@ -56,7 +56,6 @@ object BpeTokenizer {
   def wordFrequencies(docs: DataFrame, textCol: String): DataFrame = {
     // native tokenizer kernel — bit-identical to the interpreted
     // filter(split(trim)) HOF form (NativeKernelParitySpec)
-    graft.expressions.TextHashExprs.register(docs.sparkSession)
     docs
       .select(explode(graft.expressions.TextHashExprs
         .ngramsNative(col(textCol), 1)).as("word"))
@@ -345,7 +344,6 @@ object BpeTokenizer {
     // native tokenizer kernel (bit-identical to the HOF form —
     // NativeKernelParitySpec); the UDF still runs only over the
     // DISTINCT-word table
-    graft.expressions.TextHashExprs.register(spark)
     docs
       .select(explode(graft.expressions.TextHashExprs
         .ngramsNative(col(textCol), 1)).as("word"))

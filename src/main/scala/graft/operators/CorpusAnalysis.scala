@@ -109,7 +109,6 @@ object CorpusAnalysis {
     // distinct gram hashes come from the native kernel (tokenize →
     // n-gram → md5-60 → first-occurrence dedup in one codegen'd pass;
     // null text → empty like the HOF when/otherwise form it replaced)
-    graft.expressions.TextHashExprs.register(corpus.sparkSession)
     def ghs(c: org.apache.spark.sql.Column) = coalesce(
       graft.expressions.TextHashExprs.ngramHashes(c, n, distinct = true),
       array().cast("array<bigint>"))
@@ -159,7 +158,6 @@ object CorpusAnalysis {
   def ngramNovelty(corpus: DataFrame, ref: DataFrame, idCol: String,
       textCol: String, n: Int = 8): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    graft.expressions.TextHashExprs.register(corpus.sparkSession)
     def ghs(c: org.apache.spark.sql.Column) = coalesce(
       graft.expressions.TextHashExprs.ngramHashes(c, n, distinct = true),
       array().cast("array<bigint>"))
@@ -1350,7 +1348,6 @@ object CorpusAnalysis {
     */
   def dupSpans(docs: DataFrame, idCol: String, textCol: String,
       n: Int = 12): DataFrame = {
-    graft.expressions.TextHashExprs.register(docs.sparkSession)
     val grams = docs
       .select(col(idCol).cast("long").as("id"),
         explode_outer(coalesce(
@@ -1525,7 +1522,6 @@ object CorpusAnalysis {
     */
   private def spanScrubBase(docs: DataFrame, idCol: String, op: String,
       textCol: String): DataFrame = {
-    graft.expressions.TextHashExprs.register(docs.sparkSession)
     docs.select(
       when(col(idCol).isNotNull, col(idCol)).otherwise(raise_error(lit(
         s"$op: null value in id column '$idCol' — doc ids must be " +
@@ -1588,7 +1584,6 @@ object CorpusAnalysis {
       idCol: String, textCol: String, n: Int = 12): DataFrame = {
     require(n >= 1, s"span width must be >= 1, got $n")
     val base = spanScrubBase(docs, idCol, "removeContaminatedSpans", textCol)
-    graft.expressions.TextHashExprs.register(bench.sparkSession)
     // distinct window hashes of the benchmark side — distinct per row
     // in the kernel, across rows by aggregation (8-byte keys)
     val banned = bench

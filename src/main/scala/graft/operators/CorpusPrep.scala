@@ -106,7 +106,6 @@ object CorpusPrep {
     // from the kernel and splits on the single interior space (tokens
     // cannot contain whitespace, so the split is unambiguous) — fully
     // codegen, no interpreted index lambda
-    graft.expressions.TextHashExprs.register(docs.sparkSession)
     val text = coalesce(col(textCol), lit(""))
     val uni = docs
       .select(explode(graft.expressions.TextHashExprs

@@ -49,7 +49,6 @@ object DataSelection {
       buckets: Int = 10000): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     TopK.requireIntegral(docs, idCol, "hashedNgramFeatures")
-    graft.expressions.TextHashExprs.register(docs.sparkSession)
     def grams(n: Int) = coalesce(
       graft.expressions.TextHashExprs.ngramHashes(col(textCol), n,
         distinct = false),

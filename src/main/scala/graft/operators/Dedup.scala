@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.GraftFunctions
 import graft.functions.TextFunctions
 
 /** Deduplication operators for training-data pipelines, designed for the
@@ -281,7 +282,6 @@ object Dedup {
     */
   def minHashSignatures(docs: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64): DataFrame = {
-    graft.expressions.TextHashExprs.register(docs.sparkSession)
     docs
       .select(col(idCol).as("id"),
         coalesce(
@@ -406,7 +406,6 @@ object Dedup {
     // n-grams m times); per-pair work is then pure array set math. The
     // gram construction is the native kernel (null text → empty set,
     // matching the HOF form's when/otherwise)
-    graft.expressions.TextHashExprs.register(aSrc.sparkSession)
     verifyJaccardGramSides(
       aSrc.select(col(idCol).as("a"), gramSet(col(textCol)).as("__ga")),
       bSrc.select(col(idCol).as("b"), gramSet(col(textCol)).as("__gb")),
@@ -414,8 +413,7 @@ object Dedup {
   }
 
   /** The word-trigram shingle set the verification compares — exposed
-    * as a Column so a persisted index can precompute it (the session
-    * must have [[graft.expressions.TextHashExprs]] registered).
+    * as a Column so a persisted index can precompute it.
     */
   private[graft] def gramSet(text: Column): Column =
     array_distinct(coalesce(
@@ -491,7 +489,10 @@ object Dedup {
       .select(col("m1"), explode(col("ms")).as("m2"))
       .filter(col("m1._1") < col("m2._1"))
       .select(col("m1._1").as("a"), col("m2._1").as("b"),
-        Similarity.cosineNative(col("m1._2"), col("m2._2")).as("cosine"))
+        // evalOnce: the cosine >= threshold filter would otherwise
+        // carry a second copy of the kernel
+        graft.expressions.BarrierExprs.evalOnce(
+          Similarity.cosineNative(col("m1._2"), col("m2._2"))).as("cosine"))
       .distinct() // a pair can collide in several tables
       .filter(col("cosine") >= threshold)
   }
@@ -509,9 +510,8 @@ object Dedup {
 
   /** [[ngramJaccard]] with the gram sets built by the native kernel
     * (string grams — NOT hashes, so intersections are byte-identical to
-    * the HOF/oracle semantics, collision-free by construction). Needs
-    * `TextHashExprs.register` on the session; the HOF form above stays
-    * the registration-free portable reference.
+    * the HOF/oracle semantics, collision-free by construction). The
+    * HOF form above stays the portable reference.
     */
   private[graft] def ngramJaccardNative(a: Column, b: Column, n: Int = 3): Column = {
     def g(c: Column) = array_distinct(coalesce(
@@ -535,7 +535,6 @@ object Dedup {
     // one native kernel per row: tokenize → md5-60 → 64 bit-counts →
     // majority fold (the HOF aggregate computed the same hash but
     // interpreted; null text → null simhash either way)
-    graft.expressions.TextHashExprs.register(docs.sparkSession)
     val hashed = docs
       .select(col(idCol).as("id"),
         graft.expressions.TextHashExprs.simhash64Native(col(textCol)).as("sh"))
@@ -573,7 +572,7 @@ object Dedup {
       maxBucket: Int, label: String): DataFrame = {
     val blocks = hashed.select(col("id"), col("sh"), posexplode(
       transform(sequence(lit(0), lit(3)),
-        i => call_function("shiftright", col("sh"), i * 16)
+        i => GraftFunctions.shiftRight(col("sh"), i * 16)
           .bitwiseAND(0xFFFFL))))
       .toDF("id", "sh", "block", "block_val")
 
@@ -652,7 +651,7 @@ object Dedup {
         s"got $maxDistance")
     def blockKeys(sh: Column): Column =
       transform(sequence(lit(0), lit(3)),
-        i => call_function("shiftright", sh, i * 16)
+        i => GraftFunctions.shiftRight(sh, i * 16)
           .bitwiseAND(0xFFFFL))
     val bounded = TopK.boundedCollect[Long](maxBucket)
     def corpusBuckets(): DataFrame = observeBuckets(
@@ -752,7 +751,7 @@ object Dedup {
     val allBuckets = sigRead
       .select(col("sh").cast("long").as("__csh"),
         posexplode(transform(sequence(lit(0), lit(3)),
-          i => call_function("shiftright", col("sh").cast("long"), i * 16)
+          i => GraftFunctions.shiftRight(col("sh").cast("long"), i * 16)
             .bitwiseAND(0xFFFFL))))
       .toDF("__csh", "__blk", "__bval")
       .groupBy(col("__blk"), col("__bval"))
@@ -777,7 +776,7 @@ object Dedup {
           col("__cshs").as(s"__cshs$b"))
       cur = cur
         .withColumn(s"__bv$b",
-          call_function("shiftright", col("__sh"), lit(b * 16))
+          shiftright(col("__sh"), b * 16)
             .bitwiseAND(0xFFFFL))
         .join(bb, Seq(s"__bv$b"), "left")
     }
@@ -824,7 +823,6 @@ object Dedup {
       maxCluster: Int = 1000,
       centroids: Array[(Int, Array[Double])] = null): DataFrame = {
     TopK.requireIntegral(docs, idCol, "semanticDupPairs")
-    graft.expressions.VectorHashExprs.register(docs.sparkSession)
     val cents = if (centroids != null) centroids
       else Similarity.kmeansCentroids(docs, idCol, vecCol, numCentroids)
     val assigned = docs
@@ -853,7 +851,10 @@ object Dedup {
       .select(col("m1"), explode(col("ms")).as("m2"))
       .filter(col("m1._1") < col("m2._1"))
       .select(col("m1._1").as("a"), col("m2._1").as("b"),
-        Similarity.cosineNative(col("m1._2"), col("m2._2")).as("cosine"))
+        // evalOnce: the cosine >= threshold filter would otherwise
+        // carry a second copy of the kernel
+        graft.expressions.BarrierExprs.evalOnce(
+          Similarity.cosineNative(col("m1._2"), col("m2._2"))).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -871,8 +872,6 @@ object Dedup {
       centroids: DataFrame, threshold: Double = 0.95,
       maxCluster: Int = 1000): DataFrame = {
     TopK.requireIntegral(docs, idCol, "semanticDupPairsJoin")
-    // assignCentroidsJoin registers the vector kernels (clusterPairs'
-    // cosine rides the same session registration)
     val assigned = Similarity.assignCentroidsJoin(docs, idCol, vecCol,
       centroids, keepVec = true)
     clusterPairs(assigned, threshold, maxCluster)
@@ -888,7 +887,7 @@ object Dedup {
     * Scale shape: the naive plan is one left-anti join, which shuffles
     * the ENTIRE snapshot and the entire corpus fingerprint set. This
     * operator puts Spark's own bloom-filter sketch in front (the
-    * runtime-filter machinery, registered explicitly — see
+    * runtime-filter machinery, named for SQL text — see
     * [[graft.expressions.BloomExprs]]): executors build partial sketches
     * over the corpus fingerprints, the merged filter is broadcast as a
     * scalar-subquery constant, and the snapshot probes it in a narrow
@@ -914,7 +913,7 @@ object Dedup {
       idCol: String, textCol: String, expectedItems: Long = 1000000L,
       numBits: Long = 8388608L): DataFrame = {
     val spark = snapshot.sparkSession
-    graft.expressions.BloomExprs.register(spark)
+    graft.expressions.GraftFunctions.register(spark)
     // fail actionably, not at analysis: the aggregate enforces these
     // session caps on its (items, bits) arguments
     val maxItems = spark.conf
@@ -1012,7 +1011,6 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     TopK.requireIntegral(snapshot, idCol, "incrementalNearDedup(snapshot)")
     TopK.requireIntegral(existing, idCol, "incrementalNearDedup(existing)")
-    graft.expressions.TextHashExprs.register(snapshot.sparkSession)
     val existingD = existing
       .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
     incrementalNearCore(snapshot, idCol, textCol,
@@ -1101,7 +1099,6 @@ object Dedup {
       path: String, numHashes: Int = 64, bands: Int = 16): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     TopK.requireIntegral(corpus, idCol, "writeNearDupIndex")
-    graft.expressions.TextHashExprs.register(corpus.sparkSession)
     val d = corpus
       .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
     SigIndex.write(corpus.sparkSession, path, TextIndexSidecar,
@@ -1140,7 +1137,6 @@ object Dedup {
     TopK.requireIntegral(newDocs, idCol, "appendToNearDupIndex")
     validateIndexParams(newDocs.sparkSession, indexPath, numHashes, bands,
       "appendToNearDupIndex")
-    graft.expressions.TextHashExprs.register(newDocs.sparkSession)
     val d = newDocs
       .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
     SigIndex.appendBatch(newDocs.sparkSession, indexPath,
@@ -1207,7 +1203,6 @@ object Dedup {
     TopK.requireIntegral(snapshot, idCol,
       "incrementalNearDedupIndexed(snapshot)")
     val spark = snapshot.sparkSession
-    graft.expressions.TextHashExprs.register(spark)
     validateIndexParams(spark, indexPath, numHashes, bands,
       "incrementalNearDedupIndexed")
     incrementalNearCore(snapshot, idCol, textCol,
@@ -1260,7 +1255,6 @@ object Dedup {
     // would cast to null corpus cids and silently admit near-dups
     TopK.requireIntegral(existing, idCol, "streamingNearDedup(existing)")
     val rows = numHashes / bands
-    graft.expressions.TextHashExprs.register(stream.sparkSession)
     def grams(c: Column): Column = array_distinct(coalesce(
       graft.expressions.TextHashExprs.ngramsNative(c, 3),
       array().cast("array<string>")))

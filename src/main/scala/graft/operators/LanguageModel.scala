@@ -51,7 +51,6 @@ object LanguageModel {
     // kernel hashes each token once and each 2-gram once, inside
     // whole-stage codegen. Measured as the dominant cost of every
     // LM-family query (ccnet/sb/kn/moore-lewis) at sf0.1.
-    graft.expressions.TextHashExprs.register(docs.sparkSession)
     docs
       .select(col(idCol).cast("long").as("id"),
         posexplode(graft.expressions.TextHashExprs
@@ -205,7 +204,6 @@ object LanguageModel {
     // the HOF form ran FIVE hex-md5 chains per trigram position inside
     // two nested interpreted zip_withs; the kernel shares token and
     // 2-gram digests across positions in one codegen'd loop.
-    graft.expressions.TextHashExprs.register(docs.sparkSession)
     docs
       .select(col(idCol).cast("long").as("id"),
         posexplode(graft.expressions.TextHashExprs

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.expressions.GraftFunctions
+
 /** Multimodal-column operators for training-data pipelines: image /
   * audio / video payloads carried as opaque `binary` columns with typed
   * metadata alongside.
@@ -1412,7 +1414,7 @@ object Multimodal {
       (acc, i) => acc + when(
         element_at(element_at(grid, row(i)), (i % 8) + 1) >
           element_at(element_at(grid, row(i)), (i % 8) + 2),
-        call_function("shiftleft", lit(1L), i)).otherwise(lit(0L)))
+        GraftFunctions.shiftLeft(lit(1L), i)).otherwise(lit(0L)))
 
   /** 64-bit average hash over the first 8×8 cells of a luminance grid
     * column: bit (y·8 + x) is set when grid[y][x]·64 ≥ Σ grid — the
@@ -1441,7 +1443,7 @@ object Multimodal {
         (acc, i) => acc + when(
           element_at(element_at(grid, row(i)), (i % 8) + 1)
             .cast("long") * 64 >= tot,
-          call_function("shiftleft", lit(1L), i)).otherwise(lit(0L)))),
+          GraftFunctions.shiftLeft(lit(1L), i)).otherwise(lit(0L)))),
       1)
   }
 

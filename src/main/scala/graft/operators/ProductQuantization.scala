@@ -126,8 +126,6 @@ object ProductQuantization {
     */
   def encode(vectors: DataFrame, idCol: String, vecCol: String,
       cb: Codebook): DataFrame = {
-    graft.expressions.VectorHashExprs.register(vectors.sparkSession)
-    graft.expressions.BarrierExprs.register(vectors.sparkSession)
     vectors.select(col(idCol).as("id"),
       codesCol(transform(col(vecCol), x => x.cast("double")), cb)
         .as("codes"))
@@ -179,7 +177,6 @@ object ProductQuantization {
     TopK.requireIntegral(corpus, idCol, "adcTopK")
     TopK.requireIntegral(queries, idCol, "adcTopK")
     val (m, _, sd) = checkCodebook(cb)
-    graft.expressions.VectorHashExprs.register(corpus.sparkSession)
     val enc = encode(corpus, idCol, vecCol, cb)
       .select(col("id").as("neighbor_id"), col("codes"))
       .filter(col("codes").isNotNull &&
@@ -217,8 +214,6 @@ object ProductQuantization {
     TopK.requireIntegral(corpus, idCol, "ivfpqTopK")
     TopK.requireIntegral(queries, idCol, "ivfpqTopK")
     val (m, _, sd) = checkCodebook(cb)
-    graft.expressions.VectorHashExprs.register(corpus.sparkSession)
-    graft.expressions.BarrierExprs.register(corpus.sparkSession)
     val cents = if (coarse != null) coarse
       else Similarity.kmeansCentroids(corpus, idCol, vecCol, numCoarse)
     // ONE narrow projection computes the coarse cid AND the m codes —

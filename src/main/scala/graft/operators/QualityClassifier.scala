@@ -52,7 +52,6 @@ object QualityClassifier {
       textCol: String): DataFrame = {
     // token hashes straight from the native kernel (bit-identical to
     // the HOF tokens + md5-hex chain — NativeKernelParitySpec)
-    graft.expressions.TextHashExprs.register(docs.sparkSession)
     docs
       .select(col(idCol).cast("long").as("id"),
         posexplode(graft.expressions.TextHashExprs
@@ -64,7 +63,6 @@ object QualityClassifier {
   /** Per-class unigram count table (w_hash, cnt). */
   private def classCounts(corpus: DataFrame, textCol: String,
       cntName: String): DataFrame = {
-    graft.expressions.TextHashExprs.register(corpus.sparkSession)
     corpus
       .select(explode(graft.expressions.TextHashExprs
         .ngramHashes(col(textCol), 1, distinct = false)).as("w_hash"))

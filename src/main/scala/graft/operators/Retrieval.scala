@@ -50,7 +50,6 @@ object Retrieval {
     */
   def invertedIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     TopK.requireIntegral(docs, idCol, "invertedIndex")
-    graft.expressions.TextHashExprs.register(docs.sparkSession)
     docs
       .select(col(idCol).cast("long").as("id"),
         // explode_outer + null filter: a plain explode lets
@@ -89,7 +88,6 @@ object Retrieval {
   def tokensToIds(docs: DataFrame, idCol: String, textCol: String,
       vocab: DataFrame, oovId: Int = 0): DataFrame = {
     TopK.requireIntegral(docs, idCol, "tokensToIds")
-    graft.expressions.TextHashExprs.register(docs.sparkSession)
     val v = broadcast(vocab.select(col("token").as("__tok"),
       col("token_id").cast("int").as("__tid")))
     docs
@@ -177,7 +175,6 @@ object Retrieval {
     // in one codegen loop — the split+per-token md5Hash60 SQL chain
     // this replaces computed identical values interpreted); the token
     // strings themselves never enter the pipeline
-    graft.expressions.TextHashExprs.register(corpus.sparkSession)
     val docToks = corpus.select(col(idCol).cast("long").as("id"),
       graft.expressions.TextHashExprs
         .ngramHashes(col(textCol), 1, distinct = false).as("__t"))

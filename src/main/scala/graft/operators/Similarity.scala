@@ -28,8 +28,7 @@ object Similarity {
     * (deterministic). This is the portable HOF REFERENCE form — the
     * operators below use the bit-identical native kernel
     * ([[graft.expressions.CosineSimExpr]], parity pinned by
-    * `VectorKernelParitySpec`), which needs per-session registration
-    * the reference form doesn't.
+    * `VectorKernelParitySpec`).
     */
   def cosine(a: Column, b: Column): Column = {
     val ad = transform(a, x => x.cast("double"))
@@ -42,8 +41,7 @@ object Similarity {
 
   /** The native-kernel cosine the operators score candidates with —
     * evaluated once per candidate PAIR, the hottest expression in this
-    * family. Callers must have run `VectorHashExprs.register` on the
-    * session (every operator entry point here does).
+    * family.
     */
   private[graft] def cosineNative(a: Column, b: Column): Column =
     graft.expressions.VectorHashExprs.cosineSim(a, b)
@@ -55,7 +53,6 @@ object Similarity {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.expressions.VectorHashExprs.register(corpus.sparkSession)
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
@@ -84,7 +81,6 @@ object Similarity {
     */
   def hardNegatives(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, labelCol: String, k: Int): DataFrame = {
-    graft.expressions.VectorHashExprs.register(corpus.sparkSession)
     val q = broadcast(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qv"), col(labelCol).as("ql")))
     val c = corpus.select(col(idCol).as("neighbor_id"),
@@ -133,7 +129,6 @@ object Similarity {
       s"threshold must be in (-1, 1], got $threshold")
     TopK.requireIntegral(corpus, idCol, "semanticContamination")
     TopK.requireIntegral(bench, idCol, "semanticContamination(bench)")
-    graft.expressions.VectorHashExprs.register(corpus.sparkSession)
     val b = broadcast(bench.select(col(idCol).cast("long").as("neighbor_id"),
       col(vecCol).as("bv")))
     val scored = corpus
@@ -190,7 +185,6 @@ object Similarity {
   private[operators] def lshBuckets(df: DataFrame, idCol: String,
       vecCol: String, planes: Int, tables: Int,
       integer: Boolean = false): DataFrame = {
-    graft.expressions.VectorHashExprs.register(df.sparkSession)
     val dim = peekDim(df, vecCol, "lshBuckets")
     val checked = when(size(col(vecCol)) === dim, col(vecCol))
       .otherwise(raise_error(concat(
@@ -229,7 +223,6 @@ object Similarity {
   private def lshCore(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, planes: Int, tables: Int,
       dim: Int, who: String, sig: Column => Column): DataFrame = {
-    graft.expressions.VectorHashExprs.register(corpus.sparkSession)
     def checked(v: Column): Column =
       when(size(v) === dim, v).otherwise(raise_error(concat(
         lit(s"$who: embedding dim != $dim: "), size(v).cast("string"))))
@@ -437,7 +430,6 @@ object Similarity {
     */
   def kmeansCentroidsDistributed(corpus: DataFrame, idCol: String,
       vecCol: String, k: Int, iters: Int = 3): Array[(Int, Array[Double])] = {
-    graft.expressions.VectorHashExprs.register(corpus.sparkSession)
     val nonNull = corpus.select(col(idCol).as("id"),
       transform(col(vecCol), x => x.cast("double")).as("v"))
       .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
@@ -587,8 +579,6 @@ object Similarity {
     */
   def assignCentroidsJoin(docs: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, keepVec: Boolean = false): DataFrame = {
-    graft.expressions.VectorHashExprs.register(docs.sparkSession)
-    graft.expressions.BarrierExprs.register(docs.sparkSession)
     // an empty centroid set would silently assign nothing and a
     // downstream dedup would "succeed" having deduplicated nothing —
     // the kernel path throws on construction; match it
@@ -633,8 +623,6 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, numCentroids: Int = 16, nprobe: Int = 4,
       centroids: Array[(Int, Array[Double])] = null): DataFrame = {
-    graft.expressions.VectorHashExprs.register(corpus.sparkSession)
-    graft.expressions.BarrierExprs.register(corpus.sparkSession)
     val cents = if (centroids != null) centroids
       else kmeansCentroids(corpus, idCol, vecCol, numCentroids)
 

@@ -142,7 +142,6 @@ object UnigramTokenizer {
     // native tokenizer/hash kernels on the corpus side (bit-identical
     // to the HOF tokens + SQL md5 chain — NativeKernelParitySpec); the
     // Viterbi UDF still runs only over the distinct-word table
-    graft.expressions.TextHashExprs.register(spark)
     val table = docs
       .select(explode(graft.expressions.TextHashExprs
         .ngramsNative(col(textCol), 1)).as("word"))

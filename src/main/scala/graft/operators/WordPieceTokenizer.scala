@@ -81,7 +81,6 @@ object WordPieceTokenizer {
     // codegen loop per row; bit-identical to the HOF tokens + SQL
     // md5-hex chain — NativeKernelParitySpec); the distinct-word table
     // keeps the SQL md5Hash60 — it runs once per VOCABULARY word
-    graft.expressions.TextHashExprs.register(spark)
     val table = docs
       .select(explode(graft.expressions.TextHashExprs
         .ngramsNative(col(textCol), 1)).as("word"))

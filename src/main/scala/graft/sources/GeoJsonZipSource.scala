@@ -8,6 +8,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.functions.GeoFunctions
 import graft.functions.GeoFunctions.GeometryStats
@@ -116,7 +117,7 @@ object GeoJsonZipSource {
     */
   def readEntries(spark: SparkSession, path: String,
       transform: Boolean): (RDD[ParsedRecord], IndexedSeq[String]) = {
-    val hconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val hconf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val entries = StreamUtil.resolveFiles(spark, path).flatMap { p =>
       val reader = new HadoopZipReader(hconf.value, p)
       try geoJsonMembers(reader, p).zipWithIndex.map { case (m, i) =>

@@ -44,21 +44,6 @@ private[sources] object StreamUtil {
   }
 }
 
-/** Hadoop Configuration is not Serializable; ship it to tasks via its
-  * own writable form (same trick Spark's internal wrapper uses).
-  */
-private[sources] final class SerializableHadoopConf(
-    @transient var value: Configuration) extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject(); value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
 /** [[Zip.ZipReader]] over one archive opened as a seekable Hadoop
   * stream; the caller closes it.
   */

@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.{MalformedShardException, Tar}
 
@@ -56,7 +57,7 @@ object TarShardSource {
     require(maxEntryBytes > 0, "maxEntryBytes must be positive")
     val files = StreamUtil.resolveFiles(spark, path)
     val hconf =
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val parallelism = math.max(1,
       math.min(files.size, spark.sparkContext.defaultParallelism))
     spark.createDataset(files)

@@ -7,6 +7,7 @@ import java.util.zip.GZIPInputStream
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 /** One parsed WARC record (ISO 28500 / WARC 1.0–1.1).
   *
@@ -98,7 +99,7 @@ object WarcSource {
   def read(spark: SparkSession, path: String): Dataset[WarcRecord] = {
     import spark.implicits._
     val files = resolvePaths(spark, path)
-    val hconf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val hconf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val parallelism =
       math.max(1, math.min(files.size, spark.sparkContext.defaultParallelism))
     spark.createDataset(files)

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.Webm
 
@@ -50,7 +51,7 @@ object WebmShardSource {
     require(maxHeaderBytes >= 8, "maxHeaderBytes must cover a header")
     val files = StreamUtil.resolveFiles(spark, path)
     val hconf =
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val parallelism = math.max(1,
       math.min(files.size, spark.sparkContext.defaultParallelism))
     spark.createDataset(files)

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.Zip
 
@@ -42,7 +43,7 @@ object ZipShardSource {
     require(maxCdBytes > 0, "maxCdBytes must be positive")
     val files = StreamUtil.resolveFiles(spark, path)
     val hconf =
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val parallelism = math.max(1,
       math.min(files.size, spark.sparkContext.defaultParallelism))
     spark.createDataset(files)

@@ -22,8 +22,9 @@ import graft.service.ExtractLoadEngine
   *
   * Delivery semantics: the file source + checkpoint give at-least-once —
   * a batch that dies mid-flight is replayed on restart, and a replayed
-  * load is idempotent because every table write is a per-dataset dynamic
-  * partition overwrite (see Warehouse). Handler errors never kill the
+  * load is idempotent because a load writes only staged files, and
+  * `Warehouse.commit` replaces each (table, dataset id) partition with
+  * them whole (see Warehouse). Handler errors never kill the
   * stream: `processRequest` converts them to `success:false` response
   * rows (`queue-service.ts:54-61` likewise catches and logs).
   *

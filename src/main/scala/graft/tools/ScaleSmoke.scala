@@ -334,7 +334,6 @@ object ScaleSmoke {
     // as a NARROW map (no shuffle, no plan bloat — the old literal-array
     // lambda carried 1024×65 literal nodes and walked an expression tree
     // per (row, centroid)).
-    graft.expressions.VectorHashExprs.register(spark)
     val nCent = 1024
     def centerComp(g: Column, j: Int): Column =
       (xxhash64(g.cast("string"), lit(j), lit("c")) % 1000L)

@@ -20,7 +20,7 @@ object Smoke {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GeoFunctions.register(spark)
+    graft.expressions.GraftFunctions.register(spark)
     import spark.implicits._
 
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet").limit(5)
@@ -101,7 +101,6 @@ object Smoke {
 
     // Native text-hash kernels: the SQL-function surface, then the dedup
     // operators that consume them, over the real documents table.
-    graft.expressions.TextHashExprs.register(spark)
     spark.sql(
       """SELECT simhash64_native('the quick brown fox') AS sh,
         |       minhash_sig_native('one two three four', 4) AS sig4,
@@ -122,7 +121,6 @@ object Smoke {
       .orderBy("id", "bench_id").show(5, false)
 
     // Vector kernels: SQL surface, then the ANN operators end-to-end.
-    graft.expressions.VectorHashExprs.register(spark)
     spark.sql(
       """SELECT cosine_sim_native(array(1.0D, 2.0D), array(2.0D, 4.0D)) AS colinear,
         |       sq_dist_native(array(1.0D, 2.0D), array(4.0D, 6.0D)) AS d25,

@@ -264,7 +264,6 @@ class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
       "zero-padded tails, oversized windows, empty arrays) and " +
       "audio_stats_native bit-equals the three HOF stat folds") {
     import spark.implicits._
-    graft.expressions.AudioExprs.register(spark)
     val rnd = new scala.util.Random(31)
     // shapes: exact multiple of the window, ragged tail, shorter than
     // one window, single sample, empty
@@ -336,7 +335,6 @@ class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
       "HOF reference forms (gradient fold incl. null→0; fixture " +
       "arithmetic incl. the >=250 perturb branch and auto widths)") {
     import spark.implicits._
-    graft.expressions.AudioExprs.register(spark)
     val rnd = new scala.util.Random(47)
     // energies arrays are ALWAYS exactly 65 entries in production
     // (energiesNative emits nWindows = 65); the HOF form threw on

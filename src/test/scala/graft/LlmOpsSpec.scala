@@ -328,7 +328,6 @@ class LlmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- dates ------------------------------------------------------------
 
   test("auto-sized LSH planes rescue the fixed-geometry collapse; dropped buckets observable") {
-    graft.expressions.VectorHashExprs.register(spark)
     val n = 20000
     // pmod, not % — a signed remainder would center components at -1
     // (one orthant), collapsing the hyperplane signs into a few
@@ -375,7 +374,6 @@ class LlmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("recallAtK: exact on planted partners, exposes an oversized-geometry collapse") {
-    graft.expressions.VectorHashExprs.register(spark)
     val n = 20000
     // 64-dim so 20k RANDOM vectors stay well-separated (max random
     // cosine ≈ 0.5) while the planted partner sits at cosine ≈ 0.89 —
@@ -465,7 +463,6 @@ class LlmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("kmeansCentroidsDistributed recovers planted clusters") {
     import spark.implicits._
-    graft.expressions.VectorHashExprs.register(spark)
     val centers = Seq(Array(10.0, 0.0, 0.0), Array(0.0, 10.0, 0.0),
       Array(0.0, 0.0, 10.0))
     // 300 vectors, 100 per center, deterministic small jitter

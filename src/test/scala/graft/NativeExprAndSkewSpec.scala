@@ -26,7 +26,6 @@ class NativeExprAndSkewSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("native expression matches the UDF semantics, incl. nulls and errors") {
     import spark.implicits._
-    ProcessGeometryExpr.register(spark)
     val df = Seq(feature, "not json", null).toDF("f")
     val both = df.select(
       ProcessGeometryExpr.process_geometry_native(col("f"), lit("nodes")).as("native"),
@@ -39,7 +38,6 @@ class NativeExprAndSkewSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("native expression stays inside WholeStageCodegen (UDF breaks it)") {
-    ProcessGeometryExpr.register(spark)
     // a real (parquet-backed) scan — a local Seq constant-folds to
     // LocalTableScan with no codegen stage to inspect
     val df = spark.read
@@ -61,7 +59,7 @@ class NativeExprAndSkewSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("SQL registration") {
     import spark.implicits._
-    ProcessGeometryExpr.register(spark)
+    graft.expressions.GraftFunctions.register(spark)
     Seq(feature).toDF("f").createOrReplaceTempView("nf")
     val out = spark.sql(
       "SELECT process_geometry_native(f, 'nodes') AS o FROM nf")

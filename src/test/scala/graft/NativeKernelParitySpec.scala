@@ -30,7 +30,7 @@ class NativeKernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    TextHashExprs.register(s)
+    graft.expressions.GraftFunctions.register(s)
     s
   }
 
@@ -222,7 +222,6 @@ class NativeKernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("image kernels match the SQL folds (grid fixture, hashes, edges)") {
     import spark.implicits._
     import graft.operators.Multimodal
-    graft.expressions.ImageExprs.register(spark)
     // the HOF fixture exactly as SparkEntry.syntheticLumaGrids built it
     def hofGrid(idc: Column): Column = {
       val base = (idc % 64).cast("long")
@@ -277,7 +276,6 @@ class NativeKernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("concatBinaries matches the aggregate+concat fold") {
     import spark.implicits._
-    graft.expressions.BytesExprs.register(spark)
     val rows: Seq[Seq[Array[Byte]]] = Seq(
       null, Seq.empty,
       Seq(Array[Byte](1, 2, 3)),
@@ -304,7 +302,6 @@ class NativeKernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     // the method, silently running the subtree interpreted.
     // fallback=false makes any such compile failure loud.
     import spark.implicits._
-    graft.expressions.BytesExprs.register(spark)
     val prev = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {

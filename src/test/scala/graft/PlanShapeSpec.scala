@@ -852,20 +852,24 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Before the EvalOnceExpr barrier, pushdown substituted the full
     // codes/assignment kernel into the pushed isnotnull filter — every
     // corpus row paid the PQ encode / coarse assignment twice
-    // (plans/r21/q_pq_int_before.txt). Pin: no Filter condition may
-    // contain a centroid or distance kernel call.
+    // (plans/r21/q_pq_int_before.txt); the pair verifiers' cosine >=
+    // threshold filter likewise carried a second cosine kernel
+    // (plans/r21/q_semantic_dedup_int_after.txt). Pin: no Filter
+    // condition may contain a centroid, distance or cosine kernel call.
     def kernelInFilter(name: String): Seq[LFilter] =
       SparkEntry.queries(name)(spark, sf)
         .queryExecution.optimizedPlan.collect {
           case f: LFilter if f.condition.exists(e =>
             e.isInstanceOf[graft.expressions.NearestCentroidsExpr] ||
-              e.isInstanceOf[graft.expressions.SqDistExpr]) => f
+              e.isInstanceOf[graft.expressions.SqDistExpr] ||
+              e.isInstanceOf[graft.expressions.CosineSimExpr]) => f
         }
-    for (name <- Seq("q_pq_int", "q_ivfpq_int", "q_knn_ivf_int",
+    val duplicated = Seq("q_pq_int", "q_ivfpq_int", "q_knn_ivf_int",
         "q_recall_ivf_int", "q_pq", "q_semantic_dedup",
-        "q_semantic_dedup_int"))
-      assert(kernelInFilter(name).isEmpty,
-        s"$name: centroid/distance kernel duplicated into a Filter")
+        "q_semantic_dedup_int", "q_emb_near_dup", "q_emb_near_dup_int",
+        "q_contam_sem_int").filter(kernelInFilter(_).nonEmpty)
+    assert(duplicated.isEmpty,
+      s"centroid/distance/cosine kernel duplicated into a Filter: $duplicated")
     // assignCentroidsJoin (library surface, spec-pinned parity): one
     // sq_dist eval per (doc, centroid) — the null-distance filter sits
     // ABOVE the projection, not substituted below it

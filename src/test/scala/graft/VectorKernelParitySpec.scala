@@ -20,16 +20,12 @@ import graft.operators.Similarity
   */
 class VectorKernelParitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    VectorHashExprs.register(s)
-    s
-  }
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
 
