@@ -187,33 +187,21 @@ object Bench {
   /** Build a synthetic 10k-feature archive, ingest it through the full
     * pipeline, and return the engine's per-stage timings.
     */
-  private def benchIngest(spark: SparkSession): Map[String, Double] = {
-    import java.util.zip.{ZipEntry, ZipOutputStream}
-    val zipFile = java.nio.file.Files.createTempFile("graft-bench", ".zip").toFile
-    val zos = new ZipOutputStream(new java.io.FileOutputStream(zipFile))
-    def entry(name: String, features: Int, geom: Int => String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write("""{"type":"FeatureCollection","features":[""".getBytes("UTF-8"))
-      (0 until features).foreach { i =>
-        val sep = if (i == 0) "" else ","
-        zos.write((sep +
-          s"""{"type":"Feature","geometry":${geom(i)},"properties":{"_id":"f$i","len":$i}}""")
-          .getBytes("UTF-8"))
-      }
-      zos.write("""],"name":"bench"}""".getBytes("UTF-8"))
-      zos.closeEntry()
+  private def benchIngest(spark: SparkSession): Map[String, Double] =
+    Fixtures.withScratch("bench") { dir =>
+      def layer(features: Int, geom: Int => String) =
+        Fixtures.featureCollection("", Iterator.range(0, features).map(i =>
+          s"""{"type":"Feature","geometry":${geom(i)},"properties":{"_id":"f$i","len":$i}}"""),
+          lateHeader = """"name":"bench"""")
+      val zipFile = Fixtures.writeZip(dir.resolve("bench.zip"),
+        "nodes.geojson" -> layer(5000,
+          i => s"""{"type":"Point","coordinates":[${i * 0.001},${i * 0.002},${i % 7}]}"""),
+        "edges.geojson" -> layer(5000,
+          i => s"""{"type":"LineString","coordinates":[[${i * 0.001},1.0,5.0],[2.0,${i * 0.002},6.0]]}"""))
+      val engine = new graft.service.ExtractLoadEngine(spark, dir.resolve("wh").toString)
+      val resp = engine.processRequest(graft.model.QueueMessage("bench|1", "wf",
+        graft.model.ExtractLoadRequest("osw", zipFile.toString, "bench_ds", "bench")))
+      require(resp.success, s"fixture ingest failed: ${resp.message}")
+      engine.lastStageTimings
     }
-    entry("nodes.geojson", 5000,
-      i => s"""{"type":"Point","coordinates":[${i * 0.001},${i * 0.002},${i % 7}]}""")
-    entry("edges.geojson", 5000,
-      i => s"""{"type":"LineString","coordinates":[[${i * 0.001},1.0,5.0],[2.0,${i * 0.002},6.0]]}""")
-    zos.close()
-
-    val wh = java.nio.file.Files.createTempDirectory("graft-bench-wh").toString
-    val engine = new graft.service.ExtractLoadEngine(spark, wh)
-    val resp = engine.processRequest(graft.model.QueueMessage("bench|1", "wf",
-      graft.model.ExtractLoadRequest("osw", zipFile.getAbsolutePath, "bench_ds", "bench")))
-    require(resp.success, s"fixture ingest failed: ${resp.message}")
-    engine.lastStageTimings
-  }
 }

@@ -23,29 +23,14 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** A JVM-scoped scratch directory: artifact writers overwrite inside
-    * it on every invocation (no accumulation across correctness runs)
-    * and a shutdown hook removes it recursively on exit.
-    */
-  private def jvmScratch(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try
-        java.nio.file.Files.walk(dir)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      catch { case _: java.io.IOException => () }))
-    dir.toString
-  }
-
   /** Scratch for q_incremental_near_dedup_idx's corpus-sized index. */
-  private lazy val ndIdxScratch: String = jvmScratch("graft-nd-idx")
+  private lazy val ndIdxScratch: String = Fixtures.scratchDir("nd-idx").toString
 
   /** Scratch for the tokenizer-artifact round-trips the three encode
     * queries run (train/fix vocab → write artifact → load → encode),
     * so the correctness gate exercises the persisted lifecycle.
     */
-  private lazy val tokScratch: String = jvmScratch("graft-tok")
+  private lazy val tokScratch: String = Fixtures.scratchDir("tok").toString
 
   /** events.parquet has stored `ts` in two physical forms across fixture
     * generations: TIMESTAMP(NANOS) (which Spark's parquet reader only
@@ -348,9 +333,8 @@ object SparkEntry {
     * mid-read — the Spark app id is unique per SparkSession).
     */
   private def jingleIndexPath(s: SparkSession, tag: String): String = {
-    val idxPath = new org.apache.hadoop.fs.Path(
-      sys.props("java.io.tmpdir"),
-      s"graft_${tag}_${s.sparkContext.applicationId}").toString
+    val idxPath = Fixtures.root
+      .resolve(s"${tag}_${s.sparkContext.applicationId}").toString
     // coalesce(1): 32 rows on local[32] otherwise write 32 one-row
     // parquet files with 32 task commits (guide §6 small-files) — the
     // index CONTENT is identical, the admission reads it back either way
@@ -1895,12 +1879,11 @@ object SparkEntry {
   private val zipShardCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def zipShardDir(s: SparkSession, dir: String): String =
+  private[graft] def zipShardDir(s: SparkSession, dir: String): String =
     zipShardCache.computeIfAbsent(dir, { _ =>
       val ids = t(s, dir, "documents").select(col("doc_id"))
         .orderBy(col("doc_id")).collect().map(_.getLong(0))
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-zip-shards")
+      val out = Fixtures.scratchDir("zip-shards")
       (0 until 64).foreach { b =>
         val members = ids.filter(_ % 64 == b).toSeq.flatMap { id =>
           Seq((s"d/$id.txt", s"s:$id:t".getBytes("UTF-8"), id % 2 == 1),
@@ -1915,12 +1898,11 @@ object SparkEntry {
   private val tarShardCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def tarShardDir(s: SparkSession, dir: String): String =
+  private[graft] def tarShardDir(s: SparkSession, dir: String): String =
     tarShardCache.computeIfAbsent(dir, { _ =>
       val ids = t(s, dir, "documents").select(col("doc_id"))
         .orderBy(col("doc_id")).collect().map(_.getLong(0))
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-tar-shards")
+      val out = Fixtures.scratchDir("tar-shards")
       (0 until 64).foreach { b =>
         val members = ids.filter(_ % 64 == b).toSeq.flatMap { id =>
           Seq((s"d/$id.txt", s"s:$id:t".getBytes("UTF-8")),
@@ -1948,8 +1930,7 @@ object SparkEntry {
     webmShardCache.computeIfAbsent(dir, { _ =>
       val rows = syntheticWebmClassed(t(s, dir, "documents"))
         .collect()
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-webm-shards")
+      val out = Fixtures.scratchDir("webm-shards")
       rows.foreach { r =>
         val id = r.getLong(0)
         val ext = if (id % 2 == 0) "webm" else "mkv"
@@ -1970,8 +1951,7 @@ object SparkEntry {
     tsShardCache.computeIfAbsent(dir, { _ =>
       val rows = syntheticMpegTsClassed(t(s, dir, "documents"))
         .collect()
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ts-segments")
+      val out = Fixtures.scratchDir("ts-segments")
       rows.foreach { r =>
         java.nio.file.Files.write(out.resolve(s"seg_${r.getLong(0)}.ts"),
           r.getAs[Array[Byte]](1))
@@ -1994,8 +1974,7 @@ object SparkEntry {
     mp4ShardCache.computeIfAbsent(dir, { _ =>
       val rows = syntheticMp4Classed(t(s, dir, "documents"))
         .collect()
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-mp4-shards")
+      val out = Fixtures.scratchDir("mp4-shards")
       rows.foreach { r =>
         val id = r.getLong(0)
         val bytes = r.getAs[Array[Byte]](1)
@@ -2023,8 +2002,7 @@ object SparkEntry {
     mediaShardCache.computeIfAbsent(dir, { _ =>
       val rows = syntheticMediaClassed(t(s, dir, "documents"))
         .collect()
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-media-shards")
+      val out = Fixtures.scratchDir("media-shards")
       rows.foreach { r =>
         val id = r.getLong(0)
         val bytes = r.getAs[Array[Byte]](1)
@@ -2057,37 +2035,26 @@ object SparkEntry {
   private val ingestCache =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def ingestWarehouse(s: SparkSession, dir: String): String =
+  private[graft] def ingestWarehouse(s: SparkSession, dir: String): String =
     ingestCache.computeIfAbsent(dir, { _ =>
       val rows = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_discount"), col("l_tax"))
         .orderBy(col("l_orderkey"), col("l_linenumber")).limit(1000).collect()
-      val zipFile = java.nio.file.Files.createTempFile("graft-ingest", ".zip").toFile
-      val zos = new java.util.zip.ZipOutputStream(
-        new java.io.FileOutputStream(zipFile))
-      def entry(name: String, header: String, geom: org.apache.spark.sql.Row => String): Unit = {
-        zos.putNextEntry(new java.util.zip.ZipEntry(name))
-        zos.write(s"""{"type":"FeatureCollection",$header,"features":[""".getBytes("UTF-8"))
-        rows.zipWithIndex.foreach { case (r, i) =>
+      def layer(header: String, geom: org.apache.spark.sql.Row => String) =
+        Fixtures.featureCollection(header, rows.iterator.map { r =>
           val fid = s"${r.getLong(0)}-${r.getInt(1)}"
-          val sep = if (i == 0) "" else ","
-          zos.write((sep +
-            s"""{"type":"Feature","geometry":${geom(r)},"properties":{"_id":"$fid"}}""")
-            .getBytes("UTF-8"))
-        }
-        zos.write("]}".getBytes("UTF-8"))
-        zos.closeEntry()
-      }
-      entry("nodes.geojson", """"name":"ingest-fixture"""",
-        r => s"""{"type":"Point","coordinates":[${r.getDouble(2)},${r.getDouble(3)},${r.getDouble(4)}]}""")
-      entry("edges.geojson", """"source":"edges-src"""",
-        r => s"""{"type":"LineString","coordinates":[[${r.getDouble(2)},${r.getDouble(3)},${r.getDouble(4)}],[${r.getDouble(3)},${r.getDouble(4)},${r.getDouble(2)}]]}""")
-      zos.close()
-      val wh = java.nio.file.Files.createTempDirectory("graft-ingest-wh").toString
+          s"""{"type":"Feature","geometry":${geom(r)},"properties":{"_id":"$fid"}}"""
+        })
+      val zipFile = Fixtures.writeZip(Fixtures.scratchDir("ingest").resolve("ingest.zip"),
+        "nodes.geojson" -> layer(""""name":"ingest-fixture"""",
+          r => s"""{"type":"Point","coordinates":[${r.getDouble(2)},${r.getDouble(3)},${r.getDouble(4)}]}"""),
+        "edges.geojson" -> layer(""""source":"edges-src"""",
+          r => s"""{"type":"LineString","coordinates":[[${r.getDouble(2)},${r.getDouble(3)},${r.getDouble(4)}],[${r.getDouble(3)},${r.getDouble(4)},${r.getDouble(2)}]]}"""))
+      val wh = Fixtures.scratchDir("ingest-wh").toString
       val resp = new graft.service.ExtractLoadEngine(s, wh).processRequest(
         graft.model.QueueMessage("ingest|1", "wf",
-          graft.model.ExtractLoadRequest("osw", zipFile.getAbsolutePath,
+          graft.model.ExtractLoadRequest("osw", zipFile.toString,
             "ingest_ds", "verifier")))
       require(resp.success, s"ingest fixture failed: ${resp.message}")
       wh
@@ -4311,8 +4278,7 @@ object SparkEntry {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       }
-      val stageDir = java.nio.file.Files
-        .createTempDirectory("graft-q-corpus-build-stages").toString
+      val stageDir = Fixtures.scratchDir("q-corpus-build-stages").toString
       operators.CorpusBuild.buildCorpus(s, warcDir.getAbsolutePath,
         stageDir,
         minWords = 10, minLinesKept = 1, minWordsPerLine = 3,

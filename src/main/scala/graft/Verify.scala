@@ -4,13 +4,14 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    // process-level backstop parity (unhandled-exception handler)
-    graft.service.ErrorMapping.registerUnhandledHandler(System.err.println)
-    val Array(sfDir, outDir) = args
+
+  /** The session the query set is checked on: `SPARK_GRAFT_CPUS` cores
+    * (default 4) and as many shuffle partitions. Engine-tuning confs come
+    * from the library bootstrap (see GraftSession): bounded-buffer object
+    * aggs stay on the hash path.
+    */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // engine-tuning confs come from the library bootstrap (see
-    // GraftSession): bounded-buffer object aggs stay on the hash path
     val spark = GraftSession.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -18,6 +19,14 @@ object Verify {
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    // process-level backstop parity (unhandled-exception handler)
+    graft.service.ErrorMapping.registerUnhandledHandler(System.err.println)
+    val Array(sfDir, outDir) = args
+    val spark = session()
     new java.io.File(outDir).mkdirs()
     // Per-query watchdog: one pathological query must not hang the whole
     // correctness dump (and zero the round) — cancel its job group after

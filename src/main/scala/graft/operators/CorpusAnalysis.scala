@@ -1057,13 +1057,6 @@ object CorpusAnalysis {
         .select(col("id")).distinct(), Seq("id"), "left_anti")),
     "5_sample" -> ((d: DataFrame) => hashSample(d, "id", sampleRate, salt)))
 
-  /** [[curateStageFns]] with defaults, for the dev profiling scratch
-    * ([[graft.tools.CurateProfile]]) — times stages in isolation.
-    */
-  private[graft] def curateStageFnsForProfiling(b0: DataFrame,
-      sampleRate: Double, salt: String): Seq[(String, DataFrame => DataFrame)] =
-    curateStageFns(b0, 15, "en", 0.75, 0.8, 8, 1, sampleRate, salt, 1000)
-
   /** (stage, docs_in, docs_out) rows from the materialized stage chain. */
   private def attritionReport(
       stages: Seq[(String, DataFrame, DataFrame)]): DataFrame =

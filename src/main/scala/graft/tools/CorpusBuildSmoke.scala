@@ -35,8 +35,7 @@ object CorpusBuildSmoke {
     require(nCb % 10 == 0, "nCb must be a multiple of 10")
     val rt = Runtime.getRuntime
     val tCb0 = System.nanoTime()
-    val warcDir = java.nio.file.Files
-      .createTempDirectory("graft-scale-cb-warc")
+    val warcDir = graft.Fixtures.scratchDir("scale-cb-warc")
     val md = java.security.MessageDigest.getInstance("MD5")
     def h8(s: String): String = {
       val d = md.digest(s.getBytes("UTF-8"))
@@ -71,8 +70,7 @@ object CorpusBuildSmoke {
       }
       out.close()
     }
-    val stageDir = java.nio.file.Files
-      .createTempDirectory("graft-scale-cb-stages").toString
+    val stageDir = graft.Fixtures.scratchDir("scale-cb-stages").toString
     val tCb1 = System.nanoTime()
     val stageTimes =
       scala.collection.mutable.LinkedHashMap[String, Double]()

@@ -36,8 +36,7 @@ object MediaStreamSmoke {
 
   def run(spark: SparkSession, nFiles: Int, targetBytes: Long): Unit = {
     val rt = Runtime.getRuntime
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-scale-media")
+    val dir = graft.Fixtures.scratchDir("scale-media")
 
     // ---- Ogg: BOS id page + N max-lacing filler pages, real CRCs --
     val t0 = System.nanoTime()
@@ -176,7 +175,6 @@ object MediaStreamSmoke {
       f"off disk in $tWalk%.1f s (${total / 1e9 / tWalk}%.2f GB/s), " +
       f"every field exact, " +
       f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    rows.keys.foreach(n => java.nio.file.Files.delete(dir.resolve(n)))
-    java.nio.file.Files.delete(dir)
+    graft.Fixtures.delete(dir)
   }
 }

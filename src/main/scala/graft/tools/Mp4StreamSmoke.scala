@@ -33,8 +33,7 @@ object Mp4StreamSmoke {
 
   def run(spark: SparkSession, nFiles: Int, mdatBytes: Long): Unit = {
     val rt = Runtime.getRuntime
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-scale-mp4")
+    val dir = graft.Fixtures.scratchDir("scale-mp4")
     val t0 = System.nanoTime()
     // template per file: the library's own encoder emits
     // ftyp+moov+mdat; split the top-level boxes and re-lay them as
@@ -110,7 +109,6 @@ object Mp4StreamSmoke {
       f"(${totalBytes / 1e9}%.2f GB on disk) seek-walked in " +
       f"$tWalk%.2f s — metadata exact without reading the mdat, " +
       f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    (0 until nFiles).foreach(c =>
-      dir.resolve(s"rec_$c.mp4").toFile.delete())
+    graft.Fixtures.delete(dir)
   }
 }

@@ -132,8 +132,7 @@ object Scale10M {
     // "<html><body><p>np TEXT</p><div><a>..</a></div></body></html>"
     // so the clean must keep exactly the paragraph and drop the
     // boilerplate nav line.
-    val warcDir = java.nio.file.Files.createTempDirectory("graft-10m-warc")
-      .toString
+    val warcDir = graft.Fixtures.scratchDir("10m-warc").toString
     val nFiles = 128
     val perFile = nWarc / nFiles
     val t5 = System.nanoTime()

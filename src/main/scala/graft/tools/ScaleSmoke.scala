@@ -1,9 +1,9 @@
 package graft.tools
 
-import java.io.FileOutputStream
-import java.util.zip.{ZipEntry, ZipOutputStream}
-
 import org.apache.spark.sql.{Column, SparkSession}
+
+import graft.Fixtures
+import graft.Fixtures.mix64
 
 /** Dev main: ingest a deliberately large archive (default 1M features
   * across two layers, ~250 MB of GeoJSON) through the full engine to
@@ -31,31 +31,19 @@ object ScaleSmoke {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val zipFile = java.nio.file.Files.createTempFile("graft-scale", ".zip").toFile
+    val scaleDir = Fixtures.scratchDir("scale")
     val t0 = System.nanoTime()
-    val zos = new ZipOutputStream(new FileOutputStream(zipFile))
-    def entry(name: String, geom: Int => String): Unit = {
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write("""{"type":"FeatureCollection","name":"scale","features":[""".getBytes("UTF-8"))
-      var i = 0
-      while (i < n) {
-        val sep = if (i == 0) "" else ","
-        zos.write((sep +
-          s"""{"type":"Feature","geometry":${geom(i)},"properties":{"_id":"f$i","idx":$i,"pad":"xxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxx"}}""")
-          .getBytes("UTF-8"))
-        i += 1
-      }
-      zos.write("]}".getBytes("UTF-8"))
-      zos.closeEntry()
-    }
-    entry("nodes.geojson",
-      i => s"""{"type":"Point","coordinates":[${i * 1e-5}, ${i * 2e-5}, ${i % 9}]}""")
-    entry("edges.geojson",
-      i => s"""{"type":"LineString","coordinates":[[${i * 1e-5},1.0,5.0],[2.0,${i * 2e-5},6.0]]}""")
-    zos.close()
+    def layer(geom: Int => String) = Fixtures.featureCollection(""""name":"scale"""",
+      Iterator.range(0, n).map(i =>
+        s"""{"type":"Feature","geometry":${geom(i)},"properties":{"_id":"f$i","idx":$i,"pad":"xxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxx"}}"""))
+    val zipFile = Fixtures.writeZip(scaleDir.resolve("scale.zip"),
+      "nodes.geojson" -> layer(
+        i => s"""{"type":"Point","coordinates":[${i * 1e-5}, ${i * 2e-5}, ${i % 9}]}"""),
+      "edges.geojson" -> layer(
+        i => s"""{"type":"LineString","coordinates":[[${i * 1e-5},1.0,5.0],[2.0,${i * 2e-5},6.0]]}""")).toFile
     println(f"archive: ${zipFile.length() / 1e6}%.1f MB, built in ${(System.nanoTime() - t0) / 1e9}%.1f s")
 
-    val wh = java.nio.file.Files.createTempDirectory("graft-scale-wh").toString
+    val wh = scaleDir.resolve("wh").toString
     val engine = new graft.service.ExtractLoadEngine(spark, wh)
     val t1 = System.nanoTime()
     val resp = engine.processRequest(graft.model.QueueMessage("scale|1", "wf",
@@ -68,7 +56,7 @@ object ScaleSmoke {
     println(f"ingest: $secs%.1f s, ${2L * n / secs}%.0f features/s, " +
       f"nodes=$nodes edges=$edges, heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
     require(nodes == n && edges == n)
-    zipFile.delete()
+    Fixtures.delete(scaleDir)
 
     // --- dedup at scale: 1M synthetic docs, planted exact + near dups.
     // Generation is a pure projection over spark.range (distributed, no
@@ -1129,8 +1117,7 @@ object ScaleSmoke {
     // snapshot (10k near-dup re-crawls of bases + 90k fresh) both ways
     // — identical admissions required; the indexed admit must beat the
     // direct one (it skips the 1M-doc signature+gram work).
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("graft-scale-ndidx").toString
+    val idxDir = Fixtures.scratchDir("scale-ndidx").toString
     val t48 = System.nanoTime()
     graft.operators.Dedup.writeNearDupIndex(docs, "id", "text", idxDir)
     val tIdxBuild = (System.nanoTime() - t48) / 1e9
@@ -1168,19 +1155,15 @@ object ScaleSmoke {
       f"(${tDirect / tIdx}%.1fx), admissions identical ($idxKept kept), " +
       f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
     // recursive temp-dir cleanup (the index is corpus-sized on disk)
-    java.nio.file.Files.walk(java.nio.file.Paths.get(idxDir))
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(p2 => java.nio.file.Files.delete(p2))
+    Fixtures.delete(java.nio.file.Paths.get(idxDir))
 
     // --- buildCorpus: the full restartable source→curriculum pipeline
     // over a 1M-page WARC drop dir (executors write one gzip stream
     // per partition; every 10th page is an exact duplicate of its
     // predecessor, so the dedup stage has a planted exact answer).
     // Per-stage wall times come from the onStage observability hook.
-    val bcWarc = java.nio.file.Files
-      .createTempDirectory("graft-scale-bc-warc").toString
-    val bcStages = java.nio.file.Files
-      .createTempDirectory("graft-scale-bc-stages").toString
+    val bcWarc = Fixtures.scratchDir("scale-bc-warc").toString
+    val bcStages = Fixtures.scratchDir("scale-bc-stages").toString
     val nPages = nDocs
     val bcFiles = 64
     val perBc = nPages / bcFiles
@@ -1255,9 +1238,7 @@ object ScaleSmoke {
       f", packs=${bcReport("6_pack")._2}, " +
       f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
     for (d <- Seq(bcWarc, bcStages))
-      java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p2 => java.nio.file.Files.delete(p2))
+      Fixtures.delete(java.nio.file.Paths.get(d))
 
     // --- perceptual image near-dup at 1M images: decode → box-sample →
     // dHash → banded pairs, the full imageNearDupPairs path over real
@@ -1280,12 +1261,6 @@ object ScaleSmoke {
       def mkImgs(n0: Long, n1: Long, pairMode: Boolean) =
         spark.range(n0, n1).repartition(64)
           .mapPartitions { it =>
-            def mix(a: Long): Long = {
-              var x = a
-              x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-              x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-              x ^= x >>> 33; x
-            }
             it.map { id =>
               val idL: Long = id
               val cls = if (pairMode) idL / 2 else idL
@@ -1299,7 +1274,7 @@ object ScaleSmoke {
                 var cx = 0
                 while (cx < 9) {
                   val v = 30 +
-                    ((mix(cls * 97 + cy * 9 + cx) & Long.MaxValue) % 171)
+                    ((mix64(cls * 97 + cy * 9 + cx) & Long.MaxValue) % 171)
                       .toInt + bump
                   val rgb = (v << 16) | (v << 8) | v
                   bi.setRGB(cx * 2, cy * 2, rgb)
@@ -1340,8 +1315,7 @@ object ScaleSmoke {
       // signature -> dropped) plus nImg/10 genuinely fresh images
       // (own classes -> admitted). The admission's corpus side reads
       // 8-byte signatures — no re-decode of the 500k corpus images.
-      val idxDir = java.nio.file.Files
-        .createTempDirectory("graft-img-idx").toString
+      val idxDir = Fixtures.scratchDir("img-idx").toString
       val t71 = System.nanoTime()
       graft.operators.Multimodal.writeImageNearDupIndex(
         imgs.filter(col("id") % 2 === 0), "id", "content", idxDir)
@@ -1365,9 +1339,7 @@ object ScaleSmoke {
         f"-> exactly ${nImg / 10} fresh in $tAdmit%.1f s " +
         f"(${(nImg / 2 + nImg / 10) / tAdmit}%.0f imgs/s), " +
         f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(idxDir))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p2 => java.nio.file.Files.delete(p2))
+      Fixtures.delete(java.nio.file.Paths.get(idxDir))
     }
 
     // --- perceptual audio near-dup at 1M clips: REAL WAV payloads
@@ -1393,12 +1365,6 @@ object ScaleSmoke {
       def mkClips(n0: Long, n1: Long, pairMode: Boolean) =
         spark.range(n0, n1).repartition(64)
           .mapPartitions { it =>
-            def mix(a: Long): Long = {
-              var x = a
-              x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-              x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-              x ^= x >>> 33; x
-            }
             it.map { id =>
               val idL: Long = id
               val cls = if (pairMode) idL / 2 else idL
@@ -1428,10 +1394,10 @@ object ScaleSmoke {
               // double-mix so distinct classes get UNRELATED streams
               // (a linear cls*K + k input would make neighbor classes
               // shifted copies of each other)
-              val seed = mix(cls)
+              val seed = mix64(cls)
               var k = 0
               while (k < nS) {
-                val s = (((mix(seed + k * 0x9E3779B97F4A7C15L)
+                val s = (((mix64(seed + k * 0x9E3779B97F4A7C15L)
                   & Long.MaxValue) % 16001L) - 8000L).toInt * gain
                 le16(44 + 2 * k, s & 0xFFFF)
                 k += 1
@@ -1465,8 +1431,7 @@ object ScaleSmoke {
       // nClip/10 genuinely fresh clips (own classes -> admitted). The
       // admission's corpus side reads 8-byte signatures — no
       // re-decode of the 500k corpus clips.
-      val auIdxDir = java.nio.file.Files
-        .createTempDirectory("graft-audio-idx-smoke").toString
+      val auIdxDir = Fixtures.scratchDir("audio-idx-smoke").toString
       val t81 = System.nanoTime()
       graft.operators.Audio.writeAudioNearDupIndex(
         clips.filter(col("id") % 2 === 0), "id", "content", auIdxDir)
@@ -1491,9 +1456,7 @@ object ScaleSmoke {
         f"-> exactly ${nClip / 10} fresh in $tAAdmit%.1f s " +
         f"(${(nClip / 2 + nClip / 10) / tAAdmit}%.0f clips/s), " +
         f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(auIdxDir))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p2 => java.nio.file.Files.delete(p2))
+      Fixtures.delete(java.nio.file.Paths.get(auIdxDir))
     }
 
     // --- video temporal near-dup at 1M clips: real AVI payloads
@@ -1519,22 +1482,16 @@ object ScaleSmoke {
       def mkVids(lo: Long, hi: Long, pairMode: Boolean) =
         spark.range(lo, hi).repartition(if (pairMode) 64 else 8)
           .mapPartitions { it =>
-            def mix(a: Long): Long = {
-              var x = a
-              x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-              x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-              x ^= x >>> 33; x
-            }
             it.map { id =>
               val idL: Long = id
               val cls = if (pairMode) idL / 2 else idL
               val gain = if (pairMode && idL % 2 == 1) 2 else 1
               val n = 66 + (cls % 8).toInt
-              val seed = mix(cls)
+              val seed = mix64(cls)
               val frames = (0 until n).map { f =>
-                val fs = mix(seed + f * 0x9E3779B97F4A7C15L)
+                val fs = mix64(seed + f * 0x9E3779B97F4A7C15L)
                 Array.tabulate(36) { k =>
-                  ((((mix(fs + k) & Long.MaxValue) % 101L).toInt)
+                  ((((mix64(fs + k) & Long.MaxValue) % 101L).toInt)
                     * gain).toByte
                 }
               }
@@ -1589,8 +1546,7 @@ object ScaleSmoke {
       // streams (own classes -> admitted). The admission's corpus
       // side reads 8-byte signatures — no re-decode of the 500k
       // corpus videos.
-      val vIdxDir = java.nio.file.Files
-        .createTempDirectory("graft-video-idx-smoke").toString
+      val vIdxDir = Fixtures.scratchDir("video-idx-smoke").toString
       val t92 = System.nanoTime()
       graft.operators.Video.writeVideoNearDupIndex(
         vids.filter(col("id") % 2 === 0), "id", "content", vIdxDir)
@@ -1614,9 +1570,7 @@ object ScaleSmoke {
         f"-> exactly ${nVid / 10} fresh in $tVAdmit%.1f s " +
         f"(${(nVid / 2 + nVid / 10) / tVAdmit}%.0f vids/s), " +
         f"heapUsed=${(rtV.totalMemory - rtV.freeMemory) / 1e6}%.0f MB")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(vIdxDir))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p2 => java.nio.file.Files.delete(p2))
+      Fixtures.delete(java.nio.file.Paths.get(vIdxDir))
     }
 
     // --- MJPEG (compressed codec) video near-dup at scale: every
@@ -1639,12 +1593,6 @@ object ScaleSmoke {
       val t97 = System.nanoTime()
       val mjVids = spark.range(0L, nMj).repartition(64)
         .mapPartitions { it =>
-          def mix(a: Long): Long = {
-            var x = a
-            x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-            x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-            x ^= x >>> 33; x
-          }
           val jpegCache =
             scala.collection.mutable.HashMap.empty[Int, Array[Byte]]
           def flat(gray: Int): Array[Byte] =
@@ -1665,9 +1613,9 @@ object ScaleSmoke {
             val cls = idL / 2
             val bias = if (idL % 2 == 1) 32 else 0
             val n = 66 + (cls % 8).toInt
-            val seed = mix(cls + 0x51AFD7ED5L)
+            val seed = mix64(cls + 0x51AFD7ED5L)
             val frames = (0 until n).map { f =>
-              val g = 16 + 16 * ((mix(seed + f) & Long.MaxValue) % 13L)
+              val g = 16 + 16 * ((mix64(seed + f) & Long.MaxValue) % 13L)
                 .toInt
               flat(g + bias)
             }
@@ -1732,22 +1680,15 @@ object ScaleSmoke {
       val nSc = args.drop(1).headOption.map(_.toInt)
         .getOrElse(1000000)
       import spark.implicits._
-      def mix(a: Long): Long = {
-        var x = a
-        x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-        x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-        x ^= x >>> 33; x
-      }
       def frameOf(seed: Long, f: Int): Array[Byte] = {
-        val fs = mix(seed + f * 0x9E3779B97F4A7C15L)
+        val fs = mix64(seed + f * 0x9E3779B97F4A7C15L)
         Array.tabulate(36)(k =>
-          ((mix(fs + k) & Long.MaxValue) % 101L).toByte)
+          ((mix64(fs + k) & Long.MaxValue) % 101L).toByte)
       }
-      val sceneFrames = (0 until 66).map(f => frameOf(mix(-3L), f))
+      val sceneFrames = (0 until 66).map(f => frameOf(mix64(-3L), f))
       val sceneBytes = graft.operators.Video.buildUncompressedAvi(
         4, 3, sceneFrames, 40000L)
-      val scIdxDir = java.nio.file.Files
-        .createTempDirectory("graft-scene-smoke").toString
+      val scIdxDir = Fixtures.scratchDir("scene-smoke").toString
       graft.operators.Video.writeVideoNearDupIndex(
         Seq((0L, sceneBytes)).toDF("id", "content"),
         "id", "content", scIdxDir)
@@ -1755,7 +1696,7 @@ object ScaleSmoke {
       val scClips = spark.range(0L, nSc).repartition(64)
         .mapPartitions { it =>
           val sf = {
-            val s0 = mix(-3L)
+            val s0 = mix64(-3L)
             (0 until 66).map(f => frameOf(s0, f))
           }
           it.map { id =>
@@ -1763,7 +1704,7 @@ object ScaleSmoke {
             val planted = idL % 500 == 0
             val frames = (0 until 80).map { f =>
               if (planted && f >= 8 && f < 74) sf(f - 8)
-              else frameOf(mix(idL), f)
+              else frameOf(mix64(idL), f)
             }
             (idL, graft.operators.Video.buildUncompressedAvi(
               4, 3, frames, 40000L))
@@ -1791,9 +1732,7 @@ object ScaleSmoke {
         f"exactly ${2L * (nSc / 1000L)} planted containers found in " +
         f"$tScene%.1f s (${nSc / tScene}%.0f clips/s), " +
         f"heapUsed=${(rtS.totalMemory - rtS.freeMemory) / 1e6}%.0f MB")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(scIdxDir))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p2 => java.nio.file.Files.delete(p2))
+      Fixtures.delete(java.nio.file.Paths.get(scIdxDir))
     }
 
     // --- approxGroupedRankBuckets at 100k groups: the crawl-scale
@@ -1848,32 +1787,25 @@ object ScaleSmoke {
     // snapshot multiplicity is unbounded by construction — this run
     // pins that at 2x the old killing threshold.
     {
-      def mix(a: Long): Long = {
-        var x = a
-        x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-        x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-        x ^= x >>> 33; x
-      }
       import spark.implicits._
       val nHay = 1000000L
       // audio: clips of 1040 mono samples; id % 500 == 0 clips carry
       // the fixed 260-sample jingle as segment 0 (hop = width = 260)
       def jingleSample(k: Int): Int =
-        (((mix(mix(-1L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
+        (((mix64(mix64(-1L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
       val t95 = System.nanoTime()
       val clips = spark.range(0L, nHay).repartition(64)
         .mapPartitions { it =>
           it.map { id =>
             val samples = Array.tabulate(1040) { k =>
               if (id % 500 == 0 && k < 260) jingleSample(k)
-              else (((mix(mix(id) + k) & Long.MaxValue) % 16001L)
+              else (((mix64(mix64(id) + k) & Long.MaxValue) % 16001L)
                 - 8000L).toInt
             }
             (id, graft.operators.Audio.wrapWav(samples, 0, 1040, 8000))
           }
         }.toDF("id", "content")
-      val jIdxDir = java.nio.file.Files
-        .createTempDirectory("graft-jingle-smoke").toString
+      val jIdxDir = Fixtures.scratchDir("jingle-smoke").toString
       graft.operators.Audio.writeAudioNearDupIndex(
         Seq((0L, graft.operators.Audio.wrapWav(
           Array.tabulate(260)(jingleSample), 0, 260, 8000)))
@@ -1902,14 +1834,12 @@ object ScaleSmoke {
         f"(2x the old cap) found in $tJingle%.1f s " +
         f"(${nHay / tJingle}%.0f clips/s), " +
         f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(jIdxDir))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p2 => java.nio.file.Files.delete(p2))
+      Fixtures.delete(java.nio.file.Paths.get(jIdxDir))
 
       // images: 32x24 BMPs; id % 500 == 0 images carry the fixed
       // 16x12 crop as tile (0, 0)
       def cropByte(k: Int): Byte =
-        ((mix(mix(-2L) + k) & Long.MaxValue) % 256L).toByte
+        ((mix64(mix64(-2L) + k) & Long.MaxValue) % 256L).toByte
       val t96 = System.nanoTime()
       val imgs = spark.range(0L, nHay).repartition(64)
         .mapPartitions { it =>
@@ -1920,13 +1850,12 @@ object ScaleSmoke {
               val y = p / 32
               if (id % 500 == 0 && x < 16 && y < 12)
                 cropByte(3 * (y * 16 + x) + k % 3)
-              else ((mix(mix(id + 7L) + k) & Long.MaxValue) % 256L).toByte
+              else ((mix64(mix64(id + 7L) + k) & Long.MaxValue) % 256L).toByte
             }
             (id, graft.operators.Multimodal.buildBmp(32, 24, bgr))
           }
         }.toDF("id", "content")
-      val cIdxDir = java.nio.file.Files
-        .createTempDirectory("graft-crop-smoke").toString
+      val cIdxDir = Fixtures.scratchDir("crop-smoke").toString
       graft.operators.Multimodal.writeImageNearDupIndex(
         Seq((0L, graft.operators.Multimodal.buildBmp(16, 12,
           Array.tabulate(3 * 16 * 12)(cropByte))))
@@ -1952,9 +1881,7 @@ object ScaleSmoke {
         f"(2x the old cap) found in $tCrop%.1f s " +
         f"(${nHay / tCrop}%.0f imgs/s), " +
         f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(cIdxDir))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p2 => java.nio.file.Files.delete(p2))
+      Fixtures.delete(java.nio.file.Paths.get(cIdxDir))
     }
 
     // --- soundtrack hunt at 500k videos: the round-16 bridge, through
@@ -1965,18 +1892,11 @@ object ScaleSmoke {
     // the index's params, cross-bucket admit — hits must be EXACTLY
     // the planted (container, segment 1) locations.
     {
-      def mix(a: Long): Long = {
-        var x = a
-        x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-        x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-        x ^= x >>> 33; x
-      }
       import spark.implicits._
       val nVid = 500000L
       def jingleSample(k: Int): Int =
-        (((mix(mix(-5L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
-      val jIdxDir = java.nio.file.Files
-        .createTempDirectory("graft-vjingle-smoke").toString
+        (((mix64(mix64(-5L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
+      val jIdxDir = Fixtures.scratchDir("vjingle-smoke").toString
       graft.operators.Audio.writeAudioNearDupIndex(
         Seq((0L, graft.operators.Audio.wrapWav(
           Array.tabulate(1040)(jingleSample), 0, 1040, 8000)))
@@ -1986,15 +1906,15 @@ object ScaleSmoke {
       val vids = spark.range(0L, nVid).repartition(64)
         .mapPartitions { it =>
           val frames = (0 until 4).map { f =>
-            val fs = mix(-6L + f)
+            val fs = mix64(-6L + f)
             Array.tabulate(36)(k =>
-              ((mix(fs + k) & Long.MaxValue) % 101L).toByte)
+              ((mix64(fs + k) & Long.MaxValue) % 101L).toByte)
           }
           it.map { id =>
             val samples = Array.tabulate(3120) { k =>
               if (id % 500 == 0 && k >= 1040 && k < 2080)
                 jingleSample(k - 1040)
-              else (((mix(mix(id) + k) & Long.MaxValue) % 16001L)
+              else (((mix64(mix64(id) + k) & Long.MaxValue) % 16001L)
                 - 8000L).toInt
             }
             (id, graft.operators.Video.buildAviWithAudio(
@@ -2015,9 +1935,7 @@ object ScaleSmoke {
         f"exactly ${nVid / 500} planted soundtrack hits in $tVj%.1f s " +
         f"(${nVid / tVj}%.0f vids/s), " +
         f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(jIdxDir))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p2 => java.nio.file.Files.delete(p2))
+      Fixtures.delete(java.nio.file.Paths.get(jIdxDir))
     }
 
     // --- cross-container dedup at 500k payloads: 250k pixel classes,
@@ -2027,12 +1945,6 @@ object ScaleSmoke {
     // set must be EXACTLY the 250k (2c, 2c+1) container twins at
     // distance 0 — no cross-class leakage, no same-container bias.
     {
-      def mix(a: Long): Long = {
-        var x = a
-        x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-        x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-        x ^= x >>> 33; x
-      }
       import spark.implicits._
       val nCc = 500000L
       val palette = Array.tabulate(16)(i =>
@@ -2046,9 +1958,9 @@ object ScaleSmoke {
             // per-class index stream: 66 frames of 8x4 palette
             // indices from the mixed seed (genuinely varying luma)
             val idxFrames = (0 until 66).map { f =>
-              val fs = mix(mix(cls) + f)
+              val fs = mix64(mix64(cls) + f)
               Array.tabulate(32)(p =>
-                ((mix(fs + p) & Long.MaxValue) % 16L).toByte)
+                ((mix64(fs + p) & Long.MaxValue) % 16L).toByte)
             }
             val payload =
               if (id % 2 == 0) {
@@ -2155,18 +2067,11 @@ object ScaleSmoke {
     // as the AVI smoke — extractAudioTracks now dispatches by magic —
     // must return EXACTLY the planted (container, segment 1) hits.
     {
-      def mix(a: Long): Long = {
-        var x = a
-        x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-        x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-        x ^= x >>> 33; x
-      }
       import spark.implicits._
       val nVid = 500000L
       def jingleSample(k: Int): Int =
-        (((mix(mix(-7L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
-      val jIdxDir = java.nio.file.Files
-        .createTempDirectory("graft-m4jingle-smoke").toString
+        (((mix64(mix64(-7L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
+      val jIdxDir = Fixtures.scratchDir("m4jingle-smoke").toString
       graft.operators.Audio.writeAudioNearDupIndex(
         Seq((0L, graft.operators.Audio.wrapWav(
           Array.tabulate(1040)(jingleSample), 0, 1040, 8000)))
@@ -2179,7 +2084,7 @@ object ScaleSmoke {
             val samples = Array.tabulate(3120) { k =>
               if (id % 500 == 0 && k >= 1040 && k < 2080)
                 jingleSample(k - 1040)
-              else (((mix(mix(id) + k) & Long.MaxValue) % 16001L)
+              else (((mix64(mix64(id) + k) & Long.MaxValue) % 16001L)
                 - 8000L).toInt
             }
             (id, graft.operators.Mp4.buildMp4Pcm(
@@ -2202,9 +2107,7 @@ object ScaleSmoke {
         f"hunt API) -> exactly ${nVid / 500} planted hits in " +
         f"$tVj%.1f s (${nVid / tVj}%.0f vids/s), " +
         f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(jIdxDir))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p2 => java.nio.file.Files.delete(p2))
+      Fixtures.delete(java.nio.file.Paths.get(jIdxDir))
     }
 
     // --- round-17 metadata walks at the 100 TB filter shape: 2M
@@ -2347,12 +2250,6 @@ object ScaleSmoke {
     // the pair set must be EXACTLY the 250k (2c, 2c+1) container
     // twins at distance 0.
     {
-      def mix(a: Long): Long = {
-        var x = a
-        x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-        x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-        x ^= x >>> 33; x
-      }
       import spark.implicits._
       val nAc = 500000L
       val t99 = System.nanoTime()
@@ -2361,7 +2258,7 @@ object ScaleSmoke {
           it.map { id =>
             val cls = id / 2
             val s = Array.tabulate(1024)(k =>
-              (((mix(mix(cls) + k) & Long.MaxValue) % 2001L) - 1000L)
+              (((mix64(mix64(cls) + k) & Long.MaxValue) % 2001L) - 1000L)
                 .toInt)
             val payload =
               if (id % 2 == 0)
@@ -2469,20 +2366,13 @@ object ScaleSmoke {
     // state. Planted truth: every 200th clip carries the jingle at
     // segment 1; the cumulative hit set after each batch is exact.
     {
-      def mix(a: Long): Long = {
-        var x = a
-        x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-        x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-        x ^= x >>> 33; x
-      }
       import spark.implicits._
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sq = spark.sqlContext
       val batchN = 20000L
       def jingleSample(k: Int): Int =
-        (((mix(mix(-9L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
-      val jIdxDir = java.nio.file.Files
-        .createTempDirectory("graft-sjingle-smoke").toString
+        (((mix64(mix64(-9L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
+      val jIdxDir = Fixtures.scratchDir("sjingle-smoke").toString
       graft.operators.Audio.writeAudioNearDupIndex(
         Seq((0L, graft.operators.Audio.wrapWav(
           Array.tabulate(1040)(jingleSample), 0, 1040, 8000)))
@@ -2493,7 +2383,7 @@ object ScaleSmoke {
         val samples = Array.tabulate(3120) { k =>
           if (id % 200 == 0 && k >= 1040 && k < 2080)
             jingleSample(k - 1040)
-          else (((mix(mix(id) + k) & Long.MaxValue) % 16001L)
+          else (((mix64(mix64(id) + k) & Long.MaxValue) % 16001L)
             - 8000L).toInt
         }
         graft.operators.Audio.wrapWav(samples, 0, 3120, 8000)
@@ -2531,9 +2421,7 @@ object ScaleSmoke {
         f"after every batch, zero streaming state, in $tSj%.1f s " +
         f"(${3 * batchN / tSj}%.0f clips/s), " +
         f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(jIdxDir))
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(p2 => java.nio.file.Files.delete(p2))
+      Fixtures.delete(java.nio.file.Paths.get(jIdxDir))
     }
 
     // --- PNG metadata throughput: 1M real PNGs (CRC'd chunk grammar,
@@ -2596,12 +2484,6 @@ object ScaleSmoke {
     // containers (RGB PNG / canonical BMP / 256-gray-palette GIF) ->
     // ONE dHash space; exactly 3 distance-0 pairs per class.
     {
-      def mix(a: Long): Long = {
-        var x = a
-        x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-        x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-        x ^= x >>> 33; x
-      }
       import spark.implicits._
       val nIc = 100000L // classes; 3x payloads
       val grayPal = Array.tabulate(256)(i => (i << 16) | (i << 8) | i)
@@ -2611,7 +2493,7 @@ object ScaleSmoke {
           it.map { id =>
             val cls = id / 3
             val v = Array.tabulate(72)(i =>
-              ((mix(mix(cls) + i) & Long.MaxValue) % 256L).toInt)
+              ((mix64(mix64(cls) + i) & Long.MaxValue) % 256L).toInt)
             val payload = (id % 3) match {
               case 0 => graft.operators.Png.buildPng(9, 8, 2,
                 v.flatMap(x => Array(x.toByte, x.toByte, x.toByte)),

@@ -31,8 +31,7 @@ object ShardStreamSmoke {
   def run(spark: SparkSession, nShards: Int, membersPerShard: Int,
       memberBytes: Int): Unit = {
     val rt = Runtime.getRuntime
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-scale-shards")
+    val dir = graft.Fixtures.scratchDir("scale-shards")
     val t0 = System.nanoTime()
     // stream each shard to disk one MEMBER at a time: per-member
     // ustar blocks from the library builder, end marker appended once
@@ -90,14 +89,11 @@ object ShardStreamSmoke {
       f"bytes exact, " +
       f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
     // cleanup: 6 GiB of fixture must not outlive the smoke
-    java.nio.file.Files.walk(dir)
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    graft.Fixtures.delete(dir)
 
     // --- the ZIP counterpart: one multi-GiB archive walked off disk
     // via the random-access EOCD/CD path — CD + one member resident.
-    val zdir = java.nio.file.Files
-      .createTempDirectory("graft-scale-zip")
+    val zdir = graft.Fixtures.scratchDir("scale-zip")
     val t2 = System.nanoTime()
     val nZipMembers = 2048
     val zipMemberBytes = memberBytes
@@ -173,8 +169,6 @@ object ShardStreamSmoke {
       f"(${zipTotal / 1e9}%.1f GB, every CRC verified) walked off " +
       f"disk in $tZ%.1f s (${zipTotal / 1e9 / tZ}%.2f GB/s), " +
       f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    java.nio.file.Files.walk(zdir)
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    graft.Fixtures.delete(zdir)
   }
 }

@@ -1,11 +1,12 @@
 package graft.tools
 
-import java.io.FileOutputStream
 import java.nio.file.Files
-import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Fixtures
+import graft.Fixtures.mix64
 
 /** Dev smoke-driver: exercises the library through its public surface
   * (a real SparkSession + registered SQL functions) against testdata.
@@ -42,23 +43,17 @@ object Smoke {
 
     // E2E: write a fixture archive to disk, load it through the streamed
     // path-based source + engine, dump every table.
-    val dir = Files.createTempDirectory("smoke").toFile
-    val zipPath = s"$dir/fixture.zip"
-    val zos = new ZipOutputStream(new FileOutputStream(zipPath))
-    def entry(name: String, body: String): Unit = {
-      zos.putNextEntry(new ZipEntry(name)); zos.write(body.getBytes("UTF-8")); zos.closeEntry()
-    }
-    entry("nodes.geojson",
-      """{"type":"FeatureCollection","name":"nf","features":[
-        |{"type":"Feature","geometry":{"type":"Point","coordinates":[-122.1,47.6,55.5]},"properties":{"_id":"n1"}},
-        |{"type":"Feature","geometry":{"type":"Point","coordinates":[-122.2,47.7,0]},"properties":{"_id":"n2"}}],"rev":7}""".stripMargin)
-    entry("edges.geojson",
-      """{"type":"FeatureCollection","features":[
-        |{"type":"Feature","geometry":{"type":"LineString","coordinates":[[1.0,2.0,3.0],[4.0,5.0,6.0]]},"properties":{"_id":"e1"}}]}""".stripMargin)
-    entry("curbs.geojson",
-      """{"type":"FeatureCollection","name":"curbfile","features":[
-        |{"type":"Feature","geometry":{"type":"Point","coordinates":[9.0,8.0,7.0]},"properties":{"_id":"c1"}}]}""".stripMargin)
-    zos.close()
+    val dir = Fixtures.scratchDir("smoke")
+    val zipPath = Fixtures.writeZip(dir.resolve("fixture.zip"),
+      "nodes.geojson" -> Fixtures.featureCollection(""""name":"nf"""", Iterator(
+        """{"type":"Feature","geometry":{"type":"Point","coordinates":[-122.1,47.6,55.5]},"properties":{"_id":"n1"}}""",
+        """{"type":"Feature","geometry":{"type":"Point","coordinates":[-122.2,47.7,0]},"properties":{"_id":"n2"}}"""),
+        lateHeader = """"rev":7"""),
+      "edges.geojson" -> Fixtures.featureCollection("", Iterator(
+        """{"type":"Feature","geometry":{"type":"LineString","coordinates":[[1.0,2.0,3.0],[4.0,5.0,6.0]]},"properties":{"_id":"e1"}}""")),
+      "curbs.geojson" -> Fixtures.featureCollection(""""name":"curbfile"""", Iterator(
+        """{"type":"Feature","geometry":{"type":"Point","coordinates":[9.0,8.0,7.0]},"properties":{"_id":"c1"}}"""))
+    ).toString
 
     val engine = new graft.service.ExtractLoadEngine(spark, s"$dir/wh")
     val resp = engine.processRequest(graft.model.QueueMessage("m1", "wf",
@@ -69,12 +64,12 @@ object Smoke {
 
     // Streaming intake + graceful drain: drop a request into a watched
     // dir, start the live subscription, wait for it to process, drain.
-    val reqDir = Files.createTempDirectory("smoke-req")
+    val reqDir = Fixtures.scratchDir("smoke-req")
     val sub = new graft.streaming.QueueSubscription(
       spark, engine, reqDir.toString, s"$dir/ck")
     val req =
       s"""{"messageId":"m2","messageType":"workflow","data":{"data_type":"osw","file_upload_path":"$zipPath","tdei_dataset_id":"smoke-ds-2","user_id":"smoke-user"}}"""
-    val tmp = Files.createTempFile("req", ".json")
+    val tmp = Files.createTempFile(dir, "req", ".json")
     Files.writeString(tmp, req)
     Files.move(tmp, reqDir.resolve("m2.json"))
     val q = sub.start()
@@ -233,7 +228,7 @@ object Smoke {
 
     println("== curatePersisted sidecar: JSON-escaped params, pre-params guard ==")
     locally {
-      val pDir = Files.createTempDirectory("smoke-curate").toString
+      val pDir = Fixtures.scratchDir("smoke-curate").toString
       val small = docs.limit(30)
       graft.operators.CorpusAnalysis.curatePersisted(small,
         small.filter($"doc_id" % 7 === 0), "doc_id", "text", pDir,
@@ -421,12 +416,11 @@ object Smoke {
         val gz = new java.util.zip.GZIPOutputStream(bos)
         gz.write(raw); gz.close(); bos.toByteArray
       }
-      val warcDir = Files.createTempDirectory("smoke-build-warc")
+      val warcDir = Fixtures.scratchDir("smoke-build-warc")
       Files.write(warcDir.resolve("crawl-0.warc.gz"),
         (0 until 8).map(i => rec(s"http://s$i.test/a", http(doc(i))))
           .reduce(_ ++ _))
-      val stageDir = Files
-        .createTempDirectory("smoke-build-stages").toString
+      val stageDir = Fixtures.scratchDir("smoke-build-stages").toString
       val target = (0 until 4).map(i => (100L + i, doc(i)))
         .toDF("id", "text")
       graft.operators.CorpusBuild.buildCorpus(spark, warcDir.toString,
@@ -464,23 +458,17 @@ object Smoke {
         // double-mixed pixels so distinct classes are UNRELATED (an
         // affine base/f/k formula collapses every class onto ~101
         // cyclic luma phases — some phases land within Hamming 3)
-        def mix(a: Long): Long = {
-          var x = a
-          x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-          x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-          x ^= x >>> 33; x
-        }
-        val seed = mix(id % 32)
+        val seed = mix64(id % 32)
         val frames = (0 until 70).map { f =>
-          val fs = mix(seed + f * 0x9E3779B97F4A7C15L)
+          val fs = mix64(seed + f * 0x9E3779B97F4A7C15L)
           Array.tabulate(3 * 4 * 3)(k =>
-            ((((mix(fs + k) & Long.MaxValue) % 101L).toInt) * gain).toByte)
+            ((((mix64(fs + k) & Long.MaxValue) % 101L).toInt) * gain).toByte)
         }
         Video.buildUncompressedAvi(4, 3, frames, 40000L)
       })
       val corpus = docs.filter($"doc_id" < 16)
         .select($"doc_id".as("id"), buildAvi($"doc_id", lit(1)).as("content"))
-      val idxDir = Files.createTempDirectory("smoke-video-idx").toString
+      val idxDir = Fixtures.scratchDir("smoke-video-idx").toString
       Video.writeVideoNearDupIndex(corpus, "id", "content", idxDir)
       // snapshot: ids 100+base are re-gained twins of indexed streams
       // (dropped), 200+ are fresh classes (admitted), 999 undecodable

@@ -35,8 +35,7 @@ object TsStreamSmoke {
     val rt = Runtime.getRuntime
     require(nPes.toLong * 4000L < (1L << 33),
       "PTS run must fit the 33-bit clock")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-scale-ts")
+    val dir = graft.Fixtures.scratchDir("scale-ts")
     val t0 = System.nanoTime()
     (0 until nCaptures).foreach { c =>
       val out = new java.io.BufferedOutputStream(
@@ -77,8 +76,6 @@ object TsStreamSmoke {
       f"$tWalk%.1f s (${totalBytes / 1e9 / tWalk}%.2f GB/s), " +
       f"dims/durations exact, " +
       f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    (0 until nCaptures).foreach(c =>
-      java.nio.file.Files.delete(dir.resolve(s"cap_$c.ts")))
-    java.nio.file.Files.delete(dir)
+    graft.Fixtures.delete(dir)
   }
 }

@@ -35,8 +35,7 @@ object ZipStreamSmoke {
 
   def run(spark: SparkSession, nMembers: Int, memberBytes: Int): Unit = {
     val rt = Runtime.getRuntime
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-scale-zip64dd")
+    val dir = graft.Fixtures.scratchDir("scale-zip64dd")
     val zipPath = dir.resolve("big_dd.zip")
     val t0 = System.nanoTime()
     val out = new java.io.BufferedOutputStream(
@@ -157,7 +156,6 @@ object ZipStreamSmoke {
       f"CD-authoritative walk in $tWalk%.1f s " +
       f"(${fileLen / 1e9 / tWalk}%.2f GB/s), " +
       f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    java.nio.file.Files.delete(zipPath)
-    java.nio.file.Files.delete(dir)
+    graft.Fixtures.delete(dir)
   }
 }

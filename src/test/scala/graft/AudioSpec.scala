@@ -319,8 +319,7 @@ class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fold is CodegenFallback and runs interpreted)
     // route through parquet: ConvertToLocalRelation would otherwise
     // fold the tiny local relation away before any codegen happens
-    val pq = java.nio.file.Files
-      .createTempDirectory("graft-audio-kernel-plan").toString
+    val pq = Fixtures.scratchDir("graft-audio-kernel-plan").toString
     df5.write.mode("overwrite").parquet(pq)
     val fromPq = spark.read.parquet(pq).select(
       graft.expressions.AudioExprs.energiesNative(col("samples"),
@@ -414,8 +413,7 @@ class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base1 = clip(); val base2 = clip()
     val freshA = clip(); val freshB = clip()
     val junk = "junk".getBytes("UTF-8")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-audio-idx").toString
+    val dir = Fixtures.scratchDir("graft-audio-idx").toString
     val corpus = df(1L -> wav(base1), 2L -> wav(base2), 3L -> junk)
     Audio.writeAudioNearDupIndex(corpus, "id", "content", dir)
     // snapshot: a re-gained twin of corpus clip 1 (energy scales
@@ -460,7 +458,7 @@ class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     intercept[IllegalArgumentException] {
       Audio.incrementalAudioNearDedup(snap2, "id", "content",
-        java.nio.file.Files.createTempDirectory("graft-audio-noidx")
+        Fixtures.scratchDir("graft-audio-noidx")
           .toString)
     }
     // rebuild: batches from the previous generation are dropped, so
@@ -541,14 +539,12 @@ class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val corpus = df(100L -> wav(base1), 101L -> wav(base2))
     // auto-window index (the default): pins the UDF's auto path
-    val autoDir = java.nio.file.Files
-      .createTempDirectory("graft-audio-stream-auto").toString
+    val autoDir = Fixtures.scratchDir("graft-audio-stream-auto").toString
     Audio.writeAudioNearDupIndex(corpus, "id", "content", autoDir)
     run(autoDir, "stream_audio_auto")
     // fixed-window index: the stream re-hashes under the sidecar's
     // recorded width — pins the UDF's fixed path
-    val fixedDir = java.nio.file.Files
-      .createTempDirectory("graft-audio-stream-fixed").toString
+    val fixedDir = Fixtures.scratchDir("graft-audio-stream-fixed").toString
     Audio.writeAudioNearDupIndex(corpus, "id", "content", fixedDir,
       window = 16)
     run(fixedDir, "stream_audio_fixed")
@@ -594,8 +590,7 @@ class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
       Array.fill[Short](n)((rnd.nextInt(16001) - 8000).toShort)
     val jingle = noise(65 * 16) // 1040 frames
     val long = noise(1040) ++ jingle ++ noise(1040)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-jingle-idx").toString
+    val dir = Fixtures.scratchDir("graft-jingle-idx").toString
     Audio.writeAudioNearDupIndex(df(1L -> wav(jingle)), "id",
       "content", dir)
     val segs = Audio.segmentClips(df(7L -> wav(long)), "id", "content",
@@ -1176,8 +1171,7 @@ class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       Audio.wrapWav(s, 0, 517, 16000)
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-audio-rate-idx").toString
+    val dir = Fixtures.scratchDir("graft-audio-rate-idx").toString
     Audio.writeAudioNearDupIndex(
       Seq(1L -> wav8(0), 2L -> wav8(1)).toDF("id", "content"),
       "id", "content", dir, canonicalRate = 8000)
@@ -1248,8 +1242,7 @@ class AudioSpec extends AnyFunSuite with BeforeAndAfterAll {
     def clip(cls: Long) = Audio.wrapWav(
       Array.tabulate(300)(k => (((cls * 7 + k) * (cls * 7 + k)) %
         65521).toInt - 32760), 0, 300, 8000)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-audio-legacy-idx").toString
+    val dir = Fixtures.scratchDir("graft-audio-legacy-idx").toString
     Audio.writeAudioNearDupIndex(
       Seq(1L -> clip(0), 2L -> clip(1)).toDF("id", "content"),
       "id", "content", dir)

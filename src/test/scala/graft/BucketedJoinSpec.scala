@@ -14,7 +14,7 @@ import graft.sinks.Warehouse
 class BucketedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val wh =
-    java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+    Fixtures.scratchDir("graft-bucketed").toString
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

@@ -901,7 +901,7 @@ class CorpusAnalysisSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
     val bench = docs.filter(col("doc_id") % 97 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-curate").toString
+    val dir = Fixtures.scratchDir("graft-curate").toString
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().sortBy(_.getString(0))
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
@@ -931,7 +931,7 @@ class CorpusAnalysisSpec extends AnyFunSuite with BeforeAndAfterAll {
     // an EMPTY corpus must persist and resume too: an all-filtered
     // stage writes zero part files (only _SUCCESS), and the schema
     // sidecar keeps the read-back — and every later resume — alive
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-curate-e").toString
+    val dir2 = Fixtures.scratchDir("graft-curate-e").toString
     val emptyRun = rows(
       CorpusAnalysis.curatePersisted(emptyDocs, bench, "doc_id", "text", dir2))
     assert(emptyRun.forall(r => r._2 == 0 && r._3 == 0), emptyRun.toString)
@@ -944,7 +944,7 @@ class CorpusAnalysisSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text")).limit(50)
     val bench = docs.filter(col("doc_id") % 97 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-curate-p").toString
+    val dir = Fixtures.scratchDir("graft-curate-p").toString
     CorpusAnalysis.curatePersisted(docs, bench, "doc_id", "text", dir,
       sampleRate = 0.5)
     // resume with a DIFFERENT sampleRate: the persisted 5_sample stage
@@ -978,7 +978,7 @@ class CorpusAnalysisSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text")).limit(50)
     val bench = docs.filter(col("doc_id") % 97 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-curate-j").toString
+    val dir = Fixtures.scratchDir("graft-curate-j").toString
     // a salt carrying every JSON-breaking class: quote, backslash,
     // newline, tab, and a raw control char
     val salt = "s\"x\\y\nz\tq\u0001!"
@@ -1028,7 +1028,7 @@ class CorpusAnalysisSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // persisted: the same drops land in the _graft_buckets.json sidecar
     // and are still reported by a resume that SKIPS the stage entirely
-    val dir = java.nio.file.Files.createTempDirectory("graft-curate-b").toString
+    val dir = Fixtures.scratchDir("graft-curate-b").toString
     val p1 = CorpusAnalysis.curatePersistedWithStats(docs, bench, "doc_id",
       "text", dir, nearDupMaxBucket = 2)
     val pst = p1.bucketStats.filter(_._1 == "3_near_dedup").map(_._2)

@@ -70,10 +70,8 @@ class CorpusBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("buildCorpus: warc.gz drop dir -> packs; attrition per stage; " +
       "resume skips, param change fails, deleted stage recomputes") {
-    val warcDir = java.nio.file.Files
-      .createTempDirectory("graft-build-warc")
-    val stageDir = java.nio.file.Files
-      .createTempDirectory("graft-build-stages").toString
+    val warcDir = Fixtures.scratchDir("graft-build-warc")
+    val stageDir = Fixtures.scratchDir("graft-build-stages").toString
     // 12 good docs, one exact duplicate (same text, different uri),
     // one near duplicate (one word appended), one junk page (fails
     // both gates), one WET conversion record (skips the HTML stage)
@@ -197,10 +195,8 @@ class CorpusBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
       "with a mutated target fails loudly, unchanged target resumes " +
       "clean") {
     import spark.implicits._
-    val warcDir = java.nio.file.Files
-      .createTempDirectory("graft-build-tgt-warc")
-    val stageDir = java.nio.file.Files
-      .createTempDirectory("graft-build-tgt-stages").toString
+    val warcDir = Fixtures.scratchDir("graft-build-tgt-warc")
+    val stageDir = Fixtures.scratchDir("graft-build-tgt-stages").toString
     val caps = (0 until 8).map(i =>
       record("response", s"http://site$i.test/a",
         httpBlock(page(goodDoc(i)))))
@@ -256,8 +252,7 @@ class CorpusBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fails loudly (pre-fix: concat NULLed the whole hash term, such
     // rows contributed nothing, and the two targets fingerprinted
     // identically)
-    val stageDirN = java.nio.file.Files
-      .createTempDirectory("graft-build-tgt-stages-null").toString
+    val stageDirN = Fixtures.scratchDir("graft-build-tgt-stages-null").toString
     def withNullRow(id: Long) =
       ((0 until 4).map(i => (100L + i, goodDoc(i))) :+
         (id, null.asInstanceOf[String])).toDF("id", "text")
@@ -276,8 +271,7 @@ class CorpusBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("kill-resume determinism: a build KILLED mid-run (right after " +
       "3_dedup commits) and restarted yields a 7_curriculum table " +
       "row-identical to an uninterrupted build") {
-    val warcDir = java.nio.file.Files
-      .createTempDirectory("graft-kr-warc")
+    val warcDir = Fixtures.scratchDir("graft-kr-warc")
     val caps0 = (0 until 6).map(i =>
       record("response", s"http://kr$i.test/a",
         httpBlock(page(goodDoc(i)))))
@@ -288,10 +282,8 @@ class CorpusBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
       gzMembers(caps0))
     java.nio.file.Files.write(warcDir.resolve("kr-1.warc.gz"),
       gzMembers(caps1))
-    val clean = java.nio.file.Files
-      .createTempDirectory("graft-kr-clean").toString
-    val resumed = java.nio.file.Files
-      .createTempDirectory("graft-kr-resumed").toString
+    val clean = Fixtures.scratchDir("graft-kr-clean").toString
+    val resumed = Fixtures.scratchDir("graft-kr-resumed").toString
     def run(stageDir: String,
         onStage: (String, Double) => Unit = (_, _) => ()) =
       CorpusBuild.buildCorpus(spark, warcDir.toString, stageDir,
@@ -326,15 +318,13 @@ class CorpusBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("resume SKIPS completed stages: after a kill at 3_dedup the " +
       "restarted run computes ONLY 4_tiers..7_curriculum — the " +
       "operational payoff the staged-parquet design buys at 100 TB") {
-    val warcDir = java.nio.file.Files
-      .createTempDirectory("graft-rs-warc")
+    val warcDir = Fixtures.scratchDir("graft-rs-warc")
     val caps = (0 until 12).map(i =>
       record("response", s"http://rs$i.test/a",
         httpBlock(page(goodDoc(i)))))
     java.nio.file.Files.write(warcDir.resolve("rs-0.warc.gz"),
       gzMembers(caps))
-    val stageDir = java.nio.file.Files
-      .createTempDirectory("graft-rs-stages").toString
+    val stageDir = Fixtures.scratchDir("graft-rs-stages").toString
     def run(onStage: (String, Double) => Unit) = {
       val t0 = System.nanoTime()
       CorpusBuild.buildCorpus(spark, warcDir.toString, stageDir,

@@ -1,6 +1,6 @@
 package graft
 
-import java.io.{ByteArrayOutputStream, FileOutputStream}
+import java.io.ByteArrayOutputStream
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
@@ -34,39 +34,23 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def fc(features: Seq[String], header: Map[String, String] = Map.empty,
-      lateHeader: Map[String, String] = Map.empty): String = {
-    val head = header.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-    val late = lateHeader.map { case (k, v) => s""""$k":$v""" }.mkString(",")
-    s"""{"type":"FeatureCollection"${if (head.nonEmpty) "," + head else ""},
-       |"features":[${features.mkString(",")}]${if (late.nonEmpty) "," + late else ""}}""".stripMargin
+      lateHeader: Map[String, String] = Map.empty): Iterator[String] = {
+    def members(m: Map[String, String]) = m.map { case (k, v) => s""""$k":$v""" }.mkString(",")
+    Fixtures.featureCollection(members(header), features.iterator, members(lateHeader))
   }
 
   private def point(x: Double, y: Double, z: Option[Double], id: String): String =
     s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[$x,$y${z.map("," + _).getOrElse("")}]},"properties":{"_id":"$id"}}"""
 
-  private def zipBytes(entries: (String, String)*): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val zos = new ZipOutputStream(bos)
-    entries.foreach { case (name, body) =>
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(body.getBytes("UTF-8"))
-      zos.closeEntry()
-    }
-    zos.close()
-    bos.toByteArray
-  }
-
-  private def writeZip(bytes: Array[Byte]): String = {
-    val f = Files.createTempFile("graft-test", ".zip").toFile
-    val out = new FileOutputStream(f); out.write(bytes); out.close()
-    f.getAbsolutePath
-  }
+  /** `bytes` as an archive file of its own. */
+  private def onDisk(bytes: Array[Byte]): String =
+    Files.write(Fixtures.scratchDir("graft-test").resolve("a.zip"), bytes).toString
 
   private def mkEngine(): ExtractLoadEngine =
     new ExtractLoadEngine(spark,
-      Files.createTempDirectory("graft-wh").toString)
+      Fixtures.scratchDir("graft-wh").toString)
 
-  private val canonicalZip = zipBytes(
+  private val canonicalZip = Fixtures.zipBytes(
     "nodes.geojson" -> fc(
       Seq(point(-122.1, 47.6, Some(123.45), "n1"),
           point(-122.2, 47.7, Some(0.0), "n2"),
@@ -77,8 +61,8 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       lateHeader = Map("source" -> "\"test-suite\"", "rev" -> "7")),
     "zones.geojson" -> fc(
       Seq("""{"type":"Feature","geometry":{"type":"Polygon","coordinates":[[[0.0,0.0,9.0],[1.0,0.0,9.0],[1.0,1.0,9.0],[0.0,0.0,9.0]]]},"properties":{"_id":"z1"}}""")),
-    "__MACOSX/junk.geojson" -> "not json at all",
-    "readme.txt" -> "ignore me",
+    "__MACOSX/junk.geojson" -> Iterator("not json at all"),
+    "readme.txt" -> Iterator("ignore me"),
     "curbs.geojson" -> fc(
       Seq(point(1.0, 2.0, Some(5.0), "c1")),
       header = Map("name" -> "\"curb-file\""))
@@ -101,7 +85,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("e2e: canonical archive loads all tables with geometry rules applied") {
     val engine = mkEngine()
-    val resp = engine.processRequest(request(writeZip(canonicalZip)))
+    val resp = engine.processRequest(request(onDisk(canonicalZip)))
     assert(resp.success, resp.message)
     assert(resp.message == "Data loaded successfully")
 
@@ -146,13 +130,13 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("e2e: reload is idempotent and drops stale layers") {
     val engine = mkEngine()
-    assert(engine.processRequest(request(writeZip(canonicalZip))).success)
-    assert(engine.processRequest(request(writeZip(canonicalZip))).success)
+    assert(engine.processRequest(request(onDisk(canonicalZip))).success)
+    assert(engine.processRequest(request(onDisk(canonicalZip))).success)
     assert(engine.warehouse.table("node").count() == 3) // not doubled
 
     // reload with fewer layers → stale edge rows for ds1 are gone
-    val smaller = zipBytes("nodes.geojson" -> fc(Seq(point(1, 2, None, "n9"))))
-    assert(engine.processRequest(request(writeZip(smaller))).success)
+    val smaller = Fixtures.zipBytes("nodes.geojson" -> fc(Seq(point(1, 2, None, "n9"))))
+    assert(engine.processRequest(request(onDisk(smaller))).success)
     assert(engine.warehouse.table("node").count() == 1)
     import org.apache.spark.sql.functions.col
     assert(!engine.warehouse.tableExists("edge") ||
@@ -162,7 +146,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("zero .geojson entries → failure response with reference message") {
     val engine = mkEngine()
     val resp = engine.processRequest(
-      request(writeZip(zipBytes("readme.txt" -> "x", "__MACOSX/a.geojson" -> "y"))))
+      request(onDisk(Fixtures.zipBytes("readme.txt" -> Iterator("x"), "__MACOSX/a.geojson" -> Iterator("y")))))
     assert(!resp.success)
     assert(resp.message ==
       "Error loading the data : No valid .geojson files found in dataset archive.")
@@ -170,8 +154,8 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("empty FeatureCollection still writes metadata (insert([]) fallback)") {
     val engine = mkEngine()
-    val z = zipBytes("points.geojson" -> fc(Seq.empty, header = Map("name" -> "\"empty\"")))
-    assert(engine.processRequest(request(writeZip(z))).success)
+    val z = Fixtures.zipBytes("points.geojson" -> fc(Seq.empty, header = Map("name" -> "\"empty\"")))
+    assert(engine.processRequest(request(onDisk(z))).success)
     val ds = engine.warehouse.table("dataset").collect()(0)
     assert(ds.getAs[String]("ext_point_info") == """{"name":"empty"}""")
     assert(!engine.warehouse.tableExists("extension_point"))
@@ -191,7 +175,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // error-handler-middleware parity) and publish the reference's
     // 400/"already exists" form — not a generic 500
     val engine = new ExtractLoadEngine(spark,
-      Files.createTempDirectory("graft-wh").toString) {
+      Fixtures.scratchDir("graft-wh").toString) {
       override def processOswDataset(msg: QueueMessage): Unit =
         throw new graft.sinks.UniqueKeyDbException("record_id_unique", null)
     }
@@ -206,7 +190,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(row.getAs[String]("message").contains("already exists"))
     // foreign-key form: 400 with the constraint message
     val engine2 = new ExtractLoadEngine(spark,
-      Files.createTempDirectory("graft-wh").toString) {
+      Fixtures.scratchDir("graft-wh").toString) {
       override def processOswDataset(msg: QueueMessage): Unit =
         throw new graft.sinks.ForeignKeyDbException("dataset_fk", null)
     }
@@ -215,7 +199,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "Error loading the data : No reference found for the constraint 'dataset_fk' in the system.")
     // a success publishes status 200
     val ok = mkEngine()
-    val okResp = ok.processRequest(request(writeZip(canonicalZip)))
+    val okResp = ok.processRequest(request(onDisk(canonicalZip)))
     assert(okResp.success && okResp.status == 200)
   }
 
@@ -227,12 +211,10 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("source reads a directory / glob of archives, one task stream each") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-multi")
+    val dir = Fixtures.scratchDir("graft-multi")
     Seq("a", "b", "c").foreach { n =>
-      val z = zipBytes(s"${n}_nodes.geojson" ->
-        fc(Seq(point(1, 2, None, s"$n-id"))))
-      val out = new FileOutputStream(dir.resolve(s"$n.zip").toFile)
-      out.write(z); out.close()
+      Fixtures.writeZip(dir.resolve(s"$n.zip"),
+        s"${n}_nodes.geojson" -> fc(Seq(point(1, 2, None, s"$n-id"))))
     }
     // directory form
     val recs = GeoJsonZipSource.read(spark, dir.toString).collect()
@@ -250,10 +232,10 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("last entry per layer wins for dataset metadata") {
     val engine = mkEngine()
-    val z = zipBytes(
+    val z = Fixtures.zipBytes(
       "a_nodes.geojson" -> fc(Seq(point(1, 2, None, "a")), header = Map("name" -> "\"first\"")),
       "b_nodes.geojson" -> fc(Seq(point(3, 4, None, "b")), header = Map("name" -> "\"second\"")))
-    assert(engine.processRequest(request(writeZip(z))).success)
+    assert(engine.processRequest(request(onDisk(z))).success)
     val ds = engine.warehouse.table("dataset").collect()(0)
     assert(ds.getAs[String]("node_info") == """{"name":"second"}""")
     assert(engine.warehouse.table("node").count() == 2)
@@ -261,7 +243,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("stage timings are wall intervals: overlapping writes never exceed the load") {
     val engine = mkEngine()
-    assert(engine.processRequest(request(writeZip(canonicalZip))).success)
+    assert(engine.processRequest(request(onDisk(canonicalZip))).success)
     val t = engine.lastStageTimings
     assert(Seq("pre_clean", "parse_count", "write_features", "metadata", "stats",
       "process_files").forall(t.contains), t)
@@ -272,10 +254,10 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("a failed write: translated failure, every other write returned, nothing leaked") {
     // content_zone as a plain file: the zone write cannot create its
     // table directory, while the other writes of the load run beside it
-    val root = Files.createTempDirectory("graft-wh")
+    val root = Fixtures.scratchDir("graft-wh")
     Files.writeString(root.resolve("content_zone"), "not a table")
     val engine = new ExtractLoadEngine(spark, root.toString)
-    val resp = engine.processRequest(request(writeZip(canonicalZip)))
+    val resp = engine.processRequest(request(onDisk(canonicalZip)))
     assert(!resp.success && resp.status == 500, resp)
     assert(resp.message.startsWith("Error loading the data : ") &&
       resp.message.contains("content_zone"), resp.message)
@@ -297,7 +279,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("every job of a load runs in the caller's job group; one parse action") {
     val engine = mkEngine()
-    val path = writeZip(canonicalZip)
+    val path = onDisk(canonicalZip)
     val sc = spark.sparkContext
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
@@ -331,7 +313,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def loadFresh(bytes: Array[Byte], id: String) = {
     val engine = mkEngine()
-    (engine, engine.processRequest(request(writeZip(bytes), id)))
+    (engine, engine.processRequest(request(onDisk(bytes), id)))
   }
 
   /** Dataset partitions of `id` under any content table of the engine. */
@@ -353,7 +335,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "tail cut off" -> canonicalZip.dropRight(10),
       "first local header overwritten" -> corrupt,
       "corrupt archive without geojson" -> {
-        val b = zipBytes("readme.txt" -> "dataset", "__MACOSX/._nodes.geojson" -> "{}")
+        val b = Fixtures.zipBytes("readme.txt" -> Iterator("dataset"), "__MACOSX/._nodes.geojson" -> Iterator("{}"))
         b(0) = 'X'; b(1) = 'X'; b
       })
     cases.foreach { case (what, bytes) =>
@@ -366,11 +348,11 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a .geojson member that fails its CRC or does not inflate fails the load before any write") {
-    val body = fc(Seq(point(1, 2, None, "n1"), point(3, 4, None, "n2")))
+    val body = fc(Seq(point(1, 2, None, "n1"), point(3, 4, None, "n2"))).mkString
     // stored member: one character of a property changed, JSON still valid
     val stored = graft.operators.Zip.buildZip(Seq(
       ("nodes.geojson", body.getBytes("UTF-8"), false),
-      ("edges.geojson", fc(Seq.empty).getBytes("UTF-8"), true)))
+      ("edges.geojson", fc(Seq.empty).mkString.getBytes("UTF-8"), true)))
     val at = new String(stored, "ISO-8859-1").indexOf("\"n2\"")
     val badCrc = stored.clone()
     badCrc(at + 1) = 'm'
@@ -396,7 +378,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("STORED and data-descriptor members load") {
     val bos = new ByteArrayOutputStream()
     val zos = new ZipOutputStream(bos)
-    val nodes = fc(Seq(point(1, 2, Some(3), "n1"), point(4, 5, None, "n2"))).getBytes("UTF-8")
+    val nodes = fc(Seq(point(1, 2, Some(3), "n1"), point(4, 5, None, "n2"))).mkString.getBytes("UTF-8")
     val crc = new java.util.zip.CRC32()
     crc.update(nodes)
     val storedEntry = new ZipEntry("nodes.geojson")
@@ -411,7 +393,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     zos.putNextEntry(new ZipEntry("edges.geojson"))
     zos.write(fc(Seq(
       """{"type":"Feature","geometry":{"type":"LineString","coordinates":[[0,0,1],[1,1,2]]},"properties":{"_id":"e1"}}"""))
-      .getBytes("UTF-8"))
+      .mkString.getBytes("UTF-8"))
     zos.closeEntry()
     zos.close()
     val bytes = bos.toByteArray
@@ -419,25 +401,25 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(recs.filter(_.kind == "header").map(r => (r.entry_path, r.feature_count)) ==
       Seq("nodes.geojson" -> 2L, "edges.geojson" -> 1L))
     val engine = mkEngine()
-    assert(engine.processRequest(request(writeZip(bytes))).success)
+    assert(engine.processRequest(request(onDisk(bytes))).success)
     assert(engine.warehouse.table("node").count() == 2)
     assert(engine.warehouse.table("edge").collect()(0).getAs[String]("feature")
       .contains("[[0,0],[1,1]]"))
   }
 
   test("entry_seq, extension ids and last-header-wins follow archive order") {
-    val z = zipBytes(
-      "readme.txt" -> "skip",
+    val z = Fixtures.zipBytes(
+      "readme.txt" -> Iterator("skip"),
       "ext/b_curbs.geojson" -> fc(Seq(point(1, 2, None, "b")), header = Map("name" -> "\"b\"")),
       "a_nodes.geojson" -> fc(Seq(point(1, 2, None, "a")), header = Map("name" -> "\"first\"")),
-      "__MACOSX/._x.geojson" -> "{}",
+      "__MACOSX/._x.geojson" -> Iterator("{}"),
       "ext/a_ramps.geojson" -> fc(Seq(point(3, 4, None, "r")), header = Map("name" -> "\"a\"")),
       "b_nodes.geojson" -> fc(Seq(point(3, 4, None, "b")), header = Map("name" -> "\"second\"")))
     val headers = GeoJsonZipSource.expandZip("z", z).filter(_.kind == "header").toSeq
     assert(headers.map(h => (h.entry_seq, h.entry_path)) == Seq(
       0 -> "ext/b_curbs.geojson", 1 -> "a_nodes.geojson",
       2 -> "ext/a_ramps.geojson", 3 -> "b_nodes.geojson"))
-    val path = writeZip(z)
+    val path = onDisk(z)
     val read = GeoJsonZipSource.read(spark, path).collect()
     assert(read.filter(_.kind == "header").sortBy(_.entry_seq).map(_.entry_path).toSeq ==
       headers.map(_.entry_path))
@@ -457,10 +439,10 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("concurrent loads on one engine: lastStageTimings is one whole load") {
     val engine = mkEngine()
-    val busy = zipBytes(
+    val busy = Fixtures.zipBytes(
       "nodes.geojson" -> fc((0 until 3000).map(i => point(i * 1e-3, 47.0, Some(1.0), s"n$i"))),
       "curbs.geojson" -> fc(Seq(point(1.0, 2.0, None, "c1"))))
-    val paths = Seq("c1", "c2").map(id => id -> writeZip(busy))
+    val paths = Seq("c1", "c2").map(id => id -> onDisk(busy))
     val stages = Seq("pre_clean", "parse_count", "write_features", "metadata", "stats",
       "process_files")
     def timedLoad(id: String, path: String): Double = {
@@ -533,7 +515,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("stats folded into the parse match the SQL aggregate over the stored features") {
     import spark.implicits._
-    val z = zipBytes(
+    val z = Fixtures.zipBytes(
       "a_nodes.geojson" -> fc(oddFeatures),
       "edges.geojson" -> fc(oddFeatures.reverse),
       "b_nodes.geojson" -> fc(Seq(point(-170, -80, Some(1), "x"), point(170, 80, None, "y"))),
@@ -558,7 +540,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // the load's stats table, and a refresh from the stored tables
     val engine = mkEngine()
-    assert(engine.processRequest(request(writeZip(z), "odd")).success)
+    assert(engine.processRequest(request(onDisk(z), "odd")).success)
     val stored = Seq("node", "edge", "extension").map { t =>
       engine.warehouse.table(t).select(org.apache.spark.sql.functions.lit(t).as("layer_table"),
         $"feature")

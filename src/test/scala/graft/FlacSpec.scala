@@ -188,8 +188,7 @@ class FlacSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L)), pairs.toString)
     // a WAV index drops the FLAC twin, admits the fresh FLAC
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-flac-cross").toString
+    val dir = Fixtures.scratchDir("graft-flac-cross").toString
     Audio.writeAudioNearDupIndex(df(1L -> wav1), "id", "content", dir)
     val admitted = Audio.incrementalAudioNearDedup(
       df(2L -> flac1, 3L -> flac2), "id", "content", dir,
@@ -198,8 +197,7 @@ class FlacSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"FLAC twin of the indexed WAV must drop: $admitted")
     // jingle hunt through a FLAC clip — zero new code
     val jingle = stream(9, 1040)
-    val jDir = java.nio.file.Files
-      .createTempDirectory("graft-flac-jingle").toString
+    val jDir = Fixtures.scratchDir("graft-flac-jingle").toString
     Audio.writeAudioNearDupIndex(
       df(1L -> Audio.wrapWav(jingle, 0, jingle.length, 8000)),
       "id", "content", jDir)

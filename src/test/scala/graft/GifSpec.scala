@@ -239,8 +239,7 @@ class GifSpec extends AnyFunSuite with BeforeAndAfterAll {
       maxDistance = 0).collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.toSeq == Seq((1L, 2L)), pairs.mkString(","))
     // batch admission: AVI-built index drops the GIF twin
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-cross-container-idx").toString
+    val dir = Fixtures.scratchDir("graft-cross-container-idx").toString
     Video.writeVideoNearDupIndex(df((1L, avi7)), "id", "content", dir)
     val adm = Video.incrementalVideoNearDedup(
       df((10L, gif7), (20L, gif9)), "id", "content", dir,
@@ -278,8 +277,7 @@ class GifSpec extends AnyFunSuite with BeforeAndAfterAll {
       bgr(3 * p + 2) = ((rgb >> 16) & 0xFF).toByte
     }
     val known = Multimodal.buildBmp(16, 12, bgr)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-gif-image-idx").toString
+    val dir = Fixtures.scratchDir("graft-gif-image-idx").toString
     Multimodal.writeImageNearDupIndex(
       Seq((1L, known)).toDF("id", "content"), "id", "content", dir)
     val carrying = gif(8, 5, w = 16, h = 12) // contains frame 2

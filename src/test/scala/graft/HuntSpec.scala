@@ -28,7 +28,7 @@ class HuntSpec extends AnyFunSuite with BeforeAndAfterAll {
     rows.toDF("id", "content")
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    Fixtures.scratchDir(prefix).toString
 
   private def noise(seed: Int, n: Int): Array[Int] = {
     val rnd = new scala.util.Random(seed)

@@ -634,8 +634,7 @@ class LlmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("near-dup index: indexed admissions equal the direct path; " +
       "params sidecar gates fail-loud") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-nd-index").toString
+    val dir = Fixtures.scratchDir("graft-nd-index").toString
     val existing = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -671,8 +670,7 @@ class LlmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("near-dup index append: admit -> append -> the next snapshot " +
       "dedups against corpus + admissions, identical to a rebuild") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-nd-append").toString
+    val dir = Fixtures.scratchDir("graft-nd-append").toString
     val corpus = docsDf(
       1L -> "alpha beta gamma delta epsilon zeta eta theta",
       2L -> "one two three four five six seven eight nine")
@@ -706,8 +704,7 @@ class LlmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("near-dup index append is transactional: an uncommitted batch " +
       "(crash between the bands and grams writes) is invisible") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-nd-txn").toString
+    val dir = Fixtures.scratchDir("graft-nd-txn").toString
     val corpus = docsDf(
       1L -> "alpha beta gamma delta epsilon zeta eta theta")
     Dedup.writeNearDupIndex(corpus, "doc_id", "text", dir)
@@ -742,8 +739,7 @@ class LlmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("writeNearDupIndex rebuild clears stale append batches") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-nd-rebuild").toString
+    val dir = Fixtures.scratchDir("graft-nd-rebuild").toString
     val corpus = docsDf(
       1L -> "alpha beta gamma delta epsilon zeta eta theta")
     Dedup.writeNearDupIndex(corpus, "doc_id", "text", dir)

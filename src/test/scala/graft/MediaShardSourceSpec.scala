@@ -53,7 +53,7 @@ class MediaShardSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       "cheapest honest walk and the fields equal the column census " +
       "over the same bytes") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("media-census")
+    val dir = Fixtures.scratchDir("media-census")
     val corpus = mixedCorpus
     corpus.zipWithIndex.foreach { case ((fam, bytes), i) =>
       java.nio.file.Files.write(dir.resolve(s"f_${i}_$fam.bin"), bytes)
@@ -86,7 +86,7 @@ class MediaShardSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("refusal matrix: unknown magic refuses with an empty route; " +
       "a CRC-corrupted Ogg and a truncated GIF refuse as route " +
       "'stream' — the walk runs, the grammar refuses") {
-    val dir = java.nio.file.Files.createTempDirectory("media-refuse")
+    val dir = Fixtures.scratchDir("media-refuse")
     java.nio.file.Files.write(dir.resolve("u.bin"),
       Array.fill[Byte](64)(0x11))
     val badOgg = Audio.buildOgg("opus", channels = 1, sampleRate = 8000,
@@ -137,7 +137,7 @@ class MediaShardSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Media.mediaMetaPrefix(big.take(64 << 10),
       big.length.toLong).isEmpty)
     assert(Media.mediaMetaPrefix(big, big.length.toLong).isDefined)
-    val dir = java.nio.file.Files.createTempDirectory("media-escalate")
+    val dir = Fixtures.scratchDir("media-escalate")
     java.nio.file.Files.write(dir.resolve("pushed.bin"), big)
     val row = MediaShardSource
       .metaScanDF(spark, dir.toString + "/pushed.bin")

@@ -26,7 +26,7 @@ class Mp4ShardSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var dir: java.nio.file.Path = _
 
   override def beforeAll(): Unit = {
-    dir = java.nio.file.Files.createTempDirectory("mp4-shard-src")
+    dir = Fixtures.scratchDir("mp4-shard-src")
   }
 
   /** In-memory reader with a read-range log — the residency probe. */

@@ -316,8 +316,7 @@ class MpegTsSpec extends AnyFunSuite with BeforeAndAfterAll {
           else Some(MpegTs.buildAdts(1, 3 + b % 3, 1 + b % 2, 2)),
         h265 = id % 4 == 3)
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ts-src-spec")
+    val dir = Fixtures.scratchDir("graft-ts-src-spec")
     payloads.foreach { case (id, bytes) =>
       java.nio.file.Files.write(dir.resolve(s"seg_$id.ts"), bytes)
     }

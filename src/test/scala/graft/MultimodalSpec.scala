@@ -289,8 +289,7 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
       "transactional (uncommitted batches invisible); fail-loud on " +
       "hash-kind mismatch and missing sidecar; rebuild drops batches") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-img-idx").toString
+    val dir = Fixtures.scratchDir("graft-img-idx").toString
     val corpus = Seq(
       (1L, encode(patternImage(1), "png")),
       (2L, encode(patternImage(2), "png")),
@@ -343,7 +342,7 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     intercept[IllegalArgumentException] {
       Multimodal.incrementalImageNearDedup(snap2, "id", "content",
-        java.nio.file.Files.createTempDirectory("graft-img-noidx")
+        Fixtures.scratchDir("graft-img-noidx")
           .toString)
     }
     // rebuild: batches from the previous generation are dropped, so
@@ -360,8 +359,7 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-img-stream-idx").toString
+    val dir = Fixtures.scratchDir("graft-img-stream-idx").toString
     val corpus = Seq(
       (100L, encode(patternImage(1), "png")),
       (101L, encode(patternImage(2), "png"))).toDF("id", "content")
@@ -455,15 +453,9 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     * give unrelated tiles (absence assertions safe).
     */
   private def mixedBgr(cls: Long, w: Int, h: Int): Array[Byte] = {
-    def mix(a: Long): Long = {
-      var x = a
-      x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-      x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-      x ^= x >>> 33; x
-    }
-    val seed = mix(cls)
+    val seed = Fixtures.mix64(cls)
     Array.tabulate(3 * w * h)(k =>
-      ((mix(seed + k) & Long.MaxValue) % 256L).toByte)
+      ((Fixtures.mix64(seed + k) & Long.MaxValue) % 256L).toByte)
   }
 
   test("tileImages: fixed-size tiles re-encoded as REAL BMPs — " +
@@ -556,8 +548,7 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
       "an unrelated candidate admits") {
     import spark.implicits._
     val big = Multimodal.buildBmp(64, 48, mixedBgr(7L, 64, 48))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-crop-idx").toString
+    val dir = Fixtures.scratchDir("graft-crop-idx").toString
     val bigTiles = Multimodal.tileImages(
       Seq((1L, big)).toDF("id", "content"), "id", "content",
       tileW = 16, tileH = 12).toDF()
@@ -630,8 +621,7 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
       "corpus needle; over-cap CORPUS buckets drop silently by default " +
       "and strictBuckets=true fails loud") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-img-cap").toString
+    val dir = Fixtures.scratchDir("graft-img-cap").toString
     Multimodal.writeImageNearDupIndex(
       Seq((1L, encode(patternImage(1), "png"))).toDF("id", "content"),
       "id", "content", dir)
@@ -649,8 +639,7 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a degenerate CORPUS bucket (5 indexed copies of one signature,
     // cap 3) is still dropped whole: the twin is wrongly admitted and
     // nothing throws by default...
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft-img-cap2").toString
+    val dir2 = Fixtures.scratchDir("graft-img-cap2").toString
     Multimodal.writeImageNearDupIndex(
       (1L to 5L).map(i => (i, encode(patternImage(1), "png")))
         .toDF("id", "content"),
@@ -677,8 +666,7 @@ class MultimodalSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming admission strictBuckets: over-cap corpus bucket " +
       "fails loud at wiring time, before any micro-batch") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-img-cap-stream").toString
+    val dir = Fixtures.scratchDir("graft-img-cap-stream").toString
     Multimodal.writeImageNearDupIndex(
       (1L to 5L).map(i => (i, encode(patternImage(1), "png")))
         .toDF("id", "content"),

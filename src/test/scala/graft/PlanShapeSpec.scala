@@ -763,8 +763,7 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
       "per-format filter split re-reading the corpus)") {
     import graft.operators.{Gif, Video}
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-sigs-auto-plan").toString
+    val dir = Fixtures.scratchDir("graft-sigs-auto-plan").toString
     def frame(base: Int, f: Int): Array[Byte] =
       Array.tabulate(3 * 16 * 12)(k =>
         ((base * 131 + f * 31 + k * k % 97 * 7) % 101).toByte)

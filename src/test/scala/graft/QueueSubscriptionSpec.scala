@@ -1,9 +1,7 @@
 package graft
 
-import java.io.{ByteArrayOutputStream, FileOutputStream}
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
-import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
@@ -29,27 +27,11 @@ class QueueSubscriptionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def zipBytes(entries: (String, String)*): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val zos = new ZipOutputStream(bos)
-    entries.foreach { case (name, body) =>
-      zos.putNextEntry(new ZipEntry(name))
-      zos.write(body.getBytes("UTF-8"))
-      zos.closeEntry()
-    }
-    zos.close()
-    bos.toByteArray
-  }
-
-  private def writeZip(): String = {
-    val f = Files.createTempFile("graft-sub", ".zip").toFile
-    val out = new FileOutputStream(f)
-    out.write(zipBytes("nodes.geojson" ->
-      """{"type":"FeatureCollection","features":[
-        |{"type":"Feature","geometry":{"type":"Point","coordinates":[1.0,2.0,3.0]},"properties":{"_id":"n1"}}]}""".stripMargin))
-    out.close()
-    f.getAbsolutePath
-  }
+  private def writeZip(): String =
+    Fixtures.writeZip(Fixtures.scratchDir("graft-sub").resolve("sub.zip"),
+      "nodes.geojson" -> Fixtures.featureCollection("", Iterator(
+        """{"type":"Feature","geometry":{"type":"Point","coordinates":[1.0,2.0,3.0]},"properties":{"_id":"n1"}}"""))
+    ).toString
 
   /** Atomically drop one request JSON into the watched dir (write to a
     * temp name, then move — the file source must never see half a file).
@@ -60,7 +42,7 @@ class QueueSubscriptionSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"""{"messageId":"$id","messageType":"workflow",
          |"data":{"data_type":"$dataType","file_upload_path":"$zipPath",
          |"tdei_dataset_id":"$id","user_id":"u1"}}""".stripMargin.replace("\n", "")
-    val tmp = Files.createTempFile("req", ".json")
+    val tmp = Files.createTempFile(Fixtures.root, "req", ".json")
     Files.writeString(tmp, json)
     Files.move(tmp, dir.resolve(s"$id.json"))
   }
@@ -71,9 +53,9 @@ class QueueSubscriptionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("e2e: drop 2 requests -> 2 response rows, tables loaded, failure isolated") {
-    val reqDir = Files.createTempDirectory("graft-req")
-    val ckDir = Files.createTempDirectory("graft-ck").toString
-    val wh = Files.createTempDirectory("graft-wh").toString
+    val reqDir = Fixtures.scratchDir("graft-req")
+    val ckDir = Fixtures.scratchDir("graft-ck").toString
+    val wh = Fixtures.scratchDir("graft-wh").toString
     val engine = new ExtractLoadEngine(spark, wh)
     val sub = new QueueSubscription(spark, engine, reqDir.toString, ckDir)
 
@@ -102,9 +84,9 @@ class QueueSubscriptionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("drain: in-flight batch completes with its response row, then the query terminates") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
-    val reqDir = Files.createTempDirectory("graft-req-drain")
-    val ckDir = Files.createTempDirectory("graft-ck-drain").toString
-    val wh = Files.createTempDirectory("graft-wh-drain").toString
+    val reqDir = Fixtures.scratchDir("graft-req-drain")
+    val ckDir = Fixtures.scratchDir("graft-ck-drain").toString
+    val wh = Fixtures.scratchDir("graft-wh-drain").toString
     val entered = new CountDownLatch(1)
     val release = new CountDownLatch(1)
     val engine = new ExtractLoadEngine(spark, wh) {
@@ -137,7 +119,7 @@ class QueueSubscriptionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("concurrency is bounded by maxConcurrentMessages") {
-    val wh = Files.createTempDirectory("graft-wh").toString
+    val wh = Fixtures.scratchDir("graft-wh").toString
     val inFlight = new AtomicInteger(0)
     val maxSeen = new AtomicInteger(0)
     val engine = new ExtractLoadEngine(spark, wh) {

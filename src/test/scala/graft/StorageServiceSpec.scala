@@ -22,7 +22,7 @@ class StorageServiceSpec extends AnyFunSuite {
   }
 
   test("uploadFile streams into container and returns the remote url") {
-    val root = Files.createTempDirectory("graft-store").toString
+    val root = Fixtures.scratchDir("graft-store").toString
     val svc = new StorageService(conf, root)
     val path = svc.getFolderPath("pg", "r1", LocalDate.of(2026, 8, 12)) + "/data.zip"
     val url = svc.uploadFile(path, body = new ByteArrayInputStream(

@@ -32,7 +32,7 @@ class TarShardSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var dir: java.nio.file.Path = _
 
   override def beforeAll(): Unit = {
-    dir = java.nio.file.Files.createTempDirectory("tar-shard-src")
+    dir = Fixtures.scratchDir("tar-shard-src")
   }
 
   private def write(name: String, bytes: Array[Byte]): String = {

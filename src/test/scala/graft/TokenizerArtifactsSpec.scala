@@ -29,7 +29,7 @@ class TokenizerArtifactsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    Fixtures.scratchDir(prefix).toString
 
   private def corpus: DataFrame = docsDf(
     1L -> "low lower lowest newer newest wide widest",

@@ -287,8 +287,7 @@ class VideoSpec extends AnyFunSuite with BeforeAndAfterAll {
       "rebuild drops batches") {
     val n = 70
     val junk = "junk".getBytes("UTF-8")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-video-idx").toString
+    val dir = Fixtures.scratchDir("graft-video-idx").toString
     val corpus = df(1L -> avi(10, n), 2L -> avi(11, n), 3L -> junk)
     Video.writeVideoNearDupIndex(corpus, "id", "content", dir)
     // snapshot: a re-gained twin of corpus video 1 (luma scales
@@ -332,7 +331,7 @@ class VideoSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     intercept[IllegalArgumentException] {
       Video.incrementalVideoNearDedup(snap2, "id", "content",
-        java.nio.file.Files.createTempDirectory("graft-video-noidx")
+        Fixtures.scratchDir("graft-video-noidx")
           .toString)
     }
     // rebuild: batches from the previous generation are dropped, so
@@ -364,8 +363,7 @@ class VideoSpec extends AnyFunSuite with BeforeAndAfterAll {
     val junk = "junk".getBytes("UTF-8")
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val corpus = df(100L -> avi(10, n), 101L -> avi(11, n))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-video-stream").toString
+    val dir = Fixtures.scratchDir("graft-video-stream").toString
     Video.writeVideoNearDupIndex(corpus, "id", "content", dir)
     val mem = MemoryStream[(Long, java.sql.Timestamp, Array[Byte])]
     val sdf = mem.toDF().toDF("id", "ts", "content")
@@ -482,17 +480,11 @@ class VideoSpec extends AnyFunSuite with BeforeAndAfterAll {
     // same pixel, adjacent-cell comparisons degenerate, and unrelated
     // classes legitimately land within Hamming 3 of each other)
     def mixedAvi(cls: Long, n: Int): Array[Byte] = {
-      def mix(a: Long): Long = {
-        var x = a
-        x ^= x >>> 33; x *= 0xff51afd7ed558ccdL
-        x ^= x >>> 33; x *= 0xc4ceb9fe1a85ec53L
-        x ^= x >>> 33; x
-      }
-      val seed = mix(cls)
+      val seed = Fixtures.mix64(cls)
       Video.buildUncompressedAvi(16, 12, (0 until n).map { f =>
-        val fs = mix(seed + f * 0x9E3779B97F4A7C15L)
+        val fs = Fixtures.mix64(seed + f * 0x9E3779B97F4A7C15L)
         Array.tabulate(3 * 16 * 12)(k =>
-          ((mix(fs + k) & Long.MaxValue) % 101L).toByte)
+          ((Fixtures.mix64(fs + k) & Long.MaxValue) % 101L).toByte)
       }, 40000L)
     }
     def frames(rows: (Long, Array[Byte])*) =
@@ -500,8 +492,7 @@ class VideoSpec extends AnyFunSuite with BeforeAndAfterAll {
         .toDF().filter(col("decoded"))
         .select((col("id") * 1000 + col("frameIdx")).as("id"),
           col("image"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-xmodal-idx").toString
+    val dir = Fixtures.scratchDir("graft-xmodal-idx").toString
     Multimodal.writeImageNearDupIndex(
       frames(1L -> mixedAvi(1L, 70)), "id", "image", dir)
     // snapshot: video 2 is byte-identical to the indexed video (every
@@ -843,8 +834,7 @@ class VideoSpec extends AnyFunSuite with BeforeAndAfterAll {
       "scene-free clips pass") {
     val sceneFrames = (0 until 66).map(f => frame(99, f, 4, 3))
     val scene = Video.buildUncompressedAvi(4, 3, sceneFrames, 40000L)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-scene-idx").toString
+    val dir = Fixtures.scratchDir("graft-scene-idx").toString
     import spark.implicits._
     Video.writeVideoNearDupIndex(
       Seq((0L, scene)).toDF("id", "content"), "id", "content", dir)
@@ -999,8 +989,7 @@ class VideoSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rnd = new scala.util.Random(42)
     def noise(n: Int) = Array.fill(n)(rnd.nextInt(16001) - 8000)
     val jingle = noise(65 * 16) // 1040 frames
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-video-jingle-idx").toString
+    val dir = Fixtures.scratchDir("graft-video-jingle-idx").toString
     Audio.writeAudioNearDupIndex(
       Seq(1L -> Audio.wrapWav(jingle, 0, jingle.length, 8000))
         .toDF("id", "content"), "id", "content", dir)

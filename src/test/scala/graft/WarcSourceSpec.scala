@@ -125,7 +125,7 @@ class WarcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gz = gzMember(warcinfo) ++
       gzMember(record("response", "http://gz.test/1", httpBlock(html))) ++
       gzMember(record("response", "http://gz.test/2", httpBlock(html)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc")
+    val dir = Fixtures.scratchDir("graft-warc")
     java.nio.file.Files.write(dir.resolve("part-0.warc.gz"), gz)
     // a second, PLAIN file in the same directory: suffix routing
     java.nio.file.Files.write(dir.resolve("part-1.warc"),
@@ -142,7 +142,7 @@ class WarcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a directory resolves RECURSIVELY (crawl segment tree layout)") {
     val html = "<html><body><p>Segment capture.</p></body></html>"
-    val root = java.nio.file.Files.createTempDirectory("graft-crawl")
+    val root = Fixtures.scratchDir("graft-crawl")
     // crawl-data/CC-MAIN-*/segments/<seg>/warc/*.warc.gz shape
     val w1 = root.resolve("segments/seg-001/warc")
     val w2 = root.resolve("segments/seg-002/warc")
@@ -216,7 +216,7 @@ class WarcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming ingest: a WARC landing directory drains through the parser") {
     import spark.implicits._
     val html = "<html><body><p>Streamed capture.</p></body></html>"
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-stream")
+    val dir = Fixtures.scratchDir("graft-warc-stream")
     java.nio.file.Files.write(dir.resolve("batch-0.warc"),
       warcinfo ++ record("response", "http://s.test/1", httpBlock(html)))
     // binaryFile is a FileFormat, so the file-stream source serves it:
@@ -266,7 +266,7 @@ class WarcSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"Content-Type: application/http; msgtype=response\r\n" +
         s"Content-Length: ${httpBlock(page(body)).length}\r\n\r\n").getBytes(UTF_8) ++
         httpBlock(page(body)) ++ "\r\n\r\n".getBytes(UTF_8))
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-neardup")
+    val dir = Fixtures.scratchDir("graft-warc-neardup")
     // batch 0: a near-dup re-crawl of corpus doc wa + a genuinely new page
     java.nio.file.Files.write(dir.resolve("crawl-0.warc.gz"),
       cap("http://c.test/dup", doc("wa").replaceAll("wa29$", "zz"),

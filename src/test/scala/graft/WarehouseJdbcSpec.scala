@@ -28,7 +28,7 @@ class WarehouseJdbcSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("writeFeaturesJdbc appends in batches and rounds trip") {
     import spark.implicits._
     val wh = new Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      Fixtures.scratchDir("graft-wh").toString)
     val rows = (1 to 2500).map(i =>
       (s"""{"type":"Feature","geometry":null,"properties":{"_id":"f$i"}}""",
         "user1", "ds_jdbc"))
@@ -56,7 +56,7 @@ class WarehouseJdbcSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("connection bound caps partitions at maxConnections") {
     import spark.implicits._
     val wh = new Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      Fixtures.scratchDir("graft-wh").toString)
     val df = (1 to 100).map(i => (s"f$i", "u", "ds"))
       .toDF("feature", "requested_by", "tdei_dataset_id")
       .repartition(8)
@@ -67,7 +67,7 @@ class WarehouseJdbcSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("reloadFeaturesJdbc is idempotent per dataset; first load skips the pre-clean") {
     import spark.implicits._
     val wh = new Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      Fixtures.scratchDir("graft-wh").toString)
     val ddl = Map("createTableColumnTypes" ->
       "feature VARCHAR(2000), requested_by VARCHAR(100), tdei_dataset_id VARCHAR(100)")
     val df = (1 to 100).map(i => (s"f$i", "u", "ds_reload"))
@@ -88,7 +88,7 @@ class WarehouseJdbcSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("unique-key violations surface as the typed error (SQLSTATE 23505)") {
     import spark.implicits._
     val wh = new Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      Fixtures.scratchDir("graft-wh").toString)
     val conn = java.sql.DriverManager.getConnection(url)
     try conn.createStatement().execute(
       "CREATE TABLE content_pk (id INT PRIMARY KEY, tdei_dataset_id VARCHAR(50))")
@@ -103,7 +103,7 @@ class WarehouseJdbcSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("foreign-key violations surface as the typed error (SQLSTATE 23503)") {
     import spark.implicits._
     val wh = new Warehouse(spark,
-      java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      Fixtures.scratchDir("graft-wh").toString)
     val conn = java.sql.DriverManager.getConnection(url)
     try {
       val st = conn.createStatement()

@@ -36,7 +36,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def freshWarehouse() =
-    new Warehouse(spark, Files.createTempDirectory("graft-wh").toString)
+    new Warehouse(spark, Fixtures.scratchDir("graft-wh").toString)
 
   private def row(feature: String): InternalRow =
     InternalRow(UTF8String.fromString(feature), UTF8String.fromString("u"))
@@ -202,9 +202,8 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     val names = Seq("nodes", "edges", "points", "lines", "polygons", "zones", "ext/curbs")
     val zip = graft.operators.Zip.buildZip(names.map(n =>
       (s"$n.geojson", fc(point(n)).getBytes("UTF-8"), true)))
-    val file = Files.createTempFile("graft-schema", ".zip")
-    Files.write(file, zip)
-    val engine = new ExtractLoadEngine(spark, Files.createTempDirectory("graft-wh").toString)
+    val file = Files.write(Fixtures.scratchDir("graft-schema").resolve("schema.zip"), zip)
+    val engine = new ExtractLoadEngine(spark, Fixtures.scratchDir("graft-wh").toString)
     val resp = engine.processRequest(QueueMessage("m", "w",
       ExtractLoadRequest("osw", file.toString, "ds-schema", "u")))
     assert(resp.success, resp.message)

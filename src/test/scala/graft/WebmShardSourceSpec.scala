@@ -38,8 +38,7 @@ class WebmShardSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         nClusters = 2, clusterBytes = 4096,
         unknownSizeSegment = id % 3 == 0)
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-webm-src-spec")
+    val dir = Fixtures.scratchDir("graft-webm-src-spec")
     payloads.foreach { case (id, bytes) =>
       val ext = if (id % 2 == 0) "webm" else "mkv"
       java.nio.file.Files.write(dir.resolve(s"v_$id.$ext"), bytes)

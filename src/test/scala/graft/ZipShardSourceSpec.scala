@@ -30,7 +30,7 @@ class ZipShardSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var dir: java.nio.file.Path = _
 
   override def beforeAll(): Unit = {
-    dir = java.nio.file.Files.createTempDirectory("zip-shard-src")
+    dir = Fixtures.scratchDir("zip-shard-src")
   }
 
   private def write(name: String, bytes: Array[Byte]): String = {
