@@ -2,6 +2,7 @@ package graft.sinks
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.mapred.JobConf
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
@@ -19,7 +20,9 @@ import org.apache.spark.util.SerializableConfiguration
   * column) as parquet files, on the driver or inside a task. It is
   * Spark's own parquet `OutputWriterFactory`, prepared once on the
   * driver; the Hadoop conf that preparation filled in travels to tasks as
-  * a broadcast.
+  * a broadcast. That conf is the one its [[Warehouse]] gives it, so a
+  * file under a local root is created through [[ForkFreeLocalFileSystem]]:
+  * with its `.crc`, and without a `chmod` process.
   *
   * Inside a task, a killed task stops before it creates a file and at the
   * next row it writes, and a file whose writing failed is deleted: a
@@ -64,10 +67,10 @@ final class TableWriter private (dataSchema: StructType, factory: OutputWriterFa
 object TableWriter {
 
   /** Prepares the writer of `dataSchema` from the session's parquet
-    * settings.
+    * settings, over the Hadoop conf `hconf`.
     */
-  def prepare(spark: SparkSession, dataSchema: StructType): TableWriter = {
-    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+  def prepare(spark: SparkSession, hconf: Configuration, dataSchema: StructType): TableWriter = {
+    val job = Job.getInstance(hconf)
     val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
     new TableWriter(dataSchema, factory,
       spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration)))

@@ -1,7 +1,7 @@
 package graft.sinks
 
-import java.io.IOException
-import java.nio.file.{Files => NioFiles, NoSuchFileException}
+import java.io.{FileNotFoundException, IOException}
+import java.nio.file.{Files => NioFiles}
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
@@ -48,7 +48,11 @@ final case class StagedPartition(table: String, datasetId: String, files: Seq[St
   * tasks and the driver write through alike. A load's feature files come
   * from the tasks of its one parse job, its metadata files from the
   * driver; neither pays a Spark job or the commit protocol of a
-  * `DataFrameWriter` per table.
+  * `DataFrameWriter` per table. Every file the warehouse writes, renames
+  * or deletes goes through its own copy of the Hadoop conf, in which a
+  * local root is Hadoop's checksummed local file system with a
+  * `setPermission` that starts no `chmod` process
+  * ([[ForkFreeLocalFileSystem]]); any other root is the session's.
   *
   * Every table has a FIXED schema (the reference's DDL is fixed too), so
   * reads never rely on parquet schema inference: a table whose last
@@ -63,7 +67,20 @@ final class Warehouse(spark: SparkSession, val root: String) {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private def hconf: Configuration = spark.sparkContext.hadoopConfiguration
+  /** The Hadoop conf of every file the warehouse writes, renames or
+    * deletes: the session's, copied, with `file:` paths going through
+    * [[ForkFreeLocalFileSystem]], Hadoop's checksummed local file system
+    * without the `chmod` process it starts for every file and directory
+    * it creates. Hadoop caches file systems by scheme and user, not by
+    * conf, so the cache is off for `file:` in this conf; other schemes
+    * resolve as in the session.
+    */
+  private[graft] val hconf: Configuration = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.setClass("fs.file.impl", classOf[ForkFreeLocalFileSystem], classOf[FileSystem])
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    conf
+  }
 
   def tablePath(table: String): String = s"$root/content_$table"
 
@@ -80,7 +97,7 @@ final class Warehouse(spark: SparkSession, val root: String) {
 
   /** The writer of `table`'s files, prepared on first use. */
   def writer(table: String): TableWriter =
-    writers.computeIfAbsent(Warehouse.dataSchema(table), TableWriter.prepare(spark, _))
+    writers.computeIfAbsent(Warehouse.dataSchema(table), TableWriter.prepare(spark, hconf, _))
 
   /** content.node / edge / zone / extension_* feature tables: the
     * partitions of `df`'s dataset ids are replaced by `df`'s rows.
@@ -454,23 +471,20 @@ object Warehouse {
     }
   }
 
-  /** Creates `dir` and its parents. A local directory is made through
-    * java.nio: Hadoop's local file system would start a `chmod` process
-    * for each level it creates. A concurrent load may remove an empty
-    * staging root between creating a parent and its child: try again.
+  /** Creates `dir` and its parents. A concurrent load may remove an
+    * empty staging root between creating a parent and its child, or
+    * before setting a new directory's permission: try again.
     */
   private[sinks] def mkdirs(fs: FileSystem, dir: Path): Unit = {
-    def once(): Boolean = fs match {
-      case local: LocalFileSystem =>
-        try { NioFiles.createDirectories(local.pathToFile(dir).toPath); true }
-        catch { case _: NoSuchFileException => false }
-      case other => other.mkdirs(dir)
-    }
+    def once(): Boolean = try fs.mkdirs(dir) catch { case _: FileNotFoundException => false }
     if (!(0 until 3).exists(_ => once())) throw new IOException(s"cannot create $dir")
   }
 
   /** Removes `dir` if it is an empty directory, atomically: a concurrent
-    * load that has just created a child in it keeps it.
+    * load that has just created a child in it keeps it. A local directory
+    * is removed through java.nio, one `rmdir`: Hadoop's non-recursive
+    * local delete lists the directory and, finding it empty, deletes it
+    * recursively, children created in the meantime included.
     */
   private def removeIfEmpty(fs: FileSystem, dir: Path): Unit =
     try fs match {

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.GraftListenerBus
+import org.apache.spark.GraftProfiling
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
@@ -19,15 +19,18 @@ import graft.{SparkEntry, Verify}
   * `<outDir>/<q>_<tag>.txt`, then times `N` runs of the query's
   * `count()`: each run's wall time and, for every Spark stage the run
   * executed, the stage's wall time, executor CPU and run time, task
-  * count, spilled and shuffle-written bytes. The report, with host,
-  * cores and data directory, goes to `<outDir>/measure_<tag>.json`. Run:
+  * count, spilled and shuffle-written bytes, and the operators its RDDs
+  * came from (their operation scopes: `Exchange`, `Scan parquet`, ...),
+  * which name a stage whose call site is Spark's own thread pool. The
+  * report, with host, cores and data directory, goes to
+  * `<outDir>/measure_<tag>.json`. Run:
   * `sbt "runMain graft.tools.Measure <sfDir> <outDir> <tag> [--runs N] q [q...]"`
   * (3 runs by default; `--runs 0` writes the plans only).
   */
 object Measure {
 
-  final case class Stage(id: Int, name: String, wall_ms: Long, cpu_ms: Double,
-      run_ms: Long, tasks: Int, spill_bytes: Long, shuffle_write_bytes: Long)
+  final case class Stage(id: Int, name: String, scopes: Seq[String], wall_ms: Long,
+      cpu_ms: Double, run_ms: Long, tasks: Int, spill_bytes: Long, shuffle_write_bytes: Long)
   final case class Run(wall_s: Double, stages: Seq[Stage])
   final case class Query(plan: String, runs: Seq[Run], median_s: Option[Double],
       error: Option[String])
@@ -64,7 +67,7 @@ object Measure {
           try SparkEntry.queries(q)(spark, sfDir).count()
           finally sc.clearJobGroup()
           val wall = (System.nanoTime() - t0) / 1e9
-          GraftListenerBus.drain(sc)
+          GraftProfiling.drain(sc)
           Run(wall, recorder.stagesOf(group))
         }
         val walls = timed.map(_.wall_s).sorted
@@ -101,9 +104,9 @@ object Measure {
         val m = si.taskMetrics
         val wall = (for (end <- si.completionTime; start <- si.submissionTime)
           yield end - start).getOrElse(0L)
-        stages.add(g -> Stage(si.stageId, si.name, wall, m.executorCpuTime / 1e6,
-          m.executorRunTime, si.numTasks, m.memoryBytesSpilled + m.diskBytesSpilled,
-          m.shuffleWriteMetrics.bytesWritten))
+        stages.add(g -> Stage(si.stageId, si.name, GraftProfiling.scopes(si), wall,
+          m.executorCpuTime / 1e6, m.executorRunTime, si.numTasks,
+          m.memoryBytesSpilled + m.diskBytesSpilled, m.shuffleWriteMetrics.bytesWritten))
       }
     }
   }

@@ -53,12 +53,16 @@ class MeasureSpec extends AnyFunSuite with BeforeAndAfterAll {
       val ss = runs.head.get("stages").elements().asScala.toSeq
       assert(ss.nonEmpty, q)
       ss.foreach { s =>
-        Seq("id", "name", "wall_ms", "cpu_ms", "run_ms", "tasks", "spill_bytes",
+        Seq("id", "name", "scopes", "wall_ms", "cpu_ms", "run_ms", "tasks", "spill_bytes",
           "shuffle_write_bytes").foreach(f => assert(s.has(f), s"$q $f"))
+        // every stage names the operators it ran, AQE's pool-submitted ones too
+        assert(s.get("scopes").isArray && !s.get("scopes").isEmpty, s"$q $s")
       }
       ss
     }
     assert(stages.exists(s => s.get("tasks").asInt > 0 && s.get("cpu_ms").asDouble > 0), stages)
+    // both queries shuffle
+    assert(stages.exists(_.get("scopes").elements().asScala.exists(_.asText == "Exchange")), stages)
 
     queries.foreach { q =>
       val expected = SparkEntry.queries(q)(spark, sf).queryExecution.explainString(FormattedMode)

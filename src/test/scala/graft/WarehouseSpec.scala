@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -213,6 +214,13 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tables.forall(wh.tableExists), tables.filterNot(wh.tableExists))
     tables.foreach { t =>
       assert(shape(spark.read.parquet(wh.tablePath(t)).schema) == shape(Warehouse.schemas(t)), t)
+    }
+    // every data file keeps its checksum file and the default umask's mode
+    val parquet = filesUnder(wh.root).filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(parquet.size == tables.size, parquet)
+    parquet.foreach { f =>
+      assert(Files.exists(f.resolveSibling(s".${f.getFileName}.crc")), f)
+      assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(f)) == "rw-r--r--", f)
     }
   }
 }
