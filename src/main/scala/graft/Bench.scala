@@ -149,7 +149,8 @@ object Bench {
       }.mkString(", "))
 
     // A2 parity: per-stage wall times for one fixture ingest (the
-    // reference's console.time points: pre_clean, parse, writes, stats).
+    // reference's console.time points: parse, metadata, stats, and the
+    // one publish as write_features).
     val stages: Map[String, Double] =
       try benchIngest(spark)
       catch { case e: Throwable =>

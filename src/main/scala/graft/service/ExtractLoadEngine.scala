@@ -2,6 +2,8 @@ package graft.service
 
 import java.util.UUID
 
+import scala.util.control.NonFatal
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.TaskContext
@@ -12,27 +14,27 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.GeoFunctions.GeometryStats
 import graft.model.{Layer, LoadResponse, QueueMessage}
-import graft.sinks.{StagedPartition, TableWriter, Warehouse}
+import graft.sinks.{TableWriter, Warehouse}
 import graft.sources.{GeoJsonZipSource, ParsedRecord}
 
 /** The extract-load pipeline (reference
   * `src/service/extract-load-service.ts:242-345`), Spark-first.
   *
   * One request = one archive load:
-  *   1. pre-clean the dataset's rows (A1; partition delete),
-  *   2. streamed ZIP/GeoJSON expansion with the geometry transform (P7)
+  *   1. streamed ZIP/GeoJSON expansion with the geometry transform (P7)
   *      FUSED into the parse loop (one Jackson parse + one serialize per
   *      feature — never parse-serialize-reparse),
-  *   3. per-layer feature files for the `content_*` tables (partitioned
+  *   2. per-layer feature files for the `content_*` tables (partitioned
   *      by dataset id), written by the parse itself,
-  *   4. header metadata → `dataset` row (K8) and `extension_file` rows
+  *   3. header metadata → `dataset` row (K8) and `extension_file` rows
   *      (K9; ids are a per-dataset dense sequence in archive entry
   *      order — the reference's DB sequence is opaque, so the contract
   *      here is ours),
-  *   5. stats refresh (A3; a local fold of the header records, which
+  *   4. stats refresh (A3; a local fold of the header records, which
   *      carry each entry's stats),
-  *   6. one commit of everything staged, then the success/failure
-  *      response (K10).
+  *   5. one publish of everything staged, which replaces the dataset in
+  *      every dataset table (A1), then the success/failure response
+  *      (K10).
   *
   * Spark-action budget per load: ONE job, one task per `.geojson` entry.
   * Each task streams its entry and writes the entry's features into one
@@ -41,22 +43,21 @@ import graft.sources.{GeoJsonZipSource, ParsedRecord}
   * The headers' `stats` hold each entry's counts and anchor bboxes per
   * geometry type, so the stats rows need no pass over the features. The
   * driver then writes the `dataset`, `extension_file` and `stats` files
-  * itself, through the same [[TableWriter]], and commits every staged
-  * partition (see [[Warehouse.commit]]); the response is one more file.
-  * No step of a load shuffles or runs a second job.
+  * itself, through the same [[TableWriter]], and publishes them with the
+  * feature files (see [[Warehouse.publish]]); the response is one more
+  * file. No step of a load shuffles or runs a second job.
   *
-  * Failure anywhere → failure response, and the load's staging directory
-  * is deleted once no task of it is still running. Each table commits on
-  * its own, and the first failure is reported with the others attached;
-  * a replay replaces the same partitions, which is how the reference's
-  * transaction-rollback intent is preserved at Spark scale.
+  * Failure anywhere → failure response, and the dataset is left empty in
+  * every dataset table, as the reference's pre-clean plus rolled-back
+  * transaction leaves it: a load that fails before its publish publishes
+  * nothing, and a publish that fails empties the dataset itself. The
+  * load's staging directory is deleted once no task of it is still
+  * running. A replay replaces the dataset whole.
   *
-  * [[lastStageTimings]] keys: `pre_clean`; `parse_count`, the parse job
-  * with its feature files; `write_features`, the commit of the content
-  * tables; `metadata`, the `dataset` and `extension_file` files and their
-  * commit; `stats`, the stats file and its commit; `process_files`, the
-  * whole load. A stage is the wall interval from its first start to its
-  * last end.
+  * [[lastStageTimings]] keys, each stage timed once: `parse_count`, the
+  * parse job with its feature files; `metadata`, the `dataset` and
+  * `extension_file` files; `stats`, the stats file; `write_features`, the
+  * one publish; `process_files`, the whole load.
   */
 class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
   import ExtractLoadEngine.EntryOut
@@ -110,14 +111,31 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
   }
 
   private def load(msg: QueueMessage, clock: ExtractLoadEngine.StageClock): Unit = {
+    val datasetId = msg.data.tdei_dataset_id
+    val loadId = UUID.randomUUID().toString
+    try {
+      // a load that fails publishes nothing, which empties its dataset
+      val staged =
+        try stage(msg, loadId, clock)
+        catch {
+          case e: Throwable =>
+            try warehouse.deleteDatasetRecords(datasetId) catch { case NonFatal(d) => e.addSuppressed(d) }
+            throw e
+        }
+      clock.timed("write_features")(warehouse.publish(datasetId, Warehouse.DatasetTables, staged))
+    } finally warehouse.discard(loadId)
+  }
+
+  /** Writes every file of the load into its staging directory; returns
+    * table -> staged files.
+    */
+  private def stage(msg: QueueMessage, loadId: String,
+      clock: ExtractLoadEngine.StageClock): Map[String, Seq[String]] = {
     import clock.timed
     val datasetId = msg.data.tdei_dataset_id
     val userId = msg.data.user_id
 
-    // A1: idempotent pre-clean across every table.
-    timed("pre_clean")(warehouse.deleteDatasetRecords(datasetId))
-
-    // 2. streamed source with the geometry transform fused in: one
+    // 1. streamed source with the geometry transform fused in: one
     // partition per .geojson entry.
     val (records, entryPaths) =
       GeoJsonZipSource.readEntries(spark, msg.data.file_upload_path, transform = true)
@@ -133,51 +151,45 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
       layers.map(l => if (l == Layer.Extension) { n += 1; n } else 0)
     }
 
-    val loadId = UUID.randomUUID().toString
-    try {
-      // 3. ONE job: each entry task writes its layer's feature file and
-      // returns its header record (rows ≈ entries per archive, bounded by
-      // archive layout, not data volume).
-      val outs = layers.indices.map { i =>
-        val table = layers(i).table
-        EntryOut(warehouse.writer(table), warehouse.stagedPartitionPath(loadId, table, datasetId),
-          extIds(i))
-      }
-      val entries = timed("parse_count")(warehouse.runJob(records) { it =>
-        ExtractLoadEngine.writeEntry(it, outs(TaskContext.getPartitionId()), userId)
-      }).toSeq
-      val headers = entries.map(_._1)
-      val content = Layer.all.map(_.table).distinct.flatMap { t =>
-        val files = entries.zip(layers).collect { case ((_, Some(f)), l) if l.table == t => f }
-        Option.when(files.nonEmpty)(StagedPartition(t, datasetId, files))
-      }
+    // 2. ONE job: each entry task writes its layer's feature file and
+    // returns its header record (rows ≈ entries per archive, bounded by
+    // archive layout, not data volume).
+    val outs = layers.indices.map { i =>
+      val table = layers(i).table
+      EntryOut(warehouse.writer(table), warehouse.stagedPartitionPath(loadId, table, datasetId),
+        extIds(i))
+    }
+    val entries = timed("parse_count")(warehouse.runJob(records) { it =>
+      ExtractLoadEngine.writeEntry(it, outs(TaskContext.getPartitionId()), userId)
+    }).toSeq
+    val headers = entries.map(_._1)
+    val content = entries.zip(layers).collect { case ((_, Some(f)), l) => l.table -> f }
+      .groupMap(_._1)(_._2)
 
-      val metadata = timed("metadata") {
-        // 4a. dataset metadata row (K8): last entry per layer wins,
-        // matching the reference's sequential per-entry UPDATEs.
-        val infoByLayer: Map[String, String] =
-          headers.filter(_.layer != Layer.Extension.name)
-            .map(h => h.layer -> additionalInfo(h.header))
-            .toMap // toMap keeps the LAST value per key
-        val datasetRow = InternalRow.fromSeq(Layer.routingOrder.map(l =>
-          UTF8String.fromString(infoByLayer.get(l.name).orNull)))
-        // 4b. extension_file rows (K9): name = basename sans extension.
-        val extRows = headers.zip(extIds).collect { case (h, id) if id > 0 =>
-          InternalRow(id, UTF8String.fromString(baseNameNoExt(h.entry_path)),
-            UTF8String.fromString(additionalInfo(h.header)), UTF8String.fromString(userId))
-        }
-        warehouse.stageRows(loadId, "dataset", datasetId, Seq(datasetRow)).toSeq ++
-          warehouse.stageRows(loadId, "extension_file", datasetId, extRows)
+    val metadata = timed("metadata") {
+      // 3a. dataset metadata row (K8): last entry per layer wins,
+      // matching the reference's sequential per-entry UPDATEs.
+      val infoByLayer: Map[String, String] =
+        headers.filter(_.layer != Layer.Extension.name)
+          .map(h => h.layer -> additionalInfo(h.header))
+          .toMap // toMap keeps the LAST value per key
+      val datasetRow = InternalRow.fromSeq(Layer.routingOrder.map(l =>
+        UTF8String.fromString(infoByLayer.get(l.name).orNull)))
+      // 3b. extension_file rows (K9): name = basename sans extension.
+      val extRows = headers.zip(extIds).collect { case (h, id) if id > 0 =>
+        InternalRow(id, UTF8String.fromString(baseNameNoExt(h.entry_path)),
+          UTF8String.fromString(additionalInfo(h.header)), UTF8String.fromString(userId))
       }
+      warehouse.stageRows(loadId, "dataset", datasetId, Seq(datasetRow)) ++
+        warehouse.stageRows(loadId, "extension_file", datasetId, extRows)
+    }
 
-      // 5. stats refresh (A3) — the fold of the headers' per-entry stats.
-      val stats = timed("stats")(Option.when(content.nonEmpty)(
-        warehouse.stageRows(loadId, "stats", datasetId, statsRows(headers.flatMap(h =>
-          h.stats.map(tableOf(h.layer) -> _))))).flatten.toSeq)
+    // 4. stats refresh (A3) — the fold of the headers' per-entry stats.
+    val stats = timed("stats")(Option.when(content.nonEmpty)(
+      warehouse.stageRows(loadId, "stats", datasetId, statsRows(headers.flatMap(h =>
+        h.stats.map(tableOf(h.layer) -> _))))).flatten)
 
-      Warehouse.eachOnItsOwn(Seq("write_features" -> content, "metadata" -> metadata,
-        "stats" -> stats)) { case (stage, parts) => timed(stage)(warehouse.commit(loadId, parts)) }
-    } finally warehouse.discard(loadId)
+    content ++ metadata ++ stats
   }
 
   /** Header map minus `features`/`type` (`extract-load-service.ts:494-502`),
@@ -217,17 +229,14 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
     * without a load in hand, mirroring the stored-proc call shape). Each
     * task folds its stored feature strings through the same definitions
     * as a load; the partial stats are collected and merged here, and
-    * written and committed like a load's.
+    * published as the dataset's stats partition alone.
     */
   def updateStats(datasetId: String): Unit = {
-    val perLayer = Layer.all.map(_.table).distinct.flatMap { t =>
-      if (warehouse.partitionExists(t, datasetId))
-        Some(spark.read.schema(warehouse.tableSchema(t)).parquet(warehouse.partitionPath(t, datasetId))
-          .select(lit(t).as("layer_table"), $"feature"))
-      else None
-    }
-    if (perLayer.isEmpty) return
-    val parts = perLayer.reduce(_ unionAll _).as[(String, String)].mapPartitions { rows =>
+    val features = Layer.all.map(_.table).distinct.map { t =>
+      warehouse.table(t).filter(col(Warehouse.PartitionColumn) === datasetId)
+        .select(lit(t).as("layer_table"), $"feature")
+    }.reduce(_ unionAll _)
+    val parts = features.as[(String, String)].mapPartitions { rows =>
       val partial = GeometryStats.fold(rows.map { case (t, f) =>
         val s = GeometryStats.of(f)
         (t, s.geometry_type) -> s
@@ -235,8 +244,8 @@ class ExtractLoadEngine(spark: SparkSession, warehouseRoot: String) {
       partial.iterator.map { case ((t, _), s) => (t, s) }
     }.collect()
     val loadId = UUID.randomUUID().toString
-    try warehouse.commit(loadId,
-      warehouse.stageRows(loadId, "stats", datasetId, statsRows(parts.toSeq)).toSeq)
+    try warehouse.publish(datasetId, Seq("stats"),
+      warehouse.stageRows(loadId, "stats", datasetId, statsRows(parts.toSeq)).toMap)
     finally warehouse.discard(loadId)
   }
 }
@@ -273,27 +282,16 @@ object ExtractLoadEngine {
     (header, file)
   }
 
-  /** Stage intervals of one load. A stage holds the wall interval its
-    * calls covered, from the first start to the last end: the stages of
-    * a load interleave (files first, commits after), so the sum of their
-    * intervals could exceed the load's own wall time.
-    */
+  /** Stage wall times of one load, each stage timed once. */
   private final class StageClock {
-    private val intervals = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
+    private val times = scala.collection.mutable.LinkedHashMap[String, Double]()
 
     def timed[T](stage: String)(body: => T): T = {
       val t0 = System.nanoTime()
       try body
-      finally {
-        val t1 = System.nanoTime()
-        intervals.synchronized {
-          val (a, b) = intervals.getOrElse(stage, (t0, t1))
-          intervals(stage) = (math.min(a, t0), math.max(b, t1))
-        }
-      }
+      finally times(stage) = (System.nanoTime() - t0) / 1e9
     }
 
-    def seconds: Map[String, Double] = intervals.synchronized(
-      intervals.map { case (stage, (t0, t1)) => stage -> (t1 - t0) / 1e9 }.toMap)
+    def seconds: Map[String, Double] = times.toMap
   }
 }

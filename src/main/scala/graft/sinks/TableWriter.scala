@@ -32,7 +32,8 @@ final class TableWriter private (dataSchema: StructType, factory: OutputWriterFa
     conf: Broadcast[SerializableConfiguration]) extends Serializable {
 
   /** A new file at `base` plus the codec's extension, for example
-    * `part-00003-0.snappy.parquet`.
+    * `part-00003-0.snappy.parquet`. Creating it creates its missing
+    * parent directories.
     */
   def open(base: String): TableWriter.File = {
     val tc = TaskContext.get()
@@ -47,7 +48,6 @@ final class TableWriter private (dataSchema: StructType, factory: OutputWriterFa
     val ctx = new TaskAttemptContextImpl(new JobConf(conf.value.value), attempt)
     val path = base + factory.getFileExtension(ctx)
     val fs = new Path(path).getFileSystem(ctx.getConfiguration)
-    Warehouse.mkdirs(fs, new Path(path).getParent)
     new TableWriter.File(path, factory.newInstance(path, dataSchema, ctx), tc, fs)
   }
 

@@ -1,7 +1,6 @@
 package graft.sinks
 
-import java.io.{FileNotFoundException, IOException}
-import java.nio.file.{Files => NioFiles}
+import java.io.IOException
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
@@ -12,7 +11,7 @@ import scala.util.{Failure, Success}
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.{JobExecutionStatus, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -24,24 +23,23 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.{Layer, LoadResponse}
 
-/** Files a load staged for one dataset's partition of `table`. */
-final case class StagedPartition(table: String, datasetId: String, files: Seq[String])
-
 /** Table layout of the engine — the Spark-native replacement for the
   * reference's Postgres `content.*` schema.
   *
   * Every per-feature table is parquet partitioned by `tdei_dataset_id`.
-  * A write never lands in a live partition: its files are written into a
-  * staging directory, `<root>/_staging/<load id>/content_<table>/
-  * tdei_dataset_id=<id>/`, and [[commit]] then replaces each live
-  * partition by its staged one (delete, then one directory rename). That
-  * makes a re-load of the same dataset idempotent — the Spark idiom
-  * replacing the reference's `delete_dataset_records_by_id($1)`
-  * pre-clean + transactional reload
+  * A write never lands in a live partition: its files are written into
+  * the staging directory of its load, `<root>/_staging-<load id>/
+  * content_<table>/tdei_dataset_id=<id>/`, and one [[publish]] then
+  * replaces the dataset's partition in every table the write covers: a
+  * table with staged files gets them (delete, then one directory rename),
+  * every other table loses its partition. Publishes of one dataset run
+  * one at a time in the JVM, and a publish that fails leaves the dataset
+  * empty. That is the Spark idiom for the reference's
+  * `delete_dataset_records_by_id($1)` pre-clean followed by one
+  * transactional reload that rolls back on failure
   * (`src/service/extract-load-service.ts:291-295`,
-  * `src/database/data-source.ts:33-65`). Replays replace exactly the
-  * partitions they produce, so a failed load is repaired by re-running —
-  * the at-least-once story the queue semantics require.
+  * `src/database/data-source.ts:33-65`): a dataset holds one whole load
+  * or nothing, and a re-load of the same dataset is idempotent.
   *
   * Files are written through one [[TableWriter]] per data schema: Spark's
   * own parquet `OutputWriterFactory`, prepared once on the driver, which
@@ -82,12 +80,18 @@ final class Warehouse(spark: SparkSession, val root: String) {
     conf
   }
 
+  /** The file system of the root, through [[hconf]]. */
+  private val fs: FileSystem = new Path(root).getFileSystem(hconf)
+
+  /** Publishes of one dataset share a lock stripe with this key. */
+  private val lockKey = fs.makeQualified(new Path(root)).toString
+
   def tablePath(table: String): String = s"$root/content_$table"
 
   def tableSchema(name: String): StructType = Warehouse.schemas(name)
 
-  /** Where the files of load `loadId` wait for [[commit]]. */
-  def stagingPath(loadId: String): String = s"$root/${Warehouse.Staging}/$loadId"
+  /** Where the files of load `loadId` wait for [[publish]]. */
+  def stagingPath(loadId: String): String = s"$root/_staging-$loadId"
 
   /** Staged directory of one dataset's partition of `table`. */
   def stagedPartitionPath(loadId: String, table: String, datasetId: String): String =
@@ -110,7 +114,7 @@ final class Warehouse(spark: SparkSession, val root: String) {
   def upsertByDataset(table: String, df: DataFrame): Unit = replace(table, df)
 
   /** One job writes `df`'s rows into staged files, one file per task and
-    * dataset id; then each dataset's partition is committed.
+    * dataset id; then each dataset's partition of `table` is published.
     */
   private def replace(table: String, df: DataFrame): Unit = {
     val data = Warehouse.dataSchema(table)
@@ -135,19 +139,20 @@ final class Warehouse(spark: SparkSession, val root: String) {
           case e: Throwable => open.values.foreach(_.abort()); throw e
         }
       }
-      commit(loadId, files.toSeq.flatten.groupMap(_._1)(_._2).toSeq.map {
-        case (id, fs) => StagedPartition(table, id, fs)
-      })
+      files.toSeq.flatten.groupMap(_._1)(_._2).foreach { case (id, staged) =>
+        publish(id, Seq(table), Map(table -> staged))
+      }
     } finally discard(loadId)
   }
 
   /** Writes `rows` on the driver as the one staged file of a dataset's
-    * partition of `table`; none when there are no rows.
+    * partition of `table`: `table` -> that file, or None (no file) when
+    * there are no rows.
     */
   def stageRows(loadId: String, table: String, datasetId: String,
-      rows: Seq[InternalRow]): Option[StagedPartition] =
+      rows: Seq[InternalRow]): Option[(String, Seq[String])] =
     writer(table).write(s"${stagedPartitionPath(loadId, table, datasetId)}/part-driver", rows.iterator)
-      .map(f => StagedPartition(table, datasetId, Seq(f)))
+      .map(f => table -> Seq(f))
 
   /** Runs `f` over every partition of `rdd` as one Spark job, from the
     * calling thread (its job group and local properties apply), and
@@ -184,44 +189,52 @@ final class Warehouse(spark: SparkSession, val root: String) {
       log.warn(s"jobs ${jobIds.mkString(",")} still report running tasks; discarding their files anyway")
   }
 
-  /** Publishes staged partitions of load `loadId`. Each partition
-    * commits on its own: the first failure is rethrown once every
-    * partition was tried, with the others attached as suppressed.
+  /** Replaces dataset `datasetId`'s partition of every table in `tables`.
+    * A table in `staged` gets its staged files, which all lie in one
+    * staged partition directory; every other table loses its partition.
+    * Publishes of one (root, dataset id) run one at a time in the JVM. If
+    * the publish fails, it deletes the dataset's partition of every table
+    * in `tables` before it rethrows: the dataset is left empty, never
+    * partly replaced.
     */
-  def commit(loadId: String, parts: Seq[StagedPartition]): Unit =
-    Warehouse.eachOnItsOwn(parts)(publish(loadId, _))
+  def publish(datasetId: String, tables: Seq[String], staged: Map[String, Seq[String]]): Unit = {
+    require(staged.keySet.subsetOf(tables.toSet), s"staged tables ${staged.keySet} not all in $tables")
+    val live = tables.map(t => t -> new Path(partitionPath(t, datasetId)))
+    Warehouse.lockOf(lockKey, datasetId).synchronized {
+      try live.foreach { case (t, p) =>
+        fs.delete(p, true)
+        staged.get(t).foreach(moveIn(_, p))
+      } catch {
+        case e: Throwable =>
+          live.foreach { case (_, p) =>
+            try fs.delete(p, true) catch { case NonFatal(d) => e.addSuppressed(d) }
+          }
+          throw e
+      }
+    }
+  }
 
-  /** Only the files successful tasks returned are published: anything
-    * else in the staged partition (a failed attempt's leftover, a stray)
-    * is deleted first. The live partition is deleted, then the staged
-    * one renamed into its place. The rename never targets an existing
-    * path: Hadoop would move the staged directory INTO it.
+  /** Renames the staged partition directory holding `files` to `live`,
+    * which does not exist. Only the files successful tasks returned are
+    * published: anything else in the staged partition (a failed attempt's
+    * leftover, a stray) is deleted first. The rename never targets an
+    * existing path: Hadoop would move the staged directory INTO it.
     */
-  private def publish(loadId: String, p: StagedPartition): Unit = {
-    val staged = new Path(stagedPartitionPath(loadId, p.table, p.datasetId))
-    val live = new Path(partitionPath(p.table, p.datasetId))
-    val fs = staged.getFileSystem(hconf)
-    val keep = p.files.map(new Path(_).getName).toSet
+  private def moveIn(files: Seq[String], live: Path): Unit = {
+    val staged = new Path(files.head).getParent
+    val keep = files.map(new Path(_).getName).toSet
     val found = fs.listStatus(staged).map(_.getPath)
     found.filterNot(f => keep(f.getName)).foreach(fs.delete(_, true))
     val missing = keep -- found.map(_.getName)
     if (missing.nonEmpty)
       throw new IOException(s"staged files missing from $staged: ${missing.mkString(", ")}")
-    fs.delete(live, true)
-    Warehouse.mkdirs(fs, live.getParent)
+    fs.mkdirs(live.getParent)
     if (fs.exists(live) || !fs.rename(staged, live))
       throw new IOException(s"cannot publish $staged as $live")
   }
 
-  /** Deletes what is left of load `loadId`'s staging directory, and the
-    * staging root once no load uses it.
-    */
-  def discard(loadId: String): Unit = {
-    val dir = new Path(stagingPath(loadId))
-    val fs = dir.getFileSystem(hconf)
-    fs.delete(dir, true)
-    Warehouse.removeIfEmpty(fs, dir.getParent)
-  }
+  /** Deletes what is left of load `loadId`'s staging directory. */
+  def discard(loadId: String): Unit = fs.delete(new Path(stagingPath(loadId)), true)
 
   /** Append-only response log (K10): each call writes one uniquely named
     * file under a hidden name, then renames it into place, so readers
@@ -244,7 +257,7 @@ final class Warehouse(spark: SparkSession, val root: String) {
     writer("response").write(s"$dir/.${UUID.randomUUID()}", rows).foreach { hidden =>
       val from = new Path(hidden)
       val to = new Path(dir, "part-" + from.getName.drop(1))
-      if (!from.getFileSystem(hconf).rename(from, to))
+      if (!fs.rename(from, to))
         throw new IOException(s"cannot publish $from as $to")
     }
   }
@@ -368,35 +381,18 @@ final class Warehouse(spark: SparkSession, val root: String) {
     else spark.read.schema(schema).parquet(tablePath(name))
   }
 
-  def tableExists(name: String): Boolean = {
-    val p = new Path(tablePath(name))
-    p.getFileSystem(hconf).exists(p)
-  }
+  def tableExists(name: String): Boolean = fs.exists(new Path(tablePath(name)))
 
   /** Path of one dataset's partition within a table. */
   def partitionPath(table: String, datasetId: String): String =
     Warehouse.partitionDir(root, table, datasetId)
 
-  def partitionExists(table: String, datasetId: String): Boolean = {
-    val p = new Path(partitionPath(table, datasetId))
-    p.getFileSystem(hconf).exists(p)
-  }
-
-  /** Explicit cross-table pre-clean (A1). A commit already replaces the
-    * partitions a load writes; this additionally removes a dataset's
-    * rows from layer tables the re-load does NOT touch (e.g. a reload
-    * that dropped a layer) — full parity with
-    * `delete_dataset_records_by_id`.
+  /** Deletes a dataset's rows from every dataset table: a [[publish]]
+    * with nothing staged. A load publishes into every table already; this
+    * is the reference's `delete_dataset_records_by_id` on its own (A1).
     */
-  def deleteDatasetRecords(datasetId: String): Unit = {
-    val tables = Layer.all.map(_.table).distinct ++
-      Seq("extension_file", "dataset", "stats")
-    tables.foreach { t =>
-      val dir = new Path(partitionPath(t, datasetId))
-      val fs = dir.getFileSystem(hconf)
-      if (fs.exists(dir)) fs.delete(dir, true)
-    }
-  }
+  def deleteDatasetRecords(datasetId: String): Unit =
+    publish(datasetId, Warehouse.DatasetTables, Map.empty)
 
   /** Persist a relation as a BUCKETED, bucket-sorted managed table:
     * every future equi-join or aggregation on `keys` against another
@@ -439,10 +435,21 @@ final class ForeignKeyDbException(msg: String, cause: Throwable)
 
 object Warehouse {
 
-  /** Directory under the root that holds each load's staged files. */
-  val Staging = "_staging"
-
   val PartitionColumn = "tdei_dataset_id"
+
+  /** The tables that hold a partition per dataset: every table but the
+    * response log.
+    */
+  val DatasetTables: Seq[String] =
+    Layer.all.map(_.table).distinct ++ Seq("extension_file", "dataset", "stats")
+
+  /** A fixed set of lock stripes: publishes of one (root, dataset id)
+    * take the same one.
+    */
+  private val locks = Array.fill(64)(new Object)
+
+  private def lockOf(root: String, datasetId: String): AnyRef =
+    locks(Math.floorMod((root, datasetId).##, locks.length))
 
   /** `<base>/content_<table>/tdei_dataset_id=<id>`, the id escaped as
     * Spark escapes partition values (an empty id is the default
@@ -456,41 +463,6 @@ object Warehouse {
     */
   def dataSchema(table: String): StructType =
     StructType(schemas(table).filter(_.name != PartitionColumn).map(_.copy(nullable = true)))
-
-  /** Runs `f` on every element, each on its own; then rethrows the first
-    * failure with the others attached as suppressed.
-    */
-  private[graft] def eachOnItsOwn[T](xs: Seq[T])(f: T => Unit): Unit = {
-    val failures = xs.flatMap { x =>
-      try { f(x); None }
-      catch { case NonFatal(e) => Some(e) }
-    }
-    failures.headOption.foreach { first =>
-      failures.tail.foreach(first.addSuppressed)
-      throw first
-    }
-  }
-
-  /** Creates `dir` and its parents. A concurrent load may remove an
-    * empty staging root between creating a parent and its child, or
-    * before setting a new directory's permission: try again.
-    */
-  private[sinks] def mkdirs(fs: FileSystem, dir: Path): Unit = {
-    def once(): Boolean = try fs.mkdirs(dir) catch { case _: FileNotFoundException => false }
-    if (!(0 until 3).exists(_ => once())) throw new IOException(s"cannot create $dir")
-  }
-
-  /** Removes `dir` if it is an empty directory, atomically: a concurrent
-    * load that has just created a child in it keeps it. A local directory
-    * is removed through java.nio, one `rmdir`: Hadoop's non-recursive
-    * local delete lists the directory and, finding it empty, deletes it
-    * recursively, children created in the meantime included.
-    */
-  private def removeIfEmpty(fs: FileSystem, dir: Path): Unit =
-    try fs match {
-      case local: LocalFileSystem => NioFiles.deleteIfExists(local.pathToFile(dir).toPath)
-      case other => other.delete(dir, false)
-    } catch { case _: IOException => () } // not empty
 
   /** Map constraint-violation SQLStates to typed errors. The original
     * SQLException may sit anywhere in a SparkException cause chain or a

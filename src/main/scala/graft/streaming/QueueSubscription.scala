@@ -22,11 +22,12 @@ import graft.service.ExtractLoadEngine
   *
   * Delivery semantics: the file source + checkpoint give at-least-once —
   * a batch that dies mid-flight is replayed on restart, and a replayed
-  * load is idempotent because a load writes only staged files, and
-  * `Warehouse.commit` replaces each (table, dataset id) partition with
-  * them whole (see Warehouse). Handler errors never kill the
+  * load is idempotent because a load writes only staged files, and one
+  * `Warehouse.publish` replaces the dataset's partition of every dataset
+  * table with them (see Warehouse). Handler errors never kill the
   * stream: `processRequest` converts them to `success:false` response
-  * rows (`queue-service.ts:54-61` likewise catches and logs).
+  * rows (`queue-service.ts:54-61` likewise catches and logs), and every
+  * row of a batch reaches it, a row without a `messageId` included.
   *
   * Scale note: the micro-batch `collect()` pulls only job envelopes
   * (four short strings each — thousands of queued jobs are kilobytes);
@@ -67,8 +68,9 @@ final class QueueSubscription(
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[QueueMessage], _: Long) =>
         batchLock.lockInterruptibly()
-        // Envelope-only collect; deterministic order within the batch.
-        try processAll(batch.collect().toSeq.sortBy(_.messageId))
+        // Envelope-only collect; deterministic order within the batch,
+        // rows without a messageId first.
+        try processAll(batch.collect().toSeq.sortBy(m => Option(m.messageId)))
         finally batchLock.unlock()
       }
       .start()

@@ -245,15 +245,15 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val engine = mkEngine()
     assert(engine.processRequest(request(onDisk(canonicalZip))).success)
     val t = engine.lastStageTimings
-    assert(Seq("pre_clean", "parse_count", "write_features", "metadata", "stats",
+    assert(Seq("parse_count", "write_features", "metadata", "stats",
       "process_files").forall(t.contains), t)
     assert(t("write_features") <= t("process_files"), t)
     assert(t("metadata") <= t("process_files") && t("stats") <= t("process_files"), t)
   }
 
   test("a failed write: translated failure, every other write returned, nothing leaked") {
-    // content_zone as a plain file: the zone write cannot create its
-    // table directory, while the other writes of the load run beside it
+    // content_zone as a plain file: the publish cannot create the zone
+    // partition, after it has already replaced the node partition
     val root = Fixtures.scratchDir("graft-wh")
     Files.writeString(root.resolve("content_zone"), "not a table")
     val engine = new ExtractLoadEngine(spark, root.toString)
@@ -263,9 +263,8 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       resp.message.contains("content_zone"), resp.message)
     val published = engine.warehouse.table("response").collect()
     assert(published.length == 1 && !published(0).getAs[Boolean]("success"))
-    // the other writes were not cancelled: each ran to its end and
-    // committed, so no table holds a staging directory
-    assert(engine.warehouse.table("node").count() == 3)
+    // the publish failed at zone: the dataset is left empty, not partial
+    assert(datasetRows(engine, "ds1").isEmpty, datasetRows(engine, "ds1"))
     val staging = Files.walk(root).iterator().asScala
       .filter(_.getFileName.toString.startsWith(".spark-staging-")).toList
     assert(staging.isEmpty, staging)
@@ -324,7 +323,49 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Anything of the staging area left under a warehouse root. */
   private def stagingLeft(root: String) =
     Files.walk(java.nio.file.Path.of(root)).iterator().asScala
-      .filter(_.getFileName.toString == graft.sinks.Warehouse.Staging).toList
+      .filter(_.getFileName.toString.startsWith("_staging")).toList
+
+  /** Row counts of dataset `id` in the dataset tables that hold any; a
+    * table that is a plain file holds none.
+    */
+  private def datasetRows(engine: ExtractLoadEngine, id: String): Map[String, Long] = {
+    import org.apache.spark.sql.functions.col
+    graft.sinks.Warehouse.DatasetTables
+      .filterNot(t => Files.isRegularFile(java.nio.file.Path.of(engine.warehouse.tablePath(t))))
+      .map(t => t -> engine.warehouse.table(t).filter(col("tdei_dataset_id") === id).count())
+      .filter(_._2 > 0).toMap
+  }
+
+  test("a failed load leaves its dataset empty in every dataset table, whatever failed") {
+    val noZones = Fixtures.zipBytes(
+      "nodes.geojson" -> fc(Seq(point(1, 2, Some(3), "n1"))),
+      "edges.geojson" -> fc(Seq(
+        """{"type":"Feature","geometry":{"type":"LineString","coordinates":[[0,0],[1,1]]},"properties":{"_id":"e1"}}""")),
+      "curbs.geojson" -> fc(Seq(point(1, 2, None, "c1"))))
+    val badCrc = {
+      val stored = graft.operators.Zip.buildZip(Seq(("nodes.geojson",
+        fc(Seq(point(1, 2, None, "n1"), point(3, 4, None, "n2"))).mkString.getBytes("UTF-8"), false)))
+      stored(new String(stored, "ISO-8859-1").indexOf("\"n2\"") + 1) = 'm'
+      stored
+    }
+    val cases = Seq(
+      ("a parse failure", badCrc, "Error loading the data : "),
+      ("no .geojson", Fixtures.zipBytes("readme.txt" -> Iterator("x")),
+        "Error loading the data : No valid .geojson files found in dataset archive."),
+      ("a publish failing midway", canonicalZip, "Error loading the data : "))
+    cases.foreach { case (what, bytes, text) =>
+      val engine = mkEngine()
+      assert(engine.processRequest(request(onDisk(noZones))).success, what)
+      assert(datasetRows(engine, "ds1").keySet == Set("node", "edge", "extension", "extension_file",
+        "dataset", "stats"), what)
+      if (what == "a publish failing midway")
+        Files.writeString(java.nio.file.Path.of(engine.warehouse.tablePath("zone")), "not a table")
+      val resp = engine.processRequest(request(onDisk(bytes)))
+      assert(!resp.success && resp.status == 500 && resp.message.startsWith(text), (what, resp))
+      assert(datasetRows(engine, "ds1").isEmpty, (what, datasetRows(engine, "ds1")))
+      assert(stagingLeft(engine.warehouse.root).isEmpty, what)
+    }
+  }
 
   test("unreadable archives: the reference's no-geojson response") {
     // the first local header overwritten, as in a corrupt upload
@@ -443,8 +484,7 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "nodes.geojson" -> fc((0 until 3000).map(i => point(i * 1e-3, 47.0, Some(1.0), s"n$i"))),
       "curbs.geojson" -> fc(Seq(point(1.0, 2.0, None, "c1"))))
     val paths = Seq("c1", "c2").map(id => id -> onDisk(busy))
-    val stages = Seq("pre_clean", "parse_count", "write_features", "metadata", "stats",
-      "process_files")
+    val stages = Seq("parse_count", "write_features", "metadata", "stats", "process_files")
     def timedLoad(id: String, path: String): Double = {
       val t0 = System.nanoTime()
       assert(engine.processRequest(request(path, id)).success)

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -37,14 +39,16 @@ class QueueSubscriptionSpec extends AnyFunSuite with BeforeAndAfterAll {
     * temp name, then move — the file source must never see half a file).
     */
   private def dropRequest(dir: Path, id: String, dataType: String,
-      zipPath: String): Unit = {
-    val json =
+      zipPath: String, datasetId: Option[String] = None): Unit =
+    dropJson(dir, id,
       s"""{"messageId":"$id","messageType":"workflow",
          |"data":{"data_type":"$dataType","file_upload_path":"$zipPath",
-         |"tdei_dataset_id":"$id","user_id":"u1"}}""".stripMargin.replace("\n", "")
+         |"tdei_dataset_id":"${datasetId.getOrElse(id)}","user_id":"u1"}}""".stripMargin.replace("\n", ""))
+
+  private def dropJson(dir: Path, name: String, json: String): Unit = {
     val tmp = Files.createTempFile(Fixtures.root, "req", ".json")
     Files.writeString(tmp, json)
-    Files.move(tmp, dir.resolve(s"$id.json"))
+    Files.move(tmp, dir.resolve(s"$name.json"))
   }
 
   private def runAvailable(sub: QueueSubscription): Unit = {
@@ -116,6 +120,70 @@ class QueueSubscriptionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val resp = engine.warehouse.table("response").collect()
     assert(resp.length == 1 && resp(0).getAs[Boolean]("success"),
       "in-flight batch's response row missing after drain")
+  }
+
+  test("a request without messageId neither stops the stream nor keeps the others from their response") {
+    val reqDir = Fixtures.scratchDir("graft-req-noid")
+    val wh = Fixtures.scratchDir("graft-wh-noid").toString
+    val engine = new ExtractLoadEngine(spark, wh)
+    val sub = new QueueSubscription(spark, engine, reqDir.toString,
+      Fixtures.scratchDir("graft-ck-noid").toString)
+    val zip = writeZip()
+    dropRequest(reqDir, "ds_ok", "osw", zip)
+    dropJson(reqDir, "no_id", s"""{"messageType":"workflow","data":{"data_type":"osw",""" +
+      s""""file_upload_path":"$zip","tdei_dataset_id":"ds_noid","user_id":"u1"}}""")
+    val q = sub.start(Trigger.AvailableNow())
+    q.awaitTermination()
+    assert(q.exception.isEmpty, q.exception)
+    val resp = engine.warehouse.table("response").collect()
+      .map(r => Option(r.getAs[String]("messageId")) -> r.getAs[Boolean]("success")).toSet
+    assert(resp == Set(Some("ds_ok") -> true, None -> true), resp)
+  }
+
+  test("overlapping loads of one dataset id leave exactly one archive's rows in every table") {
+    import org.apache.spark.sql.functions.col
+    val n = 10000
+    def point(id: String, i: Int) =
+      s"""{"type":"Feature","geometry":{"type":"Point","coordinates":[${i * 1e-4},47.0,1.0]},"properties":{"_id":"$id$i"}}"""
+    def line(i: Int) =
+      s"""{"type":"Feature","geometry":{"type":"LineString","coordinates":[[0,$i],[1,$i]]},"properties":{"_id":"e$i"}}"""
+    def polygon(i: Int) =
+      s"""{"type":"Feature","geometry":{"type":"Polygon","coordinates":[[[0,$i],[1,$i],[1,0],[0,$i]]]},"properties":{"_id":"z$i"}}"""
+    val dir = Fixtures.scratchDir("graft-overlap")
+    // archive a: nodes + edges; archive b: nodes + zones
+    val archives = Map(
+      "a" -> Fixtures.writeZip(dir.resolve("a.zip"),
+        "nodes.geojson" -> Fixtures.featureCollection(""""name":"a"""", (0 until n).iterator.map(point("a", _))),
+        "edges.geojson" -> Fixtures.featureCollection("", (0 until n).iterator.map(line))),
+      "b" -> Fixtures.writeZip(dir.resolve("b.zip"),
+        "nodes.geojson" -> Fixtures.featureCollection(""""name":"b"""", (0 until n).iterator.map(point("b", _))),
+        "zones.geojson" -> Fixtures.featureCollection("", (0 until n).iterator.map(polygon))))
+    val root = Fixtures.scratchDir("graft-wh-overlap")
+    val engine = new ExtractLoadEngine(spark, root.toString)
+    def rows(t: String) = engine.warehouse.table(t).filter(col("tdei_dataset_id") === "same")
+    (0 until 2).foreach { round =>
+      val reqDir = Fixtures.scratchDir("graft-req-overlap")
+      val sub = new QueueSubscription(spark, engine, reqDir.toString,
+        Fixtures.scratchDir("graft-ck-overlap").toString, maxConcurrentMessages = 2)
+      archives.foreach { case (a, zip) => dropRequest(reqDir, s"$a$round", "osw", zip.toString, Some("same")) }
+      runAvailable(sub)
+      val resp = engine.warehouse.table("response").filter(col("messageId").endsWith(s"$round")).collect()
+        .map(r => r.getAs[String]("messageId") -> r.getAs[String]("message")).toMap
+      assert(resp == Map(s"a$round" -> "Data loaded successfully", s"b$round" -> "Data loaded successfully"), resp)
+
+      val datasets = rows("dataset").collect()
+      assert(datasets.length == 1, datasets.toSeq)
+      val winner = if (datasets(0).getAs[String]("node_info") == """{"name":"a"}""") "a" else "b"
+      val nodeIds = rows("node").collect().map(_.getAs[String]("feature").split("\"_id\":\"")(1).take(1))
+      assert(nodeIds.length == n && nodeIds.forall(_ == winner), (round, winner, nodeIds.distinct.toSeq))
+      val (edges, zones) = if (winner == "a") (n, 0) else (0, n)
+      assert(rows("edge").count() == edges && rows("zone").count() == zones, (round, winner))
+      val statsTables = rows("stats").collect().map(_.getAs[String]("layer_table")).toSet
+      assert(statsTables == (if (winner == "a") Set("node", "edge") else Set("node", "zone")), statsTables)
+      val staging = Files.list(root).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("_staging")).toList
+      assert(staging.isEmpty, staging)
+    }
   }
 
   test("concurrency is bounded by maxConcurrentMessages") {

@@ -17,11 +17,11 @@ import org.scalatest.BeforeAndAfterAll
 
 import graft.model.{ExtractLoadRequest, LoadResponse, QueueMessage}
 import graft.service.ExtractLoadEngine
-import graft.sinks.{StagedPartition, Warehouse}
+import graft.sinks.Warehouse
 
-/** The parquet side of the warehouse: staged files, the commit that
-  * publishes them, the lock-free response append, and the schema the
-  * written files carry.
+/** The parquet side of the warehouse: staged files, the publish that
+  * replaces a dataset with them, the lock-free response append, and the
+  * schema the written files carry.
   */
 class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -50,29 +50,34 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     if (!Files.exists(Path.of(dir))) Nil
     else Files.walk(Path.of(dir)).iterator().asScala.filter(Files.isRegularFile(_)).toList
 
+  /** Entries of the staging area left under the warehouse root. */
+  private def stagingLeft(wh: Warehouse): List[String] =
+    Files.list(Path.of(wh.root)).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("_staging")).toList
+
   test("commit publishes only the files the tasks returned, never a stray one") {
     val wh = freshWarehouse()
     val load = "load-1"
-    val staged = wh.stageRows(load, "node", "ds", Seq(row("a"), row("b"))).get
+    val staged = wh.stageRows(load, "node", "ds", Seq(row("a"), row("b"))).toMap
     // a leftover of a failed attempt and a stray copy, in the same staged partition
-    val src = Path.of(staged.files.head)
+    val src = Path.of(staged("node").head)
     Files.copy(src, src.resolveSibling("part-00000-1.snappy.parquet"))
     Files.copy(src, src.resolveSibling("stray.parquet"))
-    wh.commit(load, Seq(staged))
+    wh.publish("ds", Seq("node"), staged)
     wh.discard(load)
     assert(wh.table("node").count() == 2)
     val published = filesUnder(wh.partitionPath("node", "ds"))
       .map(_.getFileName.toString).filterNot(_.endsWith(".crc"))
     assert(published == Seq(src.getFileName.toString), published)
-    assert(!Files.exists(Path.of(wh.root, Warehouse.Staging)))
+    assert(stagingLeft(wh).isEmpty, stagingLeft(wh))
 
-    // a returned file that vanished fails the commit and keeps the live partition
-    val again = wh.stageRows("load-2", "node", "ds", Seq(row("c"))).get
-    val lost = StagedPartition("node", "ds", again.files :+ s"${again.files.head}.missing")
-    val e = intercept[java.io.IOException](wh.commit("load-2", Seq(lost)))
+    // a returned file that vanished fails the publish, which leaves the dataset empty
+    val again = wh.stageRows("load-2", "node", "ds", Seq(row("c"))).get._2
+    val lost = Map("node" -> (again :+ s"${again.head}.missing"))
+    val e = intercept[java.io.IOException](wh.publish("ds", Seq("node"), lost))
     assert(e.getMessage.contains("missing"), e.getMessage)
     wh.discard("load-2")
-    assert(features(wh, "node", "ds") == Set("a", "b"))
+    assert(features(wh, "node", "ds").isEmpty)
   }
 
   test("a failed task attempt's file is not published; the retried attempt's is") {
@@ -90,31 +95,61 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
       f.close()
     }
     assert(filesUnder(dir).count(_.toString.endsWith(".parquet")) == 3)
-    wh.commit(load, Seq(StagedPartition("node", "ds", files.toSeq)))
+    wh.publish("ds", Seq("node"), Map("node" -> files.toSeq))
     wh.discard(load)
     assert(features(wh, "node", "ds") == Set("f1-0", "f2-1"))
   }
 
-  test("each partition commits on its own; the first failure carries the others") {
+  test("a publish that fails midway leaves the dataset empty in every table") {
     val wh = freshWarehouse()
-    // two tables whose directory is a plain file cannot take a partition
-    Seq("zone", "edge").foreach(t => Files.writeString(Path.of(wh.tablePath(t)), "not a table"))
-    val load = "partial"
-    val parts = Seq("zone", "node", "edge").map(t => wh.stageRows(load, t, "ds", Seq(row(t))).get)
-    val e = intercept[Exception](wh.commit(load, parts))
-    wh.discard(load)
+    val tables = Seq("node", "zone", "edge", "stats")
+    def stage(load: String, ts: Seq[String]) =
+      ts.flatMap(t => wh.stageRows(load, t, "ds", Seq(row(t)))).toMap
+    wh.publish("ds", tables, stage("old", Seq("node", "edge")))
+    wh.discard("old")
+    // another dataset's partition is left alone
+    wh.publish("ds2", Seq("node"), stage("other", Seq("node")))
+    wh.discard("other")
+    // a table whose directory is a plain file cannot take a partition
+    Files.writeString(Path.of(wh.tablePath("zone")), "not a table")
+    val e = intercept[Exception](wh.publish("ds", tables, stage("new", Seq("node", "zone", "edge"))))
+    wh.discard("new")
     assert(e.getMessage.contains("content_zone"), e.getMessage)
-    assert(e.getSuppressed.length == 1 && e.getSuppressed.head.getMessage.contains("content_edge"),
-      e.getSuppressed.toSeq)
-    assert(features(wh, "node", "ds") == Set("node"))
-    assert(!Files.exists(Path.of(wh.root, Warehouse.Staging)))
+    // node was replaced before zone failed, edge not yet: both are emptied
+    Seq("node", "edge").foreach(t => assert(features(wh, t, "ds").isEmpty, t))
+    assert(features(wh, "node", "ds2") == Set("node"))
+    assert(stagingLeft(wh).isEmpty, stagingLeft(wh))
+  }
+
+  test("concurrent publishes of one dataset never mix: each replaces every table whole") {
+    val wh = freshWarehouse()
+    val tables = Seq("node", "edge", "zone")
+    val layouts = Seq(Seq("node", "edge"), Seq("node", "zone"))
+    (0 until 20).foreach { round =>
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val threads = layouts.zipWithIndex.map { case (ts, i) =>
+        val t = new Thread(() => {
+          val load = s"r$round-$i"
+          val staged = ts.flatMap(t => wh.stageRows(load, t, "ds", Seq(row(s"$i")))).toMap
+          start.await()
+          try wh.publish("ds", tables, staged) finally wh.discard(load)
+        })
+        t.start(); t
+      }
+      threads.foreach(_.join())
+      val held = tables.map(t => t -> features(wh, t, "ds")).filter(_._2.nonEmpty)
+      val winner = held.flatMap(_._2).distinct
+      assert(winner.size == 1, (round, held))
+      assert(held.map(_._1) == layouts(winner.head.toInt), (round, held))
+    }
+    assert(stagingLeft(wh).isEmpty, stagingLeft(wh))
   }
 
   test("a commit replaces the live partition and never nests the staged one in it") {
     val wh = freshWarehouse()
     (1 to 3).foreach { i =>
       val load = s"load-$i"
-      wh.commit(load, wh.stageRows(load, "node", "ds", (1 to i).map(j => row(s"$i-$j"))).toSeq)
+      wh.publish("ds", Seq("node"), wh.stageRows(load, "node", "ds", (1 to i).map(j => row(s"$i-$j"))).toMap)
       wh.discard(load)
       assert(features(wh, "node", "ds") == (1 to i).map(j => s"$i-$j").toSet)
       val nested = Files.walk(Path.of(wh.partitionPath("node", "ds"))).iterator().asScala
@@ -122,7 +157,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(nested.size == 1, nested)
     }
     // another dataset's partition is left alone
-    wh.commit("other", wh.stageRows("other", "node", "ds2", Seq(row("x"))).toSeq)
+    wh.publish("ds2", Seq("node"), wh.stageRows("other", "node", "ds2", Seq(row("x"))).toMap)
     wh.discard("other")
     assert(features(wh, "node", "ds") == Set("3-1", "3-2", "3-3"))
   }
@@ -146,7 +181,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     // past the late write: had the job returned before its last task
     // ended, that write would have recreated the staging directory
     Thread.sleep(1500)
-    assert(!Files.exists(Path.of(wh.root, Warehouse.Staging)), filesUnder(wh.root))
+    assert(stagingLeft(wh).isEmpty, filesUnder(wh.root))
   }
 
   test("writeFeatures and upsertByDataset replace exactly the partitions of their rows") {
@@ -162,7 +197,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     wh.upsertByDataset("extension_file",
       Seq((1, "curbs", "{}", "u", "A")).toDF("id", "name", "file_meta", "requested_by", "tdei_dataset_id"))
     assert(wh.table("extension_file").collect().map(_.getAs[String]("name")).toSeq == Seq("curbs"))
-    assert(!Files.exists(Path.of(wh.root, Warehouse.Staging)))
+    assert(stagingLeft(wh).isEmpty, stagingLeft(wh))
   }
 
   test("response appends need no lock: 2 threads x 10 give 20 rows, never a partial file") {
