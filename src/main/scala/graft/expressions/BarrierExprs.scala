@@ -7,26 +7,29 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.DataType
 
 /** Optimizer barrier: an identity pass-through the optimizer must not
-  * look through.
+  * look through — the library's only one.
   *
-  * Guide §4.4 problem, expression form: when a filter (or an inferred
-  * join-key `isnotnull`) references a column computed by an expensive
-  * projected expression, predicate pushdown SUBSTITUTES the expression
-  * into the pushed condition — the kernel then runs twice per row,
-  * once below the filter and once in the projection (measured as two
-  * full `nearest_centroids_native` code arrays per corpus row in
+  * Guide §4.4 problem: when a filter (or an inferred join-key
+  * `isnotnull`) references a column computed by an expensive projected
+  * expression, predicate pushdown SUBSTITUTES the expression into the
+  * pushed condition — the kernel then runs twice per row, once below
+  * the filter and once in the projection (measured as two full
+  * `nearest_centroids_native` code arrays per corpus row in
   * q_pq/q_ivfpq, and a doubled doc×centroid distance matrix in
-  * `Similarity.assignCentroidsJoin`). UDFs take `asNondeterministic()`
-  * for this; a Catalyst Expression has no such toggle, so this wrapper
-  * is it: `deterministic = false` stops substitution, duplication and
-  * constant-folding, while eval/codegen ARE the child's verbatim —
-  * values and nullability are unchanged.
+  * `Similarity.assignCentroidsJoin`). Native kernels and Scala UDFs
+  * alike (the media decoders of `Video`, `Audio` and `Multimodal`) are
+  * projected through [[BarrierExprs.evalOnce]]; the UDFs themselves stay
+  * deterministic. `deterministic = false` stops substitution,
+  * duplication and constant-folding, while eval/codegen ARE the child's
+  * verbatim — values and nullability are unchanged.
   *
-  * The trade-off (same as the UDF flag): other predicates no longer
-  * push past the wrapped projection and the column cannot appear in
-  * positions Catalyst forbids for nondeterministic expressions (join
-  * conditions, grouping keys). Wrap only expensive kernels whose
-  * consumers filter/join on the OUTPUT attribute.
+  * The trade-off: no predicate pushes below the wrapped projection, not
+  * even one on an unrelated column (a filter on `id` above a projection
+  * of `eval_once(decode(content))` stays above it), and the column
+  * cannot appear in positions Catalyst forbids for nondeterministic
+  * expressions (join conditions, grouping keys). Wrap only expensive
+  * kernels whose consumers filter/join on the OUTPUT attribute; a
+  * caller of a wrapped operator filters other columns before the call.
   */
 case class EvalOnceExpr(child: Expression) extends UnaryExpression {
   override def prettyName: String = "eval_once"

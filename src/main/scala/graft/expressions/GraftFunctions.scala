@@ -3,11 +3,14 @@ package graft.expressions
 import org.apache.spark.sql.{Column, GraftColumns, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ShiftLeft, ShiftRight}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 
 import graft.functions.GeoFunctions
 
-/** The library's native Catalyst expressions: one name -> builder
-  * table, and the only code that binds it.
+/** The library's SQL-callable functions: one name -> builder table, and
+  * the only code that binds it. Most rows build a native Catalyst
+  * expression; the geometry rows (`strip_z`, `process_geometry`,
+  * `first_elevation`) build the Scala UDFs of [[GeoFunctions]].
   *
   * Column helpers go through [[apply]]: the builder runs on the args'
   * expressions and the Column carries the result, so it resolves on the
@@ -21,7 +24,10 @@ object GraftFunctions {
     ProcessGeometryExpr.builders ++ TextHashExprs.builders ++
       TextQualityExprs.builders ++ ImageExprs.builders ++
       BytesExprs.builders ++ VectorHashExprs.builders ++
-      AudioExprs.builders ++ BarrierExprs.builders ++ BloomExprs.builders
+      AudioExprs.builders ++ BarrierExprs.builders ++ BloomExprs.builders ++
+      Seq(udfRow("strip_z", GeoFunctions.stripZUdf),
+        udfRow("process_geometry", GeoFunctions.processGeometryUdf),
+        udfRow("first_elevation", GeoFunctions.firstElevationUdf))
 
   private val byName = builders.toMap
 
@@ -44,19 +50,17 @@ object GraftFunctions {
   def shiftRight(v: Column, bits: Column): Column = GraftColumns.column(
     ShiftRight(GraftColumns.expression(v), GraftColumns.expression(bits)))
 
-  /** Make every name (and the geometry UDFs) SQL-callable on `spark`;
-    * idempotent.
-    */
+  /** A table row whose builder applies `udf`, named `name` in plans. */
+  private def udfRow(name: String, udf: UserDefinedFunction) = name -> ((es: Seq[Expression]) =>
+    GraftColumns.expression(udf.withName(name)(es.map(GraftColumns.column): _*)))
+
+  /** Make every name SQL-callable on `spark`; idempotent. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, builder) =>
       if (!reg.functionExists(FunctionIdentifier(name)))
         reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
-    Seq("strip_z" -> GeoFunctions.stripZUdf,
-      "process_geometry" -> GeoFunctions.processGeometryUdf,
-      "first_elevation" -> GeoFunctions.firstElevationUdf)
-      .foreach { case (name, udf) => spark.udf.register(name, udf) }
   }
 
   def injectInto(ext: SparkSessionExtensions): Unit =

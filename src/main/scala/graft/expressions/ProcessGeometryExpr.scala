@@ -17,10 +17,11 @@ import graft.functions.GeoFunctions
   * stays inside one WholeStageCodegen span instead of breaking it the
   * way a `ScalaUDF` node does.
   *
-  * Semantics are identical to `GeoFunctions.process_geometry` (the UDF
-  * form is kept for `spark.udf.register`-style SQL use); null inputs →
-  * null via BinaryExpression's default null handling, matching UDF
-  * behavior.
+  * Values are those of the `process_geometry` UDF, its parity
+  * reference, for every non-null input. Nulls differ: a null feature
+  * gives null in both, but a null layer gives null here
+  * (BinaryExpression's default null handling) while the UDF treats it
+  * as a non-node layer and strips Z.
   */
 case class ProcessGeometryExpr(left: Expression, right: Expression)
     extends BinaryExpression {

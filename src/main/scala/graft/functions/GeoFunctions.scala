@@ -5,6 +5,8 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
+import graft.expressions.GraftFunctions
+
 /** Geometry transforms of the extract-load pipeline.
   *
   * GeoJSON `coordinates` nest 1–4 levels deep depending on the geometry
@@ -303,14 +305,14 @@ object GeoFunctions extends Serializable {
       if (a.isEmpty || (b.isDefined && beats(b.get, a.get))) b else a
   }
 
-  // ---- Column API -------------------------------------------------------
+  // ---- Column API (the UDFs are rows of GraftFunctions' table) ---------
 
   val stripZUdf = udf((c: String) => stripZJson(c))
   val processGeometryUdf = udf((f: String, l: String) => processGeometry(f, l))
   val firstElevationUdf = udf((c: String) => firstElevation(c))
 
-  def strip_z(c: Column): Column = stripZUdf(c)
+  def strip_z(c: Column): Column = GraftFunctions("strip_z", c)
   def process_geometry(feature: Column, layer: Column): Column =
-    processGeometryUdf(feature, layer)
-  def first_elevation(coords: Column): Column = firstElevationUdf(coords)
+    GraftFunctions("process_geometry", feature, layer)
+  def first_elevation(coords: Column): Column = GraftFunctions("first_elevation", coords)
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.BarrierExprs.evalOnce
+
 /** Audio payloads as opaque `binary` columns: RIFF/WAV header parse,
   * 16-bit PCM decode (mono mixdown), windowed integer energy/stats, and
   * a 64-bit energy-gradient fingerprint that feeds the SAME audited
@@ -1154,6 +1156,9 @@ object Audio {
     * zero-padded — [[graft.expressions.AudioEnergiesExpr]], itself
     * pinned to the [[windowEnergies]] HOF reference) — parity is
     * spec-pinned by the maxDistance=0 streaming admission tests.
+    * Callers filter on the energies, so they project them through
+    * `evalOnce`: pushdown would otherwise substitute the UDF into the
+    * filter and decode every clip twice per row (guide §4.4).
     */
   private def energiesUdf(window: Int, maxFrames: Int,
       canonicalRate: Int = 0) =
@@ -1181,11 +1186,7 @@ object Audio {
         }
         }
       }
-    }.asNondeterministic()
-    // asNondeterministic: value-deterministic, but callers filter
-    // isNotNull on the projected energies — predicate pushdown would
-    // substitute the UDF into the filter and decode every clip twice
-    // per row (guide §4.4). Results unchanged.
+    }
 
   /** FLAC STREAMINFO metadata: `fLaC` magic, then metadata blocks
     * (1-byte last-flag + type, 24-bit BE length) — STREAMINFO (type
@@ -1951,7 +1952,7 @@ object Audio {
     // the streaming admission tests
     val withSig = segs
       .withColumn("__en",
-        energiesUdf(window, maxFrames, canonicalRate)(col("wav")))
+        evalOnce(energiesUdf(window, maxFrames, canonicalRate)(col("wav"))))
       .filter(col("__en").isNotNull)
       .select(col("id"), col("segIdx").as("seg_idx"),
         col("startFrame").as("start_frame"),
@@ -1989,7 +1990,7 @@ object Audio {
     val withSig = stream
       .withWatermark(tsCol, lateness)
       .withColumn("__en",
-        energiesUdf(window, maxFrames, canonicalRate)(col(binCol)))
+        evalOnce(energiesUdf(window, maxFrames, canonicalRate)(col(binCol))))
       .withColumn("__sh",
         when(col("__en").isNotNull, audioFingerprint64(col("__en"))))
     Dedup.hamming64StreamAdmit(withSig, streamCols,
@@ -2049,8 +2050,7 @@ object Audio {
             }
           }.toSeq
       }
-    }.asNondeterministic() // block isNotNull pushdown re-running the
-    // segment decode per row (guide §4.4); value-deterministic
+    }
 
   /** STREAMING needle hunt: match a live clip feed against a STATIC
     * jingle index ([[writeAudioNearDupIndex]]) — the streaming twin
@@ -2086,9 +2086,9 @@ object Audio {
     val streamCols = stream.columns.toSeq
     val exploded = stream
       .withWatermark(tsCol, lateness)
-      .withColumn("__segs",
+      .withColumn("__segs", evalOnce( // decode once (guide §4.4)
         segmentSigsUdf(segmentFrames, hop, window, maxFrames,
-          canonicalRate)(col(binCol)))
+          canonicalRate)(col(binCol))))
       .filter(col("__segs").isNotNull)
       .select(streamCols.map(col) :+
         explode(col("__segs")).as("__seg"): _*)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.expressions.GraftFunctions
+import graft.expressions.BarrierExprs.evalOnce
 
 /** Multimodal-column operators for training-data pipelines: image /
   * audio / video payloads carried as opaque `binary` columns with typed
@@ -125,13 +126,13 @@ object Multimodal {
     None
   }
 
-  // asNondeterministic: blocks the parsed/isNotNull filter pushdown
-  // that would substitute (and re-run) the parse per row (guide 4.4)
-  private val jpegDimsUdf =
-    udf((b: Array[Byte]) => jpegDims(b)).asNondeterministic()
+  private val jpegDimsUdf = udf((b: Array[Byte]) => jpegDims(b))
 
+  // evalOnce (here and at the other header parses below): a filter on
+  // the parsed result would otherwise substitute (and re-run) the parse
+  // per row (guide 4.4)
   def jpegDimensions(c: Column): Column =
-    jpegDimsUdf(c).cast("struct<width:bigint,height:bigint>")
+    evalOnce(jpegDimsUdf(c)).cast("struct<width:bigint,height:bigint>")
 
   // ---- WebP header walk (metadata only — the JVM has no VP8 codec) ----
 
@@ -199,10 +200,7 @@ object Multimodal {
     }
   }
 
-  // asNondeterministic: blocks the parsed/isNotNull filter pushdown
-  // that would substitute (and re-run) the parse per row (guide 4.4)
-  private val webpInfoUdf =
-    udf((b: Array[Byte]) => webpInfo(b)).asNondeterministic()
+  private val webpInfoUdf = udf((b: Array[Byte]) => webpInfo(b))
 
   // ---- TIFF header walk (metadata only) -------------------------------
 
@@ -255,10 +253,7 @@ object Multimodal {
     if (w <= 0 || h <= 0) None else Some((little, w, h, n))
   }
 
-  // asNondeterministic: blocks the parsed/isNotNull filter pushdown
-  // that would substitute (and re-run) the parse per row (guide 4.4)
-  private val tiffInfoUdf =
-    udf((b: Array[Byte]) => tiffInfo(b)).asNondeterministic()
+  private val tiffInfoUdf = udf((b: Array[Byte]) => tiffInfo(b))
 
   /** Metadata projection over a TIFF-bearing DataFrame: id + byte
     * order, dimensions, IFD entry count, `parsed`.
@@ -266,7 +261,7 @@ object Multimodal {
   def tiffMetaScan(df: DataFrame, idCol: String,
       binCol: String): DataFrame =
     df.select(col(idCol).cast("long").as("id"),
-      tiffInfoUdf(col(binCol)).as("__t"))
+      evalOnce(tiffInfoUdf(col(binCol))).as("__t"))
       .select(col("id"),
         coalesce(col("__t._1"), lit(false)).as("little_endian"),
         coalesce(col("__t._2"), lit(0L)).as("width"),
@@ -826,7 +821,7 @@ object Multimodal {
   def webpMetaScan(df: DataFrame, idCol: String,
       binCol: String): DataFrame =
     df.select(col(idCol).cast("long").as("id"),
-      webpInfoUdf(col(binCol)).as("__w"))
+      evalOnce(webpInfoUdf(col(binCol))).as("__w"))
       .select(col("id"),
         coalesce(col("__w._1"), lit("")).as("variant"),
         coalesce(col("__w._2"), lit(0L)).as("width"),
@@ -1647,7 +1642,7 @@ object Multimodal {
     val tiles = tileImages(images, idCol, binCol, tileW, tileH, hopX,
       hopY).toDF().filter(col("decoded"))
     val withSig = tiles
-      .withColumn("__g", lumaGridUdf(col("image")))
+      .withColumn("__g", evalOnce(lumaGridUdf(col("image"))))
       .filter(col("__g").isNotNull)
       .select(col("id"), col("tileX").as("tile_x"),
         col("tileY").as("tile_y"), h(col("__g")).as("__sh"))
@@ -1661,14 +1656,14 @@ object Multimodal {
     * of [[luminanceGrids]] (a streaming plan can't reshape through
     * the typed mapPartitions without dropping the stream's own
     * columns). Binary image decode is the justified-UDF case; one
-    * payload in memory at a time, null for undecodable.
+    * payload in memory at a time, null for undecodable. Callers
+    * project it through `evalOnce`: a filter on the grid would
+    * otherwise substitute (and re-run) the decode per row (guide §4.4).
     */
   private lazy val lumaGridUdf =
     udf { (bytes: Array[Byte]) =>
       readImage(bytes).map(bi => boxSampleLuma(bi, 9, 8))
-    }.asNondeterministic()
-    // asNondeterministic: blocks the isNotNull-filter pushdown that
-    // would substitute (and re-run) the decode per row (guide §4.4)
+    }
 
   /** Streaming image admission: admit a live image feed against a
     * STATIC [[writeImageNearDupIndex]] artifact — the streaming twin
@@ -1714,7 +1709,7 @@ object Multimodal {
     val streamCols = stream.columns.toSeq
     val withSig = stream
       .withWatermark(tsCol, lateness)
-      .withColumn("__grid", lumaGridUdf(col(binCol)))
+      .withColumn("__grid", evalOnce(lumaGridUdf(col(binCol))))
       .withColumn("__sh",
         when(col("__grid").isNotNull, h(col("__grid"))))
     Dedup.hamming64StreamAdmit(withSig, streamCols,

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.expressions.BarrierExprs.evalOnce
+
 /** Video payloads as opaque `binary` columns — the third modality of
   * the multimodal family, built to the exact contract of [[Audio]]
   * and [[Multimodal]]: a REAL RIFF/AVI container walk (header-only,
@@ -668,7 +670,7 @@ object Video {
   def videoSigsAuto(df: DataFrame, idCol: String, binCol: String,
       maxFrameBytes: Int = 1 << 24): DataFrame =
     df.select(col(idCol).cast("long").as("id"),
-      lumaSumsUdf(maxFrameBytes)(col(binCol)).as("__lu"))
+      evalOnce(lumaSumsUdf(maxFrameBytes)(col(binCol))).as("__lu"))
       .filter(col("__lu").isNotNull)
       .select(col("id"), Audio.audioFingerprint64(col("__lu")).as("sig"))
 
@@ -838,7 +840,7 @@ object Video {
     val segs = segmentVideos(videos, idCol, binCol, segmentFrames,
       hopFrames, maxFrameBytes).toDF().filter(col("decoded"))
     val withSig = segs
-      .withColumn("__lu", lumaSumsUdf(maxFrameBytes)(col("avi")))
+      .withColumn("__lu", evalOnce(lumaSumsUdf(maxFrameBytes)(col("avi"))))
       .filter(col("__lu").isNotNull)
       .select(col("id"), col("segIdx").as("seg_idx"),
         col("startFrame").as("start_frame"),
@@ -909,12 +911,11 @@ object Video {
             (s, start, sig)
           }
         })
-    }.asNondeterministic() // block isNotNull pushdown re-running the
-    // segment decode per row (guide §4.4); value-deterministic
+    }
     val streamCols = stream.columns.toSeq
     val exploded = stream
       .withWatermark(tsCol, lateness)
-      .withColumn("__segs", segSigsUdf(col(binCol)))
+      .withColumn("__segs", evalOnce(segSigsUdf(col(binCol)))) // decode once (guide §4.4)
       .filter(col("__segs").isNotNull)
       .select(streamCols.map(col) :+
         explode(col("__segs")).as("__seg"): _*)
@@ -951,10 +952,9 @@ object Video {
     require(maxAudioBytes > 0, "maxAudioBytes must be positive")
     val trackUdf = udf { (bytes: Array[Byte]) =>
       anyAudioTrackWav(bytes, maxAudioBytes).map(_._5)
-    }.asNondeterministic() // block isNotNull pushdown re-running the
-    // track extraction per row (guide §4.4); value-deterministic
+    }
     val withWav = stream
-      .withColumn("__wav", trackUdf(col(binCol)))
+      .withColumn("__wav", evalOnce(trackUdf(col(binCol)))) // decode once (guide §4.4)
       .filter(col("__wav").isNotNull)
     Audio.findClipsContainingJingleStream(withWav, idCol, "__wav",
       tsCol, audioIndexPath, segmentFrames, hopFrames, lateness,
@@ -969,7 +969,9 @@ object Video {
     * for undecodable. Both paths call the SAME private [[decodeLuma]]
     * walk, so streaming/batch signature parity holds by construction —
     * and is still spec-pinned by the maxDistance=0 streaming admission
-    * tests.
+    * tests. Callers filter on the result, so they project it through
+    * `evalOnce`: pushdown would otherwise substitute the UDF into the
+    * filter and decode every video twice per row (guide §4.4).
     */
   private def lumaSumsUdf(maxFrameBytes: Int) =
     udf { (bytes: Array[Byte]) =>
@@ -982,13 +984,7 @@ object Video {
         .orElse(Gif.decodeLuma(0L, bytes, 65, maxFrameBytes))
         .orElse(Png.decodeAnimLuma(0L, bytes, 65, maxFrameBytes))
         .map(_.lumaSums)
-    }.asNondeterministic()
-    // asNondeterministic: deterministic in VALUE, but the callers
-    // filter isNotNull on the projected result — the optimizer pushes
-    // that filter below the projection by SUBSTITUTING the UDF into
-    // it, decoding every video TWICE per row (guide §4.4; the plan's
-    // twin `isnotnull(UDF(content))` Filter). The flag blocks the
-    // substitution; results are unchanged (oracle rows value-exact).
+    }
 
   /** Streaming video admission: admit a live video feed against a
     * STATIC [[writeVideoNearDupIndex]] artifact — the streaming twin
@@ -1016,7 +1012,7 @@ object Video {
     val streamCols = stream.columns.toSeq
     val withSig = stream
       .withWatermark(tsCol, lateness)
-      .withColumn("__lu", lumaSumsUdf(maxFrameBytes)(col(binCol)))
+      .withColumn("__lu", evalOnce(lumaSumsUdf(maxFrameBytes)(col(binCol))))
       .withColumn("__sh",
         when(col("__lu").isNotNull,
           Audio.audioFingerprint64(col("__lu"))))

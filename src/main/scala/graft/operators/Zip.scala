@@ -81,7 +81,7 @@ object Zip {
     le32(b, o) | (le32(b, o + 4) << 32)
 
   /** Random-access view of one archive — the column operator and
-    * `sources.GeoJsonZipSource.expand` wrap a byte array, the
+    * `sources.GeoJsonZipSource.expandZip` wrap a byte array, the
     * path-level sources (`sources.ZipShardSource`,
     * `sources.GeoJsonZipSource.read`) wrap a seekable Hadoop stream,
     * and ALL of them run [[listZip]] and [[openMember]], so the

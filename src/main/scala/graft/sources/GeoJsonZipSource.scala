@@ -7,7 +7,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.functions.GeoFunctions
@@ -137,18 +137,6 @@ object GeoJsonZipSource {
           entryRecords(e.zipPath, e.member.name, e.seq, member, transform), reader)
       }
     (records, entries.map(_.member.name).toIndexedSeq)
-  }
-
-  /** Expand a (path, content) DataFrame of already-materialized ZIP blobs
-    * (e.g. a `binaryFile` scan or binary column) into ParsedRecords.
-    */
-  def expand(zips: DataFrame, transform: Boolean = false): Dataset[ParsedRecord] = {
-    val spark = zips.sparkSession
-    import spark.implicits._
-    zips
-      .select("path", "content")
-      .as[(String, Array[Byte])]
-      .flatMap { case (zipPath, content) => expandZip(zipPath, content, transform) }
   }
 
   /** Expand in-memory ZIP bytes: the same listing as [[read]], then each

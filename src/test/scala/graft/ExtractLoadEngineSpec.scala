@@ -348,8 +348,17 @@ class ExtractLoadEngineSpec extends AnyFunSuite with BeforeAndAfterAll {
       stored(new String(stored, "ISO-8859-1").indexOf("\"n2\"") + 1) = 'm'
       stored
     }
+    // valid archives whose nodes.geojson does not parse: the features
+    // array ends after a whole feature, or the second feature is broken
+    val cutArray = Fixtures.zipBytes("nodes.geojson" -> Iterator(
+      """{"type":"FeatureCollection","features":[""" + point(1, 2, None, "n1")))
+    val badFeature = Fixtures.zipBytes("nodes.geojson" -> Iterator(
+      """{"type":"FeatureCollection","features":[""" + point(1, 2, None, "n1") +
+        """,{"type":"Feature" "geometry":null,"properties":{"_id":"n2"}}]}"""))
     val cases = Seq(
       ("a parse failure", badCrc, "Error loading the data : "),
+      ("a features array cut after a whole feature", cutArray, "Error loading the data : "),
+      ("a malformed second feature", badFeature, "Error loading the data : "),
       ("no .geojson", Fixtures.zipBytes("readme.txt" -> Iterator("x")),
         "Error loading the data : No valid .geojson files found in dataset archive."),
       ("a publish failing midway", canonicalZip, "Error loading the data : "))

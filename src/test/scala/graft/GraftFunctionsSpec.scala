@@ -100,8 +100,7 @@ class GraftFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(s.sql(s"DESCRIBE FUNCTION $n").collect().nonEmpty, n)
     }
 
-  test("register makes every table name (and the geometry UDFs) " +
-      "SQL-callable; twice is harmless") {
+  test("register makes every table name SQL-callable; twice is harmless") {
     val s = spark.newSession()
     GraftFunctions.register(s)
     GraftFunctions.register(s)
@@ -116,7 +115,10 @@ class GraftFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getBoolean(0) && r.getBoolean(1))
   }
 
-  test("GraftExtensions injects every table name") {
+  /** `f` on a new session that carries [[GraftExtensions]] and never
+    * called `register`.
+    */
+  private def withExtensions[T](f: SparkSession => T): T = {
     spark // the shared context exists first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -125,12 +127,40 @@ class GraftFunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .withExtensions(new GraftExtensions)
         .getOrCreate()
       assert(s ne spark)
-      assertAllResolve(s)
+      f(s)
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
       SparkSession.setDefaultSession(spark)
       SparkSession.setActiveSession(spark)
     }
+  }
+
+  test("GraftExtensions injects every table name") {
+    withExtensions(assertAllResolve)
+  }
+
+  test("an extensions-only session calls the geometry functions with " +
+      "the values of a registered one") {
+    val feature = """{"type":"Feature","geometry":{"type":"Point",""" +
+      """"coordinates":[1.5,2.5,99.5]},"properties":{"_id":"n1"}}"""
+    val query =
+      s"""SELECT strip_z('[[[1.0,2.0,3.0],[4.0,5.0,6.0]]]') AS s,
+         |       process_geometry('$feature', 'nodes') AS node,
+         |       process_geometry('$feature', 'edges') AS edge,
+         |       process_geometry('$feature', NULL) AS no_layer,
+         |       first_elevation('[[1.0,2.0],[3.0,4.0,9.5]]') AS e""".stripMargin
+    val registered = spark.newSession()
+    GraftFunctions.register(registered)
+    val expected = registered.sql(query).collect().toSeq
+    val injected = withExtensions(_.sql(query).collect().toSeq)
+    assert(injected == expected)
+    val r = expected.head
+    assert(r.getString(0) == "[[[1.0,2.0],[4.0,5.0]]]")
+    assert(r.getString(1).contains("\"ext:elevation\":99.5"))
+    assert(r.getString(2).contains("[1.5,2.5]") &&
+      !r.getString(2).contains("ext:elevation"))
+    assert(r.getString(3) == r.getString(2))
+    assert(r.getDouble(4) == 9.5)
   }
 }

@@ -885,4 +885,89 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(offending.isEmpty,
       s"assignCentroidsJoin: sq_dist duplicated into a Filter:\n$offending")
   }
+
+  test("media decoders evaluate once: every decode UDF is projected " +
+      "through eval_once and no Filter re-runs a projected UDF") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter,
+      Project => LProject}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.expressions.EvalOnceExpr
+    import graft.operators.{Audio, Multimodal, Video}
+    import spark.implicits._
+    // Without the barrier, a filter on a decoded column is pushed below
+    // the projection by substituting the UDF into it: the decode runs
+    // once in the Filter and again in the Project, per row.
+    def check(what: String, df: DataFrame): Unit = {
+      // a streaming frame has no batch optimizedPlan; run the optimizer
+      // on its analyzed plan, as each micro-batch does
+      val plan =
+        if (df.isStreaming) spark.sessionState.optimizer.execute(df.queryExecution.analyzed)
+        else df.queryExecution.optimizedPlan
+      val projected = plan.collect { case p: LProject => p.projectList }
+        .flatten.flatMap(_.collect { case u: ScalaUDF => u })
+      val twice = plan.collect {
+        case f: LFilter if f.condition.exists {
+          case u: ScalaUDF => projected.exists(_.semanticEquals(u))
+          case _ => false
+        } => f
+      }
+      assert(twice.isEmpty, s"$what: a Filter re-runs a projected UDF:\n$plan")
+      val barriers = plan.flatMap(_.expressions.flatMap(_.collect {
+        case EvalOnceExpr(_: ScalaUDF) => 1 }))
+      assert(barriers.nonEmpty, s"$what: no decode UDF under eval_once:\n$plan")
+    }
+    Seq("q_webp_meta", "q_image_tiff_meta", "q_jingle_hunt",
+        "q_video_cross_container")
+      .foreach(q => check(q, SparkEntry.queries(q)(spark, sf)))
+
+    // library surfaces over the fixtures the hunt specs build
+    def frame(base: Int, f: Int): Array[Byte] =
+      Array.tabulate(3 * 4 * 3)(k => ((base * 131 + f * 31 + k * 7) % 101).toByte)
+    val avi = Video.buildUncompressedAvi(4, 3, (0 until 66).map(frame(9, _)), 40000L)
+    val rnd = new scala.util.Random(7)
+    val wav = Audio.wrapWav(Array.fill(1040)(rnd.nextInt(16001) - 8000), 0, 1040, 8000)
+    val bmp = Multimodal.buildBmp(16, 12, Array.tabulate(3 * 16 * 12)(_.toByte))
+    // parquet-backed: a local Seq would fold into a LocalRelation
+    def frameOf(bytes: Array[Byte]) = {
+      val dir = Fixtures.scratchDir("graft-barrier-plan").toString
+      Seq(1L -> bytes).toDF("id", "content").write.mode("overwrite").parquet(dir)
+      spark.read.parquet(dir)
+    }
+    def index(write: (DataFrame, String) => Unit, bytes: Array[Byte]) = {
+      val dir = Fixtures.scratchDir("graft-barrier-plan").toString
+      write(frameOf(bytes), dir)
+      dir
+    }
+    val videoIdx = index(Video.writeVideoNearDupIndex(_, "id", "content", _), avi)
+    val audioIdx = index(Audio.writeAudioNearDupIndex(_, "id", "content", _), wav)
+    val imageIdx = index(Multimodal.writeImageNearDupIndex(_, "id", "content", _), bmp)
+    check("videoSigsAuto", Video.videoSigsAuto(frameOf(avi), "id", "content"))
+    check("findVideosContainingScene", Video.findVideosContainingScene(
+      frameOf(avi), "id", "content", videoIdx, segmentFrames = 66))
+    check("findClipsContainingJingle", Audio.findClipsContainingJingle(
+      frameOf(wav), "id", "content", audioIdx, segmentFrames = 1040))
+    check("findImagesContainingCrop", Multimodal.findImagesContainingCrop(
+      frameOf(bmp), "id", "content", imageIdx, tileW = 16, tileH = 12))
+    check("jpegDimensions", frameOf(bmp)
+      .select(Multimodal.jpegDimensions(col("content")).as("d"))
+      .filter(col("d").isNotNull))
+    // the streaming twins, over a live feed
+    implicit val sq = spark.sqlContext
+    def feed = MemoryStream[(Long, Array[Byte], java.sql.Timestamp)]
+      .toDF().toDF("id", "content", "ts")
+    check("findVideosContainingSceneStream", Video.findVideosContainingSceneStream(
+      feed, "id", "content", "ts", videoIdx, segmentFrames = 66))
+    check("findVideosWithJingleStream", Video.findVideosWithJingleStream(
+      feed, "id", "content", "ts", audioIdx, segmentFrames = 1040))
+    check("streamingVideoNearDedup", Video.streamingVideoNearDedup(
+      feed, "id", "content", "ts", videoIdx))
+    check("findClipsContainingJingleStream", Audio.findClipsContainingJingleStream(
+      feed, "id", "content", "ts", audioIdx, segmentFrames = 1040))
+    check("streamingAudioNearDedup", Audio.streamingAudioNearDedup(
+      feed, "id", "content", "ts", audioIdx))
+    check("streamingImageNearDedup", Multimodal.streamingImageNearDedup(
+      feed, "id", "content", "ts", imageIdx))
+  }
 }
