@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 import graft.expressions.BarrierExprs.evalOnce
+import graft.operators.LittleEndian.{le16, le32, le64}
 
 /** Audio payloads as opaque `binary` columns: RIFF/WAV header parse,
   * 16-bit PCM decode (mono mixdown), windowed integer energy/stats, and
@@ -1392,10 +1393,6 @@ object Audio {
     */
   private[graft] def parseOgg(
       b: Array[Byte]): Option[(String, Int, Int, Long)] = {
-    def le32at(o: Int): Long = (b(o) & 0xFFL) |
-      ((b(o + 1) & 0xFFL) << 8) | ((b(o + 2) & 0xFFL) << 16) |
-      ((b(o + 3) & 0xFFL) << 24)
-    def le64at(o: Int): Long = le32at(o) | (le32at(o + 4) << 32)
     if (b == null || b.length < 28) return None
     var codec = ""
     var channels = 0
@@ -1407,7 +1404,7 @@ object Audio {
       if (b(pos) != 'O'.toByte || b(pos + 1) != 'g'.toByte ||
         b(pos + 2) != 'g'.toByte || b(pos + 3) != 'S'.toByte ||
         b(pos + 4) != 0) return None
-      val pageGranule = le64at(pos + 6)
+      val pageGranule = le64(b, pos + 6)
       val nSegs = b(pos + 26) & 0xFF
       if (pos + 27 + nSegs > b.length) return None
       var bodyLen = 0
@@ -1419,7 +1416,7 @@ object Audio {
       val body = pos + 27 + nSegs
       if (body + bodyLen > b.length) return None
       if (oggPageCrc(b, pos, 27 + nSegs + bodyLen) !=
-        le32at(pos + 22)) return None // page CRC must verify
+        le32(b, pos + 22)) return None // page CRC must verify
       if (first) {
         if ((b(pos + 5) & 0x02) == 0) return None // BOS flag required
         oggIdPacket(b, body, bodyLen) match {
@@ -1446,15 +1443,12 @@ object Audio {
     */
   private def oggIdPacket(b: Array[Byte], body: Int,
       bodyLen: Int): Option[(String, Int, Int)] = {
-    def le32at(o: Int): Long = (b(o) & 0xFFL) |
-      ((b(o + 1) & 0xFFL) << 8) | ((b(o + 2) & 0xFFL) << 16) |
-      ((b(o + 3) & 0xFFL) << 24)
     if (bodyLen >= 16 && (b(body) & 0xFF) == 0x01 &&
       new String(b, body + 1, 6, "US-ASCII") == "vorbis")
-      Some(("vorbis", b(body + 11) & 0xFF, le32at(body + 12).toInt))
+      Some(("vorbis", b(body + 11) & 0xFF, le32(b, body + 12).toInt))
     else if (bodyLen >= 19 &&
       new String(b, body, 8, "US-ASCII") == "OpusHead")
-      Some(("opus", b(body + 9) & 0xFF, le32at(body + 12).toInt))
+      Some(("opus", b(body + 9) & 0xFF, le32(b, body + 12).toInt))
     else None
   }
 
@@ -1485,9 +1479,6 @@ object Audio {
       }
       got
     }
-    def le32(o: Int): Long = (page(o) & 0xFFL) |
-      ((page(o + 1) & 0xFFL) << 8) | ((page(o + 2) & 0xFFL) << 16) |
-      ((page(o + 3) & 0xFFL) << 24)
     var codec = ""
     var channels = 0
     var rate = 0
@@ -1512,7 +1503,7 @@ object Audio {
         }
         val body = 27 + nSegs
         if (readUpTo(body, bodyLen) < bodyLen) return None
-        if (oggPageCrc(page, 0, body + bodyLen) != le32(22))
+        if (oggPageCrc(page, 0, body + bodyLen) != le32(page, 22))
           return None // page CRC must verify
         if (first) {
           if ((page(5) & 0x02) == 0) return None // BOS flag required
@@ -1523,7 +1514,7 @@ object Audio {
           if (channels <= 0 || rate <= 0) return None
           first = false
         }
-        val pageGranule = le32(6) | (le32(10) << 32)
+        val pageGranule = le32(page, 6) | (le32(page, 10) << 32)
         // -1 marks a page with no completed packet; skip for duration
         if (pageGranule != -1L) granule = pageGranule
       }
@@ -1672,23 +1663,20 @@ object Audio {
   private[graft] def parseVorbisComments(b: Array[Byte], start: Int,
       end: Int, exact: Boolean)
       : Option[(String, Vector[(String, String)], Int)] = {
-    def le32at(o: Int): Long = (b(o) & 0xFFL) |
-      ((b(o + 1) & 0xFFL) << 8) | ((b(o + 2) & 0xFFL) << 16) |
-      ((b(o + 3) & 0xFFL) << 24)
     if (start + 4 > end) return None
-    val vlen = le32at(start)
+    val vlen = le32(b, start)
     if (vlen < 0L || start + 4 + vlen > end) return None
     val vendor = new String(b, start + 4, vlen.toInt, "UTF-8")
     var p = start + 4 + vlen.toInt
     if (p + 4 > end) return None
-    val n = le32at(p)
+    val n = le32(b, p)
     p += 4
     if (n < 0L || n > (end - p)) return None // each comment is >= 4+1
     val out = Vector.newBuilder[(String, String)]
     var i = 0L
     while (i < n) {
       if (p + 4 > end) return None
-      val clen = le32at(p)
+      val clen = le32(b, p)
       p += 4
       if (clen < 0L || p + clen > end) return None
       val s = new String(b, p, clen.toInt, "UTF-8")
@@ -2109,13 +2097,6 @@ object Audio {
       channels: Int, bitsPerSample: Int, nFrames: Long, durationMs: Long,
       dataOffset: Long, dataLen: Long, blockAlign: Int = 0,
       samplesPerBlock: Int = 0)
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
-      ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
 
   private def tag(b: Array[Byte], o: Int): String =
     new String(b, o, 4, java.nio.charset.StandardCharsets.ISO_8859_1)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.operators.LittleEndian.le16
+
 /** Animated GIF as COMPRESSED video whose pixels are bit-exact: GIF's
   * LZW is lossless, so a multi-frame GIF decodes to exactly the
   * encoder's palette indices — the compressed-video rung MJPEG cannot
@@ -178,9 +180,6 @@ object Gif {
   private[graft] final case class ParsedGif(width: Int, height: Int,
       gct: Array[Int], totalDelayCs: Long, frames: Vector[FrameRec])
 
-  private def u16le(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8)
-
   /** Structural walk: header, screen descriptor, GCT, then the block
     * stream — image descriptors are RECORDED (offset + control
     * state), their LZW data skipped by sub-block lengths. Returns
@@ -193,8 +192,8 @@ object Gif {
     if (bytes == null || bytes.length < 13) return None
     val sig = new String(bytes, 0, 6, "US-ASCII")
     if (sig != "GIF89a" && sig != "GIF87a") return None
-    val w = u16le(bytes, 6)
-    val h = u16le(bytes, 8)
+    val w = le16(bytes, 6)
+    val h = le16(bytes, 8)
     if (w <= 0 || h <= 0) return None
     val packed = bytes(10) & 0xFF
     var pos = 13
@@ -236,7 +235,7 @@ object Gif {
             val p = bytes(pos + 3) & 0xFF
             disposal = (p >> 2) & 0x07
             transparent = (p & 0x01) != 0
-            delayCs = u16le(bytes, pos + 4)
+            delayCs = le16(bytes, pos + 4)
           }
           pos += 2
           if (!skipSubBlocks()) return None
@@ -313,8 +312,8 @@ object Gif {
     if (readUpTo(0, 13) < 13) return None
     val sig = new String(buf, 0, 6, "US-ASCII")
     if (sig != "GIF89a" && sig != "GIF87a") return None
-    val w = u16le(buf, 6)
-    val h = u16le(buf, 8)
+    val w = le16(buf, 6)
+    val h = le16(buf, 8)
     if (w <= 0 || h <= 0) return None
     val packed = buf(10) & 0xFF
     val hasGct = (packed & 0x80) != 0
@@ -339,7 +338,7 @@ object Gif {
           while (len != 0) {
             if (readUpTo(0, len) < len) return None
             if (firstSub && label == 0xF9 && len == 4)
-              delayCs = u16le(buf, 1)
+              delayCs = le16(buf, 1)
             firstSub = false
             len = byte()
             if (len < 0) return None
@@ -487,8 +486,8 @@ object Gif {
       f: FrameRec): Option[(Array[Int], Array[Byte])] = {
     if (f.transparent || f.disposal > 1) return None
     val d = f.descOffset
-    if (u16le(bytes, d + 1) != 0 || u16le(bytes, d + 3) != 0 ||
-      u16le(bytes, d + 5) != g.width || u16le(bytes, d + 7) != g.height)
+    if (le16(bytes, d + 1) != 0 || le16(bytes, d + 3) != 0 ||
+      le16(bytes, d + 5) != g.width || le16(bytes, d + 7) != g.height)
       return None // not a full-frame replacement
     val ipacked = bytes(d + 9) & 0xFF
     if ((ipacked & 0x40) != 0) return None // interlaced

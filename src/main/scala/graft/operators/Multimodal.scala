@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.expressions.GraftFunctions
 import graft.expressions.BarrierExprs.evalOnce
+import graft.operators.LittleEndian.{le16, le24, le32}
 
 /** Multimodal-column operators for training-data pipelines: image /
   * audio / video payloads carried as opaque `binary` columns with typed
@@ -149,9 +150,6 @@ object Multimodal {
     */
   private[graft] def webpInfo(
       b: Array[Byte]): Option[(String, Long, Long, Boolean, Boolean)] = {
-    def le24(o: Int): Long = (b(o) & 0xFFL) |
-      ((b(o + 1) & 0xFFL) << 8) | ((b(o + 2) & 0xFFL) << 16)
-    def le16(o: Int): Int = (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8)
     if (b == null || b.length < 20) return None
     if (new String(b, 0, 4, "US-ASCII") != "RIFF" ||
       new String(b, 8, 4, "US-ASCII") != "WEBP") return None
@@ -167,8 +165,8 @@ object Multimodal {
         else if ((b(d + 3) & 0xFF) != 0x9D || (b(d + 4) & 0xFF) != 0x01 ||
           (b(d + 5) & 0xFF) != 0x2A) None
         else {
-          val w = le16(d + 6) & 0x3FFF
-          val h = le16(d + 8) & 0x3FFF
+          val w = le16(b, d + 6) & 0x3FFF
+          val h = le16(b, d + 8) & 0x3FFF
           if (w == 0 || h == 0) None
           else Some(("VP8 ", w.toLong, h.toLong, false, false))
         }
@@ -193,7 +191,7 @@ object Multimodal {
         if (sz < 10 || b.length < d + 10) None
         else {
           val flags = b(d) & 0xFF
-          Some(("VP8X", 1L + le24(d + 4), 1L + le24(d + 7),
+          Some(("VP8X", 1L + le24(b, d + 4), 1L + le24(b, d + 7),
             (flags & 0x10) != 0, (flags & 0x02) != 0))
         }
       case _ => None
@@ -370,13 +368,10 @@ object Multimodal {
       b(0) != 'R' || b(1) != 'I' || b(2) != 'F' || b(3) != 'F' ||
       b(8) != 'W' || b(9) != 'E' || b(10) != 'B' || b(11) != 'P')
       return None
-    def le32(o: Int): Long =
-      (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
-        ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
-    val riffEnd = math.min(8L + le32(4), b.length.toLong)
+    val riffEnd = math.min(8L + le32(b, 4), b.length.toLong)
     var pos = 12L
     while (pos + 8 <= riffEnd) {
-      val size = le32((pos + 4).toInt)
+      val size = le32(b, (pos + 4).toInt)
       val dataOff = pos + 8
       if (dataOff + size > riffEnd) return None
       if (b(pos.toInt) == 'E' && b((pos + 1).toInt) == 'X' &&
@@ -1225,12 +1220,11 @@ object Multimodal {
     def be32(o: Int) =
       ((bytes(o) & 0xFFL) << 24) | ((bytes(o + 1) & 0xFFL) << 16) |
         ((bytes(o + 2) & 0xFFL) << 8) | (bytes(o + 3) & 0xFFL)
-    def le16(o: Int) = ((bytes(o + 1) & 0xFFL) << 8) | (bytes(o) & 0xFFL)
     if (bytes == null || bytes.length < 10) None
     else if ((bytes(0) & 0xFF) == 0x89 && bytes(1) == 'P' && bytes.length >= 24)
       Some((be32(16), be32(20)))
     else if (bytes(0) == 'G' && bytes(1) == 'I' && bytes(2) == 'F')
-      Some((le16(6), le16(8)))
+      Some((le16(bytes, 6).toLong, le16(bytes, 8).toLong))
     else jpegDims(bytes).map(d => (d._1, d._2))
   }
 
@@ -1322,17 +1316,12 @@ object Multimodal {
     */
   private def canonicalBmpRaw(bytes: Array[Byte]):
       Option[(Int, Int, Int)] = {
-    def le32(o: Int): Long =
-      (bytes(o) & 0xFFL) | ((bytes(o + 1) & 0xFFL) << 8) |
-        ((bytes(o + 2) & 0xFFL) << 16) | ((bytes(o + 3) & 0xFFL) << 24)
-    def le16(o: Int): Int =
-      (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
     if (bytes == null || bytes.length < 54 ||
       bytes(0) != 'B'.toByte || bytes(1) != 'M'.toByte ||
-      le32(10) != 54L || le32(14) != 40L ||
-      le16(26) != 1 || le16(28) != 24 || le32(30) != 0L) return None
-    val w = le32(18)
-    val h = le32(22) // positive = bottom-up, the only shape we write
+      le32(bytes, 10) != 54L || le32(bytes, 14) != 40L ||
+      le16(bytes, 26) != 1 || le16(bytes, 28) != 24 || le32(bytes, 30) != 0L) return None
+    val w = le32(bytes, 18)
+    val h = le32(bytes, 22) // positive = bottom-up, the only shape we write
     if (w <= 0 || w > (1 << 20) || h <= 0 || h > (1 << 20)) return None
     val stride = ((3L * w + 3L) / 4L) * 4L
     if (54L + stride * h > bytes.length) return None

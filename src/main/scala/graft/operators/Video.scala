@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 import graft.expressions.BarrierExprs.evalOnce
+import graft.operators.LittleEndian.{le16, le32}
 
 /** Video payloads as opaque `binary` columns — the third modality of
   * the multimodal family, built to the exact contract of [[Audio]]
@@ -1355,11 +1356,6 @@ object Video {
       audRate: Int = 0, audByteRate: Long = 0L, audBlockAlign: Int = 0,
       audBits: Int = 0)
 
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8)
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
-      ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
   private def tag(b: Array[Byte], o: Int): String =
     new String(b, o, 4, "US-ASCII")
 

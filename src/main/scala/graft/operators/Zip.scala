@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
+import graft.operators.LittleEndian.{le16, le32, le64}
+
 /** ZIP shards as a COLUMN operator — the other way image/document
   * corpora ship (the [[Tar]] counterpart; the path-level streaming
   * form lives in `sources.GeoJsonZipSource`). The walk derives
@@ -69,16 +71,6 @@ object Zip {
   }
 
   // ---- imperative internals -------------------------------------------
-
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | ((b(o + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
-      ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
-
-  private def le64(b: Array[Byte], o: Int): Long =
-    le32(b, o) | (le32(b, o + 4) << 32)
 
   /** Random-access view of one archive — the column operator and
     * `sources.GeoJsonZipSource.expandZip` wrap a byte array, the

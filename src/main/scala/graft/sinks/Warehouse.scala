@@ -103,15 +103,12 @@ final class Warehouse(spark: SparkSession, val root: String) {
   def writer(table: String): TableWriter =
     writers.computeIfAbsent(Warehouse.dataSchema(table), TableWriter.prepare(spark, hconf, _))
 
-  /** content.node / edge / zone / extension_* feature tables: the
-    * partitions of `df`'s dataset ids are replaced by `df`'s rows.
+  /** Replaces the partitions of `df`'s dataset ids in `table` by `df`'s
+    * rows: for the feature tables (node, edge, zone, extension_*) and the
+    * keyed metadata tables (dataset, stats, extension_file) alike, where
+    * one partition per dataset id makes it an upsert.
     */
   def writeFeatures(table: String, df: DataFrame): Unit = replace(table, df)
-
-  /** Per-dataset replace for keyed metadata tables (dataset, stats,
-    * extension_file): one partition per dataset id = an upsert.
-    */
-  def upsertByDataset(table: String, df: DataFrame): Unit = replace(table, df)
 
   /** One job writes `df`'s rows into staged files, one file per task and
     * dataset id; then each dataset's partition of `table` is published.

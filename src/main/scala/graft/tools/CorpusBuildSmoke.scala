@@ -13,28 +13,11 @@ import org.apache.spark.sql.functions._
   * fails Gopher minWords — the gate removes it). The constituent
   * operators all have their own ScaleSmoke sections; this drives
   * their COMPOSITION (staged parquet, lineage tokens, the LM tier
-  * pass, the all-skip resume) at corpus scale. Standalone main, and
-  * a section of [[ScaleSmoke]].
+  * pass, the all-skip resume) at corpus scale. The `corpusBuild` step of [[ScaleSmoke]].
   */
 object CorpusBuildSmoke {
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.configure(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark, args.headOption.map(_.toInt).getOrElse(1000000))
-    spark.stop()
-  }
-
-  def run(spark: SparkSession, nCb: Int): Unit = {
+  def run(spark: SparkSession, nCb: Int): Measure.Counts = {
     require(nCb % 10 == 0, "nCb must be a multiple of 10")
-    val rt = Runtime.getRuntime
-    val tCb0 = System.nanoTime()
     val warcDir = graft.Fixtures.scratchDir("scale-cb-warc")
     val md = java.security.MessageDigest.getInstance("MD5")
     def h8(s: String): String = {
@@ -71,18 +54,13 @@ object CorpusBuildSmoke {
       out.close()
     }
     val stageDir = graft.Fixtures.scratchDir("scale-cb-stages").toString
-    val tCb1 = System.nanoTime()
-    val stageTimes =
-      scala.collection.mutable.LinkedHashMap[String, Double]()
     val report = graft.operators.CorpusBuild.buildCorpus(spark,
       warcDir.toString, stageDir, minWords = 10, minLinesKept = 1,
       minWordsPerLine = 3, nearDupThreshold = 0.8,
       tierRates = Map("head" -> 1.0, "middle" -> 1.0, "tail" -> 1.0),
-      packTokens = 256,
-      onStage = (st, s) => { stageTimes(st) = s; () })
+      packTokens = 256)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2))).toMap
-    val tBuild = (System.nanoTime() - tCb1) / 1e9
     val n = nCb.toLong
     require(report("0_extract") == ((n, n)),
       s"extract ${report("0_extract")}")
@@ -110,7 +88,6 @@ object CorpusBuildSmoke {
     require(overCap == 0L, s"$overCap packs over the token cap")
     // resume evidence at scale: a second call on the COMPLETE stage
     // dir must compute NOTHING (pure sidecar/lineage reads)
-    val tCb2 = System.nanoTime()
     val recomputed = scala.collection.mutable.ArrayBuffer[String]()
     graft.operators.CorpusBuild.buildCorpus(spark, warcDir.toString,
       stageDir, minWords = 10, minLinesKept = 1, minWordsPerLine = 3,
@@ -118,15 +95,9 @@ object CorpusBuildSmoke {
       tierRates = Map("head" -> 1.0, "middle" -> 1.0, "tail" -> 1.0),
       packTokens = 256,
       onStage = (st, _) => { recomputed += st; () }).collect()
-    val tResume = (System.nanoTime() - tCb2) / 1e9
     require(recomputed.isEmpty,
       s"all-skip resume recomputed: ${recomputed.mkString(",")}")
-    val slowest = stageTimes.toSeq.sortBy(-_._2).take(3)
-      .map { case (st, s) => f"$st=$s%.1f" }.mkString(" ")
-    println(f"corpusBuild: $nCb%d WET docs -> gate -${n / 10}%d, " +
-      f"dedup -${dedupIn - dedupOut}%d, $curDocs%d packed docs in " +
-      f"$tBuild%.1f s (gen ${(tCb1 - tCb0) / 1e9}%.1f s; slowest " +
-      f"stages $slowest); all-skip resume $tResume%.1f s, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    Seq("wetDocs" -> nCb, "gateDropped" -> n / 10, "dedupDropped" -> (dedupIn - dedupOut),
+      "packedDocs" -> curDocs)
   }
 }

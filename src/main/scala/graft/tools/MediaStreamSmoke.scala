@@ -15,31 +15,13 @@ import graft.operators.Audio
   * same engine `q_media_stream` oracles at sf scale. The Ogg walk
   * still verifies EVERY page's RFC 3533 CRC on the way through
   * (pages are written with real CRCs here); the GIF walk sums every
-  * frame's graphic-control delay. Standalone main, and a section of
-  * [[ScaleSmoke]].
+  * frame's graphic-control delay. The `mediaStream` step of [[ScaleSmoke]].
   */
 object MediaStreamSmoke {
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.configure(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark,
-      nFiles = args.headOption.map(_.toInt).getOrElse(2),
-      targetBytes = args.lift(1).map(_.toLong).getOrElse(1536L << 20))
-    spark.stop()
-  }
-
-  def run(spark: SparkSession, nFiles: Int, targetBytes: Long): Unit = {
-    val rt = Runtime.getRuntime
+  def run(spark: SparkSession, nFiles: Int = 2, targetBytes: Long = 1536L << 20): Measure.Counts = {
     val dir = graft.Fixtures.scratchDir("scale-media")
 
     // ---- Ogg: BOS id page + N max-lacing filler pages, real CRCs --
-    val t0 = System.nanoTime()
     val granuleStep = 960L
     val oggExpect = (0 until nFiles).map { c =>
       val rate = 8000 * (1 + c % 3)
@@ -78,12 +60,8 @@ object MediaStreamSmoke {
         granuleStep * pages * 1000L / rate, written)
     }
     val oggBytes = oggExpect.map(_._5).sum
-    println(f"mediaStream: wrote $nFiles Ogg dumps " +
-      f"(${oggBytes / 1e9}%.2f GB, real per-page CRCs) in " +
-      f"${(System.nanoTime() - t0) / 1e9}%.1f s")
 
     // ---- GIF: header + GCT, then frames streamed one at a time ----
-    val t1 = System.nanoTime()
     val delayCs = 4
     val subBlock = {
       val b = new Array[Byte](256)
@@ -135,12 +113,8 @@ object MediaStreamSmoke {
         nFrames.toLong * delayCs * 10L, len)
     }
     val gifBytes = gifExpect.map(_._5).sum
-    println(f"mediaStream: wrote $nFiles GIF animations " +
-      f"(${gifBytes / 1e9}%.2f GB) in " +
-      f"${(System.nanoTime() - t1) / 1e9}%.1f s")
 
     // ---- census both directories through the path-level source ----
-    val t2 = System.nanoTime()
     val rows = graft.sources.MediaShardSource
       .metaScanDF(spark, dir.toString + "/*.*")
       .select(col("shard_path"), col("container"), col("duration_ms"),
@@ -148,7 +122,6 @@ object MediaStreamSmoke {
         col("audio_rate"), col("route"), col("parsed"))
       .collect()
       .map(r => r.getString(0).split('/').last -> r).toMap
-    val tWalk = (System.nanoTime() - t2) / 1e9
     require(rows.size == 2 * nFiles, s"rows ${rows.size}")
     oggExpect.foreach { case (name, codec, rate, durMs, _) =>
       val r = rows(name)
@@ -170,11 +143,8 @@ object MediaStreamSmoke {
         r.getAs[Long]("duration_ms") == durMs,
         s"$name fields drifted: $r")
     }
-    val total = oggBytes + gifBytes
-    println(f"mediaStream: ${2 * nFiles}%d multi-GiB files censused " +
-      f"off disk in $tWalk%.1f s (${total / 1e9 / tWalk}%.2f GB/s), " +
-      f"every field exact, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
     graft.Fixtures.delete(dir)
+    Seq("oggFiles" -> nFiles, "oggBytes" -> oggBytes, "gifFiles" -> nFiles,
+      "gifBytes" -> gifBytes, "files" -> 2 * nFiles)
   }
 }

@@ -13,28 +13,11 @@ import graft.operators.Mp4
   * KB per file, whatever the media size. Files are streamed to disk
   * (the writer holds one 1 MiB chunk, never a file), walked back
   * through `Mp4ShardSource`, and every metadata field is checked
-  * exactly. Standalone main, and a section of [[ScaleSmoke]].
+  * exactly. The `mp4Stream` step of [[ScaleSmoke]].
   */
 object Mp4StreamSmoke {
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.configure(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark,
-      nFiles = args.headOption.map(_.toInt).getOrElse(3),
-      mdatBytes = args.lift(1).map(_.toLong).getOrElse(1536L << 20))
-    spark.stop()
-  }
-
-  def run(spark: SparkSession, nFiles: Int, mdatBytes: Long): Unit = {
-    val rt = Runtime.getRuntime
+  def run(spark: SparkSession, nFiles: Int = 3, mdatBytes: Long = 1536L << 20): Measure.Counts = {
     val dir = graft.Fixtures.scratchDir("scale-mp4")
-    val t0 = System.nanoTime()
     // template per file: the library's own encoder emits
     // ftyp+moov+mdat; split the top-level boxes and re-lay them as
     // ftyp / LARGESIZE mdat (streamed filler) / trailing moov —
@@ -79,19 +62,13 @@ object Mp4StreamSmoke {
     }
     val totalBytes = (0 until nFiles)
       .map(c => dir.resolve(s"rec_$c.mp4").toFile.length()).sum
-    val built = (System.nanoTime() - t0) / 1e9
-    println(f"mp4Stream: wrote $nFiles trailing-moov files " +
-      f"(${totalBytes / 1e9}%.2f GB, largesize mdat first) in " +
-      f"$built%.1f s")
 
-    val t1 = System.nanoTime()
     val agg = graft.sources.Mp4ShardSource.metaScan(spark,
         dir.toString + "/rec_*.mp4").toDF()
       .agg(count(lit(1)), sum(when(col("parsed"), 1L).otherwise(0L)),
         sum(col("width")), sum(col("duration_ms")),
         sum(col("video_frames")), sum(col("audio_rate")))
       .collect()(0)
-    val tWalk = (System.nanoTime() - t1) / 1e9
     val n = nFiles.toLong
     val expW = (0 until nFiles).map(c => 320L + 16 * c).sum
     val expDur = (0 until nFiles)
@@ -103,12 +80,7 @@ object Mp4StreamSmoke {
     require(agg.getLong(3) == expDur, s"duration sum ${agg.getLong(3)}")
     require(agg.getLong(4) == expFrames, s"frames ${agg.getLong(4)}")
     require(agg.getLong(5) == 48000L * n, s"rate ${agg.getLong(5)}")
-    // the headline: the walk reads headers + moov, not the media —
-    // a multi-GiB directory censuses at near-zero I/O
-    println(f"mp4Stream: $nFiles%d files " +
-      f"(${totalBytes / 1e9}%.2f GB on disk) seek-walked in " +
-      f"$tWalk%.2f s — metadata exact without reading the mdat, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
     graft.Fixtures.delete(dir)
+    Seq("files" -> nFiles, "bytes" -> totalBytes)
   }
 }

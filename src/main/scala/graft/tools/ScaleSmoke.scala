@@ -1,20 +1,26 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 import graft.Fixtures
 import graft.Fixtures.mix64
 
-/** Dev main: ingest a deliberately large archive (default 1M features
-  * across two layers, ~250 MB of GeoJSON) through the full engine to
-  * demonstrate the bounded-memory streaming claim — each entry is
-  * inflated as it is read and parsed feature-by-feature in its own task,
-  * so executor memory stays flat regardless of archive size.
-  * Run: `sbt "runMain graft.tools.ScaleSmoke [featuresPerLayer]"`.
+/** Planted-truth checks at scale, as named steps timed through
+  * [[Measure.Recorder]], in run order: `extractLoad` (one extract-load
+  * request, `n` features in each of two layers, with the engine's stage
+  * times), the corpus, vector and media steps (`dedup` ... `mpegtsMeta`,
+  * over `nDocs` docs and `nVec` vectors), `corpusBuild` (`nCb` docs) and
+  * five streaming steps at fixed multi-GiB sizes (`shardStream` ...
+  * `mediaStream`). Each run of a step builds its inputs and scratch
+  * directories afresh. `<outDir>/scale_<tag>.json` holds, per run, the
+  * wall time, the used heap after it, its Spark stages with their scopes
+  * and the counts it checked; and host, cores and sizes. Run:
+  * `sbt "runMain graft.tools.ScaleSmoke <outDir> <tag> [--runs N] [n [nDocs [nVec [nCb]]]] [step...]"`
+  * (sizes 500000 and 1000000, one run; no step name runs all).
   */
 object ScaleSmoke {
   def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toInt).getOrElse(500000)
     val spark = graft.GraftSession.configure(SparkSession.builder()).master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")
@@ -30,41 +36,32 @@ object ScaleSmoke {
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    try println("SCALE wrote " + Measure.runSteps(spark, "scale", args.toSeq,
+      Seq("n" -> 500000L, "nDocs" -> 1000000L, "nVec" -> 1000000L, "nCb" -> 1000000L)) {
+      sizes => val Seq(n, nDocs, nVec, nCb) = sizes.map(_.toInt)
+        new ScaleSteps(spark, n, nDocs, nVec, nCb).steps
+    }) finally spark.stop()
+  }
+}
 
-    val scaleDir = Fixtures.scratchDir("scale")
-    val t0 = System.nanoTime()
-    def layer(geom: Int => String) = Fixtures.featureCollection(""""name":"scale"""",
-      Iterator.range(0, n).map(i =>
-        s"""{"type":"Feature","geometry":${geom(i)},"properties":{"_id":"f$i","idx":$i,"pad":"xxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxx"}}"""))
-    val zipFile = Fixtures.writeZip(scaleDir.resolve("scale.zip"),
-      "nodes.geojson" -> layer(
-        i => s"""{"type":"Point","coordinates":[${i * 1e-5}, ${i * 2e-5}, ${i % 9}]}"""),
-      "edges.geojson" -> layer(
-        i => s"""{"type":"LineString","coordinates":[[${i * 1e-5},1.0,5.0],[2.0,${i * 2e-5},6.0]]}""")).toFile
-    println(f"archive: ${zipFile.length() / 1e6}%.1f MB, built in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+/** [[ScaleSmoke]]'s steps at one set of sizes. A step reports the counts
+  * it checked through `report`.
+  */
+private final class ScaleSteps(spark: SparkSession, n: Int, nDocs: Int, nVec: Int, nCb: Int) {
+  import spark.implicits._
 
-    val wh = scaleDir.resolve("wh").toString
-    val engine = new graft.service.ExtractLoadEngine(spark, wh)
-    val t1 = System.nanoTime()
-    val resp = engine.processRequest(graft.model.QueueMessage("scale|1", "wf",
-      graft.model.ExtractLoadRequest("osw", zipFile.getAbsolutePath, "scale_ds", "smoke")))
-    val secs = (System.nanoTime() - t1) / 1e9
-    require(resp.success, resp.message)
-    val nodes = engine.warehouse.table("node").count()
-    val edges = engine.warehouse.table("edge").count()
-    val rt = Runtime.getRuntime
-    println(f"ingest: $secs%.1f s, ${2L * n / secs}%.0f features/s, " +
-      f"nodes=$nodes edges=$edges, heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    require(nodes == n && edges == n)
-    Fixtures.delete(scaleDir)
+  private val all = Seq.newBuilder[(String, () => Measure.Counts)]
+  private val counts = Seq.newBuilder[(String, Any)]
+  private def report(kv: (String, Any)*): Unit = counts ++= kv
+  private def step(name: String)(body: => Unit): Unit =
+    all += name -> { () => counts.clear(); body; counts.result() }
 
-    // --- dedup at scale: 1M synthetic docs, planted exact + near dups.
-    // Generation is a pure projection over spark.range (distributed, no
-    // driver loop). Per group of 10 docs: ids base..base+7 unique,
-    // base+8 an exact duplicate of base, base+9 a near-dup of base (last
-    // of 30 tokens changed -> word-trigram Jaccard 27/29 ~= 0.931).
-    import org.apache.spark.sql.functions._
-    val nDocs = args.lift(1).map(_.toInt).getOrElse(1000000)
+  /** Per group of 10 docs: ids base..base+7 unique, base+8 an exact
+    * duplicate of base, base+9 a near-dup of base (last of 30 tokens
+    * changed -> word-trigram Jaccard 27/29 ~= 0.931). Generation is a
+    * pure projection over spark.range (distributed, no driver loop).
+    */
+  private def syntheticDocs(): DataFrame = {
     val k = col("id") % 10
     val base = col("id") - k
     val tokenSeed = when(k >= 8, base).otherwise(col("id"))
@@ -73,141 +70,25 @@ object ScaleSmoke {
               else tokenSeed
       substring(md5(concat_ws(":", s.cast("string"), lit(j))), 1, 8)
     }
-    // materialize the synthetic corpus ONCE: it feeds ~25 actions, and
-    // as a live expression every action would re-run 30 md5s × 1M rows
-    // (and a broadcast-join consumer would re-run them PER JOINED ROW —
-    // codegen defers unevaluated stream-side columns into the build
-    // loop). A real corpus is a parquet scan, i.e. already materialized;
-    // checkpointing keeps the fixture faithful to that shape.
-    val docs = spark.range(nDocs)
+    // materialized: as a live expression every action of a step would
+    // re-run 30 md5s × 1M rows (and a broadcast-join consumer would re-run
+    // them PER JOINED ROW — codegen defers unevaluated stream-side columns
+    // into the build loop). A real corpus is a parquet scan, i.e. already
+    // materialized; checkpointing keeps the fixture faithful to that shape.
+    spark.range(nDocs)
       .select(col("id"), concat_ws(" ", toks: _*).as("text"))
       .localCheckpoint(true)
-    val t2 = System.nanoTime()
-    val kept = graft.operators.Dedup.exactDedup(docs, "id", "text").count()
-    val tExact = (System.nanoTime() - t2) / 1e9
-    require(kept == nDocs - nDocs / 10L, s"exactDedup kept $kept")
-    val t3 = System.nanoTime()
-    val pairsDf = graft.operators.Dedup.minHashNearDupPairs(docs, "id", "text")
-    val pairs = pairsDf.count()
-    val tMh = (System.nanoTime() - t3) / 1e9
-    // 3 planted pairs per group (J=1, .931, .931); band recall at
-    // J=.931 with 16 bands x 4 rows is 1-2e-10, so demand near-all.
-    val expected = 3L * (nDocs / 10L)
-    require(pairs <= expected && pairs >= expected - 5,
-      s"minhash pairs $pairs of $expected")
-    // connected components over the pairs: each group of 10 docs holds
-    // one 3-doc component (base, base+8, base+9) + 7 singletons
-    val t4 = System.nanoTime()
-    val clusters = graft.operators.Dedup
-      .nearDupClusters(docs, "id", pairsDf)
-      .groupBy(org.apache.spark.sql.functions.col("cluster")).count().count()
-    val tCc = (System.nanoTime() - t4) / 1e9
-    val expectedClusters = 8L * (nDocs / 10L)
-    require(math.abs(clusters - expectedClusters) <= 5,
-      s"clusters $clusters of $expectedClusters")
-    println(f"dedup: docs=$nDocs exactKept=$kept in $tExact%.1f s " +
-      f"(${nDocs / tExact}%.0f docs/s), minhashPairs=$pairs in $tMh%.1f s " +
-      f"(${nDocs / tMh}%.0f docs/s), clusters=$clusters in $tCc%.1f s, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+  }
 
-    // decontamination: bench = the base doc of the first 1000 groups,
-    // corpus = all dup/near-dup docs — each bench doc must be hit by
-    // exactly its own 2 partners (23/23 and 22/23 shared 8-grams; no
-    // cross-group 8-gram can match, tokens are seed-unique)
-    val benchN = math.min(nDocs, 10000)
-    val t5 = System.nanoTime()
-    val contam = graft.operators.CorpusAnalysis.contamination(
-      docs.filter(col("id") % 10 >= 8), docs.filter(col("id") % 10 === 0
-        && col("id") < benchN), "id", "text").count()
-    val tCt = (System.nanoTime() - t5) / 1e9
-    require(contam == 2L * (benchN / 10), s"contamination pairs $contam")
-    // chunking: 30 tokens at maxTokens=16/stride=12 → exactly 3 windows
-    val t6 = System.nanoTime()
-    val chunks = graft.operators.CorpusAnalysis
-      .chunkDocs(docs, "id", "text", maxTokens = 16, stride = 12).count()
-    val tCh = (System.nanoTime() - t6) / 1e9
-    require(chunks == 3L * nDocs, s"chunks $chunks")
-    println(f"corpus: contamPairs=$contam in $tCt%.1f s, " +
-      f"chunks=$chunks in $tCh%.1f s (${nDocs / tCh}%.0f docs/s)")
-
-    // span-level duplication: 30-token docs, n=12 → 19 windows/doc.
-    // Per group of 10: base and its exact copy (+8) share all 19
-    // windows; the near-dup (+9, last token changed) shares 18 and owns
-    // 1 unique; the 7 unique docs (md5 tokens, position-distinct) have
-    // zero repeated windows. Exact expectations: 3 dup docs per group,
-    // sum(dup_spans) = 19+19+18 = 56 per group.
-    val t6b = System.nanoTime()
-    val spans = graft.operators.CorpusAnalysis
-      .dupSpans(docs, "id", "text", n = 12)
-      .agg(count(lit(1)), sum(when(col("dup_spans") > 0, 1L).otherwise(0L)),
-        sum(col("dup_spans")))
-      .collect()(0)
-    val tDs = (System.nanoTime() - t6b) / 1e9
-    require(spans.getLong(0) == nDocs, s"dupSpans rows ${spans.getLong(0)}")
-    require(spans.getLong(1) == 3L * (nDocs / 10),
-      s"dup docs ${spans.getLong(1)}")
-    require(spans.getLong(2) == 56L * (nDocs / 10),
-      s"dup spans ${spans.getLong(2)}")
-    println(f"spans: dupDocs=${spans.getLong(1)} dupSpans=${spans.getLong(2)} " +
-      f"in $tDs%.1f s (${nDocs / tDs}%.0f docs/s)")
-
-    // incremental dedup: corpus = the 8 unique docs per group (800k),
-    // snapshot = the exact copy + near-dup (200k) → exactly the 100k
-    // near-dups are admitted (exact copies collapse on fingerprint)
-    val t6c = System.nanoTime()
-    val admitted = graft.operators.Dedup.incrementalDedup(
-      docs.filter(col("id") % 10 >= 8), docs.filter(col("id") % 10 < 8),
-      "id", "text", expectedItems = nDocs.toLong, numBits = 8L * nDocs)
-      .count()
-    val tInc = (System.nanoTime() - t6c) / 1e9
-    require(admitted == nDocs / 10L, s"incremental admitted $admitted")
-    println(f"incremental: admitted=$admitted of ${2L * (nDocs / 10)} " +
-      f"in $tInc%.1f s (${2L * (nDocs / 10) / tInc}%.0f docs/s)")
-
-    // incremental NEAR-dedup: corpus = the 8 unique docs per group
-    // (800k); snapshot = the 100k near-dups (trigram J=0.931 vs their
-    // base, all dropped) + 100k token-disjoint fresh docs (kept).
-    // Exactly the fresh half must survive.
-    val freshToks = (0 until 30).map(j =>
-      substring(md5(concat_ws(":", lit("fresh"), col("id").cast("string"),
-        lit(j))), 1, 8))
-    val snapNear = docs.filter(col("id") % 10 === 9)
-    val snapFresh = spark.range(nDocs, nDocs + nDocs / 10L)
-      .select(col("id"), concat_ws(" ", freshToks: _*).as("text"))
-    val t6e = System.nanoTime()
-    val nearAdmitted = graft.operators.Dedup.incrementalNearDedup(
-      snapNear.unionByName(snapFresh), docs.filter(col("id") % 10 < 8),
-      "id", "text").count()
-    val tNInc = (System.nanoTime() - t6e) / 1e9
-    // >= with slack: a missed near-dup (LSH band miss, p ~ 2e-10/doc)
-    // would ADMIT extra rows — same tolerance as the pairs check above
-    require(nearAdmitted >= nDocs / 10L && nearAdmitted <= nDocs / 10L + 5,
-      s"near admitted $nearAdmitted")
-    println(f"incrementalNear: admitted=$nearAdmitted of ${2L * (nDocs / 10)} " +
-      f"in $tNInc%.1f s (${2L * (nDocs / 10) / tNInc}%.0f docs/s)")
-
-    // exact-N stratified sample over 16 synthetic strata: the bounded
-    // smallest-k aggregation must return exactly n rows per stratum
-    val t6d = System.nanoTime()
-    val strat = graft.operators.CorpusAnalysis.stratifiedSampleN(
-      docs.withColumn("src", (col("id") % 16).cast("string")),
-      "id", "src", n = 1000, salt = "smoke")
-      .groupBy(col("src")).count().agg(count(lit(1)), min(col("count")),
-        max(col("count"))).collect()(0)
-    val tSt = (System.nanoTime() - t6d) / 1e9
-    require(strat.getLong(0) == 16 && strat.getLong(1) == 1000L &&
-      strat.getLong(2) == 1000L, s"stratified $strat")
-    println(f"stratified: 16 strata x 1000 in $tSt%.1f s " +
-      f"(${nDocs / tSt}%.0f docs/s)")
-
-    // --- vectors at scale: 1M synthetic 64-dim embeddings with planted
-    // near-dups (per group of 10: id base+9 = base's vector with dim 0
-    // shifted 0.05 → cosine ≈ 0.9999). Components are pure xxhash64
-    // projections — distributed, deterministic, no RNG state. At 1M
-    // vectors the default 6-plane geometry would put ~16k vectors in
-    // every bucket (all capped away); 16 planes → 65k buckets → ~15
-    // per bucket, which is the point: planes must scale with log(n).
-    val nVec = args.lift(2).map(_.toInt).getOrElse(1000000)
+  /** `nVec` synthetic 64-dim embeddings with planted near-dups (per
+    * group of 10: id base+9 = base's vector with dim 0 shifted 0.05 →
+    * cosine ≈ 0.9999). Components are pure xxhash64 projections —
+    * distributed, deterministic, no RNG state. At 1M vectors the default
+    * 6-plane geometry would put ~16k vectors in every bucket (all capped
+    * away); 16 planes → 65k buckets → ~15 per bucket, which is the point:
+    * planes must scale with log(n).
+    */
+  private def syntheticVecs(): DataFrame = {
     val vk = col("id") % 10
     val vseed = when(vk === 9, col("id") - vk).otherwise(col("id"))
     def comp(j: Int): Column = {
@@ -220,13 +101,148 @@ object ScaleSmoke {
     // broadcast-joined PAIR (the semanticContamination scan is corpus ×
     // bench — unmaterialized, its 1M×100 pairs re-ran the 64-component
     // generation 100× and turned a ~1-min section into 20+ min)
-    val vecs = spark.range(nVec).select(col("id"),
+    spark.range(nVec).select(col("id"),
       array((0 until 64).map(comp): _*).cast("array<float>").as("v"))
       .localCheckpoint(true)
-    val t7 = System.nanoTime()
+  }
+
+  step("extractLoad") {
+    val scaleDir = Fixtures.scratchDir("scale")
+    def layer(geom: Int => String) = Fixtures.featureCollection(""""name":"scale"""",
+      Iterator.range(0, n).map(i =>
+        s"""{"type":"Feature","geometry":${geom(i)},"properties":{"_id":"f$i","idx":$i,"pad":"xxxxxxxxxxxxxxxxxxxxxxxxxxxxxxxx"}}"""))
+    val zipFile = Fixtures.writeZip(scaleDir.resolve("scale.zip"),
+      "nodes.geojson" -> layer(
+        i => s"""{"type":"Point","coordinates":[${i * 1e-5}, ${i * 2e-5}, ${i % 9}]}"""),
+      "edges.geojson" -> layer(
+        i => s"""{"type":"LineString","coordinates":[[${i * 1e-5},1.0,5.0],[2.0,${i * 2e-5},6.0]]}""")).toFile
+    report("archiveBytes" -> zipFile.length())
+    val wh = scaleDir.resolve("wh").toString
+    val engine = new graft.service.ExtractLoadEngine(spark, wh)
+    val resp = engine.processRequest(graft.model.QueueMessage("scale|1", "wf",
+      graft.model.ExtractLoadRequest("osw", zipFile.getAbsolutePath, "scale_ds", "smoke")))
+    require(resp.success, resp.message)
+    val nodes = engine.warehouse.table("node").count()
+    val edges = engine.warehouse.table("edge").count()
+    report("nodes" -> nodes, "edges" -> edges, "engineStages" -> engine.lastStageTimings)
+    require(nodes == n && edges == n)
+    Fixtures.delete(scaleDir)
+  }
+
+  step("dedup") {
+    val docs = syntheticDocs()
+    val kept = graft.operators.Dedup.exactDedup(docs, "id", "text").count()
+    require(kept == nDocs - nDocs / 10L, s"exactDedup kept $kept")
+    val pairsDf = graft.operators.Dedup.minHashNearDupPairs(docs, "id", "text")
+    val pairs = pairsDf.count()
+    // 3 planted pairs per group (J=1, .931, .931); band recall at
+    // J=.931 with 16 bands x 4 rows is 1-2e-10, so demand near-all.
+    val expected = 3L * (nDocs / 10L)
+    require(pairs <= expected && pairs >= expected - 5,
+      s"minhash pairs $pairs of $expected")
+    // connected components over the pairs: each group of 10 docs holds
+    // one 3-doc component (base, base+8, base+9) + 7 singletons
+    val clusters = graft.operators.Dedup
+      .nearDupClusters(docs, "id", pairsDf)
+      .groupBy(org.apache.spark.sql.functions.col("cluster")).count().count()
+    val expectedClusters = 8L * (nDocs / 10L)
+    require(math.abs(clusters - expectedClusters) <= 5,
+      s"clusters $clusters of $expectedClusters")
+    report("docs" -> nDocs, "exactKept" -> kept, "minhashPairs" -> pairs, "clusters" -> clusters)
+  }
+
+  step("corpus") {
+    // decontamination: bench = the base doc of the first 1000 groups,
+    // corpus = all dup/near-dup docs — each bench doc must be hit by
+    // exactly its own 2 partners (23/23 and 22/23 shared 8-grams; no
+    // cross-group 8-gram can match, tokens are seed-unique)
+    val docs = syntheticDocs()
+    val benchN = math.min(nDocs, 10000)
+    val contam = graft.operators.CorpusAnalysis.contamination(
+      docs.filter(col("id") % 10 >= 8), docs.filter(col("id") % 10 === 0
+        && col("id") < benchN), "id", "text").count()
+    require(contam == 2L * (benchN / 10), s"contamination pairs $contam")
+    // chunking: 30 tokens at maxTokens=16/stride=12 → exactly 3 windows
+    val chunks = graft.operators.CorpusAnalysis
+      .chunkDocs(docs, "id", "text", maxTokens = 16, stride = 12).count()
+    require(chunks == 3L * nDocs, s"chunks $chunks")
+    report("contamPairs" -> contam, "chunks" -> chunks)
+  }
+
+  step("spans") {
+    // span-level duplication: 30-token docs, n=12 → 19 windows/doc.
+    // Per group of 10: base and its exact copy (+8) share all 19
+    // windows; the near-dup (+9, last token changed) shares 18 and owns
+    // 1 unique; the 7 unique docs (md5 tokens, position-distinct) have
+    // zero repeated windows. Exact expectations: 3 dup docs per group,
+    // sum(dup_spans) = 19+19+18 = 56 per group.
+    val docs = syntheticDocs()
+    val spans = graft.operators.CorpusAnalysis
+      .dupSpans(docs, "id", "text", n = 12)
+      .agg(count(lit(1)), sum(when(col("dup_spans") > 0, 1L).otherwise(0L)),
+        sum(col("dup_spans")))
+      .collect()(0)
+    require(spans.getLong(0) == nDocs, s"dupSpans rows ${spans.getLong(0)}")
+    require(spans.getLong(1) == 3L * (nDocs / 10),
+      s"dup docs ${spans.getLong(1)}")
+    require(spans.getLong(2) == 56L * (nDocs / 10),
+      s"dup spans ${spans.getLong(2)}")
+    report("dupDocs" -> spans.getLong(1), "dupSpans" -> spans.getLong(2))
+  }
+
+  step("incremental") {
+    // incremental dedup: corpus = the 8 unique docs per group (800k),
+    // snapshot = the exact copy + near-dup (200k) → exactly the 100k
+    // near-dups are admitted (exact copies collapse on fingerprint)
+    val docs = syntheticDocs()
+    val admitted = graft.operators.Dedup.incrementalDedup(
+      docs.filter(col("id") % 10 >= 8), docs.filter(col("id") % 10 < 8),
+      "id", "text", expectedItems = nDocs.toLong, numBits = 8L * nDocs)
+      .count()
+    require(admitted == nDocs / 10L, s"incremental admitted $admitted")
+    report("admitted" -> admitted, "snapshot" -> 2L * (nDocs / 10))
+  }
+
+  step("incrementalNear") {
+    // incremental NEAR-dedup: corpus = the 8 unique docs per group
+    // (800k); snapshot = the 100k near-dups (trigram J=0.931 vs their
+    // base, all dropped) + 100k token-disjoint fresh docs (kept).
+    // Exactly the fresh half must survive.
+    val docs = syntheticDocs()
+    val freshToks = (0 until 30).map(j =>
+      substring(md5(concat_ws(":", lit("fresh"), col("id").cast("string"),
+        lit(j))), 1, 8))
+    val snapNear = docs.filter(col("id") % 10 === 9)
+    val snapFresh = spark.range(nDocs, nDocs + nDocs / 10L)
+      .select(col("id"), concat_ws(" ", freshToks: _*).as("text"))
+    val nearAdmitted = graft.operators.Dedup.incrementalNearDedup(
+      snapNear.unionByName(snapFresh), docs.filter(col("id") % 10 < 8),
+      "id", "text").count()
+    // >= with slack: a missed near-dup (LSH band miss, p ~ 2e-10/doc)
+    // would ADMIT extra rows — same tolerance as the pairs check above
+    require(nearAdmitted >= nDocs / 10L && nearAdmitted <= nDocs / 10L + 5,
+      s"near admitted $nearAdmitted")
+    report("admitted" -> nearAdmitted, "snapshot" -> 2L * (nDocs / 10))
+  }
+
+  step("stratified") {
+    // exact-N stratified sample over 16 synthetic strata: the bounded
+    // smallest-k aggregation must return exactly n rows per stratum
+    val docs = syntheticDocs()
+    val strat = graft.operators.CorpusAnalysis.stratifiedSampleN(
+      docs.withColumn("src", (col("id") % 16).cast("string")),
+      "id", "src", n = 1000, salt = "smoke")
+      .groupBy(col("src")).count().agg(count(lit(1)), min(col("count")),
+        max(col("count"))).collect()(0)
+    require(strat.getLong(0) == 16 && strat.getLong(1) == 1000L &&
+      strat.getLong(2) == 1000L, s"stratified $strat")
+    report("strata" -> strat.getLong(0), "perStratum" -> strat.getLong(1))
+  }
+
+  step("vectors") {
+    val vecs = syntheticVecs()
     val vPairs = graft.operators.Dedup.embeddingNearDupPairs(
       vecs, "id", "v", threshold = 0.95, planes = 16, tables = 4).count()
-    val tVp = (System.nanoTime() - t7) / 1e9
     val expPairs = nVec / 10L
     // a planted pair is missed only if >= 2 of 16 signs flip in EVERY
     // table; random pairs can't reach cosine 0.95 — demand near-all
@@ -235,36 +251,31 @@ object ScaleSmoke {
     // the AUTO default (planes = log2(n/target) = 12 at 1M) must land
     // the same recall — this exact run returned ZERO pairs when the
     // default was a fixed 6 planes (every bucket over the cap)
-    val t7b = System.nanoTime()
     val vAuto = graft.operators.Dedup.embeddingNearDupPairs(
       vecs, "id", "v", threshold = 0.95).count()
-    val tVa = (System.nanoTime() - t7b) / 1e9
     require(vAuto <= expPairs && vAuto >= expPairs - 20,
       s"auto-plane pairs $vAuto of $expPairs")
-    println(f"vectors-auto: nearDupPairs=$vAuto in $tVa%.1f s " +
-      f"(auto-sized geometry at n=$nVec)")
+    report("autoNearDupPairs" -> vAuto, "vecs" -> nVec)
     // ANN: 100 queries (group bases); the planted partner must be the
     // top-1 neighbor for every query (multi-probe covers 1-bit flips)
     val queries = vecs.filter(col("id") % 10 === 0 && col("id") < 1000)
-    val t8 = System.nanoTime()
     val top1 = graft.operators.Similarity.lshBucketedTopK(
       vecs, queries, "id", "v", k = 3, planes = 16, tables = 4)
       .filter(col("rank") === 1).collect()
-    val tKnn = (System.nanoTime() - t8) / 1e9
     require(top1.length == 100, s"got ${top1.length} queries back")
     top1.foreach { r =>
       require(r.getAs[Long]("neighbor_id") == r.getAs[Long]("query_id") + 9,
         s"wrong top-1: $r")
     }
-    println(f"vectors: nearDupPairs=$vPairs in $tVp%.1f s " +
-      f"(${nVec / tVp}%.0f vecs/s), knnTop1=100/100 planted in $tKnn%.1f s, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("nearDupPairs" -> vPairs, "knnTop1" -> top1.length)
+  }
 
-    // --- line-level boilerplate scrub at 1M docs: every doc gets a
+  step("lineScrub") {
+    // line-level boilerplate scrub at 1M docs: every doc gets a
     // shared FOOTER line (1M occurrences → banned) and a unique line
     // (kept); base text lines occur at most twice per group (base +
     // exact copy) < minCount 3 → kept. Exact truth: 2 lines per doc out.
-    val t12 = System.nanoTime()
+    val docs = syntheticDocs()
     val scrubbed = graft.operators.CorpusAnalysis.removeRepeatedLines(
       docs.select(col("id"), concat_ws("\n", col("text"), lit("FOOTER"),
         concat(lit("u"), col("id").cast("string"))).as("text")),
@@ -272,48 +283,48 @@ object ScaleSmoke {
     val lineAgg = scrubbed
       .select(size(split(col("text"), "\n", -1)).cast("long").as("n"))
       .agg(count(lit(1)).as("docs"), sum(col("n")).as("lines")).collect()(0)
-    val tLines = (System.nanoTime() - t12) / 1e9
     require(lineAgg.getLong(0) == nDocs, s"scrub docs ${lineAgg.getLong(0)}")
     require(lineAgg.getLong(1) == 2L * nDocs, s"scrub lines ${lineAgg.getLong(1)}")
-    println(f"lineScrub: $nDocs docs, footer banned, ${lineAgg.getLong(1)} " +
-      f"lines kept in $tLines%.1f s (${nDocs / tLines}%.0f docs/s)")
+    report("docs" -> nDocs, "linesKept" -> lineAgg.getLong(1))
+  }
 
-    // --- span removal (ExactSubstr second half) at 1M docs, exact
+  step("spanRemoval") {
+    // span removal (ExactSubstr second half) at 1M docs, exact
     // planted truth per 10-doc group (30-token docs, n=12 → 19 windows):
     // base and base+8 are identical → all 19 windows banned → both
     // scrub to EMPTY; base+9 differs only in token 29 → windows 0..17
     // banned → exactly 1 token survives; the 7 unique docs keep all 30.
     // Kept tokens per group = 0 + 0 + 1 + 7·30 = 211.
-    val t13 = System.nanoTime()
+    val docs = syntheticDocs()
     val spansRm = graft.operators.CorpusAnalysis.removeDupSpans(
       docs, "id", "text", n = 12)
     val spanAgg = spansRm
       .select(when(col("text") === "", lit(0L))
         .otherwise(size(split(col("text"), " ")).cast("long")).as("n"))
       .agg(count(lit(1)).as("docs"), sum(col("n")).as("toks")).collect()(0)
-    val tSpans = (System.nanoTime() - t13) / 1e9
     require(spanAgg.getLong(0) == nDocs, s"spanRm docs ${spanAgg.getLong(0)}")
     require(spanAgg.getLong(1) == 211L * nDocs / 10,
       s"spanRm kept tokens ${spanAgg.getLong(1)} of ${211L * nDocs / 10}")
-    println(f"spanRemoval: $nDocs docs, ${spanAgg.getLong(1)} tokens kept " +
-      f"in $tSpans%.1f s (${nDocs / tSpans}%.0f docs/s)")
+    report("docs" -> nDocs, "tokensKept" -> spanAgg.getLong(1))
+  }
 
+  step("spanRemovalKeepFirst") {
     // keep-first variant: base is the canonical first occurrence of
     // every shared window → intact (30); base+8 loses all; base+9
     // keeps 1; uniques keep 30. 30 + 0 + 1 + 7·30 = 241 per group.
-    val t14 = System.nanoTime()
+    val docs = syntheticDocs()
     val spanKeep = graft.operators.CorpusAnalysis.removeDupSpans(
       docs, "id", "text", n = 12, keepFirst = true)
       .select(when(col("text") === "", lit(0L))
         .otherwise(size(split(col("text"), " ")).cast("long")).as("n"))
       .agg(sum(col("n")).as("toks")).collect()(0)
-    val tKeep = (System.nanoTime() - t14) / 1e9
     require(spanKeep.getLong(0) == 241L * nDocs / 10,
       s"spanRm keepFirst kept ${spanKeep.getLong(0)} of ${241L * nDocs / 10}")
-    println(f"spanRemovalKeepFirst: ${spanKeep.getLong(0)} tokens kept " +
-      f"in $tKeep%.1f s")
+    report("tokensKept" -> spanKeep.getLong(0))
+  }
 
-    // --- centroid assignment at scale: 1024 centroids (the √N counts a
+  step("centroids") {
+    // centroid assignment at scale: 1024 centroids (the √N counts a
     // web-scale SemDeDup run wants) over 1M vectors with PLANTED cluster
     // structure. Centers are xxhash64-derived (computed once through
     // Spark, collected — 1024 × 64 doubles), each vector = its group's
@@ -334,44 +345,41 @@ object ScaleSmoke {
     val cvecs = spark.range(nVec).select(col("id"),
       array((0 until 64).map(j =>
         centerComp(g, j) + (col("id") % 5).cast("double") * 0.001): _*).as("v"))
-    val t10 = System.nanoTime()
     val mismatched = cvecs
       .select(g.cast("int").as("g"),
         element_at(graft.expressions.VectorHashExprs.nearestCentroidsNative(
           col("v"), centers, 1), 1)("cid").as("cid"))
       .filter(col("g") =!= col("cid")).count()
-    val tAssign = (System.nanoTime() - t10) / 1e9
     require(mismatched == 0, s"$mismatched of $nVec misassigned at $nCent centroids")
-    println(f"centroids: $nCent centroids x $nVec vecs, 0 misassigned " +
-      f"in $tAssign%.1f s (${nVec / tAssign}%.0f vecs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("centroids" -> nCent, "vecs" -> nVec)
+  }
 
+  step("kmeansDistributed") {
     // distributed k-means: full-corpus Lloyd's at k=256 — per iteration
     // one narrow assignment pass + one k-row keyed aggregation; driver
     // holds only the k x dim centroid matrix (flat heap regardless of
     // corpus size)
-    val t11 = System.nanoTime()
+    val vecs = syntheticVecs()
     val km = graft.operators.Similarity.kmeansCentroidsDistributed(
       vecs, "id", "v", k = 256, iters = 2)
-    val tKm = (System.nanoTime() - t11) / 1e9
     require(km.length == 256 && km.forall(_._2.length == 64),
       s"kmeans returned ${km.length}")
-    println(f"kmeansDistributed: k=256 x 2 iters over $nVec vecs " +
-      f"in $tKm%.1f s, heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("vecs" -> nVec)
+  }
 
-    // --- sequence packing at scale: every doc is exactly 30 tokens, so
+  step("packing") {
+    // sequence packing at scale: every doc is exactly 30 tokens, so
     // each 2048-token pack holds exactly 68 docs and the pack count per
     // shard is ceil(count/68) — assert the packing exactly.
-    val t9 = System.nanoTime()
     // cache: two actions below (pack aggregate + shard counts) must not
     // re-run the tokenize+shuffle+sort pipeline twice
+    val docs = syntheticDocs()
     val packed = graft.operators.CorpusAnalysis.packSequences(
       docs, "id", "text", maxTokens = 2048, shards = 64).cache()
     val packAgg = packed.groupBy(col("shard"), col("pack_id"))
       .agg(sum(col("doc_tokens")).as("tok"), count(lit(1)).as("n"))
       .agg(count(lit(1)).as("packs"), max(col("tok")).as("maxTok"),
         sum(col("n")).as("docs")).collect()(0)
-    val tPk = (System.nanoTime() - t9) / 1e9
     val shardCounts = packed.groupBy(col("shard")).count().collect()
       .map(_.getLong(1))
     val expPacks = shardCounts.map(c => (c + 67) / 68).sum
@@ -379,48 +387,46 @@ object ScaleSmoke {
     require(packAgg.getAs[Long]("maxTok") <= 2048, s"overfull pack $packAgg")
     require(packAgg.getAs[Long]("packs") == expPacks,
       s"packs ${packAgg.getAs[Long]("packs")} of $expPacks")
-    println(f"packing: docs=$nDocs packs=$expPacks in $tPk%.1f s " +
-      f"(${nDocs / tPk}%.0f docs/s)")
+    report("docs" -> nDocs, "packs" -> expPacks)
+  }
 
-    // --- PQ at scale: encode the 1M synthetic vectors (narrow kernel,
+  step("pq") {
+    // PQ at scale: encode the 1M synthetic vectors (narrow kernel,
     // no shuffle) with a fitted 8x16 codebook, then ADC top-1 for 100
     // group-base queries. Planted truth: the near-identical partner
     // (id+9, dim 0 shifted 0.05) is top-1 unless it straddles a
     // subspace-0 centroid boundary AND a random vector lands closer in
     // code space — demand >= 95/100 and exact-identical self codes.
-    val t16 = System.nanoTime()
+    val vecs = syntheticVecs()
+    val queries = vecs.filter(col("id") % 10 === 0 && col("id") < 1000)
     val pqCb = graft.operators.ProductQuantization.fitCodebook(
       vecs, "id", "v", m = 8, k = 16)
     val encoded = graft.operators.ProductQuantization.encode(
       vecs, "id", "v", pqCb)
     val encCount = encoded.filter(!exists(col("codes"), c => c.isNull)).count()
-    val tEnc = (System.nanoTime() - t16) / 1e9
     require(encCount == nVec, s"encoded $encCount of $nVec")
-    val t17 = System.nanoTime()
     val pqTop1 = graft.operators.ProductQuantization.adcTopK(
       vecs, queries, "id", "v", k = 1, pqCb)
       .filter(col("rank") === 1).collect()
-    val tAdc = (System.nanoTime() - t17) / 1e9
     require(pqTop1.length == 100, s"got ${pqTop1.length} PQ queries back")
     val pqHits = pqTop1.count(r =>
       r.getAs[Long]("neighbor_id") == r.getAs[Long]("query_id") + 9)
     require(pqHits >= 95, s"PQ planted top-1: $pqHits/100")
-    println(f"pq: encode $nVec vecs in $tEnc%.1f s " +
-      f"(${nVec / tEnc}%.0f vecs/s), adcTop1=$pqHits/100 planted " +
-      f"in $tAdc%.1f s, heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("vecs" -> nVec, "adcTop1" -> pqHits)
+  }
 
-    // --- BM25 at scale: postings over 1M 30-token docs (~30M token
+  step("bm25") {
+    // BM25 at scale: postings over 1M 30-token docs (~30M token
     // instances, hash-keyed), 100 group-base doc texts as queries.
     // Exact truth: a base query's text exists verbatim in docs base and
     // base+8 (exact duplicate) — identical scores, tie-break id ASC —
     // and base+9 shares 29/30 tokens: top-3 = (base, base+8, base+9).
-    val t15 = System.nanoTime()
+    val docs = syntheticDocs()
     val bmQueries = docs.filter(col("id") % 10 === 0 && col("id") < 1000)
       .select(col("id").as("query_id"), col("text").as("qtext"))
     val bm = graft.operators.Retrieval.bm25TopK(docs, bmQueries, "id",
       "text", "query_id", "qtext", k = 3)
       .collect().groupBy(_.getAs[Long]("query_id"))
-    val tBm = (System.nanoTime() - t15) / 1e9
     require(bm.size == 100, s"got ${bm.size} BM25 queries back")
     bm.foreach { case (q, rows) =>
       val byRank = rows.sortBy(_.getAs[Int]("rank"))
@@ -428,11 +434,11 @@ object ScaleSmoke {
       require(byRank == Seq(q, q + 8, q + 9),
         s"BM25 top-3 for $q: $byRank")
     }
-    println(f"bm25: ${nDocs}%d docs indexed + 100 queries in $tBm%.1f s " +
-      f"(${nDocs / tBm}%.0f docs/s), top-3 exact for 100/100, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs)
+  }
 
-    // --- bigram LM scoring at 1M docs: model trained on the id%10==0
+  step("bigramLm") {
+    // bigram LM scoring at 1M docs: model trained on the id%10==0
     // slice (100k docs). Planted truth: an exact copy (id%10==8) has
     // the same text as its base → IDENTICAL sum_prob bit-for-bit; a
     // base doc's 29 bigrams are all in the model (each context seen
@@ -440,14 +446,13 @@ object ScaleSmoke {
     // 1/V per bigram — so every base strictly out-scores its group's
     // unique docs. Assert copy-equality exactly for 1000 groups and
     // the ordering corpus-wide via averages.
-    val t20 = System.nanoTime()
+    val docs = syntheticDocs()
     val lmScores = graft.operators.LanguageModel.bigramLmScores(
       docs, docs.filter(col("id") % 10 === 0), "id", "text").cache()
     val lmAgg = lmScores.agg(count(lit(1)),
       avg(when(col("id") % 10 === 0, col("avg_prob"))),
       avg(when(col("id") % 10 < 8, when(col("id") % 10 > 0, col("avg_prob")))))
       .collect()(0)
-    val tLm = (System.nanoTime() - t20) / 1e9
     require(lmAgg.getLong(0) == nDocs, s"lm rows ${lmAgg.getLong(0)}")
     require(lmAgg.getDouble(1) > lmAgg.getDouble(2),
       s"in-model docs must out-score unique docs: $lmAgg")
@@ -458,44 +463,44 @@ object ScaleSmoke {
       .filter(col("sum_prob") =!= col("base_sum")).count()
     require(copyMismatch == 0, s"$copyMismatch exact copies scored differently")
     lmScores.unpersist()
-    println(f"bigramLm: $nDocs docs scored against a 100k-doc model " +
-      f"in $tLm%.1f s (${nDocs / tLm}%.0f docs/s), 1000 copy-pairs bit-equal, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs)
+  }
 
-    // --- token-budget sample at 1M docs: every doc is exactly 30
+  step("tokenBudget") {
+    // token-budget sample at 1M docs: every doc is exactly 30
     // tokens, so a 15M-token budget keeps EXACTLY 500k docs summing to
     // exactly 15M — the histogram walk + boundary window must land the
     // precise prefix.
-    val t21 = System.nanoTime()
+    val docs = syntheticDocs()
     val tb = graft.operators.DataSelection.sampleTokenBudget(
       docs, "id", "text", budgetTokens = 15000000L)
       .agg(count(lit(1)), sum(col("n_tokens"))).collect()(0)
-    val tTb = (System.nanoTime() - t21) / 1e9
     require(tb.getLong(0) == nDocs / 2L, s"budget kept ${tb.getLong(0)}")
     require(tb.getLong(1) == 15000000L, s"budget tokens ${tb.getLong(1)}")
-    println(f"tokenBudget: kept ${tb.getLong(0)} docs = ${tb.getLong(1)} " +
-      f"tokens in $tTb%.1f s (${nDocs / tTb}%.0f docs/s)")
+    report("keptDocs" -> tb.getLong(0), "tokens" -> tb.getLong(1))
+  }
 
-    // --- multi-corpus merge at 1M docs: curated = the 800k unique docs
+  step("mergeCorpora") {
+    // multi-corpus merge at 1M docs: curated = the 800k unique docs
     // (id%10<8), crawl = the full 1M (re-containing all curated texts +
     // 100k exact copies + 100k near-dups). Exact truth: 900k distinct
     // fingerprints — 800k keep the curated copy, 100k (the near-dups,
     // textually distinct) keep the crawl copy.
-    val t22 = System.nanoTime()
+    val docs = syntheticDocs()
     val mg = graft.operators.Dedup.mergeCorpora(
       Seq(docs.filter(col("id") % 10 < 8), docs), "id", "text")
       .groupBy(col("source")).count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val tMg = (System.nanoTime() - t22) / 1e9
     require(mg == Map(0 -> 800000L * (nDocs / 1000000L),
         1 -> 100000L * (nDocs / 1000000L)) ||
       (nDocs != 1000000 && mg.values.sum == 9L * nDocs / 10),
       s"merge counts $mg")
-    println(f"mergeCorpora: ${mg.values.sum} kept (${mg.getOrElse(0, 0L)} " +
-      f"curated, ${mg.getOrElse(1, 0L)} crawl-only) in $tMg%.1f s " +
-      f"(${2L * nDocs / tMg}%.0f docs/s over both sources)")
+    report("kept" -> mg.values.sum, "curated" -> mg.getOrElse(0, 0L),
+      "crawlOnly" -> mg.getOrElse(1, 0L))
+  }
 
-    // --- DSIR importance resampling at 1M docs with planted styles:
+  step("dsir") {
+    // DSIR importance resampling at 1M docs with planted styles:
     // even ids are "code" (shared code tokens), odd ids are "prose"
     // (shared prose tokens); each doc also carries a unique md5 token so
     // texts are distinct. The target is 50k fresh prose docs. Selecting
@@ -516,21 +521,18 @@ object ScaleSmoke {
       styled(col("id") % 2 === 1).as("text"))
     val dsirTarget = spark.range(nSel, nSel + nSel / 20L)
       .select(col("id"), styled(lit(true)).as("text"))
-    val t18 = System.nanoTime()
     val dsirSel = graft.operators.DataSelection.dsirResample(
       dsirRaw, dsirTarget, "id", "text", keepN = nSel / 4, buckets = 10000)
       .agg(count(lit(1)), sum((col("id") % 2).cast("long"))).collect()(0)
-    val tDsir = (System.nanoTime() - t18) / 1e9
     require(dsirSel.getLong(0) == nSel / 4L,
       s"dsir selected ${dsirSel.getLong(0)} of ${nSel / 4}")
     require(dsirSel.getLong(1) >= nSel / 4L * 99 / 100,
       s"dsir prose share ${dsirSel.getLong(1)}/${nSel / 4}")
-    println(f"dsir: selected ${dsirSel.getLong(0)} of $nSel " +
-      f"(${dsirSel.getLong(1)} prose) in $tDsir%.1f s " +
-      f"(${nSel / tDsir}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("selected" -> dsirSel.getLong(0), "pool" -> nSel, "prose" -> dsirSel.getLong(1))
+  }
 
-    // --- token-id mapping at 1M docs: vocab = doc 0's 30 tokens with
+  step("tokenIds") {
+    // token-id mapping at 1M docs: vocab = doc 0's 30 tokens with
     // ids 1..30. Docs 0 and its exact copy (+8) map fully (60 non-OOV
     // ids), the near-dup (+9) maps 29; every other token is an md5-hex
     // 8-char string — 8-hex-char prefix collisions with the 30 vocab
@@ -538,51 +540,49 @@ object ScaleSmoke {
     // bound is [89, 89+slack] rather than exact. Order preservation is
     // pinned exactly by the spec; here the invariant is corpus-scale
     // token conservation: Σ n_tokens = 30M over exactly nDocs rows.
+    val docs = syntheticDocs()
     val vocab = docs.filter(col("id") === 0)
       .select(posexplode(graft.functions.TextFunctions.tokens(col("text"))))
       .select(col("col").as("token"), (col("pos") + 1).cast("int").as("token_id"))
-    val t19 = System.nanoTime()
     val tokAgg = graft.operators.Retrieval.tokensToIds(
         docs, "id", "text", vocab, oovId = 0)
       .agg(count(lit(1)), sum(col("n_tokens")),
         sum(size(filter(col("token_ids"), i => i =!= 0)).cast("long")))
       .collect()(0)
-    val tTok = (System.nanoTime() - t19) / 1e9
     require(tokAgg.getLong(0) == nDocs, s"tokenIds rows ${tokAgg.getLong(0)}")
     require(tokAgg.getLong(1) == 30L * nDocs,
       s"tokenIds total ${tokAgg.getLong(1)}")
     require(tokAgg.getLong(2) >= 89 && tokAgg.getLong(2) <= 99,
       s"tokenIds mapped ${tokAgg.getLong(2)} not in [89,99]")
-    println(f"tokenIds: $nDocs docs, ${tokAgg.getLong(1)} tokens, " +
-      f"${tokAgg.getLong(2)} vocab-mapped in $tTok%.1f s " +
-      f"(${nDocs / tTok}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs, "tokens" -> tokAgg.getLong(1), "vocabMapped" -> tokAgg.getLong(2))
+  }
 
-    // --- span-level decontamination at 1M docs: bench = the base docs
+  step("contamSpans") {
+    // span-level decontamination at 1M docs: bench = the base docs
     // of the first 1000 groups; corpus = every group's +8/+9 partners.
     // In a bench group the exact copy (+8) shares all 19 12-token
     // windows (30 tokens covered → 0 kept) and the near-dup (+9)
     // shares windows 0..17 (tokens 0..28 covered → 1 kept); outside
     // bench nothing matches (tokens are seed-unique) → 60 kept/group.
+    val docs = syntheticDocs()
+    val benchN = math.min(nDocs, 10000)
     val benchG = benchN / 10
-    val t23 = System.nanoTime()
     val decon = graft.operators.CorpusAnalysis.removeContaminatedSpans(
       docs.filter(col("id") % 10 >= 8),
       docs.filter(col("id") % 10 === 0 && col("id") < benchN),
       "id", "text", n = 12)
       .agg(count(lit(1)), coalesce(sum(size(graft.functions.TextFunctions
         .tokens(col("text")))), lit(0L)).cast("long")).collect()(0)
-    val tDecon = (System.nanoTime() - t23) / 1e9
     require(decon.getLong(0) == 2L * (nDocs / 10),
       s"decon rows ${decon.getLong(0)}")
     val wantKept = 1L * benchG + 60L * (nDocs / 10 - benchG)
     require(decon.getLong(1) == wantKept,
       s"decon kept tokens ${decon.getLong(1)} != $wantKept")
-    println(f"contamSpans: ${decon.getLong(0)} docs scrubbed against " +
-      f"$benchG bench docs, ${decon.getLong(1)} tokens kept (exact) " +
-      f"in $tDecon%.1f s (${2L * nDocs / 10 / tDecon}%.0f docs/s)")
+    report("docs" -> decon.getLong(0), "benchDocs" -> benchG, "tokensKept" -> decon.getLong(1))
+  }
 
-    // --- vocabulary drift at 1M docs/side: A = "alpha beta <uniq>",
+  step("vocabDrift") {
+    // vocabulary drift at 1M docs/side: A = "alpha beta <uniq>",
     // B = "alpha gamma <uniq>" — 1M+2 distinct tokens per side
     // (vocab-sized count shuffle exercised), top-2 union =
     // {alpha, beta, gamma}, residual = the unique tail. Exact truth:
@@ -593,12 +593,10 @@ object ScaleSmoke {
       .select(concat_ws(" ", lit("alpha"), lit(word),
         substring(md5(concat_ws(":", lit(word), col("id").cast("string"))),
           1, 12)).as("text"))
-    val t24 = System.nanoTime()
     val drift = graft.operators.CorpusAnalysis.driftReport(
       graft.operators.CorpusAnalysis.vocabDrift(
         driftSide("beta"), driftSide("gamma"), "text", topK = 2))
       .collect()(0)
-    val tDrift = (System.nanoTime() - t24) / 1e9
     require(drift.getLong(0) == 4L, s"drift rows ${drift.getLong(0)}")
     require(drift.getLong(1) == 3L * nDocs && drift.getLong(2) == 3L * nDocs,
       s"drift totals $drift")
@@ -607,18 +605,18 @@ object ScaleSmoke {
       s"tvd ${drift.getDouble(3)}")
     require(math.abs(drift.getDouble(4) - 2 * (third * third / third)) < 1e-12,
       s"chi2 ${drift.getDouble(4)}")
-    println(f"vocabDrift: 2 x $nDocs docs (${2L * (nDocs + 2)} distinct " +
-      f"tokens), tvd=${drift.getDouble(3)}%.4f chi2=${drift.getDouble(4)}%.4f " +
-      f"in $tDrift%.1f s (${2L * nDocs / tDrift}%.0f docs/s)")
+    report("docs" -> nDocs, "distinctTokens" -> 2L * (nDocs + 2), "tvd" -> drift.getDouble(3),
+      "chi2" -> drift.getDouble(4))
+  }
 
-    // --- corpus data card at 1M docs: every field exact except the
+  step("corpusCard") {
+    // corpus data card at 1M docs: every field exact except the
     // distinct-token count (8-hex-char md5 prefixes collide across
     // ~24.1M distinct seeds — allow the birthday dent), histogram =
     // one bucket-4 row (16 <= 30 < 32).
-    val t25 = System.nanoTime()
+    val docs = syntheticDocs()
     val card = graft.operators.CorpusAnalysis.corpusReport(docs, "text")
       .collect()(0)
-    val tCard = (System.nanoTime() - t25) / 1e9
     require(card.getLong(0) == nDocs && card.getLong(1) == 0L &&
       card.getLong(2) == 30L * nDocs, s"card $card")
     require(card.getLong(4) == 30L && card.getLong(5) == 30L &&
@@ -633,19 +631,18 @@ object ScaleSmoke {
     require(hist.length == 1 && hist(0).getLong(0) == 4L &&
       hist(0).getLong(1) == nDocs && hist(0).getLong(2) == 30L * nDocs,
       s"hist ${hist.mkString(",")}")
-    println(f"corpusCard: $nDocs docs, ${card.getLong(3)} distinct of " +
-      f"~$distinctSeeds seeds, one bucket-4 histogram row in $tCard%.1f s " +
-      f"(${nDocs / tCard}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs, "distinctTokens" -> card.getLong(3), "seeds" -> distinctSeeds)
+  }
 
-    // --- rank buckets at 1M docs with 1000-wide tie groups: score =
+  step("rankBuckets") {
+    // rank buckets at 1M docs with 1000-wide tie groups: score =
     // id % 1000, so every score value ties nDocs/1000 rows and several
     // bucket boundaries land INSIDE a tie run — the closed-form rank is
     // (id%1000)·(nDocs/1000) + id/1000 + 1, so the expected bucket
     // ceil(rank·4/n) is computable per row and the whole 1M-row
     // assignment must match it exactly (and quarter the corpus).
+    val docs = syntheticDocs()
     if (nDocs % 4000 == 0) {
-      val t26 = System.nanoTime()
       val rb = graft.operators.DataSelection.rankBuckets(
         docs.select(col("id"), (col("id") % 1000).cast("double").as("score")),
         "id", "score", nBuckets = 4)
@@ -657,24 +654,23 @@ object ScaleSmoke {
       val rbAgg = rb.agg(count(lit(1)),
         sum(when(col("bucket") =!= expected, 1L).otherwise(0L)),
         countDistinct(col("bucket"))).collect()(0)
-      val tRb = (System.nanoTime() - t26) / 1e9
       require(rbAgg.getLong(0) == nDocs, s"rankBuckets rows ${rbAgg.getLong(0)}")
       require(rbAgg.getLong(1) == 0L,
         s"${rbAgg.getLong(1)} rows off the closed-form bucket")
       require(rbAgg.getLong(2) == 4L, s"buckets ${rbAgg.getLong(2)}")
-      println(f"rankBuckets: $nDocs docs, 4 exact quarter buckets through " +
-        f"1000-wide ties in $tRb%.1f s (${nDocs / tRb}%.0f docs/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+      report("docs" -> nDocs)
     }
+  }
 
-    // --- NB quality classifier at 1M docs: positive = the 100k k=0
+  step("nbQuality") {
+    // NB quality classifier at 1M docs: positive = the 100k k=0
     // bases, negative = the 700k k∈1..7 uniques; k=8/9 (trained on
     // NEITHER class) carry base tokens. Planted truth: base tokens sit
     // only in the positive counts (r > 1), negative tokens only in the
     // negative counts (r = denomN/(2·denomP) < 1 since nNeg/nPos = 7),
     // so the verdict is exactly k ∈ {0,8,9} — 3·n/10 docs — and the
     // k=8 exact copies score bit-identically to their base.
-    val t27 = System.nanoTime()
+    val docs = syntheticDocs()
     val nb = graft.operators.QualityClassifier.nbQualityScores(
       docs, docs.filter(col("id") % 10 === 0),
       docs.filter(col("id") % 10 >= 1 && col("id") % 10 <= 7),
@@ -683,7 +679,6 @@ object ScaleSmoke {
       sum(when(col("is_positive"), 1L).otherwise(0L)),
       sum(when(col("is_positive") =!= (col("id") % 10 === 0 ||
         col("id") % 10 >= 8), 1L).otherwise(0L))).collect()(0)
-    val tNb = (System.nanoTime() - t27) / 1e9
     require(nbAgg.getLong(0) == nDocs, s"nb rows ${nbAgg.getLong(0)}")
     require(nbAgg.getLong(2) == 0L,
       s"${nbAgg.getLong(2)} verdicts off the planted classes")
@@ -696,70 +691,66 @@ object ScaleSmoke {
     require(nbCopyMismatch == 0,
       s"$nbCopyMismatch exact copies scored differently")
     nb.unpersist()
-    println(f"nbQuality: $nDocs docs vs 100k/700k classes, verdict exactly " +
-      f"the planted 3/10 split, 1000 copy-pairs bit-equal, in $tNb%.1f s " +
-      f"(${nDocs / tNb}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs)
+  }
 
-    // --- semantic decontamination at 1M vectors x 100-vector bench
+  step("semanticContamination") {
+    // semantic decontamination at 1M vectors x 100-vector bench
     // (the brute-force broadcast scan: 100M scored pairs). Planted
     // truth at τ=0.8: the 100 bench members themselves (cos 1) and
     // their 100 k=9 partners (dim-0 shift 0.05, cos ≈ 1) — random
     // 64-dim cosines sit ~6σ below the threshold, so the flagged set
     // is EXACTLY those 200 and every argmax is the group base.
-    val t28 = System.nanoTime()
+    val vecs = syntheticVecs()
+    val queries = vecs.filter(col("id") % 10 === 0 && col("id") < 1000)
     val scFlag = graft.operators.Similarity.semanticContamination(
       vecs, queries.select(col("id"), col("v")), "id", "v", threshold = 0.8)
       .filter(col("contaminated"))
     val scAgg = scFlag.agg(count(lit(1)),
       sum(when(col("bench_id") =!= col("id") - (col("id") % 10), 1L)
         .otherwise(0L))).collect()(0)
-    val tSc = (System.nanoTime() - t28) / 1e9
     require(scAgg.getLong(0) == 200L, s"flagged ${scAgg.getLong(0)} of 200")
     require(scAgg.getLong(1) == 0L,
       s"${scAgg.getLong(1)} flagged docs with a non-base argmax")
-    println(f"semanticContamination: $nVec vecs x 100 bench = " +
-      f"${nVec / 10000}%dM pairs, exactly 200 planted flags, argmax all " +
-      f"group bases, in $tSc%.1f s (${nVec / tSc}%.0f vecs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("vecs" -> nVec, "millionPairs" -> nVec / 10000)
+  }
 
-    // --- bad-word filter at 1M docs: the list is group 0's token 0
+  step("badWords") {
+    // bad-word filter at 1M docs: the list is group 0's token 0
     // (present in docs 0, +8, +9) plus group 10's adjacent "tok0 tok1"
     // phrase (docs 10, 18, 19) — exactly 6 planted flags. 8-hex-char
     // md5 prefixes can collide across 30M tokens (p ≈ 0.04 per entry),
     // so the planted ids must ALL flag and the total gets tiny slack.
+    val docs = syntheticDocs()
     def tok8(seed: Long, j: Int): String = {
       val d = java.security.MessageDigest.getInstance("MD5")
         .digest(s"$seed:$j".getBytes("UTF-8"))
       d.take(4).map(b => f"$b%02x").mkString
     }
-    val t30 = System.nanoTime()
     val bwFlag = graft.operators.CorpusPrep.badWordsReport(docs, "id",
       "text", Seq(tok8(0L, 0), s"${tok8(10L, 0)} ${tok8(10L, 1)}"))
       .filter(!col("pass"))
     val bwAgg = bwFlag.agg(count(lit(1)),
       sum(when(col("id").isin(0L, 8L, 9L, 10L, 18L, 19L), 1L)
         .otherwise(0L))).collect()(0)
-    val tBw = (System.nanoTime() - t30) / 1e9
     require(bwAgg.getLong(1) == 6L,
       s"only ${bwAgg.getLong(1)} of the 6 planted docs flagged")
     require(bwAgg.getLong(0) <= 8L,
       s"${bwAgg.getLong(0)} docs flagged — expected ~6 (+collision slack)")
-    println(f"badWords: $nDocs docs, ${bwAgg.getLong(0)} flagged " +
-      f"(6 planted) in $tBw%.1f s (${nDocs / tBw}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs, "flagged" -> bwAgg.getLong(0))
+  }
 
-    // --- split assignment at 1M docs: exhaustive (every row lands in
+  step("splitAssign") {
+    // split assignment at 1M docs: exhaustive (every row lands in
     // exactly one split), binomially tight around 80/10/10, and
     // growth-stable (the first 1000 ids assign identically when run
     // over the subset alone — THE property that keeps eval sets frozen
     // as the corpus grows).
-    val t31 = System.nanoTime()
+    val docs = syntheticDocs()
     val spl = graft.operators.CorpusPrep.splitAssign(docs.select(col("id")),
       "id", Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "sm")
     val splCounts = spl.groupBy(col("split")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val tSpl = (System.nanoTime() - t31) / 1e9
     require(splCounts.values.sum == nDocs, s"split counts $splCounts")
     // 6.5 sigma at 1M rows (sigma = sqrt(n p q) ~ 400 / 300)
     require(math.abs(splCounts("train") - nDocs * 8L / 10) <= nDocs / 380,
@@ -772,140 +763,132 @@ object ScaleSmoke {
       Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), salt = "sm")
     require(splSub.except(spl.filter(col("id") < 1000)).count() == 0,
       "subset assignment drifted from full-corpus assignment")
-    println(f"splitAssign: $nDocs docs -> $splCounts in $tSpl%.1f s " +
-      f"(${nDocs / tSpl}%.0f docs/s), subset-stable, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs, "splits" -> splCounts)
+  }
 
-    // --- phrase detection at 1M docs (29M bigram instances, ~24M
+  step("phraseScores") {
+    // phrase detection at 1M docs (29M bigram instances, ~24M
     // distinct bigrams): each group's base/copy/near-dup trio repeats
     // its 28 leading bigrams exactly 3 times with unigram counts 3, so
     // every top row scores ((3-delta)*N)/(3*3) with N = 30M — the
     // planted maximum (bigram-level md5-prefix collisions need BOTH
     // 8-hex tokens to collide, p ~ 1e-7).
-    val t32 = System.nanoTime()
+    val docs = syntheticDocs()
     val phTop = graft.operators.CorpusPrep.phraseScores(docs, "text",
       minCount = 3, delta = 1, topK = 100).collect()
-    val tPh = (System.nanoTime() - t32) / 1e9
     val phExpect = ((3.0 - 1.0) * (30.0 * nDocs)) / (3.0 * 3.0)
     require(phTop.length == 100, s"phrases rows ${phTop.length}")
     val phBad = phTop.count(r =>
       r.getLong(2) != 3L || r.getDouble(5) != phExpect)
     require(phBad == 0,
       s"$phBad of 100 top phrases off the planted (c_ab=3, $phExpect)")
-    println(f"phraseScores: $nDocs docs, ${29L * nDocs} bigram instances, " +
-      f"top-100 all at the planted score in $tPh%.1f s " +
-      f"(${nDocs / tPh}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs, "bigramInstances" -> 29L * nDocs)
+  }
 
-    // --- web-corpus triage at 1M docs: urls put id mod 1000 in the
+  /** `docs` with a url per doc: id mod 1000 in the domain, multiples of 5
+    * behind an api. subdomain.
+    */
+  private def siteUrls(docs: DataFrame): DataFrame = docs.select(col("id"),
+    concat(lit("https://"),
+      when(col("id") % 5 === 0, lit("api.")).otherwise(lit("")),
+      lit("example"), (col("id") % 1000).cast("string"),
+      lit(".com/p/"), col("id").cast("string")).as("url"),
+    col("text"))
+
+  step("webCorpus") {
+    // web-corpus triage at 1M docs: urls put id mod 1000 in the
     // domain, with multiples of 5 behind an api. subdomain — id%1000==b
     // forces id%5==b%5, so each b yields exactly ONE domain row
     // (api.exampleB for b%5==0, bare exampleB otherwise) of exactly
     // 1000 docs x 30 tokens. Blocklist entries example0..9.com block
     // ids with id%1000 < 10 — subdomain docs via the suffix rule —
     // exactly 10k verdicts.
-    val urls = docs.select(col("id"),
-      concat(lit("https://"),
-        when(col("id") % 5 === 0, lit("api.")).otherwise(lit("")),
-        lit("example"), (col("id") % 1000).cast("string"),
-        lit(".com/p/"), col("id").cast("string")).as("url"),
-      col("text"))
-    val t33 = System.nanoTime()
+    val docs = syntheticDocs()
+    val urls = siteUrls(docs)
     val dr = graft.operators.WebCorpus.domainReport(urls, "url", "text")
     val drAgg = dr.agg(count(lit(1)),
       sum(when(col("n_docs") === 1000L &&
         col("n_tokens") === 30000L * (nDocs / 1000000L) &&
         col("n_empty") === 0L, 1L).otherwise(0L))).collect()(0)
-    val tDr = (System.nanoTime() - t33) / 1e9
     require(nDocs != 1000000 ||
       (drAgg.getLong(0) == 1000L && drAgg.getLong(1) == 1000L),
       s"domainReport ${drAgg.getLong(0)} rows, ${drAgg.getLong(1)} exact")
-    val t34 = System.nanoTime()
-    import spark.implicits._
     val blocked = graft.operators.WebCorpus.blocklistVerdicts(urls, "id",
       "url", (0 until 10).map(b => s"example$b.com").toDF("domain"))
       .filter(col("blocked")).count()
-    val tBl = (System.nanoTime() - t34) / 1e9
     require(blocked == 10L * (nDocs / 1000L), s"blocked $blocked")
-    println(f"webCorpus: $nDocs urls -> ${drAgg.getLong(0)} domains " +
-      f"(all exact) in $tDr%.1f s, $blocked blocked (exact) in " +
-      f"$tBl%.1f s (${nDocs / tBl}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("urls" -> nDocs, "domains" -> drAgg.getLong(0), "blocked" -> blocked)
+  }
 
-    // --- domain cap at 1M docs over the same 1000-domain url mix:
+  step("domainCap") {
+    // domain cap at 1M docs over the same 1000-domain url mix:
     // capping at 100 keeps EXACTLY 100 per domain (every domain holds
     // 1000 docs), ranks 1..100, via the bounded smallest-k agg.
-    val t35 = System.nanoTime()
+    val urls = siteUrls(syntheticDocs())
     val capped = graft.operators.WebCorpus.domainCap(urls, "id", "url", 100)
     val capAgg = capped.agg(count(lit(1)),
       sum(when(col("rank") >= 1 && col("rank") <= 100, 0L).otherwise(1L)),
       countDistinct(col("domain"))).collect()(0)
-    val tCap = (System.nanoTime() - t35) / 1e9
     require(nDocs != 1000000 ||
       (capAgg.getLong(0) == 100000L && capAgg.getLong(1) == 0L &&
         capAgg.getLong(2) == 1000L),
       s"domainCap kept ${capAgg.getLong(0)} rows, ${capAgg.getLong(2)} domains")
-    println(f"domainCap: $nDocs docs -> ${capAgg.getLong(0)} kept " +
-      f"(100 x ${capAgg.getLong(2)} exact) in $tCap%.1f s " +
-      f"(${nDocs / tCap}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs, "kept" -> capAgg.getLong(0), "domains" -> capAgg.getLong(2))
+  }
 
-    // --- HTML extraction at 1M docs: every page carries a heading, a
+  step("htmlExtract") {
+    // HTML extraction at 1M docs: every page carries a heading, a
     // pure-link nav line (DROPPED by link density), and the 30-token
     // body — so n_lines sums to exactly 3N and n_kept to exactly 2N.
     // 8-hex-token bodies contain no '<' or '&' by construction.
+    val docs = syntheticDocs()
     val pages = docs.select(col("id"),
       concat(lit("<html><body><h1>Doc "), col("id").cast("string"),
         lit("</h1><div class=\"nav\"><a href=\"/a\">Nav one</a> " +
           "<a href=\"/b\">Nav two</a></div><p>"),
         col("text"), lit("</p></body></html>")).as("html"))
-    val t36 = System.nanoTime()
     val he = graft.operators.HtmlExtract.extractText(pages, "id", "html")
     val heAgg = he.agg(count(lit(1)), sum(col("n_lines")),
       sum(col("n_kept")),
       sum(when(col("text").contains("Nav one"), 1L).otherwise(0L)))
       .collect()(0)
-    val tHe = (System.nanoTime() - t36) / 1e9
     require(heAgg.getLong(0) == nDocs &&
       heAgg.getLong(1) == 3L * nDocs && heAgg.getLong(2) == 2L * nDocs &&
       heAgg.getLong(3) == 0L,
       s"htmlExtract ${heAgg.getLong(1)}/${heAgg.getLong(2)} lines, " +
         s"${heAgg.getLong(3)} nav leaks")
-    println(f"htmlExtract: $nDocs pages, ${heAgg.getLong(1)} lines -> " +
-      f"${heAgg.getLong(2)} kept (nav dropped everywhere, exact) in " +
-      f"$tHe%.1f s (${nDocs / tHe}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("pages" -> nDocs, "lines" -> heAgg.getLong(1), "keptLines" -> heAgg.getLong(2))
+  }
 
-    // --- mojibake repair at 1M docs: ids %10==0 get two damaged
+  step("mojibake") {
+    // mojibake repair at 1M docs: ids %10==0 get two damaged
     // sequences appended (from the operator's own damage model) — hit
     // and changed counts are exact; hex-token bodies are ASCII-clean.
+    val docs = syntheticDocs()
     val dmg = " caf" + graft.operators.TextRepair.damaged("é") + " It" +
       graft.operators.TextRepair.damaged("’") + "s"
     val mj = docs.select(col("id"),
       concat(col("text"),
         when(col("id") % 10 === 0, lit(dmg)).otherwise(lit("")))
         .as("text"))
-    val t37 = System.nanoTime()
     val rep = graft.operators.TextRepair.repairReport(mj, "id", "text")
     val repAgg = rep.agg(sum(col("mojibake_hits")),
       sum(when(col("changed"), 1L).otherwise(0L)),
       sum(col("n_bad_chars"))).collect()(0)
-    val tRep = (System.nanoTime() - t37) / 1e9
     require(repAgg.getLong(0) == 2L * (nDocs / 10L) &&
       repAgg.getLong(1) == nDocs / 10L && repAgg.getLong(2) == 0L,
       s"mojibake hits=${repAgg.getLong(0)} changed=${repAgg.getLong(1)}")
-    println(f"mojibake: $nDocs docs, ${repAgg.getLong(0)} hits repaired " +
-      f"across ${repAgg.getLong(1)} docs (exact) in $tRep%.1f s " +
-      f"(${nDocs / tRep}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs, "hits" -> repAgg.getLong(0), "changedDocs" -> repAgg.getLong(1))
+  }
 
-    // --- Moore-Lewis at 1M docs: in-domain model = the even half,
+  step("mooreLewis") {
+    // Moore-Lewis at 1M docs: in-domain model = the even half,
     // general = the odd half. An even doc's bigrams sit in the
     // in-domain counts (pref ~ 2/(2+1) per bigram), an odd doc's in
     // the general counts — so every even doc selects and every odd doc
     // with unique tokens (k != 9) does not; k=9 near-dups share 28 of
     // 29 bigrams with their even base, so their verdict is left free.
-    val t38 = System.nanoTime()
+    val docs = syntheticDocs()
     val mlSel = graft.operators.LanguageModel.mooreLewisScores(docs,
       docs.filter(col("id") % 2 === 0), docs.filter(col("id") % 2 === 1),
       "id", "text")
@@ -914,64 +897,57 @@ object ScaleSmoke {
       sum(when(col("selected") && col("id") % 2 === 1 &&
         col("id") % 10 =!= 9, 1L).otherwise(0L)),
       count(lit(1))).collect()(0)
-    val tMl = (System.nanoTime() - t38) / 1e9
     require(mlAgg.getLong(2) == nDocs, s"mooreLewis rows ${mlAgg.getLong(2)}")
     require(mlAgg.getLong(0) == nDocs / 2L,
       s"mooreLewis even-selected ${mlAgg.getLong(0)} of ${nDocs / 2L}")
     require(mlAgg.getLong(1) == 0L,
       s"mooreLewis ${mlAgg.getLong(1)} unique odd docs selected")
-    println(f"mooreLewis: $nDocs docs vs 500k/500k models, verdicts " +
-      f"exactly split in $tMl%.1f s (${nDocs / tMl}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs)
+  }
 
-    // --- BPE training at vocabulary scale: ≥1024 merges over the 1M-doc
+  step("bpe") {
+    // BPE training at vocabulary scale: ≥1024 merges over the 1M-doc
     // corpus (≈25M distinct 8-hex-char words, capped to the top 2^20 by
     // the trainer's deterministic TakeOrdered) in ONE driver round trip —
     // the in-memory incremental trainer never runs a per-merge Spark job.
     // Every merged symbol must stay hex+marker alphabet and the encode
     // under the learned table must conserve word counts exactly.
-    val t39 = System.nanoTime()
+    val docs = syntheticDocs()
     val bpeMerges = graft.operators.BpeTokenizer.trainBpeMerges(
       docs, "text", numMerges = 1024)
     val bpeRows = bpeMerges.collect()
-    val tBpeTrain = (System.nanoTime() - t39) / 1e9
     require(bpeRows.length == 1024, s"bpe trained ${bpeRows.length} merges")
     require(bpeRows.forall(r => (r.getString(1) + r.getString(2))
         .forall(c => "0123456789abcdef</w>".contains(c))),
       "bpe merge outside the hex+marker alphabet")
-    val t40 = System.nanoTime()
     val bpeEnc = graft.operators.BpeTokenizer.applyBpeMerges(
         docs, "id", "text",
         bpeRows.sortBy(_.getInt(0)).map(r => (r.getString(1), r.getString(2))).toSeq)
       .agg(count(lit(1)), sum(col("n_words")), sum(col("n_subwords")),
         min(col("n_subwords"))).collect()(0)
-    val tBpeEnc = (System.nanoTime() - t40) / 1e9
     require(bpeEnc.getLong(0) == nDocs, s"bpe encoded ${bpeEnc.getLong(0)} docs")
     require(bpeEnc.getLong(1) == 30L * nDocs,
       s"bpe n_words ${bpeEnc.getLong(1)} != ${30L * nDocs}")
     // 30 words/doc, 9 symbols raw; merges only shrink: (30, 270] per doc
     require(bpeEnc.getLong(3) >= 30L && bpeEnc.getLong(2) <= 270L * nDocs,
       s"bpe n_subwords out of range: min/doc=${bpeEnc.getLong(3)}")
-    println(f"bpe: 1024 merges trained over $nDocs docs in $tBpeTrain%.1f s " +
-      f"(1 driver round trip), encoded ${bpeEnc.getLong(1)} words -> " +
-      f"${bpeEnc.getLong(2)} subwords in $tBpeEnc%.1f s " +
-      f"(${nDocs / tBpeEnc}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs, "words" -> bpeEnc.getLong(1), "subwords" -> bpeEnc.getLong(2))
+  }
 
-    // --- WordPiece encode at 1M docs: every word is 8 hex chars, the
+  step("wordpiece") {
+    // WordPiece encode at 1M docs: every word is 8 hex chars, the
     // vocab covers all hex singles in both positions plus two 2-char
     // pieces — so word counts conserve EXACTLY and per-word piece
     // counts are hard-bounded in [4, 8] (a 2-char piece halves at
     // best). The distinct-word table is ~25M short strings — the
     // vocabulary-table recipe's adversarial case.
-    val t41 = System.nanoTime()
+    val docs = syntheticDocs()
     val hexV = "0123456789abcdef".map(_.toString)
     val wpEnc = graft.operators.WordPieceTokenizer.encode(
         docs, "id", "text",
         hexV ++ hexV.map("##" + _) ++ Seq("ab", "##ff"))
       .agg(count(lit(1)), sum(col("n_words")), sum(col("n_subwords")),
         min(col("n_subwords")), max(col("n_subwords"))).collect()(0)
-    val tWp = (System.nanoTime() - t41) / 1e9
     require(wpEnc.getLong(0) == nDocs, s"wp encoded ${wpEnc.getLong(0)} docs")
     require(wpEnc.getLong(1) == 30L * nDocs,
       s"wp n_words ${wpEnc.getLong(1)} != ${30L * nDocs}")
@@ -979,23 +955,22 @@ object ScaleSmoke {
     // shrink, never below 4/word = 120/doc; no [UNK] possible
     require(wpEnc.getLong(3) >= 120L && wpEnc.getLong(4) <= 240L,
       s"wp n_subwords/doc out of [120,240]: $wpEnc")
-    println(f"wordpiece: $nDocs docs, ${wpEnc.getLong(1)} words -> " +
-      f"${wpEnc.getLong(2)} pieces in $tWp%.1f s (${nDocs / tWp}%.0f docs/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs, "words" -> wpEnc.getLong(1), "pieces" -> wpEnc.getLong(2))
+  }
 
-    // --- Kneser-Ney at 1M docs against the 100k-doc (id%10==0) model —
+  step("kneserNey") {
+    // Kneser-Ney at 1M docs against the 100k-doc (id%10==0) model —
     // same adversarial corpus-sized count tables as the bigramLm
     // section (unique tokens make the model ≈ the slice's 2.9M-row
     // bigram table, never broadcast-able). Planted truth: exact copies
     // (id%10==8) score bit-identically to their base.
-    val t42 = System.nanoTime()
+    val docs = syntheticDocs()
     val knScores = graft.operators.LanguageModel.kneserNeyScores(
       docs, docs.filter(col("id") % 10 === 0), "id", "text").cache()
     val knAgg = knScores.agg(count(lit(1)),
       avg(when(col("id") % 10 === 0, col("avg_p"))),
       avg(when(col("id") % 10 < 8, when(col("id") % 10 > 0, col("avg_p")))))
       .collect()(0)
-    val tKn = (System.nanoTime() - t42) / 1e9
     require(knAgg.getLong(0) == nDocs, s"kn rows ${knAgg.getLong(0)}")
     require(knAgg.getDouble(1) > knAgg.getDouble(2),
       s"in-model docs must out-score unique docs under KN: $knAgg")
@@ -1007,16 +982,16 @@ object ScaleSmoke {
     require(knCopyMismatch == 0,
       s"$knCopyMismatch exact copies KN-scored differently")
     knScores.unpersist()
-    println(f"kneserNey: $nDocs docs scored against a 100k-doc model " +
-      f"in $tKn%.1f s (${nDocs / tKn}%.0f docs/s), 1000 copy-pairs " +
-      f"bit-equal, heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs)
+  }
 
-    // --- n-gram novelty at 1M docs vs the 100k-doc base slice: the
+  step("novelty") {
+    // n-gram novelty at 1M docs vs the 100k-doc base slice: the
     // planted group structure fixes every doc's EXACT novelty — bases
     // and their exact copies 0, near-dups 1/23 (only the gram covering
     // the changed token 30 is new), unique docs 1. One big-big
     // gram-hash join, corpus-sized both sides.
-    val t43 = System.nanoTime()
+    val docs = syntheticDocs()
     val nov = graft.operators.CorpusAnalysis.ngramNovelty(
       docs, docs.filter(col("id") % 10 === 0), "id", "text").cache()
     val novAgg = nov.agg(count(lit(1)),
@@ -1026,20 +1001,19 @@ object ScaleSmoke {
         when(col("novelty_frac") =!= lit(1.0) / 23.0, 1L).otherwise(0L))),
       sum(when(col("id") % 10 >= 1 && col("id") % 10 <= 7,
         when(col("novelty_frac") =!= 1.0, 1L).otherwise(0L)))).collect()(0)
-    val tNov = (System.nanoTime() - t43) / 1e9
     nov.unpersist()
     require(novAgg.getLong(0) == nDocs, s"novelty rows ${novAgg.getLong(0)}")
     require(novAgg.getLong(1) == 0L && novAgg.getLong(2) == 0L &&
       novAgg.getLong(3) == 0L,
       s"novelty deviations (base/copy, near, unique): $novAgg")
-    println(f"novelty: $nDocs docs vs 100k-doc reference in $tNov%.1f s " +
-      f"(${nDocs / tNov}%.0f docs/s), all three planted classes exact, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs)
+  }
 
-    // --- content-defined chunking at 1M docs: narrow zero-shuffle
+  step("cdcChunks") {
+    // content-defined chunking at 1M docs: narrow zero-shuffle
     // walk; chunks must conserve tokens exactly (30/doc) and stay
     // inside the [ceil(30/64), ceil(30/4)] = [1, 8] count bound.
-    val t44 = System.nanoTime()
+    val docs = syntheticDocs()
     val cdc = graft.operators.CorpusAnalysis.cdcChunks(docs, "id", "text")
       .groupBy(col("id"))
       .agg(sum(col("n_tokens")).as("tk"), count(lit(1)).as("nc"))
@@ -1047,20 +1021,19 @@ object ScaleSmoke {
         sum(when(col("tk") =!= 30L, 1L).otherwise(0L)),
         sum(when(col("nc") < 1 || col("nc") > 8, 1L).otherwise(0L)),
         sum(col("nc"))).collect()(0)
-    val tCdc = (System.nanoTime() - t44) / 1e9
     require(cdc.getLong(0) == nDocs, s"cdc docs ${cdc.getLong(0)}")
     require(cdc.getLong(1) == 0L, s"${cdc.getLong(1)} docs lost tokens")
     require(cdc.getLong(2) == 0L, s"${cdc.getLong(2)} docs out of bound")
-    println(f"cdcChunks: $nDocs docs -> ${cdc.getLong(3)} chunks in " +
-      f"$tCdc%.1f s (${nDocs / tCdc}%.0f docs/s), tokens conserved, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs, "chunks" -> cdc.getLong(3))
+  }
 
-    // --- unigram Viterbi encode at 1M docs: hex singles at cost 100
+  step("unigram") {
+    // unigram Viterbi encode at 1M docs: hex singles at cost 100
     // plus two 2-char pieces at 150 — with every multi exactly 2 chars
     // the identity total_cost = 50·n_pieces + 12000 holds PER DOC
     // whatever mix the DP picks (s+2m=240, cost=100s+150m), a full
     // correctness pin over the 25M-distinct-word table.
-    val t45 = System.nanoTime()
+    val docs = syntheticDocs()
     val ugVocab = "0123456789abcdef".map(c => c.toString -> 100L) ++
       Seq("ab" -> 150L, "ff" -> 150L)
     val ug = graft.operators.UnigramTokenizer.encode(
@@ -1068,21 +1041,19 @@ object ScaleSmoke {
       .agg(count(lit(1)), sum(col("n_words")), sum(col("n_pieces")),
         sum(when(col("total_cost") =!= col("n_pieces") * 50L + 12000L,
           1L).otherwise(0L))).collect()(0)
-    val tUg = (System.nanoTime() - t45) / 1e9
     require(ug.getLong(0) == nDocs, s"unigram encoded ${ug.getLong(0)}")
     require(ug.getLong(1) == 30L * nDocs, s"unigram words ${ug.getLong(1)}")
     require(ug.getLong(3) == 0L,
       s"${ug.getLong(3)} docs break the cost identity")
-    println(f"unigram: $nDocs docs, ${ug.getLong(1)} words -> " +
-      f"${ug.getLong(2)} pieces in $tUg%.1f s (${nDocs / tUg}%.0f docs/s), " +
-      f"cost identity exact, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs, "words" -> ug.getLong(1), "pieces" -> ug.getLong(2))
+  }
 
-    // --- exact quantiles at 1M rows: v = id makes every answer a
+  step("quantiles") {
+    // exact quantiles at 1M rows: v = id makes every answer a
     // closed form (q-quantile of 0..n-1 is ceil(q·n)−1; per-group over
     // id%16 it's g + 16·(r−1)) — histogram refinement must hit each
     // EXACTLY, with small caps forcing the multi-round path.
-    val t46 = System.nanoTime()
+    val docs = syntheticDocs()
     val qv = docs.select(col("id"), (col("id") % 16).as("grp"),
       col("id").cast("double").as("v"))
     val qqs = Seq(0.01, 0.5, 0.99)
@@ -1093,8 +1064,6 @@ object ScaleSmoke {
       val want = (math.max(1L, math.ceil(q * nDocs).toLong) - 1).toDouble
       require(gq(q) == want, s"q=$q got ${gq(q)} want $want")
     }
-    val tQ1 = (System.nanoTime() - t46) / 1e9
-    val t47 = System.nanoTime()
     val ggq = graft.operators.DataSelection.groupedExactQuantiles(
       qv, "grp", "v", qqs, histBins = 64, collectCap = 1000).collect()
       .map(r2 => (r2.getString(0), r2.getDouble(1)) -> r2.getDouble(2))
@@ -1107,20 +1076,18 @@ object ScaleSmoke {
       require(ggq((g.toString, q)) == want,
         s"grp=$g q=$q got ${ggq((g.toString, q))} want $want")
     }
-    val tQ2 = (System.nanoTime() - t47) / 1e9
-    println(f"quantiles: 3 global + 48 per-group EXACT over $nDocs rows " +
-      f"in $tQ1%.1f s + $tQ2%.1f s, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("rows" -> nDocs)
+  }
 
-    // --- persisted near-dup index at 1M docs: build once (the
+  step("ndIndex") {
+    // persisted near-dup index at 1M docs: build once (the
     // corpus-side signature pass as an artifact), then admit a 100k
     // snapshot (10k near-dup re-crawls of bases + 90k fresh) both ways
     // — identical admissions required; the indexed admit must beat the
     // direct one (it skips the 1M-doc signature+gram work).
+    val docs = syntheticDocs()
     val idxDir = Fixtures.scratchDir("scale-ndidx").toString
-    val t48 = System.nanoTime()
     graft.operators.Dedup.writeNearDupIndex(docs, "id", "text", idxDir)
-    val tIdxBuild = (System.nanoTime() - t48) / 1e9
     val snapN = math.max(1000L, nDocs / 10L)
     val sk = col("id") % 10
     // re-crawls: copies of group bases with the LAST token changed
@@ -1137,37 +1104,30 @@ object ScaleSmoke {
       .select((col("id") + 10000000L).as("id"),
         concat_ws(" ", snapToks: _*).as("text"))
       .localCheckpoint(true)
-    val t49 = System.nanoTime()
     val directKept = graft.operators.Dedup.incrementalNearDedup(
       snap, docs, "id", "text").count()
-    val tDirect = (System.nanoTime() - t49) / 1e9
-    val t50 = System.nanoTime()
     val idxKept = graft.operators.Dedup.incrementalNearDedupIndexed(
       snap, "id", "text", idxDir).count()
-    val tIdx = (System.nanoTime() - t50) / 1e9
     require(directKept == idxKept,
       s"indexed admissions $idxKept != direct $directKept")
     // exactly the fresh snapshot docs survive (re-crawls of bases drop)
     val expKept = snapN - snapN / 10L
     require(idxKept == expKept, s"kept $idxKept of expected $expKept")
-    println(f"ndIndex: build $tIdxBuild%.1f s over $nDocs docs; admit " +
-      f"$snapN-doc snapshot direct $tDirect%.1f s vs indexed $tIdx%.1f s " +
-      f"(${tDirect / tIdx}%.1fx), admissions identical ($idxKept kept), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("docs" -> nDocs, "snapshot" -> snapN, "kept" -> idxKept)
     // recursive temp-dir cleanup (the index is corpus-sized on disk)
     Fixtures.delete(java.nio.file.Paths.get(idxDir))
+  }
 
-    // --- buildCorpus: the full restartable source→curriculum pipeline
+  step("buildCorpus") {
+    // buildCorpus: the full restartable source→curriculum pipeline
     // over a 1M-page WARC drop dir (executors write one gzip stream
     // per partition; every 10th page is an exact duplicate of its
     // predecessor, so the dedup stage has a planted exact answer).
-    // Per-stage wall times come from the onStage observability hook.
     val bcWarc = Fixtures.scratchDir("scale-bc-warc").toString
     val bcStages = Fixtures.scratchDir("scale-bc-stages").toString
     val nPages = nDocs
     val bcFiles = 64
     val perBc = nPages / bcFiles
-    val t60 = System.nanoTime()
     spark.range(bcFiles).repartition(bcFiles).foreach { fi =>
       val out = new java.util.zip.GZIPOutputStream(
         new java.io.FileOutputStream(s"$bcWarc/part-$fi.warc.gz"))
@@ -1196,16 +1156,10 @@ object ScaleSmoke {
       }
       out.close()
     }
-    val tBcGen = (System.nanoTime() - t60) / 1e9
-    val stageTimes = scala.collection.mutable.LinkedHashMap
-      .empty[String, Double]
-    val t61 = System.nanoTime()
     val bcReport = graft.operators.CorpusBuild.buildCorpus(spark, bcWarc,
-      bcStages, minWords = 10, packTokens = 256,
-      onStage = (s2, secs) => { stageTimes(s2) = secs; () })
+      bcStages, minWords = 10, packTokens = 256)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
-    val tBc = (System.nanoTime() - t61) / 1e9
     val total = bcFiles.toLong * perBc
     require(bcReport("0_extract")._2 == total,
       s"buildCorpus extract ${bcReport("0_extract")}")
@@ -1231,16 +1185,13 @@ object ScaleSmoke {
       .collect()(0).getLong(0)
     require(bcPackTokens == mixTokens,
       s"buildCorpus pack tokens $bcPackTokens != mixed tokens $mixTokens")
-    println(f"buildCorpus: $total pages generated in $tBcGen%.1f s; " +
-      f"full pipeline $tBc%.1f s (${total / tBc}%.0f pages/s), stages " +
-      stageTimes.map { case (s2, sec) => f"$s2:$sec%.1fs" }
-        .mkString(" ") +
-      f", packs=${bcReport("6_pack")._2}, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    report("pages" -> total, "packs" -> bcReport("6_pack")._2)
     for (d <- Seq(bcWarc, bcStages))
       Fixtures.delete(java.nio.file.Paths.get(d))
+  }
 
-    // --- perceptual image near-dup at 1M images: decode → box-sample →
+  step("imageNearDup") {
+    // perceptual image near-dup at 1M images: decode → box-sample →
     // dHash → banded pairs, the full imageNearDupPairs path over real
     // PNG payloads (encode AND decode both run, on executors — decode
     // dominates and is the number worth measuring). 500k classes of
@@ -1251,98 +1202,84 @@ object ScaleSmoke {
     // and every strict cell-vs-cell gradient comparison is preserved,
     // so each twin's dHash is bit-identical to its base (distance 0)
     // and the expected pair set is EXACTLY the 500k (2c, 2c+1) pairs.
-    {
-      val nImg = args.drop(1).headOption.map(_.toInt).getOrElse(1000000)
-      import spark.implicits._
-      val t70 = System.nanoTime()
-      // pairMode: cls = id/2 and odd ids get +5 brightness (dHash-
-      // invariant twins); otherwise cls = id (every image its own
-      // class — class ids >= nImg never collide with pair classes)
-      def mkImgs(n0: Long, n1: Long, pairMode: Boolean) =
-        spark.range(n0, n1).repartition(64)
-          .mapPartitions { it =>
-            it.map { id =>
-              val idL: Long = id
-              val cls = if (pairMode) idL / 2 else idL
-              val bump = if (pairMode && idL % 2 == 1) 5 else 0
-              // 18x16 image, one 2x2 pixel block per 9x8 grid cell —
-              // the box average reproduces the cell value exactly
-              val bi = new java.awt.image.BufferedImage(18, 16,
-                java.awt.image.BufferedImage.TYPE_INT_RGB)
-              var cy = 0
-              while (cy < 8) {
-                var cx = 0
-                while (cx < 9) {
-                  val v = 30 +
-                    ((mix64(cls * 97 + cy * 9 + cx) & Long.MaxValue) % 171)
-                      .toInt + bump
-                  val rgb = (v << 16) | (v << 8) | v
-                  bi.setRGB(cx * 2, cy * 2, rgb)
-                  bi.setRGB(cx * 2 + 1, cy * 2, rgb)
-                  bi.setRGB(cx * 2, cy * 2 + 1, rgb)
-                  bi.setRGB(cx * 2 + 1, cy * 2 + 1, rgb)
-                  cx += 1
-                }
-                cy += 1
+    val nImg = nDocs
+    // pairMode: cls = id/2 and odd ids get +5 brightness (dHash-
+    // invariant twins); otherwise cls = id (every image its own
+    // class — class ids >= nImg never collide with pair classes)
+    def mkImgs(n0: Long, n1: Long, pairMode: Boolean) =
+      spark.range(n0, n1).repartition(64)
+        .mapPartitions { it =>
+          it.map { id =>
+            val idL: Long = id
+            val cls = if (pairMode) idL / 2 else idL
+            val bump = if (pairMode && idL % 2 == 1) 5 else 0
+            // 18x16 image, one 2x2 pixel block per 9x8 grid cell —
+            // the box average reproduces the cell value exactly
+            val bi = new java.awt.image.BufferedImage(18, 16,
+              java.awt.image.BufferedImage.TYPE_INT_RGB)
+            var cy = 0
+            while (cy < 8) {
+              var cx = 0
+              while (cx < 9) {
+                val v = 30 +
+                  ((mix64(cls * 97 + cy * 9 + cx) & Long.MaxValue) % 171)
+                    .toInt + bump
+                val rgb = (v << 16) | (v << 8) | v
+                bi.setRGB(cx * 2, cy * 2, rgb)
+                bi.setRGB(cx * 2 + 1, cy * 2, rgb)
+                bi.setRGB(cx * 2, cy * 2 + 1, rgb)
+                bi.setRGB(cx * 2 + 1, cy * 2 + 1, rgb)
+                cx += 1
               }
-              val out = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(bi, "png", out)
-              (idL, out.toByteArray)
+              cy += 1
             }
-          }.toDF("id", "content")
-      val imgs = mkImgs(0L, nImg, pairMode = true)
-      val imgPairs = graft.operators.Multimodal.imageNearDupPairs(
-        imgs, "id", "content")
-      // exact expected pair set: count == classes, every distance 0,
-      // and sum(b - a) == classes pins each pair to (2c, 2c+1)
-      val ipAgg = imgPairs.agg(count(lit(1)), max(col("distance")),
-        sum(col("b") - col("a"))).collect()(0)
-      val tIp = (System.nanoTime() - t70) / 1e9
-      require(ipAgg.getLong(0) == nImg / 2L,
-        s"imageNearDup pairs ${ipAgg.getLong(0)} != ${nImg / 2}")
-      require(ipAgg.getLong(1) == 0L,
-        s"imageNearDup max distance ${ipAgg.getLong(1)} != 0")
-      require(ipAgg.getLong(2) == nImg / 2L,
-        s"imageNearDup pair structure broken: sum(b-a)=${ipAgg.getLong(2)}")
-      println(f"imageNearDup: $nImg%d pngs encoded+decoded, " +
-        f"${nImg / 2} planted twin pairs found exactly in $tIp%.1f s " +
-        f"(${nImg / tIp}%.0f imgs/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+            val out = new java.io.ByteArrayOutputStream()
+            javax.imageio.ImageIO.write(bi, "png", out)
+            (idL, out.toByteArray)
+          }
+        }.toDF("id", "content")
+    val imgs = mkImgs(0L, nImg, pairMode = true)
+    val imgPairs = graft.operators.Multimodal.imageNearDupPairs(
+      imgs, "id", "content")
+    // exact expected pair set: count == classes, every distance 0,
+    // and sum(b - a) == classes pins each pair to (2c, 2c+1)
+    val ipAgg = imgPairs.agg(count(lit(1)), max(col("distance")),
+      sum(col("b") - col("a"))).collect()(0)
+    require(ipAgg.getLong(0) == nImg / 2L,
+      s"imageNearDup pairs ${ipAgg.getLong(0)} != ${nImg / 2}")
+    require(ipAgg.getLong(1) == 0L,
+      s"imageNearDup max distance ${ipAgg.getLong(1)} != 0")
+    require(ipAgg.getLong(2) == nImg / 2L,
+      s"imageNearDup pair structure broken: sum(b-a)=${ipAgg.getLong(2)}")
+    report("images" -> nImg, "twinPairs" -> nImg / 2)
 
-      // index lifecycle at the same scale: persist the even-id half
-      // as the corpus signature index, then admit a snapshot of the
-      // odd-id twins (every one within distance 0 of an indexed
-      // signature -> dropped) plus nImg/10 genuinely fresh images
-      // (own classes -> admitted). The admission's corpus side reads
-      // 8-byte signatures — no re-decode of the 500k corpus images.
-      val idxDir = Fixtures.scratchDir("img-idx").toString
-      val t71 = System.nanoTime()
-      graft.operators.Multimodal.writeImageNearDupIndex(
-        imgs.filter(col("id") % 2 === 0), "id", "content", idxDir)
-      val tIdxBuild = (System.nanoTime() - t71) / 1e9
-      val t72 = System.nanoTime()
-      val snap = imgs.filter(col("id") % 2 === 1)
-        .unionByName(mkImgs(nImg, nImg + nImg / 10L, pairMode = false))
-      val admitted = graft.operators.Multimodal
-        .incrementalImageNearDedup(snap, "id", "content", idxDir)
-        .agg(count(lit(1)), min(col("id")), max(col("id")))
-        .collect()(0)
-      val tAdmit = (System.nanoTime() - t72) / 1e9
-      require(admitted.getLong(0) == nImg / 10L,
-        s"imageAdmit count ${admitted.getLong(0)} != ${nImg / 10}")
-      require(admitted.getLong(1) == nImg &&
-        admitted.getLong(2) == nImg + nImg / 10L - 1,
-        s"imageAdmit ids [${admitted.getLong(1)}, " +
-          s"${admitted.getLong(2)}] not the fresh range")
-      println(f"imageIndex: ${nImg / 2} sigs indexed in " +
-        f"$tIdxBuild%.1f s; ${nImg / 2 + nImg / 10} snapshot admitted " +
-        f"-> exactly ${nImg / 10} fresh in $tAdmit%.1f s " +
-        f"(${(nImg / 2 + nImg / 10) / tAdmit}%.0f imgs/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      Fixtures.delete(java.nio.file.Paths.get(idxDir))
-    }
+    // index lifecycle at the same scale: persist the even-id half
+    // as the corpus signature index, then admit a snapshot of the
+    // odd-id twins (every one within distance 0 of an indexed
+    // signature -> dropped) plus nImg/10 genuinely fresh images
+    // (own classes -> admitted). The admission's corpus side reads
+    // 8-byte signatures — no re-decode of the 500k corpus images.
+    val idxDir = Fixtures.scratchDir("img-idx").toString
+    graft.operators.Multimodal.writeImageNearDupIndex(
+      imgs.filter(col("id") % 2 === 0), "id", "content", idxDir)
+    val snap = imgs.filter(col("id") % 2 === 1)
+      .unionByName(mkImgs(nImg, nImg + nImg / 10L, pairMode = false))
+    val admitted = graft.operators.Multimodal
+      .incrementalImageNearDedup(snap, "id", "content", idxDir)
+      .agg(count(lit(1)), min(col("id")), max(col("id")))
+      .collect()(0)
+    require(admitted.getLong(0) == nImg / 10L,
+      s"imageAdmit count ${admitted.getLong(0)} != ${nImg / 10}")
+    require(admitted.getLong(1) == nImg &&
+      admitted.getLong(2) == nImg + nImg / 10L - 1,
+      s"imageAdmit ids [${admitted.getLong(1)}, " +
+        s"${admitted.getLong(2)}] not the fresh range")
+    report("indexed" -> nImg / 2, "snapshot" -> (nImg / 2 + nImg / 10), "fresh" -> nImg / 10)
+    Fixtures.delete(java.nio.file.Paths.get(idxDir))
+  }
 
-    // --- perceptual audio near-dup at 1M clips: REAL WAV payloads
+  step("audioNearDup") {
+    // perceptual audio near-dup at 1M clips: REAL WAV payloads
     // (44-byte canonical header + 16-bit PCM data built per row on
     // executors), decoded and fingerprinted under the DEFAULT
     // duration-normalized AUTO window — clip lengths VARY by class
@@ -1355,111 +1292,97 @@ object ScaleSmoke {
     // preserved, so each twin's fingerprint is bit-identical to its
     // base (distance 0) and the expected pair set is EXACTLY the
     // 500k (2c, 2c+1) pairs.
-    {
-      val nClip = args.drop(1).headOption.map(_.toInt).getOrElse(1000000)
-      import spark.implicits._
-      val t80 = System.nanoTime()
-      // pairMode: cls = id/2 and odd ids are re-gained twins;
-      // otherwise cls = id (fresh clips in their own classes — class
-      // ids >= nClip never collide with pair classes)
-      def mkClips(n0: Long, n1: Long, pairMode: Boolean) =
-        spark.range(n0, n1).repartition(64)
-          .mapPartitions { it =>
-            it.map { id =>
-              val idL: Long = id
-              val cls = if (pairMode) idL / 2 else idL
-              val gain = if (pairMode && idL % 2 == 1) 2 else 1
-              val nS = 65 * (8 + (cls % 9L)).toInt
-              val bytes = new Array[Byte](44 + 2 * nS)
-              def le16(o: Int, v: Int): Unit = {
-                bytes(o) = (v & 0xFF).toByte
-                bytes(o + 1) = ((v >> 8) & 0xFF).toByte
-              }
-              def le32(o: Int, v: Long): Unit = {
-                var i = 0
-                while (i < 4) {
-                  bytes(o + i) = ((v >> (8 * i)) & 0xFF).toByte; i += 1
-                }
-              }
-              def tag(o: Int, s: String): Unit = {
-                var i = 0
-                while (i < 4) { bytes(o + i) = s.charAt(i).toByte; i += 1 }
-              }
-              tag(0, "RIFF"); le32(4, 36L + 2 * nS); tag(8, "WAVE")
-              tag(12, "fmt "); le32(16, 16L)
-              le16(20, 1); le16(22, 1) // PCM, mono
-              le32(24, 16000L); le32(28, 32000L) // rate, byte rate
-              le16(32, 2); le16(34, 16) // block align, bits
-              tag(36, "data"); le32(40, 2L * nS)
-              // double-mix so distinct classes get UNRELATED streams
-              // (a linear cls*K + k input would make neighbor classes
-              // shifted copies of each other)
-              val seed = mix64(cls)
-              var k = 0
-              while (k < nS) {
-                val s = (((mix64(seed + k * 0x9E3779B97F4A7C15L)
-                  & Long.MaxValue) % 16001L) - 8000L).toInt * gain
-                le16(44 + 2 * k, s & 0xFFFF)
-                k += 1
-              }
-              (idL, bytes)
+    val nClip = nDocs
+    // pairMode: cls = id/2 and odd ids are re-gained twins;
+    // otherwise cls = id (fresh clips in their own classes — class
+    // ids >= nClip never collide with pair classes)
+    def mkClips(n0: Long, n1: Long, pairMode: Boolean) =
+      spark.range(n0, n1).repartition(64)
+        .mapPartitions { it =>
+          it.map { id =>
+            val idL: Long = id
+            val cls = if (pairMode) idL / 2 else idL
+            val gain = if (pairMode && idL % 2 == 1) 2 else 1
+            val nS = 65 * (8 + (cls % 9L)).toInt
+            val bytes = new Array[Byte](44 + 2 * nS)
+            def le16(o: Int, v: Int): Unit = {
+              bytes(o) = (v & 0xFF).toByte
+              bytes(o + 1) = ((v >> 8) & 0xFF).toByte
             }
-          }.toDF("id", "content")
-      val clips = mkClips(0L, nClip, pairMode = true)
-      val auPairs = graft.operators.Audio.audioNearDupPairs(
-        clips, "id", "content")
-      // exact expected pair set: count == classes, every distance 0,
-      // and sum(b - a) == classes pins each pair to (2c, 2c+1)
-      val apAgg = auPairs.agg(count(lit(1)), max(col("distance")),
-        sum(col("b") - col("a"))).collect()(0)
-      val tAp = (System.nanoTime() - t80) / 1e9
-      require(apAgg.getLong(0) == nClip / 2L,
-        s"audioNearDup pairs ${apAgg.getLong(0)} != ${nClip / 2}")
-      require(apAgg.getLong(1) == 0L,
-        s"audioNearDup max distance ${apAgg.getLong(1)} != 0")
-      require(apAgg.getLong(2) == nClip / 2L,
-        s"audioNearDup pair structure broken: sum(b-a)=${apAgg.getLong(2)}")
-      println(f"audioNearDup: $nClip%d wavs decoded under the auto " +
-        f"window, ${nClip / 2} planted re-gained twin pairs found " +
-        f"exactly in $tAp%.1f s (${nClip / tAp}%.0f clips/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+            def le32(o: Int, v: Long): Unit = {
+              var i = 0
+              while (i < 4) {
+                bytes(o + i) = ((v >> (8 * i)) & 0xFF).toByte; i += 1
+              }
+            }
+            def tag(o: Int, s: String): Unit = {
+              var i = 0
+              while (i < 4) { bytes(o + i) = s.charAt(i).toByte; i += 1 }
+            }
+            tag(0, "RIFF"); le32(4, 36L + 2 * nS); tag(8, "WAVE")
+            tag(12, "fmt "); le32(16, 16L)
+            le16(20, 1); le16(22, 1) // PCM, mono
+            le32(24, 16000L); le32(28, 32000L) // rate, byte rate
+            le16(32, 2); le16(34, 16) // block align, bits
+            tag(36, "data"); le32(40, 2L * nS)
+            // double-mix so distinct classes get UNRELATED streams
+            // (a linear cls*K + k input would make neighbor classes
+            // shifted copies of each other)
+            val seed = mix64(cls)
+            var k = 0
+            while (k < nS) {
+              val s = (((mix64(seed + k * 0x9E3779B97F4A7C15L)
+                & Long.MaxValue) % 16001L) - 8000L).toInt * gain
+              le16(44 + 2 * k, s & 0xFFFF)
+              k += 1
+            }
+            (idL, bytes)
+          }
+        }.toDF("id", "content")
+    val clips = mkClips(0L, nClip, pairMode = true)
+    val auPairs = graft.operators.Audio.audioNearDupPairs(
+      clips, "id", "content")
+    // exact expected pair set: count == classes, every distance 0,
+    // and sum(b - a) == classes pins each pair to (2c, 2c+1)
+    val apAgg = auPairs.agg(count(lit(1)), max(col("distance")),
+      sum(col("b") - col("a"))).collect()(0)
+    require(apAgg.getLong(0) == nClip / 2L,
+      s"audioNearDup pairs ${apAgg.getLong(0)} != ${nClip / 2}")
+    require(apAgg.getLong(1) == 0L,
+      s"audioNearDup max distance ${apAgg.getLong(1)} != 0")
+    require(apAgg.getLong(2) == nClip / 2L,
+      s"audioNearDup pair structure broken: sum(b-a)=${apAgg.getLong(2)}")
+    report("clips" -> nClip, "twinPairs" -> nClip / 2)
 
-      // index lifecycle at the same scale: persist the even-id half
-      // as the corpus signature index (sidecar records the auto mode),
-      // then admit a snapshot of the odd-id re-gained twins (every
-      // one at distance 0 of an indexed signature -> dropped) plus
-      // nClip/10 genuinely fresh clips (own classes -> admitted). The
-      // admission's corpus side reads 8-byte signatures — no
-      // re-decode of the 500k corpus clips.
-      val auIdxDir = Fixtures.scratchDir("audio-idx-smoke").toString
-      val t81 = System.nanoTime()
-      graft.operators.Audio.writeAudioNearDupIndex(
-        clips.filter(col("id") % 2 === 0), "id", "content", auIdxDir)
-      val tAIdx = (System.nanoTime() - t81) / 1e9
-      val t82 = System.nanoTime()
-      val auSnap = clips.filter(col("id") % 2 === 1)
-        .unionByName(mkClips(nClip, nClip + nClip / 10L,
-          pairMode = false))
-      val auAdmitted = graft.operators.Audio
-        .incrementalAudioNearDedup(auSnap, "id", "content", auIdxDir)
-        .agg(count(lit(1)), min(col("id")), max(col("id")))
-        .collect()(0)
-      val tAAdmit = (System.nanoTime() - t82) / 1e9
-      require(auAdmitted.getLong(0) == nClip / 10L,
-        s"audioAdmit count ${auAdmitted.getLong(0)} != ${nClip / 10}")
-      require(auAdmitted.getLong(1) == nClip &&
-        auAdmitted.getLong(2) == nClip + nClip / 10L - 1,
-        s"audioAdmit ids [${auAdmitted.getLong(1)}, " +
-          s"${auAdmitted.getLong(2)}] not the fresh range")
-      println(f"audioIndex: ${nClip / 2} sigs indexed in " +
-        f"$tAIdx%.1f s; ${nClip / 2 + nClip / 10} snapshot admitted " +
-        f"-> exactly ${nClip / 10} fresh in $tAAdmit%.1f s " +
-        f"(${(nClip / 2 + nClip / 10) / tAAdmit}%.0f clips/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      Fixtures.delete(java.nio.file.Paths.get(auIdxDir))
-    }
+    // index lifecycle at the same scale: persist the even-id half
+    // as the corpus signature index (sidecar records the auto mode),
+    // then admit a snapshot of the odd-id re-gained twins (every
+    // one at distance 0 of an indexed signature -> dropped) plus
+    // nClip/10 genuinely fresh clips (own classes -> admitted). The
+    // admission's corpus side reads 8-byte signatures — no
+    // re-decode of the 500k corpus clips.
+    val auIdxDir = Fixtures.scratchDir("audio-idx-smoke").toString
+    graft.operators.Audio.writeAudioNearDupIndex(
+      clips.filter(col("id") % 2 === 0), "id", "content", auIdxDir)
+    val auSnap = clips.filter(col("id") % 2 === 1)
+      .unionByName(mkClips(nClip, nClip + nClip / 10L,
+        pairMode = false))
+    val auAdmitted = graft.operators.Audio
+      .incrementalAudioNearDedup(auSnap, "id", "content", auIdxDir)
+      .agg(count(lit(1)), min(col("id")), max(col("id")))
+      .collect()(0)
+    require(auAdmitted.getLong(0) == nClip / 10L,
+      s"audioAdmit count ${auAdmitted.getLong(0)} != ${nClip / 10}")
+    require(auAdmitted.getLong(1) == nClip &&
+      auAdmitted.getLong(2) == nClip + nClip / 10L - 1,
+      s"audioAdmit ids [${auAdmitted.getLong(1)}, " +
+        s"${auAdmitted.getLong(2)}] not the fresh range")
+    report("indexed" -> nClip / 2, "snapshot" -> (nClip / 2 + nClip / 10), "fresh" -> nClip / 10)
+    Fixtures.delete(java.nio.file.Paths.get(auIdxDir))
+  }
 
-    // --- video temporal near-dup at 1M clips: real AVI payloads
+  step("videoNearDup") {
+    // video temporal near-dup at 1M clips: real AVI payloads
     // (library encoder: canonical RIFF/AVI with hdrl/strl/movi, 4x3
     // BGR24 frames, 66..73 frames per clip so the uniform-sampling
     // floor formula genuinely varies). 500k classes of exactly two
@@ -1471,109 +1394,89 @@ object ScaleSmoke {
     // fingerprints bit-identical (distance 0), expected pairs EXACTLY
     // the 500k (2c, 2c+1). The metadata pass then re-walks all 1M
     // containers header-only with a closed-form frame-count total.
-    {
-      val nVid = args.drop(1).headOption.map(_.toInt).getOrElse(1000000)
-      import spark.implicits._
-      val t90 = System.nanoTime()
-      // pairMode: ids (2c, 2c+1) share class c's frames, the odd id
-      // re-gained x2; otherwise every id is its OWN class (fresh
-      // streams for the admission snapshot — class space disjoint
-      // from the 0..nVid/2 pair classes because ids start at nVid)
-      def mkVids(lo: Long, hi: Long, pairMode: Boolean) =
-        spark.range(lo, hi).repartition(if (pairMode) 64 else 8)
-          .mapPartitions { it =>
-            it.map { id =>
-              val idL: Long = id
-              val cls = if (pairMode) idL / 2 else idL
-              val gain = if (pairMode && idL % 2 == 1) 2 else 1
-              val n = 66 + (cls % 8).toInt
-              val seed = mix64(cls)
-              val frames = (0 until n).map { f =>
-                val fs = mix64(seed + f * 0x9E3779B97F4A7C15L)
-                Array.tabulate(36) { k =>
-                  ((((mix64(fs + k) & Long.MaxValue) % 101L).toInt)
-                    * gain).toByte
-                }
+    val nVid = nDocs
+    // pairMode: ids (2c, 2c+1) share class c's frames, the odd id
+    // re-gained x2; otherwise every id is its OWN class (fresh
+    // streams for the admission snapshot — class space disjoint
+    // from the 0..nVid/2 pair classes because ids start at nVid)
+    def mkVids(lo: Long, hi: Long, pairMode: Boolean) =
+      spark.range(lo, hi).repartition(if (pairMode) 64 else 8)
+        .mapPartitions { it =>
+          it.map { id =>
+            val idL: Long = id
+            val cls = if (pairMode) idL / 2 else idL
+            val gain = if (pairMode && idL % 2 == 1) 2 else 1
+            val n = 66 + (cls % 8).toInt
+            val seed = mix64(cls)
+            val frames = (0 until n).map { f =>
+              val fs = mix64(seed + f * 0x9E3779B97F4A7C15L)
+              Array.tabulate(36) { k =>
+                ((((mix64(fs + k) & Long.MaxValue) % 101L).toInt)
+                  * gain).toByte
               }
-              (idL, graft.operators.Video
-                .buildUncompressedAvi(4, 3, frames, 40000L))
             }
-          }.toDF("id", "content")
-      val vids = mkVids(0L, nVid, pairMode = true)
-      val vPairs = graft.operators.Video.videoNearDupPairs(
-        vids, "id", "content")
-      val vAgg = vPairs.agg(count(lit(1)), max(col("distance")),
-        sum(col("b") - col("a"))).collect()(0)
-      val tVp = (System.nanoTime() - t90) / 1e9
-      require(vAgg.getLong(0) == nVid / 2L,
-        s"videoNearDup pairs ${vAgg.getLong(0)} != ${nVid / 2}")
-      require(vAgg.getLong(1) == 0L,
-        s"videoNearDup max distance ${vAgg.getLong(1)} != 0")
-      require(vAgg.getLong(2) == nVid / 2L,
-        s"videoNearDup pair structure broken: sum(b-a)=${vAgg.getLong(2)}")
-      val rtV = Runtime.getRuntime
-      println(f"videoNearDup: $nVid%d avis decoded (65 sampled frames " +
-        f"each), ${nVid / 2} planted re-gained twin pairs found " +
-        f"exactly in $tVp%.1f s (${nVid / tVp}%.0f vids/s), " +
-        f"heapUsed=${(rtV.totalMemory - rtV.freeMemory) / 1e6}%.0f MB")
+            (idL, graft.operators.Video
+              .buildUncompressedAvi(4, 3, frames, 40000L))
+          }
+        }.toDF("id", "content")
+    val vids = mkVids(0L, nVid, pairMode = true)
+    val vPairs = graft.operators.Video.videoNearDupPairs(
+      vids, "id", "content")
+    val vAgg = vPairs.agg(count(lit(1)), max(col("distance")),
+      sum(col("b") - col("a"))).collect()(0)
+    require(vAgg.getLong(0) == nVid / 2L,
+      s"videoNearDup pairs ${vAgg.getLong(0)} != ${nVid / 2}")
+    require(vAgg.getLong(1) == 0L,
+      s"videoNearDup max distance ${vAgg.getLong(1)} != 0")
+    require(vAgg.getLong(2) == nVid / 2L,
+      s"videoNearDup pair structure broken: sum(b-a)=${vAgg.getLong(2)}")
+    report("videos" -> nVid, "twinPairs" -> nVid / 2)
 
-      val t91 = System.nanoTime()
-      val vm = graft.operators.Video.videoMetaScan(vids, "id", "content")
-        .agg(count(lit(1)), sum(col("total_frames")),
-          min(col("parsed").cast("int"))).collect()(0)
-      val tVm = (System.nanoTime() - t91) / 1e9
-      require(vAgg != null && vm.getLong(0) == nVid.toLong,
-        s"videoMeta rows ${vm.getLong(0)} != $nVid")
-      // sum of frames: 2 clips per class c with 66 + c%8 frames
-      val expTotal = {
-        var t = 0L; var c = 0L
-        while (c < nVid / 2L) { t += 2L * (66L + c % 8L); c += 1L }
-        t
-      }
-      require(vm.getLong(1) == expTotal,
-        s"videoMeta frame total ${vm.getLong(1)} != $expTotal")
-      require(vm.getInt(2) == 1, "videoMeta: some payload failed to parse")
-      println(f"videoMeta: $nVid%d containers header-walked in " +
-        f"$tVm%.1f s (${nVid / tVm}%.0f vids/s), " +
-        f"${vm.getLong(1)} frames declared, all parsed, " +
-        f"heapUsed=${(rtV.totalMemory - rtV.freeMemory) / 1e6}%.0f MB")
-
-      // index lifecycle at the same scale (the SigIndex artifact for
-      // video): persist the even-id half as the corpus signature
-      // index (sidecar records the frame cap), then admit a snapshot
-      // of the odd-id re-gained twins (every one at distance 0 of an
-      // indexed signature -> dropped) plus nVid/10 genuinely fresh
-      // streams (own classes -> admitted). The admission's corpus
-      // side reads 8-byte signatures — no re-decode of the 500k
-      // corpus videos.
-      val vIdxDir = Fixtures.scratchDir("video-idx-smoke").toString
-      val t92 = System.nanoTime()
-      graft.operators.Video.writeVideoNearDupIndex(
-        vids.filter(col("id") % 2 === 0), "id", "content", vIdxDir)
-      val tVIdx = (System.nanoTime() - t92) / 1e9
-      val t93 = System.nanoTime()
-      val vSnap = vids.filter(col("id") % 2 === 1)
-        .unionByName(mkVids(nVid, nVid + nVid / 10L, pairMode = false))
-      val vAdm = graft.operators.Video
-        .incrementalVideoNearDedup(vSnap, "id", "content", vIdxDir)
-        .agg(count(lit(1)), min(col("id")), max(col("id")))
-        .collect()(0)
-      val tVAdmit = (System.nanoTime() - t93) / 1e9
-      require(vAdm.getLong(0) == nVid / 10L,
-        s"videoAdmit count ${vAdm.getLong(0)} != ${nVid / 10}")
-      require(vAdm.getLong(1) == nVid &&
-        vAdm.getLong(2) == nVid + nVid / 10L - 1,
-        s"videoAdmit ids [${vAdm.getLong(1)}, ${vAdm.getLong(2)}] " +
-          "not the fresh range")
-      println(f"videoIndex: ${nVid / 2} sigs indexed in " +
-        f"$tVIdx%.1f s; ${nVid / 2 + nVid / 10} snapshot admitted " +
-        f"-> exactly ${nVid / 10} fresh in $tVAdmit%.1f s " +
-        f"(${(nVid / 2 + nVid / 10) / tVAdmit}%.0f vids/s), " +
-        f"heapUsed=${(rtV.totalMemory - rtV.freeMemory) / 1e6}%.0f MB")
-      Fixtures.delete(java.nio.file.Paths.get(vIdxDir))
+    val vm = graft.operators.Video.videoMetaScan(vids, "id", "content")
+      .agg(count(lit(1)), sum(col("total_frames")),
+        min(col("parsed").cast("int"))).collect()(0)
+    require(vAgg != null && vm.getLong(0) == nVid.toLong,
+      s"videoMeta rows ${vm.getLong(0)} != $nVid")
+    // sum of frames: 2 clips per class c with 66 + c%8 frames
+    val expTotal = {
+      var t = 0L; var c = 0L
+      while (c < nVid / 2L) { t += 2L * (66L + c % 8L); c += 1L }
+      t
     }
+    require(vm.getLong(1) == expTotal,
+      s"videoMeta frame total ${vm.getLong(1)} != $expTotal")
+    require(vm.getInt(2) == 1, "videoMeta: some payload failed to parse")
+    report("metaContainers" -> nVid, "framesDeclared" -> vm.getLong(1))
 
-    // --- MJPEG (compressed codec) video near-dup at scale: every
+    // index lifecycle at the same scale (the SigIndex artifact for
+    // video): persist the even-id half as the corpus signature
+    // index (sidecar records the frame cap), then admit a snapshot
+    // of the odd-id re-gained twins (every one at distance 0 of an
+    // indexed signature -> dropped) plus nVid/10 genuinely fresh
+    // streams (own classes -> admitted). The admission's corpus
+    // side reads 8-byte signatures — no re-decode of the 500k
+    // corpus videos.
+    val vIdxDir = Fixtures.scratchDir("video-idx-smoke").toString
+    graft.operators.Video.writeVideoNearDupIndex(
+      vids.filter(col("id") % 2 === 0), "id", "content", vIdxDir)
+    val vSnap = vids.filter(col("id") % 2 === 1)
+      .unionByName(mkVids(nVid, nVid + nVid / 10L, pairMode = false))
+    val vAdm = graft.operators.Video
+      .incrementalVideoNearDedup(vSnap, "id", "content", vIdxDir)
+      .agg(count(lit(1)), min(col("id")), max(col("id")))
+      .collect()(0)
+    require(vAdm.getLong(0) == nVid / 10L,
+      s"videoAdmit count ${vAdm.getLong(0)} != ${nVid / 10}")
+    require(vAdm.getLong(1) == nVid &&
+      vAdm.getLong(2) == nVid + nVid / 10L - 1,
+      s"videoAdmit ids [${vAdm.getLong(1)}, ${vAdm.getLong(2)}] " +
+        "not the fresh range")
+    report("indexed" -> nVid / 2, "snapshot" -> (nVid / 2 + nVid / 10), "fresh" -> nVid / 10)
+    Fixtures.delete(java.nio.file.Paths.get(vIdxDir))
+  }
+
+  step("mjpegNearDup") {
+    // MJPEG (compressed codec) video near-dup at scale: every
     // frame a REAL standalone JPEG decoded through the JVM codec.
     // Clips are 66..73 flat-gray 16x16 frames (>= 65, so all 64
     // gradient bits are real frame comparisons — shorter clips repeat
@@ -1586,87 +1489,74 @@ object ScaleSmoke {
     // encodes are memoized per gray level (29 distinct flat frames in
     // total — synthesis stays cheap; the 65-sampled-frame DECODE per
     // clip is the thing under measure).
-    {
-      val nMj = (args.drop(1).headOption.map(_.toInt)
-        .getOrElse(1000000)) / 4
-      import spark.implicits._
-      val t97 = System.nanoTime()
-      val mjVids = spark.range(0L, nMj).repartition(64)
-        .mapPartitions { it =>
-          val jpegCache =
-            scala.collection.mutable.HashMap.empty[Int, Array[Byte]]
-          def flat(gray: Int): Array[Byte] =
-            jpegCache.getOrElseUpdate(gray, {
-              val bi = new java.awt.image.BufferedImage(
-                16, 16, java.awt.image.BufferedImage.TYPE_INT_RGB)
-              val g = bi.createGraphics()
-              try {
-                g.setColor(new java.awt.Color(gray, gray, gray))
-                g.fillRect(0, 0, 16, 16)
-              } finally g.dispose()
-              val out = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(bi, "jpg", out)
-              out.toByteArray
-            })
-          it.map { id =>
-            val idL: Long = id
-            val cls = idL / 2
-            val bias = if (idL % 2 == 1) 32 else 0
-            val n = 66 + (cls % 8).toInt
-            val seed = mix64(cls + 0x51AFD7ED5L)
-            val frames = (0 until n).map { f =>
-              val g = 16 + 16 * ((mix64(seed + f) & Long.MaxValue) % 13L)
-                .toInt
-              flat(g + bias)
-            }
-            (idL, graft.operators.Video.buildMjpegAvi(16, 16, frames,
-              40000L))
+    val nMj = nDocs / 4
+    val mjVids = spark.range(0L, nMj).repartition(64)
+      .mapPartitions { it =>
+        val jpegCache =
+          scala.collection.mutable.HashMap.empty[Int, Array[Byte]]
+        def flat(gray: Int): Array[Byte] =
+          jpegCache.getOrElseUpdate(gray, {
+            val bi = new java.awt.image.BufferedImage(
+              16, 16, java.awt.image.BufferedImage.TYPE_INT_RGB)
+            val g = bi.createGraphics()
+            try {
+              g.setColor(new java.awt.Color(gray, gray, gray))
+              g.fillRect(0, 0, 16, 16)
+            } finally g.dispose()
+            val out = new java.io.ByteArrayOutputStream()
+            javax.imageio.ImageIO.write(bi, "jpg", out)
+            out.toByteArray
+          })
+        it.map { id =>
+          val idL: Long = id
+          val cls = idL / 2
+          val bias = if (idL % 2 == 1) 32 else 0
+          val n = 66 + (cls % 8).toInt
+          val seed = mix64(cls + 0x51AFD7ED5L)
+          val frames = (0 until n).map { f =>
+            val g = 16 + 16 * ((mix64(seed + f) & Long.MaxValue) % 13L)
+              .toInt
+            flat(g + bias)
           }
-        }.toDF("id", "content")
-      val mjPairs = graft.operators.Video.videoNearDupPairs(
-        mjVids, "id", "content")
-      val mjAgg = mjPairs.agg(count(lit(1)), max(col("distance")),
-        sum(col("b") - col("a"))).collect()(0)
-      val tMj = (System.nanoTime() - t97) / 1e9
-      require(mjAgg.getLong(0) == nMj / 2L,
-        s"mjpegNearDup pairs ${mjAgg.getLong(0)} != ${nMj / 2}")
-      require(mjAgg.getLong(1) == 0L,
-        s"mjpegNearDup max distance ${mjAgg.getLong(1)} != 0")
-      require(mjAgg.getLong(2) == nMj / 2L,
-        s"mjpegNearDup pair structure: sum(b-a)=${mjAgg.getLong(2)}")
-      val rtM = Runtime.getRuntime
-      println(f"mjpegNearDup: $nMj%d MJPEG avis (~70 real JPEG frames " +
-        f"each, 65 sampled-decoded through the JVM codec), " +
-        f"${nMj / 2} planted bias-twin pairs found exactly in " +
-        f"$tMj%.1f s (${nMj / tMj}%.0f vids/s), " +
-        f"heapUsed=${(rtM.totalMemory - rtM.freeMemory) / 1e6}%.0f MB")
-      // header-only pass: the walk never touches JPEG bytes; every
-      // container must report the MJPG fourcc and the closed-form
-      // frame total
-      val t98 = System.nanoTime()
-      val mjMeta = graft.operators.Video.videoMetaScan(
-        mjVids, "id", "content")
-        .agg(count(lit(1)), sum(col("total_frames")),
-          min(col("compression")), max(col("compression")),
-          min(col("parsed").cast("int"))).collect()(0)
-      val tMjm = (System.nanoTime() - t98) / 1e9
-      val expMjFrames = {
-        var t = 0L; var c = 0L
-        while (c < nMj / 2L) { t += 2L * (66L + c % 8L); c += 1L }
-        t
-      }
-      require(mjMeta.getLong(0) == nMj.toLong &&
-        mjMeta.getLong(1) == expMjFrames &&
-        mjMeta.getLong(2) == 0x47504A4DL &&
-        mjMeta.getLong(3) == 0x47504A4DL &&
-        mjMeta.getInt(4) == 1,
-        s"mjpegMeta: $mjMeta (expected frames $expMjFrames)")
-      println(f"mjpegMeta: $nMj%d MJPEG containers header-walked in " +
-        f"$tMjm%.1f s (${nMj / tMjm}%.0f vids/s), all MJPG fourcc, " +
-        f"heapUsed=${(rtM.totalMemory - rtM.freeMemory) / 1e6}%.0f MB")
+          (idL, graft.operators.Video.buildMjpegAvi(16, 16, frames,
+            40000L))
+        }
+      }.toDF("id", "content")
+    val mjPairs = graft.operators.Video.videoNearDupPairs(
+      mjVids, "id", "content")
+    val mjAgg = mjPairs.agg(count(lit(1)), max(col("distance")),
+      sum(col("b") - col("a"))).collect()(0)
+    require(mjAgg.getLong(0) == nMj / 2L,
+      s"mjpegNearDup pairs ${mjAgg.getLong(0)} != ${nMj / 2}")
+    require(mjAgg.getLong(1) == 0L,
+      s"mjpegNearDup max distance ${mjAgg.getLong(1)} != 0")
+    require(mjAgg.getLong(2) == nMj / 2L,
+      s"mjpegNearDup pair structure: sum(b-a)=${mjAgg.getLong(2)}")
+    report("videos" -> nMj, "twinPairs" -> nMj / 2)
+    // header-only pass: the walk never touches JPEG bytes; every
+    // container must report the MJPG fourcc and the closed-form
+    // frame total
+    val mjMeta = graft.operators.Video.videoMetaScan(
+      mjVids, "id", "content")
+      .agg(count(lit(1)), sum(col("total_frames")),
+        min(col("compression")), max(col("compression")),
+        min(col("parsed").cast("int"))).collect()(0)
+    val expMjFrames = {
+      var t = 0L; var c = 0L
+      while (c < nMj / 2L) { t += 2L * (66L + c % 8L); c += 1L }
+      t
     }
+    require(mjMeta.getLong(0) == nMj.toLong &&
+      mjMeta.getLong(1) == expMjFrames &&
+      mjMeta.getLong(2) == 0x47504A4DL &&
+      mjMeta.getLong(3) == 0x47504A4DL &&
+      mjMeta.getInt(4) == 1,
+      s"mjpegMeta: $mjMeta (expected frames $expMjFrames)")
+    report("metaContainers" -> nMj)
+  }
 
-    // --- video scene hunt at 1M clips: the fragment triad's video
+  step("sceneDetect") {
+    // video scene hunt at 1M clips: the fragment triad's video
     // member. A known 66-frame scene (>= 65 frames, so segment
     // fingerprints keep all 64 comparison bits — shorter windows
     // collapse entropy, the documented degeneracy) is planted at
@@ -1676,100 +1566,86 @@ object ScaleSmoke {
     // (strict buckets). Dropped rows must be EXACTLY the planted
     // containers' offset-8 segments — 2000 of them, again 2x the old
     // cross-fold cap.
-    {
-      val nSc = args.drop(1).headOption.map(_.toInt)
-        .getOrElse(1000000)
-      import spark.implicits._
-      def frameOf(seed: Long, f: Int): Array[Byte] = {
-        val fs = mix64(seed + f * 0x9E3779B97F4A7C15L)
-        Array.tabulate(36)(k =>
-          ((mix64(fs + k) & Long.MaxValue) % 101L).toByte)
-      }
-      val sceneFrames = (0 until 66).map(f => frameOf(mix64(-3L), f))
-      val sceneBytes = graft.operators.Video.buildUncompressedAvi(
-        4, 3, sceneFrames, 40000L)
-      val scIdxDir = Fixtures.scratchDir("scene-smoke").toString
-      graft.operators.Video.writeVideoNearDupIndex(
-        Seq((0L, sceneBytes)).toDF("id", "content"),
-        "id", "content", scIdxDir)
-      val t99 = System.nanoTime()
-      val scClips = spark.range(0L, nSc).repartition(64)
-        .mapPartitions { it =>
-          val sf = {
-            val s0 = mix64(-3L)
-            (0 until 66).map(f => frameOf(s0, f))
-          }
-          it.map { id =>
-            val idL: Long = id
-            val planted = idL % 500 == 0
-            val frames = (0 until 80).map { f =>
-              if (planted && f >= 8 && f < 74) sf(f - 8)
-              else frameOf(mix64(idL), f)
-            }
-            (idL, graft.operators.Video.buildUncompressedAvi(
-              4, 3, frames, 40000L))
-          }
-        }.toDF("id", "content")
-      val scSegs = graft.operators.Video.segmentVideos(scClips, "id",
-        "content", segmentFrames = 66, hopFrames = 8).toDF()
-        .filter(col("decoded"))
-        .select((col("id") * 2 + col("segIdx")).as("id"), col("avi"))
-      val scAdm = graft.operators.Video.incrementalVideoNearDedup(
-        scSegs, "id", "avi", scIdxDir, maxDistance = 0,
-        strictBuckets = true)
-      val scAgg = scAdm.agg(count(lit(1)),
-        sum(when(col("id") % 1000 === 1, 1L).otherwise(0L)))
-        .collect()(0)
-      val tScene = (System.nanoTime() - t99) / 1e9
-      require(scAgg.getLong(0) == 2L * nSc - 2L * (nSc / 1000L),
-        s"scene admitted ${scAgg.getLong(0)} != " +
-          s"${2L * nSc - 2L * (nSc / 1000L)}")
-      require(scAgg.getLong(1) == 0L,
-        s"${scAgg.getLong(1)} planted scene segments leaked through")
-      val rtS = Runtime.getRuntime
-      println(f"sceneDetect: 1 indexed 66-frame scene vs $nSc%d clips " +
-        f"(${2L * nSc} segments re-encoded + fingerprinted) -> " +
-        f"exactly ${2L * (nSc / 1000L)} planted containers found in " +
-        f"$tScene%.1f s (${nSc / tScene}%.0f clips/s), " +
-        f"heapUsed=${(rtS.totalMemory - rtS.freeMemory) / 1e6}%.0f MB")
-      Fixtures.delete(java.nio.file.Paths.get(scIdxDir))
+    val nSc = nDocs
+    def frameOf(seed: Long, f: Int): Array[Byte] = {
+      val fs = mix64(seed + f * 0x9E3779B97F4A7C15L)
+      Array.tabulate(36)(k =>
+        ((mix64(fs + k) & Long.MaxValue) % 101L).toByte)
     }
+    val sceneFrames = (0 until 66).map(f => frameOf(mix64(-3L), f))
+    val sceneBytes = graft.operators.Video.buildUncompressedAvi(
+      4, 3, sceneFrames, 40000L)
+    val scIdxDir = Fixtures.scratchDir("scene-smoke").toString
+    graft.operators.Video.writeVideoNearDupIndex(
+      Seq((0L, sceneBytes)).toDF("id", "content"),
+      "id", "content", scIdxDir)
+    val scClips = spark.range(0L, nSc).repartition(64)
+      .mapPartitions { it =>
+        val sf = {
+          val s0 = mix64(-3L)
+          (0 until 66).map(f => frameOf(s0, f))
+        }
+        it.map { id =>
+          val idL: Long = id
+          val planted = idL % 500 == 0
+          val frames = (0 until 80).map { f =>
+            if (planted && f >= 8 && f < 74) sf(f - 8)
+            else frameOf(mix64(idL), f)
+          }
+          (idL, graft.operators.Video.buildUncompressedAvi(
+            4, 3, frames, 40000L))
+        }
+      }.toDF("id", "content")
+    val scSegs = graft.operators.Video.segmentVideos(scClips, "id",
+      "content", segmentFrames = 66, hopFrames = 8).toDF()
+      .filter(col("decoded"))
+      .select((col("id") * 2 + col("segIdx")).as("id"), col("avi"))
+    val scAdm = graft.operators.Video.incrementalVideoNearDedup(
+      scSegs, "id", "avi", scIdxDir, maxDistance = 0,
+      strictBuckets = true)
+    val scAgg = scAdm.agg(count(lit(1)),
+      sum(when(col("id") % 1000 === 1, 1L).otherwise(0L)))
+      .collect()(0)
+    require(scAgg.getLong(0) == 2L * nSc - 2L * (nSc / 1000L),
+      s"scene admitted ${scAgg.getLong(0)} != " +
+        s"${2L * nSc - 2L * (nSc / 1000L)}")
+    require(scAgg.getLong(1) == 0L,
+      s"${scAgg.getLong(1)} planted scene segments leaked through")
+    report("clips" -> nSc, "segments" -> 2L * nSc, "plantedFound" -> 2L * (nSc / 1000L))
+    Fixtures.delete(java.nio.file.Paths.get(scIdxDir))
+  }
 
-    // --- approxGroupedRankBuckets at 100k groups: the crawl-scale
+  step("approxGroupRank") {
+    // approxGroupedRankBuckets at 100k groups: the crawl-scale
     // rank-cut engine with a closed-form planted answer. 100k domains
     // x 10 docs, scores 0..9 within each; 16 bins over [0, 10] give
     // every distinct score its own bin, so the sketch cut equals the
     // exact engine's ceil(rank*4/10) — per-group bucket sizes
     // {2, 3, 2, 3}. No per-group driver state: heap stays flat while
     // group cardinality is 25x the exact engine's maxGroups gate.
-    {
-      val nAgr = 1000000L
-      val t80 = System.nanoTime()
-      val agrDocs = spark.range(nAgr).select(col("id"),
-        (col("id") / 10).cast("long").cast("string").as("domain"),
-        (col("id") % 10).cast("double").as("score"))
-      val agrCut = graft.operators.DataSelection.approxGroupedRankBuckets(
-        agrDocs, "domain", "score", 4, lo = 0.0, hi = 10.0, nBins = 16)
-      // bucket is a pure function of (group, bin) and every domain has
-      // the same score set -> exactly 10 (score, bucket) pairs, each
-      // holding all 100k domains
-      val agrAgg = agrCut.groupBy(col("score"), col("bucket")).count()
-        .collect()
-        .map(r => (r.getDouble(0), r.getInt(1)) -> r.getLong(2)).toMap
-      val tAgr = (System.nanoTime() - t80) / 1e9
-      require(agrAgg.size == 10, s"agr pairs ${agrAgg.size}: $agrAgg")
-      val agrExpect = Map(0.0 -> 1, 1.0 -> 1, 2.0 -> 2, 3.0 -> 2,
-        4.0 -> 2, 5.0 -> 3, 6.0 -> 3, 7.0 -> 4, 8.0 -> 4, 9.0 -> 4)
-      for ((s2, b) <- agrExpect)
-        require(agrAgg.get((s2, b)).contains(nAgr / 10),
-          s"agr score $s2 bucket $b: ${agrAgg.filter(_._1._1 == s2)}")
-      println(f"approxGroupRank: $nAgr docs x ${nAgr / 10} domains -> " +
-        f"4 tiers (per-group sizes 2/3/2/3, closed form exact) in " +
-        f"$tAgr%.1f s (${nAgr / tAgr}%.0f docs/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+    val nAgr = 1000000L
+    val agrDocs = spark.range(nAgr).select(col("id"),
+      (col("id") / 10).cast("long").cast("string").as("domain"),
+      (col("id") % 10).cast("double").as("score"))
+    val agrCut = graft.operators.DataSelection.approxGroupedRankBuckets(
+      agrDocs, "domain", "score", 4, lo = 0.0, hi = 10.0, nBins = 16)
+    // bucket is a pure function of (group, bin) and every domain has
+    // the same score set -> exactly 10 (score, bucket) pairs, each
+    // holding all 100k domains
+    val agrAgg = agrCut.groupBy(col("score"), col("bucket")).count()
+      .collect()
+      .map(r => (r.getDouble(0), r.getInt(1)) -> r.getLong(2)).toMap
+    require(agrAgg.size == 10, s"agr pairs ${agrAgg.size}: $agrAgg")
+    val agrExpect = Map(0.0 -> 1, 1.0 -> 1, 2.0 -> 2, 3.0 -> 2,
+      4.0 -> 2, 5.0 -> 3, 6.0 -> 3, 7.0 -> 4, 8.0 -> 4, 9.0 -> 4)
+    for ((s2, b) <- agrExpect)
+      require(agrAgg.get((s2, b)).contains(nAgr / 10),
+        s"agr score $s2 bucket $b: ${agrAgg.filter(_._1._1 == s2)}")
+    report("docs" -> nAgr, "domains" -> nAgr / 10)
+  }
 
-    // --- fragment bridges at 1M: needle-in-a-haystack detection.
+  step("jingleDetect") {
+    // fragment bridges at 1M: needle-in-a-haystack detection.
     // Whole-payload fingerprints CANNOT find a known fragment buried
     // inside a larger payload (the duration-normalized audio sig and
     // the whole-image hash both deliberately normalize it away); the
@@ -1786,1279 +1662,1087 @@ object ScaleSmoke {
     // corpus-side-only fold caps only INDEXED signature buckets, so
     // snapshot multiplicity is unbounded by construction — this run
     // pins that at 2x the old killing threshold.
-    {
-      import spark.implicits._
-      val nHay = 1000000L
-      // audio: clips of 1040 mono samples; id % 500 == 0 clips carry
-      // the fixed 260-sample jingle as segment 0 (hop = width = 260)
-      def jingleSample(k: Int): Int =
-        (((mix64(mix64(-1L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
-      val t95 = System.nanoTime()
-      val clips = spark.range(0L, nHay).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val samples = Array.tabulate(1040) { k =>
-              if (id % 500 == 0 && k < 260) jingleSample(k)
-              else (((mix64(mix64(id) + k) & Long.MaxValue) % 16001L)
-                - 8000L).toInt
-            }
-            (id, graft.operators.Audio.wrapWav(samples, 0, 1040, 8000))
+    val nHay = 1000000L
+    // audio: clips of 1040 mono samples; id % 500 == 0 clips carry
+    // the fixed 260-sample jingle as segment 0 (hop = width = 260)
+    def jingleSample(k: Int): Int =
+      (((mix64(mix64(-1L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
+    val clips = spark.range(0L, nHay).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val samples = Array.tabulate(1040) { k =>
+            if (id % 500 == 0 && k < 260) jingleSample(k)
+            else (((mix64(mix64(id) + k) & Long.MaxValue) % 16001L)
+              - 8000L).toInt
           }
-        }.toDF("id", "content")
-      val jIdxDir = Fixtures.scratchDir("jingle-smoke").toString
-      graft.operators.Audio.writeAudioNearDupIndex(
-        Seq((0L, graft.operators.Audio.wrapWav(
-          Array.tabulate(260)(jingleSample), 0, 260, 8000)))
-          .toDF("id", "content"),
-        "id", "content", jIdxDir)
-      val segs = graft.operators.Audio.segmentClips(clips, "id",
-        "content", segmentFrames = 260).toDF()
-        .filter(col("decoded"))
-        .select((col("id") * 4 + col("segIdx")).as("id"), col("wav"))
-      // strictBuckets passes (the one-entry index has no over-cap
-      // bucket) and the admission drops exactly the planted
-      // (id % 500 == 0, segment 0) rows — 2000 of them, 2x the cap
-      // that silently killed the pre-round-15 hunt
-      val segAdm = graft.operators.Audio.incrementalAudioNearDedup(
-        segs, "id", "wav", jIdxDir, strictBuckets = true)
-      val jAgg = segAdm.agg(count(lit(1)),
-        sum(when(col("id") % 2000 === 0, 1L).otherwise(0L)))
-        .collect()(0)
-      val tJingle = (System.nanoTime() - t95) / 1e9
-      require(jAgg.getLong(0) == 4L * nHay - 2000L,
-        s"jingle admitted ${jAgg.getLong(0)} != ${4 * nHay - 2000}")
-      require(jAgg.getLong(1) == 0L,
-        s"${jAgg.getLong(1)} planted jingle segments leaked through")
-      println(f"jingleDetect: 1 indexed jingle vs $nHay%d clips " +
-        f"(${4 * nHay} segments) -> exactly 2000 planted containers " +
-        f"(2x the old cap) found in $tJingle%.1f s " +
-        f"(${nHay / tJingle}%.0f clips/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      Fixtures.delete(java.nio.file.Paths.get(jIdxDir))
+          (id, graft.operators.Audio.wrapWav(samples, 0, 1040, 8000))
+        }
+      }.toDF("id", "content")
+    val jIdxDir = Fixtures.scratchDir("jingle-smoke").toString
+    graft.operators.Audio.writeAudioNearDupIndex(
+      Seq((0L, graft.operators.Audio.wrapWav(
+        Array.tabulate(260)(jingleSample), 0, 260, 8000)))
+        .toDF("id", "content"),
+      "id", "content", jIdxDir)
+    val segs = graft.operators.Audio.segmentClips(clips, "id",
+      "content", segmentFrames = 260).toDF()
+      .filter(col("decoded"))
+      .select((col("id") * 4 + col("segIdx")).as("id"), col("wav"))
+    // strictBuckets passes (the one-entry index has no over-cap
+    // bucket) and the admission drops exactly the planted
+    // (id % 500 == 0, segment 0) rows — 2000 of them, 2x the cap
+    // that silently killed the pre-round-15 hunt
+    val segAdm = graft.operators.Audio.incrementalAudioNearDedup(
+      segs, "id", "wav", jIdxDir, strictBuckets = true)
+    val jAgg = segAdm.agg(count(lit(1)),
+      sum(when(col("id") % 2000 === 0, 1L).otherwise(0L)))
+      .collect()(0)
+    require(jAgg.getLong(0) == 4L * nHay - 2000L,
+      s"jingle admitted ${jAgg.getLong(0)} != ${4 * nHay - 2000}")
+    require(jAgg.getLong(1) == 0L,
+      s"${jAgg.getLong(1)} planted jingle segments leaked through")
+    report("clips" -> nHay, "segments" -> 4 * nHay)
+    Fixtures.delete(java.nio.file.Paths.get(jIdxDir))
 
-      // images: 32x24 BMPs; id % 500 == 0 images carry the fixed
-      // 16x12 crop as tile (0, 0)
-      def cropByte(k: Int): Byte =
-        ((mix64(mix64(-2L) + k) & Long.MaxValue) % 256L).toByte
-      val t96 = System.nanoTime()
-      val imgs = spark.range(0L, nHay).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val bgr = Array.tabulate(3 * 32 * 24) { k =>
-              val p = k / 3
-              val x = p % 32
-              val y = p / 32
-              if (id % 500 == 0 && x < 16 && y < 12)
-                cropByte(3 * (y * 16 + x) + k % 3)
-              else ((mix64(mix64(id + 7L) + k) & Long.MaxValue) % 256L).toByte
-            }
-            (id, graft.operators.Multimodal.buildBmp(32, 24, bgr))
+    // images: 32x24 BMPs; id % 500 == 0 images carry the fixed
+    // 16x12 crop as tile (0, 0)
+    def cropByte(k: Int): Byte =
+      ((mix64(mix64(-2L) + k) & Long.MaxValue) % 256L).toByte
+    val imgs = spark.range(0L, nHay).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val bgr = Array.tabulate(3 * 32 * 24) { k =>
+            val p = k / 3
+            val x = p % 32
+            val y = p / 32
+            if (id % 500 == 0 && x < 16 && y < 12)
+              cropByte(3 * (y * 16 + x) + k % 3)
+            else ((mix64(mix64(id + 7L) + k) & Long.MaxValue) % 256L).toByte
           }
-        }.toDF("id", "content")
-      val cIdxDir = Fixtures.scratchDir("crop-smoke").toString
-      graft.operators.Multimodal.writeImageNearDupIndex(
-        Seq((0L, graft.operators.Multimodal.buildBmp(16, 12,
-          Array.tabulate(3 * 16 * 12)(cropByte))))
-          .toDF("id", "content"),
-        "id", "content", cIdxDir)
-      val tiles = graft.operators.Multimodal.tileImages(imgs, "id",
-        "content", tileW = 16, tileH = 12).toDF()
-        .filter(col("decoded"))
-        .select((col("id") * 4 + col("tileY") * 2 + col("tileX"))
-          .as("id"), col("image"))
-      val tileAdm = graft.operators.Multimodal.incrementalImageNearDedup(
-        tiles, "id", "image", cIdxDir, strictBuckets = true)
-      val cAgg = tileAdm.agg(count(lit(1)),
-        sum(when(col("id") % 2000 === 0, 1L).otherwise(0L)))
-        .collect()(0)
-      val tCrop = (System.nanoTime() - t96) / 1e9
-      require(cAgg.getLong(0) == 4L * nHay - 2000L,
-        s"crop admitted ${cAgg.getLong(0)} != ${4 * nHay - 2000}")
-      require(cAgg.getLong(1) == 0L,
-        s"${cAgg.getLong(1)} planted crop tiles leaked through")
-      println(f"cropDetect: 1 indexed crop vs $nHay%d images " +
-        f"(${4 * nHay} tiles) -> exactly 2000 planted containers " +
-        f"(2x the old cap) found in $tCrop%.1f s " +
-        f"(${nHay / tCrop}%.0f imgs/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      Fixtures.delete(java.nio.file.Paths.get(cIdxDir))
-    }
+          (id, graft.operators.Multimodal.buildBmp(32, 24, bgr))
+        }
+      }.toDF("id", "content")
+    val cIdxDir = Fixtures.scratchDir("crop-smoke").toString
+    graft.operators.Multimodal.writeImageNearDupIndex(
+      Seq((0L, graft.operators.Multimodal.buildBmp(16, 12,
+        Array.tabulate(3 * 16 * 12)(cropByte))))
+        .toDF("id", "content"),
+      "id", "content", cIdxDir)
+    val tiles = graft.operators.Multimodal.tileImages(imgs, "id",
+      "content", tileW = 16, tileH = 12).toDF()
+      .filter(col("decoded"))
+      .select((col("id") * 4 + col("tileY") * 2 + col("tileX"))
+        .as("id"), col("image"))
+    val tileAdm = graft.operators.Multimodal.incrementalImageNearDedup(
+      tiles, "id", "image", cIdxDir, strictBuckets = true)
+    val cAgg = tileAdm.agg(count(lit(1)),
+      sum(when(col("id") % 2000 === 0, 1L).otherwise(0L)))
+      .collect()(0)
+    require(cAgg.getLong(0) == 4L * nHay - 2000L,
+      s"crop admitted ${cAgg.getLong(0)} != ${4 * nHay - 2000}")
+    require(cAgg.getLong(1) == 0L,
+      s"${cAgg.getLong(1)} planted crop tiles leaked through")
+    report("images" -> nHay, "tiles" -> 4 * nHay)
+    Fixtures.delete(java.nio.file.Paths.get(cIdxDir))
+  }
 
-    // --- soundtrack hunt at 500k videos: the round-16 bridge, through
+  step("soundtrackDetect") {
+    // soundtrack hunt at 500k videos: the round-16 bridge, through
     // the PUBLIC hunt API (strict buckets are its default). Every
     // 500th of 500k two-stream AVIs carries a known 1040-sample jingle
     // as soundtrack segment 1; findVideosWithJingle = extract the
     // audio track (byte-level 01wb concat), segment, fingerprint under
     // the index's params, cross-bucket admit — hits must be EXACTLY
     // the planted (container, segment 1) locations.
-    {
-      import spark.implicits._
-      val nVid = 500000L
-      def jingleSample(k: Int): Int =
-        (((mix64(mix64(-5L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
-      val jIdxDir = Fixtures.scratchDir("vjingle-smoke").toString
-      graft.operators.Audio.writeAudioNearDupIndex(
-        Seq((0L, graft.operators.Audio.wrapWav(
-          Array.tabulate(1040)(jingleSample), 0, 1040, 8000)))
-          .toDF("id", "content"),
-        "id", "content", jIdxDir)
-      val t90 = System.nanoTime()
-      val vids = spark.range(0L, nVid).repartition(64)
-        .mapPartitions { it =>
-          val frames = (0 until 4).map { f =>
-            val fs = mix64(-6L + f)
-            Array.tabulate(36)(k =>
-              ((mix64(fs + k) & Long.MaxValue) % 101L).toByte)
+    val nVid = 500000L
+    def jingleSample(k: Int): Int =
+      (((mix64(mix64(-5L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
+    val jIdxDir = Fixtures.scratchDir("vjingle-smoke").toString
+    graft.operators.Audio.writeAudioNearDupIndex(
+      Seq((0L, graft.operators.Audio.wrapWav(
+        Array.tabulate(1040)(jingleSample), 0, 1040, 8000)))
+        .toDF("id", "content"),
+      "id", "content", jIdxDir)
+    val vids = spark.range(0L, nVid).repartition(64)
+      .mapPartitions { it =>
+        val frames = (0 until 4).map { f =>
+          val fs = mix64(-6L + f)
+          Array.tabulate(36)(k =>
+            ((mix64(fs + k) & Long.MaxValue) % 101L).toByte)
+        }
+        it.map { id =>
+          val samples = Array.tabulate(3120) { k =>
+            if (id % 500 == 0 && k >= 1040 && k < 2080)
+              jingleSample(k - 1040)
+            else (((mix64(mix64(id) + k) & Long.MaxValue) % 16001L)
+              - 8000L).toInt
           }
-          it.map { id =>
-            val samples = Array.tabulate(3120) { k =>
-              if (id % 500 == 0 && k >= 1040 && k < 2080)
-                jingleSample(k - 1040)
-              else (((mix64(mix64(id) + k) & Long.MaxValue) % 16001L)
-                - 8000L).toInt
-            }
-            (id, graft.operators.Video.buildAviWithAudio(
-              4, 3, frames, 40000L, samples, 8000))
-          }
-        }.toDF("id", "content")
-      val vhits = graft.operators.Video.findVideosWithJingle(
-        vids, "id", "content", jIdxDir, segmentFrames = 1040)
-      val vAgg = vhits.agg(count(lit(1)),
-        sum(when(col("id") % 500 === 0 && col("seg_idx") === 1L, 1L)
-          .otherwise(0L))).collect()(0)
-      val tVj = (System.nanoTime() - t90) / 1e9
-      require(vAgg.getLong(0) == nVid / 500L &&
-        vAgg.getLong(1) == nVid / 500L,
-        s"soundtrackDetect: $vAgg != ${nVid / 500} planted hits")
-      println(f"soundtrackDetect: 1 indexed jingle vs $nVid%d videos " +
-        f"(extract -> segment -> admit, strict, PUBLIC hunt API) -> " +
-        f"exactly ${nVid / 500} planted soundtrack hits in $tVj%.1f s " +
-        f"(${nVid / tVj}%.0f vids/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      Fixtures.delete(java.nio.file.Paths.get(jIdxDir))
-    }
+          (id, graft.operators.Video.buildAviWithAudio(
+            4, 3, frames, 40000L, samples, 8000))
+        }
+      }.toDF("id", "content")
+    val vhits = graft.operators.Video.findVideosWithJingle(
+      vids, "id", "content", jIdxDir, segmentFrames = 1040)
+    val vAgg = vhits.agg(count(lit(1)),
+      sum(when(col("id") % 500 === 0 && col("seg_idx") === 1L, 1L)
+        .otherwise(0L))).collect()(0)
+    require(vAgg.getLong(0) == nVid / 500L &&
+      vAgg.getLong(1) == nVid / 500L,
+      s"soundtrackDetect: $vAgg != ${nVid / 500} planted hits")
+    report("videos" -> nVid, "plantedHits" -> nVid / 500)
+    Fixtures.delete(java.nio.file.Paths.get(jIdxDir))
+  }
 
-    // --- cross-container dedup at 500k payloads: 250k pixel classes,
+  step("crossContainerDedup") {
+    // cross-container dedup at 500k payloads: 250k pixel classes,
     // each carried TWICE — as an uncompressed AVI (even id) and as an
     // animated GIF through the REAL LZW decode (odd id). One
     // signature space (videoSigsAuto dispatches by magic): the pair
     // set must be EXACTLY the 250k (2c, 2c+1) container twins at
     // distance 0 — no cross-class leakage, no same-container bias.
-    {
-      import spark.implicits._
-      val nCc = 500000L
-      val palette = Array.tabulate(16)(i =>
-        (((i * 23) % 256) << 16) | (((i * 47) % 256) << 8) |
-          ((i * 91) % 256))
-      val t91 = System.nanoTime()
-      val mixed = spark.range(0L, nCc).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val cls = id / 2
-            // per-class index stream: 66 frames of 8x4 palette
-            // indices from the mixed seed (genuinely varying luma)
-            val idxFrames = (0 until 66).map { f =>
-              val fs = mix64(mix64(cls) + f)
-              Array.tabulate(32)(p =>
-                ((mix64(fs + p) & Long.MaxValue) % 16L).toByte)
-            }
-            val payload =
-              if (id % 2 == 0) {
-                val frames = idxFrames.map { ix =>
-                  val bgr = new Array[Byte](96)
-                  ix.indices.foreach { p =>
-                    val rgb = palette(ix(p) & 0xFF)
-                    bgr(3 * p) = (rgb & 0xFF).toByte
-                    bgr(3 * p + 1) = ((rgb >> 8) & 0xFF).toByte
-                    bgr(3 * p + 2) = ((rgb >> 16) & 0xFF).toByte
-                  }
-                  bgr
-                }
-                graft.operators.Video.buildUncompressedAvi(
-                  8, 4, frames, 40000L)
-              } else graft.operators.Gif.buildGif(
-                8, 4, palette, idxFrames, delayCs = 4)
-            (id, payload)
+    val nCc = 500000L
+    val palette = Array.tabulate(16)(i =>
+      (((i * 23) % 256) << 16) | (((i * 47) % 256) << 8) |
+        ((i * 91) % 256))
+    val mixed = spark.range(0L, nCc).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val cls = id / 2
+          // per-class index stream: 66 frames of 8x4 palette
+          // indices from the mixed seed (genuinely varying luma)
+          val idxFrames = (0 until 66).map { f =>
+            val fs = mix64(mix64(cls) + f)
+            Array.tabulate(32)(p =>
+              ((mix64(fs + p) & Long.MaxValue) % 16L).toByte)
           }
-        }.toDF("id", "content")
-      val ccPairs = graft.operators.Video.videoNearDupPairsAuto(
-        mixed, "id", "content", maxDistance = 0)
-      val ccAgg = ccPairs.agg(count(lit(1)), sum(col("b") - col("a")),
-        max(col("distance"))).collect()(0)
-      val tCc = (System.nanoTime() - t91) / 1e9
-      require(ccAgg.getLong(0) == nCc / 2L,
-        s"crossContainer pairs ${ccAgg.getLong(0)} != ${nCc / 2}")
-      require(ccAgg.getLong(1) == nCc / 2L,
-        s"crossContainer pair structure: sum(b-a)=${ccAgg.getLong(1)}")
-      require(ccAgg.getLong(2) == 0L,
-        s"crossContainer max distance ${ccAgg.getLong(2)} != 0")
-      println(f"crossContainerDedup: $nCc%d mixed payloads " +
-        f"(${nCc / 2} AVI + ${nCc / 2} real LZW-decoded GIF) -> " +
-        f"exactly ${nCc / 2} container-twin pairs at distance 0 in " +
-        f"$tCc%.1f s (${nCc / tCc}%.0f vids/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+          val payload =
+            if (id % 2 == 0) {
+              val frames = idxFrames.map { ix =>
+                val bgr = new Array[Byte](96)
+                ix.indices.foreach { p =>
+                  val rgb = palette(ix(p) & 0xFF)
+                  bgr(3 * p) = (rgb & 0xFF).toByte
+                  bgr(3 * p + 1) = ((rgb >> 8) & 0xFF).toByte
+                  bgr(3 * p + 2) = ((rgb >> 16) & 0xFF).toByte
+                }
+                bgr
+              }
+              graft.operators.Video.buildUncompressedAvi(
+                8, 4, frames, 40000L)
+            } else graft.operators.Gif.buildGif(
+              8, 4, palette, idxFrames, delayCs = 4)
+          (id, payload)
+        }
+      }.toDF("id", "content")
+    val ccPairs = graft.operators.Video.videoNearDupPairsAuto(
+      mixed, "id", "content", maxDistance = 0)
+    val ccAgg = ccPairs.agg(count(lit(1)), sum(col("b") - col("a")),
+      max(col("distance"))).collect()(0)
+    require(ccAgg.getLong(0) == nCc / 2L,
+      s"crossContainer pairs ${ccAgg.getLong(0)} != ${nCc / 2}")
+    require(ccAgg.getLong(1) == nCc / 2L,
+      s"crossContainer pair structure: sum(b-a)=${ccAgg.getLong(1)}")
+    require(ccAgg.getLong(2) == 0L,
+      s"crossContainer max distance ${ccAgg.getLong(2)} != 0")
+    report("payloads" -> nCc, "avi" -> nCc / 2, "gif" -> nCc / 2, "twinPairs" -> nCc / 2)
+  }
 
-    // --- container metadata throughput: the 100 TB filter path for
+  step("mp4Meta") {
+    // container metadata throughput: the 100 TB filter path for
     // the round-16 walks. 2M MP4s (both the 32-bit and the v1/
     // largesize 64-bit forms) and 1M MP3 frame streams, header-only —
     // closed-form aggregates pin every projected field.
-    {
-      import spark.implicits._
-      val nM4 = 2000000L
-      val t92 = System.nanoTime()
-      val m4s = spark.range(0L, nM4).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            (id, graft.operators.Mp4.buildMp4(
-              timescale = 600L + b, duration = 1000L + b * 77L,
-              width = 16 * (1 + b % 4), height = 16 * (1 + b % 3),
-              nFrames = 24L + b % 8, mdatBytes = 64,
-              use64Bit = b % 2 == 1))
-          }
-        }.toDF("id", "content")
-      val m4Agg = graft.operators.Mp4.mp4MetaScan(m4s, "id", "content")
-        .agg(count(lit(1)), min(col("parsed").cast("int")),
-          sum(col("duration")), sum(col("video_frames"))).collect()(0)
-      val tM4 = (System.nanoTime() - t92) / 1e9
-      val expDur = (0 until 64).map(b => 1000L + b * 77L).sum *
-        (nM4 / 64L)
-      val expFr = (0 until 64).map(b => 24L + b % 8).sum * (nM4 / 64L)
-      require(m4Agg.getLong(0) == nM4 && m4Agg.getInt(1) == 1 &&
-        m4Agg.getLong(2) == expDur && m4Agg.getLong(3) == expFr,
-        s"mp4Meta: $m4Agg (expected dur $expDur frames $expFr)")
-      println(f"mp4Meta: $nM4%d ISO-BMFF containers box-walked in " +
-        f"$tM4%.1f s (${nM4 / tM4}%.0f files/s), all parsed, " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    val nM4 = 2000000L
+    val m4s = spark.range(0L, nM4).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          (id, graft.operators.Mp4.buildMp4(
+            timescale = 600L + b, duration = 1000L + b * 77L,
+            width = 16 * (1 + b % 4), height = 16 * (1 + b % 3),
+            nFrames = 24L + b % 8, mdatBytes = 64,
+            use64Bit = b % 2 == 1))
+        }
+      }.toDF("id", "content")
+    val m4Agg = graft.operators.Mp4.mp4MetaScan(m4s, "id", "content")
+      .agg(count(lit(1)), min(col("parsed").cast("int")),
+        sum(col("duration")), sum(col("video_frames"))).collect()(0)
+    val expDur = (0 until 64).map(b => 1000L + b * 77L).sum *
+      (nM4 / 64L)
+    val expFr = (0 until 64).map(b => 24L + b % 8).sum * (nM4 / 64L)
+    require(m4Agg.getLong(0) == nM4 && m4Agg.getInt(1) == 1 &&
+      m4Agg.getLong(2) == expDur && m4Agg.getLong(3) == expFr,
+      s"mp4Meta: $m4Agg (expected dur $expDur frames $expFr)")
+    report("mp4Containers" -> nM4)
 
-      val nM3 = 1000000L
-      val t93 = System.nanoTime()
-      val m3s = spark.range(0L, nM3).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            val vb = (b % 3: @unchecked) match {
-              case 0 => 3
-              case 1 => 2
-              case 2 => 0
-            }
-            (id, graft.operators.Mp3.buildMp3(vb, (b / 3) % 3,
-              Seq.fill(5 + b % 6)(1 + b % 14), mono = b % 2 == 0))
+    val nM3 = 1000000L
+    val m3s = spark.range(0L, nM3).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          val vb = (b % 3: @unchecked) match {
+            case 0 => 3
+            case 1 => 2
+            case 2 => 0
           }
-        }.toDF("id", "content")
-      val m3Agg = graft.operators.Mp3.mp3MetaScan(m3s, "id", "content")
-        .agg(count(lit(1)), min(col("parsed").cast("int")),
-          sum(col("frames"))).collect()(0)
-      val tM3 = (System.nanoTime() - t93) / 1e9
-      val expM3Fr = (0 until 64).map(b => 5L + b % 6).sum * (nM3 / 64L)
-      require(m3Agg.getLong(0) == nM3 && m3Agg.getInt(1) == 1 &&
-        m3Agg.getLong(2) == expM3Fr,
-        s"mp3Meta: $m3Agg (expected frames $expM3Fr)")
-      println(f"mp3Meta: $nM3%d MP3 streams sync-walked in " +
-        f"$tM3%.1f s (${nM3 / tM3}%.0f files/s), all parsed, " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+          (id, graft.operators.Mp3.buildMp3(vb, (b / 3) % 3,
+            Seq.fill(5 + b % 6)(1 + b % 14), mono = b % 2 == 0))
+        }
+      }.toDF("id", "content")
+    val m3Agg = graft.operators.Mp3.mp3MetaScan(m3s, "id", "content")
+      .agg(count(lit(1)), min(col("parsed").cast("int")),
+        sum(col("frames"))).collect()(0)
+    val expM3Fr = (0 until 64).map(b => 5L + b % 6).sum * (nM3 / 64L)
+    require(m3Agg.getLong(0) == nM3 && m3Agg.getInt(1) == 1 &&
+      m3Agg.getLong(2) == expM3Fr,
+      s"mp3Meta: $m3Agg (expected frames $expM3Fr)")
+    report("mp3Streams" -> nM3)
+  }
 
-    // --- MP4 soundtrack hunt at 500k containers: the round-17
+  step("mp4SoundtrackDetect") {
+    // MP4 soundtrack hunt at 500k containers: the round-17
     // sample-table bridge. Every 500th of 500k MP4s (sowt PCM sound
     // tracks behind real stsc/stsz/stco layouts, leading video trak)
     // carries the known jingle as segment 1; the SAME public hunt API
     // as the AVI smoke — extractAudioTracks now dispatches by magic —
     // must return EXACTLY the planted (container, segment 1) hits.
-    {
-      import spark.implicits._
-      val nVid = 500000L
-      def jingleSample(k: Int): Int =
-        (((mix64(mix64(-7L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
-      val jIdxDir = Fixtures.scratchDir("m4jingle-smoke").toString
-      graft.operators.Audio.writeAudioNearDupIndex(
-        Seq((0L, graft.operators.Audio.wrapWav(
-          Array.tabulate(1040)(jingleSample), 0, 1040, 8000)))
-          .toDF("id", "content"),
-        "id", "content", jIdxDir)
-      val t94 = System.nanoTime()
-      val vids = spark.range(0L, nVid).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val samples = Array.tabulate(3120) { k =>
-              if (id % 500 == 0 && k >= 1040 && k < 2080)
-                jingleSample(k - 1040)
-              else (((mix64(mix64(id) + k) & Long.MaxValue) % 16001L)
-                - 8000L).toInt
-            }
-            (id, graft.operators.Mp4.buildMp4Pcm(
-              600L, 3120L, "sowt", 1, 8000, samples,
-              Seq(1024, 1024, 1072), use64BitOffsets = id % 2 == 1,
-              withVideoTrack = true))
+    val nVid = 500000L
+    def jingleSample(k: Int): Int =
+      (((mix64(mix64(-7L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
+    val jIdxDir = Fixtures.scratchDir("m4jingle-smoke").toString
+    graft.operators.Audio.writeAudioNearDupIndex(
+      Seq((0L, graft.operators.Audio.wrapWav(
+        Array.tabulate(1040)(jingleSample), 0, 1040, 8000)))
+        .toDF("id", "content"),
+      "id", "content", jIdxDir)
+    val vids = spark.range(0L, nVid).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val samples = Array.tabulate(3120) { k =>
+            if (id % 500 == 0 && k >= 1040 && k < 2080)
+              jingleSample(k - 1040)
+            else (((mix64(mix64(id) + k) & Long.MaxValue) % 16001L)
+              - 8000L).toInt
           }
-        }.toDF("id", "content")
-      val vhits = graft.operators.Video.findVideosWithJingle(
-        vids, "id", "content", jIdxDir, segmentFrames = 1040)
-      val vAgg = vhits.agg(count(lit(1)),
-        sum(when(col("id") % 500 === 0 && col("seg_idx") === 1L, 1L)
-          .otherwise(0L))).collect()(0)
-      val tVj = (System.nanoTime() - t94) / 1e9
-      require(vAgg.getLong(0) == nVid / 500L &&
-        vAgg.getLong(1) == nVid / 500L,
-        s"mp4SoundtrackDetect: $vAgg != ${nVid / 500} planted hits")
-      println(f"mp4SoundtrackDetect: 1 indexed jingle vs $nVid%d MP4s " +
-        f"(sample-table extract -> segment -> admit, strict, PUBLIC " +
-        f"hunt API) -> exactly ${nVid / 500} planted hits in " +
-        f"$tVj%.1f s (${nVid / tVj}%.0f vids/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      Fixtures.delete(java.nio.file.Paths.get(jIdxDir))
-    }
+          (id, graft.operators.Mp4.buildMp4Pcm(
+            600L, 3120L, "sowt", 1, 8000, samples,
+            Seq(1024, 1024, 1072), use64BitOffsets = id % 2 == 1,
+            withVideoTrack = true))
+        }
+      }.toDF("id", "content")
+    val vhits = graft.operators.Video.findVideosWithJingle(
+      vids, "id", "content", jIdxDir, segmentFrames = 1040)
+    val vAgg = vhits.agg(count(lit(1)),
+      sum(when(col("id") % 500 === 0 && col("seg_idx") === 1L, 1L)
+        .otherwise(0L))).collect()(0)
+    require(vAgg.getLong(0) == nVid / 500L &&
+      vAgg.getLong(1) == nVid / 500L,
+      s"mp4SoundtrackDetect: $vAgg != ${nVid / 500} planted hits")
+    report("mp4s" -> nVid, "plantedHits" -> nVid / 500)
+    Fixtures.delete(java.nio.file.Paths.get(jIdxDir))
+  }
 
-    // --- round-17 metadata walks at the 100 TB filter shape: 2M
+  step("webmMeta") {
+    // round-17 metadata walks at the 100 TB filter shape: 2M
     // WebM/Matroska EBML containers through the 1 KiB PREFIX route
     // and 2M EXIF-bearing JPEGs through the APP1 walk — closed-form
     // aggregates pin every projected field.
-    {
-      import spark.implicits._
-      val nWm = 2000000L
-      val t95 = System.nanoTime()
-      val wms = spark.range(0L, nWm).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            (id, graft.operators.Webm.buildWebm(
-              docType = if (b % 2 == 0) "webm" else "matroska",
-              timescaleNs = 1000000L,
-              durationTicks = (1000 + b * 13).toDouble,
-              videoCodec = "V_VP" + (8 + b % 2),
-              width = 320 + 16 * (b % 4), height = 240 + 16 * (b % 3),
-              nClusters = 2, clusterBytes = 2048,
-              unknownSizeSegment = b % 5 == 0))
-          }
-        }.toDF("id", "content")
-      val wmAgg = graft.operators.Webm.webmMetaScan(wms, "id",
-        "content", prefixBytes = 1024)
-        .agg(count(lit(1)), min(col("parsed").cast("int")),
-          sum(col("duration_ms")), sum(col("width"))).collect()(0)
-      val tWm = (System.nanoTime() - t95) / 1e9
-      val expDur = (0 until 64).map(b => 1000L + b * 13L).sum *
-        (nWm / 64L)
-      val expW = (0 until 64).map(b => 320L + 16 * (b % 4)).sum *
-        (nWm / 64L)
-      require(wmAgg.getLong(0) == nWm && wmAgg.getInt(1) == 1 &&
-        wmAgg.getLong(2) == expDur && wmAgg.getLong(3) == expW,
-        s"webmMeta: $wmAgg (expected dur $expDur width $expW)")
-      println(f"webmMeta: $nWm%d EBML containers varint-walked " +
-        f"(1 KiB prefix route) in $tWm%.1f s (${nWm / tWm}%.0f " +
-        f"files/s), all parsed, " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    val nWm = 2000000L
+    val wms = spark.range(0L, nWm).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          (id, graft.operators.Webm.buildWebm(
+            docType = if (b % 2 == 0) "webm" else "matroska",
+            timescaleNs = 1000000L,
+            durationTicks = (1000 + b * 13).toDouble,
+            videoCodec = "V_VP" + (8 + b % 2),
+            width = 320 + 16 * (b % 4), height = 240 + 16 * (b % 3),
+            nClusters = 2, clusterBytes = 2048,
+            unknownSizeSegment = b % 5 == 0))
+        }
+      }.toDF("id", "content")
+    val wmAgg = graft.operators.Webm.webmMetaScan(wms, "id",
+      "content", prefixBytes = 1024)
+      .agg(count(lit(1)), min(col("parsed").cast("int")),
+        sum(col("duration_ms")), sum(col("width"))).collect()(0)
+    val expDur = (0 until 64).map(b => 1000L + b * 13L).sum *
+      (nWm / 64L)
+    val expW = (0 until 64).map(b => 320L + 16 * (b % 4)).sum *
+      (nWm / 64L)
+    require(wmAgg.getLong(0) == nWm && wmAgg.getInt(1) == 1 &&
+      wmAgg.getLong(2) == expDur && wmAgg.getLong(3) == expW,
+      s"webmMeta: $wmAgg (expected dur $expDur width $expW)")
+    report("webmContainers" -> nWm)
 
-      val nEx = 2000000L
-      val t96 = System.nanoTime()
-      val exs = spark.range(0L, nEx).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            (id, graft.operators.Multimodal.buildJpegExif(
-              1 + b % 8, "Maker_" + (b % 5), "Model_" + b,
-              f"2020:01:${1 + b % 28}%02d 10:00:${b % 60}%02d",
-              f"2019:12:${1 + b % 28}%02d 09:59:${b % 60}%02d",
-              100 * (1 + b % 8), 640L + 16L * b, 480L + 8L * b,
-              littleEndian = b % 2 == 0))
-          }
-        }.toDF("id", "content")
-      val exAgg = graft.operators.Multimodal.jpegExifScan(exs, "id",
-        "content")
-        .agg(count(lit(1)), min(col("parsed").cast("int")),
-          sum(col("orientation").cast("long")),
-          sum(col("iso").cast("long"))).collect()(0)
-      val tEx = (System.nanoTime() - t96) / 1e9
-      val expOri = (0 until 64).map(b => 1L + b % 8).sum * (nEx / 64L)
-      val expIso = (0 until 64).map(b => 100L * (1 + b % 8)).sum *
-        (nEx / 64L)
-      require(exAgg.getLong(0) == nEx && exAgg.getInt(1) == 1 &&
-        exAgg.getLong(2) == expOri && exAgg.getLong(3) == expIso,
-        s"exifMeta: $exAgg (expected ori $expOri iso $expIso)")
-      println(f"exifMeta: $nEx%d EXIF JPEGs APP1-walked in " +
-        f"$tEx%.1f s (${nEx / tEx}%.0f files/s), all parsed, " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+    val nEx = 2000000L
+    val exs = spark.range(0L, nEx).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          (id, graft.operators.Multimodal.buildJpegExif(
+            1 + b % 8, "Maker_" + (b % 5), "Model_" + b,
+            f"2020:01:${1 + b % 28}%02d 10:00:${b % 60}%02d",
+            f"2019:12:${1 + b % 28}%02d 09:59:${b % 60}%02d",
+            100 * (1 + b % 8), 640L + 16L * b, 480L + 8L * b,
+            littleEndian = b % 2 == 0))
+        }
+      }.toDF("id", "content")
+    val exAgg = graft.operators.Multimodal.jpegExifScan(exs, "id",
+      "content")
+      .agg(count(lit(1)), min(col("parsed").cast("int")),
+        sum(col("orientation").cast("long")),
+        sum(col("iso").cast("long"))).collect()(0)
+    val expOri = (0 until 64).map(b => 1L + b % 8).sum * (nEx / 64L)
+    val expIso = (0 until 64).map(b => 100L * (1 + b % 8)).sum *
+      (nEx / 64L)
+    require(exAgg.getLong(0) == nEx && exAgg.getInt(1) == 1 &&
+      exAgg.getLong(2) == expOri && exAgg.getLong(3) == expIso,
+      s"exifMeta: $exAgg (expected ori $expOri iso $expIso)")
+    report("exifJpegs" -> nEx)
+  }
 
-    // --- FLAC decode throughput: 200k REAL Rice-coded streams (the
+  step("flacDecode") {
+    // FLAC decode throughput: 200k REAL Rice-coded streams (the
     // five subframe strategies) through the full bit-level decode —
     // CRCs verified on every frame, samples aggregated in closed form.
-    {
-      import spark.implicits._
-      val nFl = 200000L
-      val t97 = System.nanoTime()
-      val fls = spark.range(0L, nFl).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            val n = 384 + 16 * (b % 8)
-            val mode = b % 5
-            val s =
-              if (mode == 0) Array.fill(n)(b - 32)
-              else Array.tabulate(n) { k =>
-                val v = ((b * 53 + k * 17 + k * k % 31) % 201) - 100
-                if (mode == 2) v * 4 else v
-              }
-            val flac = mode match {
-              case 0 => graft.operators.Flac.buildFlac(8000, Array(s),
-                strategy = "constant", blockSize = 128)
-              case 1 => graft.operators.Flac.buildFlac(8000, Array(s),
-                strategy = "verbatim", blockSize = 128)
-              case 2 => graft.operators.Flac.buildFlac(8000, Array(s),
-                strategy = "fixed1", blockSize = 128, wastedBits = 2)
-              case 3 => graft.operators.Flac.buildFlac(8000, Array(s),
-                strategy = "fixed2", blockSize = 128,
-                partitionOrder = 2)
-              case _ => graft.operators.Flac.buildFlac(8000, Array(s),
-                strategy = "lpc", blockSize = 128,
-                lpcCoefs = Array(25, -9), lpcShift = 4)
+    val nFl = 200000L
+    val fls = spark.range(0L, nFl).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          val n = 384 + 16 * (b % 8)
+          val mode = b % 5
+          val s =
+            if (mode == 0) Array.fill(n)(b - 32)
+            else Array.tabulate(n) { k =>
+              val v = ((b * 53 + k * 17 + k * k % 31) % 201) - 100
+              if (mode == 2) v * 4 else v
             }
-            (id, flac)
+          val flac = mode match {
+            case 0 => graft.operators.Flac.buildFlac(8000, Array(s),
+              strategy = "constant", blockSize = 128)
+            case 1 => graft.operators.Flac.buildFlac(8000, Array(s),
+              strategy = "verbatim", blockSize = 128)
+            case 2 => graft.operators.Flac.buildFlac(8000, Array(s),
+              strategy = "fixed1", blockSize = 128, wastedBits = 2)
+            case 3 => graft.operators.Flac.buildFlac(8000, Array(s),
+              strategy = "fixed2", blockSize = 128,
+              partitionOrder = 2)
+            case _ => graft.operators.Flac.buildFlac(8000, Array(s),
+              strategy = "lpc", blockSize = 128,
+              lpcCoefs = Array(25, -9), lpcShift = 4)
           }
-        }.toDF("id", "content")
-      val flAgg = graft.operators.Flac.flacStats(fls, "id", "content")
-        .agg(count(lit(1)), sum(col("n_frames")),
-          sum(col("sample_sum"))).collect()(0)
-      val tFl = (System.nanoTime() - t97) / 1e9
-      def planted(b: Int): (Long, Long) = {
-        val n = 384 + 16 * (b % 8)
-        val mode = b % 5
-        val s =
-          if (mode == 0) Array.fill(n)(b - 32)
-          else Array.tabulate(n) { k =>
-            val v = ((b * 53 + k * 17 + k * k % 31) % 201) - 100
-            if (mode == 2) v * 4 else v
-          }
-        (n.toLong, s.map(_.toLong).sum)
-      }
-      val exp = (0 until 64).map(planted)
-      val expN = exp.map(_._1).sum * (nFl / 64L)
-      val expS = exp.map(_._2).sum * (nFl / 64L)
-      require(flAgg.getLong(0) == nFl && flAgg.getLong(1) == expN &&
-        flAgg.getLong(2) == expS,
-        s"flacDecode: $flAgg (expected frames $expN sum $expS)")
-      println(f"flacDecode: $nFl%d Rice-coded FLAC streams bit-level " +
-        f"decoded (CRCs verified) in $tFl%.1f s (${nFl / tFl}%.0f " +
-        f"files/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+          (id, flac)
+        }
+      }.toDF("id", "content")
+    val flAgg = graft.operators.Flac.flacStats(fls, "id", "content")
+      .agg(count(lit(1)), sum(col("n_frames")),
+        sum(col("sample_sum"))).collect()(0)
+    def planted(b: Int): (Long, Long) = {
+      val n = 384 + 16 * (b % 8)
+      val mode = b % 5
+      val s =
+        if (mode == 0) Array.fill(n)(b - 32)
+        else Array.tabulate(n) { k =>
+          val v = ((b * 53 + k * 17 + k * k % 31) % 201) - 100
+          if (mode == 2) v * 4 else v
+        }
+      (n.toLong, s.map(_.toLong).sum)
     }
+    val exp = (0 until 64).map(planted)
+    val expN = exp.map(_._1).sum * (nFl / 64L)
+    val expS = exp.map(_._2).sum * (nFl / 64L)
+    require(flAgg.getLong(0) == nFl && flAgg.getLong(1) == expN &&
+      flAgg.getLong(2) == expS,
+      s"flacDecode: $flAgg (expected frames $expN sum $expS)")
+    report("flacStreams" -> nFl)
+  }
 
-    // --- cross-container AUDIO dedup at 500k payloads: 250k sample
+  step("audioCrossContainer") {
+    // cross-container AUDIO dedup at 500k payloads: 250k sample
     // streams, each carried TWICE — as a canonical WAV (even id) and
     // as a Rice-coded FLAC through the REAL bit-level decode (odd
     // id). ONE signature space (decodeSamples dispatches by magic):
     // the pair set must be EXACTLY the 250k (2c, 2c+1) container
     // twins at distance 0.
-    {
-      import spark.implicits._
-      val nAc = 500000L
-      val t99 = System.nanoTime()
-      val mixed = spark.range(0L, nAc).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val cls = id / 2
-            val s = Array.tabulate(1024)(k =>
-              (((mix64(mix64(cls) + k) & Long.MaxValue) % 2001L) - 1000L)
-                .toInt)
-            val payload =
-              if (id % 2 == 0)
-                graft.operators.Audio.wrapWav(s, 0, s.length, 8000)
-              else graft.operators.Flac.buildFlac(8000, Array(s),
-                strategy = "fixed2", blockSize = 128)
-            (id, payload)
-          }
-        }.toDF("id", "content")
-      val acPairs = graft.operators.Audio.audioNearDupPairs(
-        mixed, "id", "content", maxDistance = 0)
-      val acAgg = acPairs.agg(count(lit(1)), sum(col("b") - col("a")),
-        max(col("distance"))).collect()(0)
-      val tAc = (System.nanoTime() - t99) / 1e9
-      require(acAgg.getLong(0) == nAc / 2L,
-        s"audioCross pairs ${acAgg.getLong(0)} != ${nAc / 2}")
-      require(acAgg.getLong(1) == nAc / 2L,
-        s"audioCross pair structure: sum(b-a)=${acAgg.getLong(1)}")
-      require(acAgg.getLong(2) == 0L,
-        s"audioCross max distance ${acAgg.getLong(2)} != 0")
-      println(f"audioCrossContainer: $nAc%d mixed payloads " +
-        f"(${nAc / 2} WAV + ${nAc / 2} real Rice-decoded FLAC) -> " +
-        f"exactly ${nAc / 2} container-twin pairs at distance 0 in " +
-        f"$tAc%.1f s (${nAc / tAc}%.0f clips/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+    val nAc = 500000L
+    val mixed = spark.range(0L, nAc).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val cls = id / 2
+          val s = Array.tabulate(1024)(k =>
+            (((mix64(mix64(cls) + k) & Long.MaxValue) % 2001L) - 1000L)
+              .toInt)
+          val payload =
+            if (id % 2 == 0)
+              graft.operators.Audio.wrapWav(s, 0, s.length, 8000)
+            else graft.operators.Flac.buildFlac(8000, Array(s),
+              strategy = "fixed2", blockSize = 128)
+          (id, payload)
+        }
+      }.toDF("id", "content")
+    val acPairs = graft.operators.Audio.audioNearDupPairs(
+      mixed, "id", "content", maxDistance = 0)
+    val acAgg = acPairs.agg(count(lit(1)), sum(col("b") - col("a")),
+      max(col("distance"))).collect()(0)
+    require(acAgg.getLong(0) == nAc / 2L,
+      s"audioCross pairs ${acAgg.getLong(0)} != ${nAc / 2}")
+    require(acAgg.getLong(1) == nAc / 2L,
+      s"audioCross pair structure: sum(b-a)=${acAgg.getLong(1)}")
+    require(acAgg.getLong(2) == 0L,
+      s"audioCross max distance ${acAgg.getLong(2)} != 0")
+    report("payloads" -> nAc, "wav" -> nAc / 2, "flac" -> nAc / 2, "twinPairs" -> nAc / 2)
+  }
 
-    // --- unified media scan at 2M mixed containers: all EIGHT
+  step("mediaMeta") {
+    // unified media scan at 2M mixed containers: all EIGHT
     // families side by side through ONE pass (per-row magic
     // dispatch); closed-form per-family counts and duration sums pin
     // the projection.
-    {
-      import spark.implicits._
-      val nMe = 2000000L
-      val t9a = System.nanoTime()
-      val mixed = spark.range(0L, nMe).repartition(64)
-        .mapPartitions { it =>
-          val palette = Array.tabulate(16)(i => i * 0x111111)
-          it.map { id =>
-            val b = (id % 64).toInt
-            val alt = (b / 8) % 2 == 0
-            val payload = (b % 8: @unchecked) match {
-              case 0 => graft.operators.Video.buildUncompressedAvi(
-                4, 3, (0 until 2 + b % 3).map(f =>
-                  Array.tabulate[Byte](36)(k =>
-                    ((b * 131 + f * 31 + k * 7) % 101).toByte)), 40000L)
-              case 1 => graft.operators.Gif.buildGif(4, 3, palette,
-                (0 until 2 + b % 3).map(f =>
-                  Array.tabulate[Byte](12)(p =>
-                    ((f * 31 + p * p % 13) % 16).toByte)),
-                delayCs = 4 + b % 5)
-              case 2 => graft.operators.Mp4.buildMp4(600L + b,
-                1000L + b * 77L, 16 * (1 + b % 4), 16 * (1 + b % 3))
-              case 3 => graft.operators.Webm.buildWebm(
-                if (alt) "webm" else "matroska", 1000000L,
-                (1000 + b * 13).toDouble, "V_VP8", 320, 240)
-              case 4 => graft.operators.Audio.wrapWav(
-                Array.tabulate(400 + b * 2)(k =>
-                  (b * 53 + k * 17) % 201 - 100), 0, 400 + b * 2, 8000)
-              case 5 => graft.operators.Flac.buildFlac(8000,
-                Array(Array.tabulate(384)(k =>
-                  (b * 53 + k * 17) % 201 - 100)), blockSize = 128)
-              case 6 => graft.operators.Mp3.buildMp3(3, 0,
-                Seq.fill(5 + (b / 8) % 6)(5), mono = true)
-              case 7 => graft.operators.Audio.buildOgg(
-                if (alt) "opus" else "vorbis", 1, 8000,
-                800L + b * 10L)
-            }
-            (id, payload)
+    val nMe = 2000000L
+    val mixed = spark.range(0L, nMe).repartition(64)
+      .mapPartitions { it =>
+        val palette = Array.tabulate(16)(i => i * 0x111111)
+        it.map { id =>
+          val b = (id % 64).toInt
+          val alt = (b / 8) % 2 == 0
+          val payload = (b % 8: @unchecked) match {
+            case 0 => graft.operators.Video.buildUncompressedAvi(
+              4, 3, (0 until 2 + b % 3).map(f =>
+                Array.tabulate[Byte](36)(k =>
+                  ((b * 131 + f * 31 + k * 7) % 101).toByte)), 40000L)
+            case 1 => graft.operators.Gif.buildGif(4, 3, palette,
+              (0 until 2 + b % 3).map(f =>
+                Array.tabulate[Byte](12)(p =>
+                  ((f * 31 + p * p % 13) % 16).toByte)),
+              delayCs = 4 + b % 5)
+            case 2 => graft.operators.Mp4.buildMp4(600L + b,
+              1000L + b * 77L, 16 * (1 + b % 4), 16 * (1 + b % 3))
+            case 3 => graft.operators.Webm.buildWebm(
+              if (alt) "webm" else "matroska", 1000000L,
+              (1000 + b * 13).toDouble, "V_VP8", 320, 240)
+            case 4 => graft.operators.Audio.wrapWav(
+              Array.tabulate(400 + b * 2)(k =>
+                (b * 53 + k * 17) % 201 - 100), 0, 400 + b * 2, 8000)
+            case 5 => graft.operators.Flac.buildFlac(8000,
+              Array(Array.tabulate(384)(k =>
+                (b * 53 + k * 17) % 201 - 100)), blockSize = 128)
+            case 6 => graft.operators.Mp3.buildMp3(3, 0,
+              Seq.fill(5 + (b / 8) % 6)(5), mono = true)
+            case 7 => graft.operators.Audio.buildOgg(
+              if (alt) "opus" else "vorbis", 1, 8000,
+              800L + b * 10L)
           }
-        }.toDF("id", "content")
-      val meAgg = graft.operators.Media.mediaMetaScan(mixed, "id",
-        "content")
-        .agg(count(lit(1)), min(col("parsed").cast("int")),
-          count_distinct(col("container")),
-          sum(col("duration_ms"))).collect()(0)
-      val tMe = (System.nanoTime() - t9a) / 1e9
-      def durOf(b: Int): Long = {
-        val alt = (b / 8) % 2 == 0
-        (b % 8: @unchecked) match {
-          case 0 => (2 + b % 3) * 40L
-          case 1 => (2 + b % 3) * (4 + b % 5) * 10L
-          case 2 => (1000L + b * 77L) * 1000L / (600L + b)
-          case 3 => 1000L + b * 13L
-          case 4 => (400L + b * 2L) / 8L
-          case 5 => 384L / 8L
-          case 6 => (5L + (b / 8) % 6) * 1152L * 1000L / 44100L
-          case 7 => (800L + b * 10L) * 1000L /
-            (if (alt) 48000L else 8000L)
+          (id, payload)
         }
+      }.toDF("id", "content")
+    val meAgg = graft.operators.Media.mediaMetaScan(mixed, "id",
+      "content")
+      .agg(count(lit(1)), min(col("parsed").cast("int")),
+        count_distinct(col("container")),
+        sum(col("duration_ms"))).collect()(0)
+    def durOf(b: Int): Long = {
+      val alt = (b / 8) % 2 == 0
+      (b % 8: @unchecked) match {
+        case 0 => (2 + b % 3) * 40L
+        case 1 => (2 + b % 3) * (4 + b % 5) * 10L
+        case 2 => (1000L + b * 77L) * 1000L / (600L + b)
+        case 3 => 1000L + b * 13L
+        case 4 => (400L + b * 2L) / 8L
+        case 5 => 384L / 8L
+        case 6 => (5L + (b / 8) % 6) * 1152L * 1000L / 44100L
+        case 7 => (800L + b * 10L) * 1000L /
+          (if (alt) 48000L else 8000L)
       }
-      val expDur = (0 until 64).map(durOf).sum * (nMe / 64L)
-      require(meAgg.getLong(0) == nMe && meAgg.getInt(1) == 1 &&
-        meAgg.getLong(2) == 9L && meAgg.getLong(3) == expDur,
-        s"mediaMeta: $meAgg (expected 9 containers, dur $expDur)")
-      println(f"mediaMeta: $nMe%d mixed containers (8 families) " +
-        f"through ONE scan in $tMe%.1f s (${nMe / tMe}%.0f files/s), " +
-        f"all parsed, " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
     }
+    val expDur = (0 until 64).map(durOf).sum * (nMe / 64L)
+    require(meAgg.getLong(0) == nMe && meAgg.getInt(1) == 1 &&
+      meAgg.getLong(2) == 9L && meAgg.getLong(3) == expDur,
+      s"mediaMeta: $meAgg (expected 9 containers, dur $expDur)")
+    report("containers" -> nMe)
+  }
 
-    // --- streaming jingle watch: the round-17 deployment shape — a
+  step("streamingJingleWatch") {
+    // streaming jingle watch: the round-17 deployment shape — a
     // live clip feed in three micro-batches against the persisted
     // jingle index, matched locations per batch, zero streaming
     // state. Planted truth: every 200th clip carries the jingle at
     // segment 1; the cumulative hit set after each batch is exact.
-    {
-      import spark.implicits._
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val sq = spark.sqlContext
-      val batchN = 20000L
-      def jingleSample(k: Int): Int =
-        (((mix64(mix64(-9L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
-      val jIdxDir = Fixtures.scratchDir("sjingle-smoke").toString
-      graft.operators.Audio.writeAudioNearDupIndex(
-        Seq((0L, graft.operators.Audio.wrapWav(
-          Array.tabulate(1040)(jingleSample), 0, 1040, 8000)))
-          .toDF("id", "content"),
-        "id", "content", jIdxDir)
-      val t98 = System.nanoTime()
-      def clip(id: Long): Array[Byte] = {
-        val samples = Array.tabulate(3120) { k =>
-          if (id % 200 == 0 && k >= 1040 && k < 2080)
-            jingleSample(k - 1040)
-          else (((mix64(mix64(id) + k) & Long.MaxValue) % 16001L)
-            - 8000L).toInt
-        }
-        graft.operators.Audio.wrapWav(samples, 0, 3120, 8000)
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sq = spark.sqlContext
+    val batchN = 20000L
+    def jingleSample(k: Int): Int =
+      (((mix64(mix64(-9L) + k) & Long.MaxValue) % 16001L) - 8000L).toInt
+    val jIdxDir = Fixtures.scratchDir("sjingle-smoke").toString
+    graft.operators.Audio.writeAudioNearDupIndex(
+      Seq((0L, graft.operators.Audio.wrapWav(
+        Array.tabulate(1040)(jingleSample), 0, 1040, 8000)))
+        .toDF("id", "content"),
+      "id", "content", jIdxDir)
+    def clip(id: Long): Array[Byte] = {
+      val samples = Array.tabulate(3120) { k =>
+        if (id % 200 == 0 && k >= 1040 && k < 2080)
+          jingleSample(k - 1040)
+        else (((mix64(mix64(id) + k) & Long.MaxValue) % 16001L)
+          - 8000L).toInt
       }
-      val mem = MemoryStream[(Long, java.sql.Timestamp, Array[Byte])]
-      val q = graft.operators.Audio.findClipsContainingJingleStream(
-          mem.toDF().toDF("id", "ts", "content"), "id", "content",
-          "ts", jIdxDir, segmentFrames = 1040)
-        .writeStream.format("memory").queryName("smoke_jingle_watch")
-        .outputMode("append").start()
-      try {
-        var batch = 0
-        while (batch < 3) {
-          val lo = batch * batchN
-          val ts = java.sql.Timestamp.valueOf(
-            f"2024-01-01 00:0$batch:00")
-          mem.addData((lo until lo + batchN).map(id =>
-            (id, ts, clip(id))))
-          q.processAllAvailable()
-          val got = spark.table("smoke_jingle_watch")
-            .agg(count(lit(1)),
-              sum(when(col("id") % 200 === 0 &&
-                col("seg_idx") === 1L, 1L).otherwise(0L)))
-            .collect()(0)
-          val expHits = (lo + batchN + 199L) / 200L
-          require(got.getLong(0) == expHits &&
-            got.getLong(1) == expHits,
-            s"jingleWatch batch $batch: $got != $expHits planted hits")
-          batch += 1
-        }
-      } finally q.stop()
-      val tSj = (System.nanoTime() - t98) / 1e9
-      println(f"streamingJingleWatch: 3 micro-batches x $batchN%d " +
-        f"clips vs the persisted index -> exact planted hit set " +
-        f"after every batch, zero streaming state, in $tSj%.1f s " +
-        f"(${3 * batchN / tSj}%.0f clips/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-      Fixtures.delete(java.nio.file.Paths.get(jIdxDir))
+      graft.operators.Audio.wrapWav(samples, 0, 3120, 8000)
     }
+    val mem = MemoryStream[(Long, java.sql.Timestamp, Array[Byte])]
+    val q = graft.operators.Audio.findClipsContainingJingleStream(
+        mem.toDF().toDF("id", "ts", "content"), "id", "content",
+        "ts", jIdxDir, segmentFrames = 1040)
+      .writeStream.format("memory").queryName("smoke_jingle_watch")
+      .outputMode("append").start()
+    try {
+      var batch = 0
+      while (batch < 3) {
+        val lo = batch * batchN
+        val ts = java.sql.Timestamp.valueOf(
+          f"2024-01-01 00:0$batch:00")
+        mem.addData((lo until lo + batchN).map(id =>
+          (id, ts, clip(id))))
+        q.processAllAvailable()
+        val got = spark.table("smoke_jingle_watch")
+          .agg(count(lit(1)),
+            sum(when(col("id") % 200 === 0 &&
+              col("seg_idx") === 1L, 1L).otherwise(0L)))
+          .collect()(0)
+        val expHits = (lo + batchN + 199L) / 200L
+        require(got.getLong(0) == expHits &&
+          got.getLong(1) == expHits,
+          s"jingleWatch batch $batch: $got != $expHits planted hits")
+        batch += 1
+      }
+    } finally q.stop()
+    report("batchClips" -> batchN)
+    Fixtures.delete(java.nio.file.Paths.get(jIdxDir))
+  }
 
-    // --- PNG metadata throughput: 1M real PNGs (CRC'd chunk grammar,
+  step("pngMeta") {
+    // PNG metadata throughput: 1M real PNGs (CRC'd chunk grammar,
     // deflated IDAT, a provenance text chunk) through the chunk walk —
     // CRC verification on every chunk, zero inflate on this path.
-    {
-      import spark.implicits._
-      val nPm = 1000000L
-      val t99 = System.nanoTime()
-      val pms = spark.range(0L, nPm).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            (id, graft.operators.Png.buildPng(16, 8, 0,
-              Array.tabulate(128)(p => ((b * 7 + p * 13) % 256).toByte),
-              filterOf = y => (b + y) % 5,
-              texts = Seq(("Software", "graft-" + (b % 7), "text"))))
-          }
-        }.toDF("id", "content")
-      val pmAgg = graft.operators.Png.pngMetaScan(pms, "id", "content")
-        .agg(count(lit(1)), min(col("parsed").cast("int")),
-          sum(col("width")), sum(col("text_chunks"))).collect()(0)
-      val tPm = (System.nanoTime() - t99) / 1e9
-      require(pmAgg.getLong(0) == nPm && pmAgg.getInt(1) == 1 &&
-        pmAgg.getLong(2) == 16L * nPm && pmAgg.getLong(3) == nPm,
-        s"pngMeta: $pmAgg")
-      println(f"pngMeta: $nPm%d PNGs chunk-walked (every CRC " +
-        f"verified) in $tPm%.1f s (${nPm / tPm}%.0f files/s), " +
-        f"all parsed, " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    val nPm = 1000000L
+    val pms = spark.range(0L, nPm).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          (id, graft.operators.Png.buildPng(16, 8, 0,
+            Array.tabulate(128)(p => ((b * 7 + p * 13) % 256).toByte),
+            filterOf = y => (b + y) % 5,
+            texts = Seq(("Software", "graft-" + (b % 7), "text"))))
+        }
+      }.toDF("id", "content")
+    val pmAgg = graft.operators.Png.pngMetaScan(pms, "id", "content")
+      .agg(count(lit(1)), min(col("parsed").cast("int")),
+        sum(col("width")), sum(col("text_chunks"))).collect()(0)
+    require(pmAgg.getLong(0) == nPm && pmAgg.getInt(1) == 1 &&
+      pmAgg.getLong(2) == 16L * nPm && pmAgg.getLong(3) == nPm,
+      s"pngMeta: $pmAgg")
+    report("pngsWalked" -> nPm)
 
-      // --- PNG full decode: 200k inflate + unfilter passes (all five
-      // filters per file), luma folded to a closed-form total.
-      val nPd = 200000L
-      val t100 = System.nanoTime()
-      val pds = spark.range(0L, nPd).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            (id, graft.operators.Png.buildPng(16, 8, 0,
-              Array.tabulate(128)(p => ((b * 7 + p * 13) % 256).toByte),
-              filterOf = y => (b + y) % 5))
-          }
-        }.toDF("id", "content")
-      val pdAgg = graft.operators.Png.pngStats(pds, "id", "content")
-        .agg(count(lit(1)), sum(col("luma_total"))).collect()(0)
-      val tPd = (System.nanoTime() - t100) / 1e9
-      val expLuma = (0 until 64).map(b =>
-        (0 until 128).map(p => 3L * ((b * 7 + p * 13) % 256)).sum)
-        .sum * (nPd / 64L)
-      require(pdAgg.getLong(0) == nPd && pdAgg.getLong(1) == expLuma,
-        s"pngDecode: $pdAgg (expected luma $expLuma)")
-      println(f"pngDecode: $nPd%d PNGs inflate+unfilter decoded " +
-        f"(all five filter branches) in $tPd%.1f s " +
-        f"(${nPd / tPd}%.0f files/s), luma totals exact, " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+    // PNG full decode: 200k inflate + unfilter passes (all five
+    // filters per file), luma folded to a closed-form total.
+    val nPd = 200000L
+    val pds = spark.range(0L, nPd).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          (id, graft.operators.Png.buildPng(16, 8, 0,
+            Array.tabulate(128)(p => ((b * 7 + p * 13) % 256).toByte),
+            filterOf = y => (b + y) % 5))
+        }
+      }.toDF("id", "content")
+    val pdAgg = graft.operators.Png.pngStats(pds, "id", "content")
+      .agg(count(lit(1)), sum(col("luma_total"))).collect()(0)
+    val expLuma = (0 until 64).map(b =>
+      (0 until 128).map(p => 3L * ((b * 7 + p * 13) % 256)).sum)
+      .sum * (nPd / 64L)
+    require(pdAgg.getLong(0) == nPd && pdAgg.getLong(1) == expLuma,
+      s"pngDecode: $pdAgg (expected luma $expLuma)")
+    report("pngsDecoded" -> nPd)
+  }
 
-    // --- cross-container IMAGE dedup: 100k pixel classes x 3
+  step("imageCrossContainer") {
+    // cross-container IMAGE dedup: 100k pixel classes x 3
     // containers (RGB PNG / canonical BMP / 256-gray-palette GIF) ->
     // ONE dHash space; exactly 3 distance-0 pairs per class.
-    {
-      import spark.implicits._
-      val nIc = 100000L // classes; 3x payloads
-      val grayPal = Array.tabulate(256)(i => (i << 16) | (i << 8) | i)
-      val t101 = System.nanoTime()
-      val imgs = spark.range(0L, 3L * nIc).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val cls = id / 3
-            val v = Array.tabulate(72)(i =>
-              ((mix64(mix64(cls) + i) & Long.MaxValue) % 256L).toInt)
-            val payload = (id % 3) match {
-              case 0 => graft.operators.Png.buildPng(9, 8, 2,
-                v.flatMap(x => Array(x.toByte, x.toByte, x.toByte)),
-                filterOf = y => ((cls + y) % 5).toInt)
-              case 1 =>
-                val bgr = new Array[Byte](3 * 72)
-                v.indices.foreach { p =>
-                  bgr(3 * p) = v(p).toByte
-                  bgr(3 * p + 1) = v(p).toByte
-                  bgr(3 * p + 2) = v(p).toByte
-                }
-                graft.operators.Multimodal.buildBmp(9, 8, bgr)
-              case _ => graft.operators.Gif.buildGif(9, 8, grayPal,
-                Seq(v.map(_.toByte)), delayCs = 4)
-            }
-            (id, payload)
+    val nIc = 100000L // classes; 3x payloads
+    val grayPal = Array.tabulate(256)(i => (i << 16) | (i << 8) | i)
+    val imgs = spark.range(0L, 3L * nIc).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val cls = id / 3
+          val v = Array.tabulate(72)(i =>
+            ((mix64(mix64(cls) + i) & Long.MaxValue) % 256L).toInt)
+          val payload = (id % 3) match {
+            case 0 => graft.operators.Png.buildPng(9, 8, 2,
+              v.flatMap(x => Array(x.toByte, x.toByte, x.toByte)),
+              filterOf = y => ((cls + y) % 5).toInt)
+            case 1 =>
+              val bgr = new Array[Byte](3 * 72)
+              v.indices.foreach { p =>
+                bgr(3 * p) = v(p).toByte
+                bgr(3 * p + 1) = v(p).toByte
+                bgr(3 * p + 2) = v(p).toByte
+              }
+              graft.operators.Multimodal.buildBmp(9, 8, bgr)
+            case _ => graft.operators.Gif.buildGif(9, 8, grayPal,
+              Seq(v.map(_.toByte)), delayCs = 4)
           }
-        }.toDF("id", "content")
-      val icPairs = graft.operators.Multimodal.imageNearDupPairs(
-        imgs, "id", "content", maxDistance = 0)
-      val icAgg = icPairs.agg(count(lit(1)), sum(col("b") - col("a")),
-        max(col("distance"))).collect()(0)
-      val tIc = (System.nanoTime() - t101) / 1e9
-      require(icAgg.getLong(0) == 3L * nIc,
-        s"imageCross pairs ${icAgg.getLong(0)} != ${3L * nIc}")
-      require(icAgg.getLong(1) == 4L * nIc, // (1)+(2)+(1) per class
-        s"imageCross pair structure: sum(b-a)=${icAgg.getLong(1)}")
-      require(icAgg.getLong(2) == 0L,
-        s"imageCross max distance ${icAgg.getLong(2)} != 0")
-      println(f"imageCrossContainer: ${3L * nIc}%d mixed payloads " +
-        f"($nIc PNG + $nIc BMP + $nIc real LZW-decoded GIF) -> " +
-        f"exactly ${3L * nIc} container-twin pairs at distance 0 in " +
-        f"$tIc%.1f s (${3L * nIc / tIc}%.0f images/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+          (id, payload)
+        }
+      }.toDF("id", "content")
+    val icPairs = graft.operators.Multimodal.imageNearDupPairs(
+      imgs, "id", "content", maxDistance = 0)
+    val icAgg = icPairs.agg(count(lit(1)), sum(col("b") - col("a")),
+      max(col("distance"))).collect()(0)
+    require(icAgg.getLong(0) == 3L * nIc,
+      s"imageCross pairs ${icAgg.getLong(0)} != ${3L * nIc}")
+    require(icAgg.getLong(1) == 4L * nIc, // (1)+(2)+(1) per class
+      s"imageCross pair structure: sum(b-a)=${icAgg.getLong(1)}")
+    require(icAgg.getLong(2) == 0L,
+      s"imageCross max distance ${icAgg.getLong(2)} != 0")
+    report("payloads" -> 3L * nIc, "png" -> nIc, "bmp" -> nIc, "gif" -> nIc,
+      "twinPairs" -> 3L * nIc)
+  }
 
-    // --- WebDataset shards: 200k tar shards x 8 samples x 3 members
+  step("webdataset") {
+    // WebDataset shards: 200k tar shards x 8 samples x 3 members
     // through the checksum-verified ustar walk + the LOCAL stem fold
     // (no shuffle until the census aggregate) — censuses exact.
-    {
-      import spark.implicits._
-      val nTar = 200000L
-      val t104 = System.nanoTime()
-      val tars = spark.range(0L, nTar).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val members = (0 until 8).flatMap { k =>
-              Seq(
-                (s"shard/${id}_$k.jpg",
-                  s"img:$id:$k".getBytes("UTF-8")),
-                (s"shard/${id}_$k.txt",
-                  ("t" * (10 + ((id + k) % 20)).toInt).getBytes("UTF-8")),
-                (s"shard/${id}_$k.json",
-                  s"""{"k":$k}""".getBytes("UTF-8")))
-            }
-            (id, graft.operators.Tar.buildTar(members))
+    val nTar = 200000L
+    val tars = spark.range(0L, nTar).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val members = (0 until 8).flatMap { k =>
+            Seq(
+              (s"shard/${id}_$k.jpg",
+                s"img:$id:$k".getBytes("UTF-8")),
+              (s"shard/${id}_$k.txt",
+                ("t" * (10 + ((id + k) % 20)).toInt).getBytes("UTF-8")),
+              (s"shard/${id}_$k.json",
+                s"""{"k":$k}""".getBytes("UTF-8")))
           }
-        }.toDF("id", "content")
-      val wdAgg = graft.operators.Tar.webdatasetSamples(tars, "id",
-        "content")
-        .agg(count(lit(1)), min(col("n_members")),
-          sum(when(col("exts") === "jpg,json,txt", 1L).otherwise(0L)))
-        .collect()(0)
-      val tTar = (System.nanoTime() - t104) / 1e9
-      require(wdAgg.getLong(0) == 8L * nTar &&
-        wdAgg.getLong(1) == 3L && wdAgg.getLong(2) == 8L * nTar,
-        s"webdataset: $wdAgg")
-      println(f"webdataset: $nTar%d tar shards -> ${8 * nTar}%d " +
-        f"complete samples (checksums verified on every header) in " +
-        f"$tTar%.1f s (${nTar / tTar}%.0f shards/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+          (id, graft.operators.Tar.buildTar(members))
+        }
+      }.toDF("id", "content")
+    val wdAgg = graft.operators.Tar.webdatasetSamples(tars, "id",
+      "content")
+      .agg(count(lit(1)), min(col("n_members")),
+        sum(when(col("exts") === "jpg,json,txt", 1L).otherwise(0L)))
+      .collect()(0)
+    require(wdAgg.getLong(0) == 8L * nTar &&
+      wdAgg.getLong(1) == 3L && wdAgg.getLong(2) == 8L * nTar,
+      s"webdataset: $wdAgg")
+    report("shards" -> nTar, "samples" -> 8 * nTar)
+  }
 
-    // --- ZIP shards: 200k archives through the EOCD/central-directory
+  step("zipShards") {
+    // ZIP shards: 200k archives through the EOCD/central-directory
     // walk — CRC verified on every member, stored + deflate mixed.
-    {
-      import spark.implicits._
-      val nZp = 200000L
-      val t105 = System.nanoTime()
-      val zips = spark.range(0L, nZp).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            (id, graft.operators.Zip.buildZip((0 until 4).map { k =>
-              (s"z/${id}_$k.txt",
-                ("m" * (8 + (b + k) % 16)).getBytes("UTF-8"),
-                k % 2 == 1)
-            }))
-          }
-        }.toDF("id", "content")
-      val zpAgg = graft.operators.Zip.zipEntries(zips, "id", "content")
-        .agg(count(lit(1)),
-          sum(when(col("method") === "deflate", 1L).otherwise(0L)),
-          sum(col("size"))).collect()(0)
-      val tZp = (System.nanoTime() - t105) / 1e9
-      val expBytes = (0 until 64).map(b =>
-        (0 until 4).map(k => 8L + (b + k) % 16).sum).sum * (nZp / 64L)
-      require(zpAgg.getLong(0) == 4L * nZp &&
-        zpAgg.getLong(1) == 2L * nZp && zpAgg.getLong(2) == expBytes,
-        s"zipShards: $zpAgg (expected bytes $expBytes)")
-      println(f"zipShards: $nZp%d zip archives -> ${4 * nZp}%d members " +
-        f"(CRC verified on every one, half deflate) in $tZp%.1f s " +
-        f"(${nZp / tZp}%.0f shards/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+    val nZp = 200000L
+    val zips = spark.range(0L, nZp).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          (id, graft.operators.Zip.buildZip((0 until 4).map { k =>
+            (s"z/${id}_$k.txt",
+              ("m" * (8 + (b + k) % 16)).getBytes("UTF-8"),
+              k % 2 == 1)
+          }))
+        }
+      }.toDF("id", "content")
+    val zpAgg = graft.operators.Zip.zipEntries(zips, "id", "content")
+      .agg(count(lit(1)),
+        sum(when(col("method") === "deflate", 1L).otherwise(0L)),
+        sum(col("size"))).collect()(0)
+    val expBytes = (0 until 64).map(b =>
+      (0 until 4).map(k => 8L + (b + k) % 16).sum).sum * (nZp / 64L)
+    require(zpAgg.getLong(0) == 4L * nZp &&
+      zpAgg.getLong(1) == 2L * nZp && zpAgg.getLong(2) == expBytes,
+      s"zipShards: $zpAgg (expected bytes $expBytes)")
+    report("archives" -> nZp, "members" -> 4 * nZp)
+  }
 
-    // --- AIFF decode: 512k big-endian PCM payloads through the
+  step("aiffDecode") {
+    // AIFF decode: 512k big-endian PCM payloads through the
     // container-auto audio decode, sample sums exact.
-    {
-      import spark.implicits._
-      val nAf = 512000L // divisible by 64
-      val t106 = System.nanoTime()
-      val aiffs = spark.range(0L, nAf).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            val n = 200 + 3 * b
-            (id, graft.operators.Audio.buildAiff(
-              Array.tabulate(n)(k => (b * 53 + k * 17) % 201 - 100),
-              channels = 1, rate = 8000))
-          }
-        }.toDF("id", "content")
-      val afAgg = graft.operators.Audio.decodePcm16(aiffs, "id",
-        "content").toDF().filter(col("decoded"))
-        .select(col("id"),
-          aggregate(col("samples"), lit(0L), (a, x) => a + x).as("s"))
-        .agg(count(lit(1)), sum(col("s"))).collect()(0)
-      val tAf = (System.nanoTime() - t106) / 1e9
-      val expSum = (0 until 64).map(b =>
-        (0 until (200 + 3 * b)).map(k =>
-          (b * 53L + k * 17) % 201 - 100).sum).sum * (nAf / 64L)
-      require(afAgg.getLong(0) == nAf && afAgg.getLong(1) == expSum,
-        s"aiffDecode: $afAgg (expected sum $expSum)")
-      println(f"aiffDecode: $nAf%d AIFF payloads big-endian decoded " +
-        f"in $tAf%.1f s (${nAf / tAf}%.0f files/s), sample sums " +
-        f"exact, heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+    val nAf = 512000L // divisible by 64
+    val aiffs = spark.range(0L, nAf).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          val n = 200 + 3 * b
+          (id, graft.operators.Audio.buildAiff(
+            Array.tabulate(n)(k => (b * 53 + k * 17) % 201 - 100),
+            channels = 1, rate = 8000))
+        }
+      }.toDF("id", "content")
+    val afAgg = graft.operators.Audio.decodePcm16(aiffs, "id",
+      "content").toDF().filter(col("decoded"))
+      .select(col("id"),
+        aggregate(col("samples"), lit(0L), (a, x) => a + x).as("s"))
+      .agg(count(lit(1)), sum(col("s"))).collect()(0)
+    val expSum = (0 until 64).map(b =>
+      (0 until (200 + 3 * b)).map(k =>
+        (b * 53L + k * 17) % 201 - 100).sum).sum * (nAf / 64L)
+    require(afAgg.getLong(0) == nAf && afAgg.getLong(1) == expSum,
+      s"aiffDecode: $afAgg (expected sum $expSum)")
+    report("payloads" -> nAf)
+  }
 
-    // --- the multimodal pipeline end-to-end: 128k tar(.gz) shards ->
+  step("wdsPairs") {
+    // the multimodal pipeline end-to-end: 128k tar(.gz) shards ->
     // WebDataset grouping -> REAL PNG decode + caption join per
     // sample; luma and word totals exact.
-    {
-      import spark.implicits._
-      val nWp = 128000L // divisible by 64
-      val t107 = System.nanoTime()
-      val shards = spark.range(0L, nWp).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            val members = (0 until 2).flatMap { k =>
-              val png = graft.operators.Png.buildPng(4, 4, 0,
-                Array.tabulate(16)(p =>
-                  ((b * 7 + k * 13 + p * 5) % 256).toByte),
-                filterOf = y => (b + k + y) % 5)
-              val caption = (0 until (2 + (b + k) % 3))
-                .map(j => "w" + ((b * 13 + k * 5 + j * 7) % 50))
-                .mkString(" ")
-              Seq((s"s/${id}_$k.png", png),
-                (s"s/${id}_$k.txt", caption.getBytes("UTF-8")))
-            }
-            val tar = graft.operators.Tar.buildTar(members)
-            (id, if (id % 2 == 0) tar
-            else graft.operators.Tar.gzipBytes(tar))
+    val nWp = 128000L // divisible by 64
+    val shards = spark.range(0L, nWp).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          val members = (0 until 2).flatMap { k =>
+            val png = graft.operators.Png.buildPng(4, 4, 0,
+              Array.tabulate(16)(p =>
+                ((b * 7 + k * 13 + p * 5) % 256).toByte),
+              filterOf = y => (b + k + y) % 5)
+            val caption = (0 until (2 + (b + k) % 3))
+              .map(j => "w" + ((b * 13 + k * 5 + j * 7) % 50))
+              .mkString(" ")
+            Seq((s"s/${id}_$k.png", png),
+              (s"s/${id}_$k.txt", caption.getBytes("UTF-8")))
           }
-        }.toDF("id", "content")
-      val m = graft.operators.Tar.webdatasetMembers(shards, "id",
-        "content")
-        .withColumn("k",
-          regexp_extract(col("stem"), "_([0-9]+)$", 1).cast("long"))
-        .withColumn("sid", col("id") * 4 + col("k"))
-      val img = graft.operators.Png.decodePixels(
-        m.filter(col("ext") === "png")
-          .select(col("sid"), col("bytes")), "sid", "bytes")
-        .toDF().filter(col("decoded"))
-        .select(col("id").as("sid"), col("lumaTotal"))
-      val cap = m.filter(col("ext") === "txt")
-        .select(col("sid"), col("bytes").cast("string").as("caption"))
-      val wpAgg = img.join(cap, "sid")
-        .agg(count(lit(1)), sum(col("lumaTotal")),
-          sum(size(split(col("caption"), " ")).cast("long")))
-        .collect()(0)
-      val tWp = (System.nanoTime() - t107) / 1e9
-      val expLuma = (0 until 64).map(b => (0 until 2).map(k =>
-        (0 until 16).map(p => 3L * ((b * 7 + k * 13 + p * 5) % 256))
-          .sum).sum).sum * (nWp / 64L)
-      val expWords = (0 until 64).map(b =>
-        (0 until 2).map(k => 2L + (b + k) % 3).sum).sum * (nWp / 64L)
-      require(wpAgg.getLong(0) == 2L * nWp &&
-        wpAgg.getLong(1) == expLuma && wpAgg.getLong(2) == expWords,
-        s"wdsPairs: $wpAgg (expected luma $expLuma words $expWords)")
-      println(f"wdsPairs: $nWp%d tar(.gz) shards -> ${2 * nWp}%d " +
-        f"image+caption samples (member walk -> stem grouping -> " +
-        f"REAL PNG decode -> join) in $tWp%.1f s " +
-        f"(${nWp / tWp}%.0f shards/s), luma/word totals exact, " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+          val tar = graft.operators.Tar.buildTar(members)
+          (id, if (id % 2 == 0) tar
+          else graft.operators.Tar.gzipBytes(tar))
+        }
+      }.toDF("id", "content")
+    val m = graft.operators.Tar.webdatasetMembers(shards, "id",
+      "content")
+      .withColumn("k",
+        regexp_extract(col("stem"), "_([0-9]+)$", 1).cast("long"))
+      .withColumn("sid", col("id") * 4 + col("k"))
+    val img = graft.operators.Png.decodePixels(
+      m.filter(col("ext") === "png")
+        .select(col("sid"), col("bytes")), "sid", "bytes")
+      .toDF().filter(col("decoded"))
+      .select(col("id").as("sid"), col("lumaTotal"))
+    val cap = m.filter(col("ext") === "txt")
+      .select(col("sid"), col("bytes").cast("string").as("caption"))
+    val wpAgg = img.join(cap, "sid")
+      .agg(count(lit(1)), sum(col("lumaTotal")),
+        sum(size(split(col("caption"), " ")).cast("long")))
+      .collect()(0)
+    val expLuma = (0 until 64).map(b => (0 until 2).map(k =>
+      (0 until 16).map(p => 3L * ((b * 7 + k * 13 + p * 5) % 256))
+        .sum).sum).sum * (nWp / 64L)
+    val expWords = (0 until 64).map(b =>
+      (0 until 2).map(k => 2L + (b + k) % 3).sum).sum * (nWp / 64L)
+    require(wpAgg.getLong(0) == 2L * nWp &&
+      wpAgg.getLong(1) == expLuma && wpAgg.getLong(2) == expWords,
+      s"wdsPairs: $wpAgg (expected luma $expLuma words $expWords)")
+    report("shards" -> nWp, "samples" -> 2 * nWp)
+  }
 
-    // --- subtitle extraction throughput: 512k SRT/VTT transcripts +
+  step("subtitleExtract") {
+    // subtitle extraction throughput: 512k SRT/VTT transcripts +
     // 300k WebM S_TEXT tracks through the strict walks, cue censuses
     // and exact ms totals in closed form.
-    {
-      import spark.implicits._
-      val nSb = 512000L // divisible by 64: the closed forms are per-base
-      val t102 = System.nanoTime()
-      val subs = spark.range(0L, nSb).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            val cues = (0 until (3 + b % 4)).map { k =>
-              (id % 1000 * 100L + k * 3000L,
-                id % 1000 * 100L + k * 3000L + 1000L + (b + k) % 500,
-                (0 until (2 + (b + k) % 3))
-                  .map(j => "t" + ((b * 13 + k * 5 + j * 7) % 50))
-                  .mkString(" "))
-            }
-            (id, if (id % 2 == 0) graft.operators.Subtitle.buildSrt(cues)
-            else graft.operators.Subtitle.buildVtt(cues,
-              withIds = b % 4 == 1))
+    val nSb = 512000L // divisible by 64: the closed forms are per-base
+    val subs = spark.range(0L, nSb).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          val cues = (0 until (3 + b % 4)).map { k =>
+            (id % 1000 * 100L + k * 3000L,
+              id % 1000 * 100L + k * 3000L + 1000L + (b + k) % 500,
+              (0 until (2 + (b + k) % 3))
+                .map(j => "t" + ((b * 13 + k * 5 + j * 7) % 50))
+                .mkString(" "))
           }
-        }.toDF("id", "content")
-      val sbAgg = graft.operators.Subtitle.subtitleCues(subs, "id",
-        "content")
-        .agg(count(lit(1)),
-          sum(col("end_ms") - col("start_ms"))).collect()(0)
-      val tSb = (System.nanoTime() - t102) / 1e9
-      val expCues = (0 until 64).map(b => 3L + b % 4).sum * (nSb / 64L)
-      val expSpeech = (0 until 64).map(b =>
-        (0 until (3 + b % 4)).map(k => 1000L + (b + k) % 500).sum)
-        .sum * (nSb / 64L)
-      require(sbAgg.getLong(0) == expCues &&
-        sbAgg.getLong(1) == expSpeech,
-        s"subtitles: $sbAgg (expected $expCues cues, $expSpeech ms)")
-      println(f"subtitleExtract: $nSb%d SRT/VTT transcripts -> " +
-        f"$expCues%d cues in $tSb%.1f s (${nSb / tSb}%.0f files/s), " +
-        f"speech-ms totals exact, " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+          (id, if (id % 2 == 0) graft.operators.Subtitle.buildSrt(cues)
+          else graft.operators.Subtitle.buildVtt(cues,
+            withIds = b % 4 == 1))
+        }
+      }.toDF("id", "content")
+    val sbAgg = graft.operators.Subtitle.subtitleCues(subs, "id",
+      "content")
+      .agg(count(lit(1)),
+        sum(col("end_ms") - col("start_ms"))).collect()(0)
+    val expCues = (0 until 64).map(b => 3L + b % 4).sum * (nSb / 64L)
+    val expSpeech = (0 until 64).map(b =>
+      (0 until (3 + b % 4)).map(k => 1000L + (b + k) % 500).sum)
+      .sum * (nSb / 64L)
+    require(sbAgg.getLong(0) == expCues &&
+      sbAgg.getLong(1) == expSpeech,
+      s"subtitles: $sbAgg (expected $expCues cues, $expSpeech ms)")
+    report("transcripts" -> nSb, "cues" -> expCues)
 
-      val nWs = 320000L // divisible by 64
-      val t103 = System.nanoTime()
-      val wsubs = spark.range(0L, nWs).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            val cues = (0 until (4 + b % 3)).map { k =>
-              (k * 1000L + b * 7L,
-                if (k % 5 == 4) -1L else 800L + (b + k) % 200,
-                (0 until (2 + (b + k) % 3))
-                  .map(j => "s" + ((b * 17 + k * 3 + j) % 40))
-                  .mkString(" "))
-            }
-            (id, graft.operators.Webm.buildWebm(
-              docType = if (b % 2 == 0) "webm" else "matroska",
-              timescaleNs = if (b % 2 == 0) 1000000L else 2000000L,
-              durationTicks = 10000.0,
-              videoCodec = if (b % 3 == 0) "V_VP9" else "",
-              width = 320, height = 240, subCues = cues))
+    val nWs = 320000L // divisible by 64
+    val wsubs = spark.range(0L, nWs).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          val cues = (0 until (4 + b % 3)).map { k =>
+            (k * 1000L + b * 7L,
+              if (k % 5 == 4) -1L else 800L + (b + k) % 200,
+              (0 until (2 + (b + k) % 3))
+                .map(j => "s" + ((b * 17 + k * 3 + j) % 40))
+                .mkString(" "))
           }
-        }.toDF("id", "content")
-      val wsAgg = graft.operators.Webm.webmSubtitleCues(wsubs, "id",
-        "content")
-        .agg(count(lit(1)),
-          sum(col("end_ms") - col("start_ms"))).collect()(0)
-      val tWs = (System.nanoTime() - t103) / 1e9
-      val expWCues = (0 until 64).map(b => 4L + b % 3).sum * (nWs / 64L)
-      val expWSpeech = (0 until 64).map { b =>
-        val scale = if (b % 2 == 0) 1L else 2L
-        (0 until (4 + b % 3)).map(k =>
-          if (k % 5 == 4) 0L else (800L + (b + k) % 200) * scale).sum
-      }.sum * (nWs / 64L)
-      require(wsAgg.getLong(0) == expWCues &&
-        wsAgg.getLong(1) == expWSpeech,
-        s"webmSubtitles: $wsAgg (expected $expWCues cues, " +
-          s"$expWSpeech ms)")
-      println(f"webmSubtitleExtract: $nWs%d Matroska/WebM S_TEXT " +
-        f"tracks -> $expWCues%d cues in $tWs%.1f s " +
-        f"(${nWs / tWs}%.0f files/s), speech-ms totals exact, " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
-    // --- ZIP64 shards at scale: 200k full-ZIP64-shape archives
+          (id, graft.operators.Webm.buildWebm(
+            docType = if (b % 2 == 0) "webm" else "matroska",
+            timescaleNs = if (b % 2 == 0) 1000000L else 2000000L,
+            durationTicks = 10000.0,
+            videoCodec = if (b % 3 == 0) "V_VP9" else "",
+            width = 320, height = 240, subCues = cues))
+        }
+      }.toDF("id", "content")
+    val wsAgg = graft.operators.Webm.webmSubtitleCues(wsubs, "id",
+      "content")
+      .agg(count(lit(1)),
+        sum(col("end_ms") - col("start_ms"))).collect()(0)
+    val expWCues = (0 until 64).map(b => 4L + b % 3).sum * (nWs / 64L)
+    val expWSpeech = (0 until 64).map { b =>
+      val scale = if (b % 2 == 0) 1L else 2L
+      (0 until (4 + b % 3)).map(k =>
+        if (k % 5 == 4) 0L else (800L + (b + k) % 200) * scale).sum
+    }.sum * (nWs / 64L)
+    require(wsAgg.getLong(0) == expWCues &&
+      wsAgg.getLong(1) == expWSpeech,
+      s"webmSubtitles: $wsAgg (expected $expWCues cues, " +
+        s"$expWSpeech ms)")
+    report("webmFiles" -> nWs, "webmCues" -> expWCues)
+  }
+
+  step("zip64Shards") {
+    // ZIP64 shards at scale: 200k full-ZIP64-shape archives
     // (sentinel EOCD -> locator -> ZIP64 record; per-entry 0x0001
     // extras) — every member CRC-verified, contents exact.
-    {
-      import spark.implicits._
-      val nZ64 = 200000L
-      val t110 = System.nanoTime()
-      val zips = spark.range(0L, nZ64).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            (id, graft.operators.Zip.buildZip((0 until 4).map { k =>
-              (s"z64/${id}_$k.txt",
-                s"zm:$id:$k".getBytes("UTF-8"), k % 2 == 1)
-            }, zip64 = true))
-          }
-        }.toDF("id", "content")
-      val zAgg = graft.operators.Zip.zipEntries(zips, "id", "content")
-        .agg(count(lit(1)), sum(col("size")),
-          sum(when(col("method") === "deflate", 1L).otherwise(0L)))
-        .collect()(0)
-      val tZ64 = (System.nanoTime() - t110) / 1e9
-      val expBytes = (0L until nZ64).map(id =>
-        (0 until 4).map(k => s"zm:$id:$k".length.toLong).sum).sum
-      require(zAgg.getLong(0) == 4L * nZ64 &&
-        zAgg.getLong(1) == expBytes && zAgg.getLong(2) == 2L * nZ64,
-        s"zip64: $zAgg")
-      println(f"zip64Shards: $nZ64%d ZIP64 archives -> ${4 * nZ64}%d " +
-        f"CRC-verified members in $tZ64%.1f s " +
-        f"(${nZ64 / tZ64}%.0f shards/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+    val nZ64 = 200000L
+    val zips = spark.range(0L, nZ64).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          (id, graft.operators.Zip.buildZip((0 until 4).map { k =>
+            (s"z64/${id}_$k.txt",
+              s"zm:$id:$k".getBytes("UTF-8"), k % 2 == 1)
+          }, zip64 = true))
+        }
+      }.toDF("id", "content")
+    val zAgg = graft.operators.Zip.zipEntries(zips, "id", "content")
+      .agg(count(lit(1)), sum(col("size")),
+        sum(when(col("method") === "deflate", 1L).otherwise(0L)))
+      .collect()(0)
+    val expBytes = (0L until nZ64).map(id =>
+      (0 until 4).map(k => s"zm:$id:$k".length.toLong).sum).sum
+    require(zAgg.getLong(0) == 4L * nZ64 &&
+      zAgg.getLong(1) == expBytes && zAgg.getLong(2) == 2L * nZ64,
+      s"zip64: $zAgg")
+    report("archives" -> nZ64, "members" -> 4 * nZ64)
+  }
 
-    // --- AVIF/HEIF at scale: 512k files, each with a thumbnail decoy
+  step("avifMeta") {
+    // AVIF/HEIF at scale: 512k files, each with a thumbnail decoy
     // item — primary-item resolution + irot display swap exact.
-    {
-      import spark.implicits._
-      val nAv = 512000L
-      val t111 = System.nanoTime()
-      val avifs = spark.range(0L, nAv).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            (id, graft.operators.Avif.buildAvif(
-              if (id % 2 == 0) "avif" else "heic",
-              Seq(
-                graft.operators.Avif.AvifItem(1L, 160L, 90L, 0, -1,
-                  if (id % 2 == 0) "av1C" else "hvcC"),
-                graft.operators.Avif.AvifItem(2L, 320L + 16 * (b % 8),
-                  240L + 16 * (b % 5), (b % 4) * 90,
-                  if (b % 5 == 0) b % 2 else -1,
-                  if (id % 2 == 0) "av1C" else "hvcC")),
-              primary = 2L, wideIndexes = b % 3 == 0,
-              pitmV1 = b % 7 == 0))
-          }
-        }.toDF("id", "content")
-      val aAgg = graft.operators.Avif.avifMetaScan(avifs, "id",
-          "content")
-        .agg(count(lit(1)), sum(when(col("parsed"), 1L).otherwise(0L)),
-          sum(col("disp_width")), sum(col("disp_height")),
-          sum(when(col("brand") === "avif", 1L).otherwise(0L)))
-        .collect()(0)
-      val tAv = (System.nanoTime() - t111) / 1e9
-      val expW = (0L until nAv).map { id =>
-        val b = (id % 64).toInt
-        val (w, h) = (320L + 16 * (b % 8), 240L + 16 * (b % 5))
-        if ((b % 4) * 90 == 90 || (b % 4) * 90 == 270) h else w
-      }.sum
-      val expH = (0L until nAv).map { id =>
-        val b = (id % 64).toInt
-        val (w, h) = (320L + 16 * (b % 8), 240L + 16 * (b % 5))
-        if ((b % 4) * 90 == 90 || (b % 4) * 90 == 270) w else h
-      }.sum
-      require(aAgg.getLong(0) == nAv && aAgg.getLong(1) == nAv &&
-        aAgg.getLong(2) == expW && aAgg.getLong(3) == expH &&
-        aAgg.getLong(4) == nAv / 2, s"avif: $aAgg")
-      println(f"avifMeta: $nAv%d AVIF/HEIC files (thumbnail decoys, " +
-        f"rotations) -> primary-item dims exact in $tAv%.1f s " +
-        f"(${nAv / tAv}%.0f files/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+    val nAv = 512000L
+    val avifs = spark.range(0L, nAv).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          (id, graft.operators.Avif.buildAvif(
+            if (id % 2 == 0) "avif" else "heic",
+            Seq(
+              graft.operators.Avif.AvifItem(1L, 160L, 90L, 0, -1,
+                if (id % 2 == 0) "av1C" else "hvcC"),
+              graft.operators.Avif.AvifItem(2L, 320L + 16 * (b % 8),
+                240L + 16 * (b % 5), (b % 4) * 90,
+                if (b % 5 == 0) b % 2 else -1,
+                if (id % 2 == 0) "av1C" else "hvcC")),
+            primary = 2L, wideIndexes = b % 3 == 0,
+            pitmV1 = b % 7 == 0))
+        }
+      }.toDF("id", "content")
+    val aAgg = graft.operators.Avif.avifMetaScan(avifs, "id",
+        "content")
+      .agg(count(lit(1)), sum(when(col("parsed"), 1L).otherwise(0L)),
+        sum(col("disp_width")), sum(col("disp_height")),
+        sum(when(col("brand") === "avif", 1L).otherwise(0L)))
+      .collect()(0)
+    val expW = (0L until nAv).map { id =>
+      val b = (id % 64).toInt
+      val (w, h) = (320L + 16 * (b % 8), 240L + 16 * (b % 5))
+      if ((b % 4) * 90 == 90 || (b % 4) * 90 == 270) h else w
+    }.sum
+    val expH = (0L until nAv).map { id =>
+      val b = (id % 64).toInt
+      val (w, h) = (320L + 16 * (b % 8), 240L + 16 * (b % 5))
+      if ((b % 4) * 90 == 90 || (b % 4) * 90 == 270) w else h
+    }.sum
+    require(aAgg.getLong(0) == nAv && aAgg.getLong(1) == nAv &&
+      aAgg.getLong(2) == expW && aAgg.getLong(3) == expH &&
+      aAgg.getLong(4) == nAv / 2, s"avif: $aAgg")
+    report("files" -> nAv)
+  }
 
-    // --- H.264/H.265 SPS honesty at scale: 256k MP4s (half avc1,
+  step("spsHonesty") {
+    // H.264/H.265 SPS honesty at scale: 256k MP4s (half avc1,
     // half hvc1), every third stsd lying — dims_match counts exact.
-    {
-      import spark.implicits._
-      val nSp = 256000L
-      val t112 = System.nanoTime()
-      val mp4s = spark.range(0L, nSp).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            val w = 320 + 2 * (b % 16)
-            val h = 180 + 2 * (b % 12)
-            val lie = id % 3 == 0
-            val bytes =
-              if (id % 2 == 0)
-                graft.operators.Mp4.buildMp4(600L, 1000L,
-                  if (lie) w + 16 else w, if (lie) h + 16 else h,
-                  videoExtra = graft.operators.Mp4.buildAvcC(
-                    graft.operators.Mp4.buildSps(w, h)))
-              else
-                graft.operators.Mp4.buildMp4(600L, 1000L,
-                  if (lie) w + 16 else w, if (lie) h + 16 else h,
-                  videoCodec = "hvc1",
-                  videoExtra = graft.operators.Mp4.buildHvcC(
-                    graft.operators.Mp4.buildHevcSps(w, h)))
-            (id, bytes)
-          }
-        }.toDF("id", "content")
-      val avc = graft.operators.Mp4.h264SpsScan(
-        mp4s.filter(col("id") % 2 === 0), "id", "content")
-      val hevc = graft.operators.Mp4.h265SpsScan(
-        mp4s.filter(col("id") % 2 =!= 0), "id", "content")
-      val sAgg = avc.select(col("id"), col("dims_match"),
-          col("parsed"))
-        .union(hevc.select(col("id"), col("dims_match"),
-          col("parsed")))
-        .agg(count(lit(1)), sum(when(col("parsed"), 1L).otherwise(0L)),
-          sum(when(col("dims_match"), 1L).otherwise(0L)))
-        .collect()(0)
-      val tSp = (System.nanoTime() - t112) / 1e9
-      val expMatch = (0L until nSp).count(id => id % 3 != 0).toLong
-      require(sAgg.getLong(0) == nSp && sAgg.getLong(1) == nSp &&
-        sAgg.getLong(2) == expMatch, s"sps: $sAgg (exp $expMatch)")
-      println(f"spsHonesty: $nSp%d MP4s (avc1+hvc1, every third " +
-        f"stsd lying) -> dims_match counts exact in $tSp%.1f s " +
-        f"(${nSp / tSp}%.0f files/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+    val nSp = 256000L
+    val mp4s = spark.range(0L, nSp).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          val w = 320 + 2 * (b % 16)
+          val h = 180 + 2 * (b % 12)
+          val lie = id % 3 == 0
+          val bytes =
+            if (id % 2 == 0)
+              graft.operators.Mp4.buildMp4(600L, 1000L,
+                if (lie) w + 16 else w, if (lie) h + 16 else h,
+                videoExtra = graft.operators.Mp4.buildAvcC(
+                  graft.operators.Mp4.buildSps(w, h)))
+            else
+              graft.operators.Mp4.buildMp4(600L, 1000L,
+                if (lie) w + 16 else w, if (lie) h + 16 else h,
+                videoCodec = "hvc1",
+                videoExtra = graft.operators.Mp4.buildHvcC(
+                  graft.operators.Mp4.buildHevcSps(w, h)))
+          (id, bytes)
+        }
+      }.toDF("id", "content")
+    val avc = graft.operators.Mp4.h264SpsScan(
+      mp4s.filter(col("id") % 2 === 0), "id", "content")
+    val hevc = graft.operators.Mp4.h265SpsScan(
+      mp4s.filter(col("id") % 2 =!= 0), "id", "content")
+    val sAgg = avc.select(col("id"), col("dims_match"),
+        col("parsed"))
+      .union(hevc.select(col("id"), col("dims_match"),
+        col("parsed")))
+      .agg(count(lit(1)), sum(when(col("parsed"), 1L).otherwise(0L)),
+        sum(when(col("dims_match"), 1L).otherwise(0L)))
+      .collect()(0)
+    val expMatch = (0L until nSp).count(id => id % 3 != 0).toLong
+    require(sAgg.getLong(0) == nSp && sAgg.getLong(1) == nSp &&
+      sAgg.getLong(2) == expMatch, s"sps: $sAgg (exp $expMatch)")
+    report("mp4s" -> nSp)
+  }
 
-    // --- Vorbis comments at scale: 512k FLAC/Ogg/Opus carriers ->
+  step("vorbisComments") {
+    // Vorbis comments at scale: 512k FLAC/Ogg/Opus carriers ->
     // 1.536M comment rows, key/value sums exact.
-    {
-      import spark.implicits._
-      val nVc = 512000L
-      val t113 = System.nanoTime()
-      val files = spark.range(0L, nVc).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            val comments = Seq("TITLE" -> s"t$id",
-              "ARTIST" -> s"a${b % 7}", "LANGUAGE" -> s"l${b % 9}")
-            val bytes = (id % 3) match {
-              case 0 => graft.operators.Audio.buildFlacHeader(8000, 1,
-                16, 4000, vendor = s"v${b % 5}", comments = comments)
-              case 1 => graft.operators.Audio.buildOgg("vorbis", 1,
-                8000, 800L, vendor = s"v${b % 5}", comments = comments)
-              case _ => graft.operators.Audio.buildOgg("opus", 2,
-                48000, 4800L, vendor = s"v${b % 5}",
-                comments = comments)
-            }
-            (id, bytes)
+    val nVc = 512000L
+    val files = spark.range(0L, nVc).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          val comments = Seq("TITLE" -> s"t$id",
+            "ARTIST" -> s"a${b % 7}", "LANGUAGE" -> s"l${b % 9}")
+          val bytes = (id % 3) match {
+            case 0 => graft.operators.Audio.buildFlacHeader(8000, 1,
+              16, 4000, vendor = s"v${b % 5}", comments = comments)
+            case 1 => graft.operators.Audio.buildOgg("vorbis", 1,
+              8000, 800L, vendor = s"v${b % 5}", comments = comments)
+            case _ => graft.operators.Audio.buildOgg("opus", 2,
+              48000, 4800L, vendor = s"v${b % 5}",
+              comments = comments)
           }
-        }.toDF("id", "content")
-      val vAgg = graft.operators.Audio.vorbisCommentScan(files, "id",
-          "content")
-        .agg(count(lit(1)),
-          sum(when(col("key") === "TITLE" &&
-            col("value") === concat(lit("t"), col("id")), 1L)
-            .otherwise(0L)),
-          sum(when(col("source") === "flac", 1L).otherwise(0L)))
-        .collect()(0)
-      val tVc = (System.nanoTime() - t113) / 1e9
-      val expFlac = 3L * (0L until nVc).count(_ % 3 == 0)
-      require(vAgg.getLong(0) == 3L * nVc &&
-        vAgg.getLong(1) == nVc && vAgg.getLong(2) == expFlac,
-        s"vorbisComments: $vAgg")
-      println(f"vorbisComments: $nVc%d FLAC/Ogg/Opus carriers -> " +
-        f"${3 * nVc}%d comment rows exact in $tVc%.1f s " +
-        f"(${nVc / tVc}%.0f files/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
+          (id, bytes)
+        }
+      }.toDF("id", "content")
+    val vAgg = graft.operators.Audio.vorbisCommentScan(files, "id",
+        "content")
+      .agg(count(lit(1)),
+        sum(when(col("key") === "TITLE" &&
+          col("value") === concat(lit("t"), col("id")), 1L)
+          .otherwise(0L)),
+        sum(when(col("source") === "flac", 1L).otherwise(0L)))
+      .collect()(0)
+    val expFlac = 3L * (0L until nVc).count(_ % 3 == 0)
+    require(vAgg.getLong(0) == 3L * nVc &&
+      vAgg.getLong(1) == nVc && vAgg.getLong(2) == expFlac,
+      s"vorbisComments: $vAgg")
+    report("carriers" -> nVc, "commentRows" -> 3 * nVc)
+  }
 
-    // --- MPEG-TS + ADTS at scale: 256k TS segments (h264/h265 SPS as
+  step("mpegtsMeta") {
+    // MPEG-TS + ADTS at scale: 256k TS segments (h264/h265 SPS as
     // the only dims source, embedded ADTS audio on 2 in 3) and 256k
     // raw ADTS streams — counts and field sums exact.
-    {
-      import spark.implicits._
-      val nTs = 256000L
-      val t114 = System.nanoTime()
-      val tss = spark.range(0L, nTs).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            val h265 = id % 4 == 3
-            val durMs = 1000L + 10L * b
-            val adts =
-              if (id % 3 == 2) None
-              else Some(graft.operators.MpegTs.buildAdts(1, 3 + b % 3,
-                1 + b % 2, 2))
-            (id, graft.operators.MpegTs.buildTs(
-              320 + 2 * (b % 16), 180 + 2 * (b % 12),
-              if (h265) { if (b % 2 == 0) 1 else 2 }
-              else { if (b % 2 == 0) 66 else 100 },
-              if (h265) 90 + 3 * (b % 4) else 30 + b % 4,
-              Seq(90000L, 90000L + 45L * durMs, 90000L + 90L * durMs),
-              adts, h265))
-          }
-        }.toDF("id", "content")
-      val tsAgg = graft.operators.MpegTs.tsMetaScan(tss, "id",
-          "content")
-        .agg(count(lit(1)), sum(when(col("parsed"), 1L).otherwise(0L)),
-          sum(col("width")), sum(col("duration_ms")),
-          sum(when(col("audio_codec") === "adts_aac", 1L)
-            .otherwise(0L)))
-        .collect()(0)
-      val tTs = (System.nanoTime() - t114) / 1e9
-      val expW = (0L until nTs).map(id => 320L + 2 * ((id % 64) % 16)).sum
-      val expDur = (0L until nTs).map(id => 1000L + 10L * (id % 64)).sum
-      val expAud = (0L until nTs).count(_ % 3 != 2).toLong
-      require(tsAgg.getLong(0) == nTs && tsAgg.getLong(1) == nTs &&
-        tsAgg.getLong(2) == expW && tsAgg.getLong(3) == expDur &&
-        tsAgg.getLong(4) == expAud, s"mpegts: $tsAgg")
-      println(f"mpegtsMeta: $nTs%d TS segments (PAT/PMT CRC-checked, " +
-        f"SPS-decoded dims, PTS spans) exact in $tTs%.1f s " +
-        f"(${nTs / tTs}%.0f files/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
+    val nTs = 256000L
+    val tss = spark.range(0L, nTs).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          val h265 = id % 4 == 3
+          val durMs = 1000L + 10L * b
+          val adts =
+            if (id % 3 == 2) None
+            else Some(graft.operators.MpegTs.buildAdts(1, 3 + b % 3,
+              1 + b % 2, 2))
+          (id, graft.operators.MpegTs.buildTs(
+            320 + 2 * (b % 16), 180 + 2 * (b % 12),
+            if (h265) { if (b % 2 == 0) 1 else 2 }
+            else { if (b % 2 == 0) 66 else 100 },
+            if (h265) 90 + 3 * (b % 4) else 30 + b % 4,
+            Seq(90000L, 90000L + 45L * durMs, 90000L + 90L * durMs),
+            adts, h265))
+        }
+      }.toDF("id", "content")
+    val tsAgg = graft.operators.MpegTs.tsMetaScan(tss, "id",
+        "content")
+      .agg(count(lit(1)), sum(when(col("parsed"), 1L).otherwise(0L)),
+        sum(col("width")), sum(col("duration_ms")),
+        sum(when(col("audio_codec") === "adts_aac", 1L)
+          .otherwise(0L)))
+      .collect()(0)
+    val expW = (0L until nTs).map(id => 320L + 2 * ((id % 64) % 16)).sum
+    val expDur = (0L until nTs).map(id => 1000L + 10L * (id % 64)).sum
+    val expAud = (0L until nTs).count(_ % 3 != 2).toLong
+    require(tsAgg.getLong(0) == nTs && tsAgg.getLong(1) == nTs &&
+      tsAgg.getLong(2) == expW && tsAgg.getLong(3) == expDur &&
+      tsAgg.getLong(4) == expAud, s"mpegts: $tsAgg")
+    report("tsSegments" -> nTs)
 
-      val nAd = 256000L
-      val rates = Array(48000L, 44100L, 32000L, 24000L)
-      val t115 = System.nanoTime()
-      val aacs = spark.range(0L, nAd).repartition(64)
-        .mapPartitions { it =>
-          it.map { id =>
-            val b = (id % 64).toInt
-            (id, graft.operators.MpegTs.buildAdts(b % 2, 3 + b % 4,
-              1 + b % 3, 3 + b % 5, 11 + b % 7, id % 3 == 0, b % 2))
-          }
-        }.toDF("id", "content")
-      val adAgg = graft.operators.MpegTs.adtsMetaScan(aacs, "id",
-          "content")
-        .agg(count(lit(1)), sum(when(col("parsed"), 1L).otherwise(0L)),
-          sum(col("samples")), sum(col("duration_ms")))
-        .collect()(0)
-      val tAd = (System.nanoTime() - t115) / 1e9
-      val expSamples = (0L until nAd).map { id =>
-        val b = (id % 64).toInt
-        (3L + b % 5) * (1L + b % 2) * 1024L
-      }.sum
-      val expMs = (0L until nAd).map { id =>
-        val b = (id % 64).toInt
-        (3L + b % 5) * (1L + b % 2) * 1024L * 1000L / rates(b % 4)
-      }.sum
-      require(adAgg.getLong(0) == nAd && adAgg.getLong(1) == nAd &&
-        adAgg.getLong(2) == expSamples && adAgg.getLong(3) == expMs,
-        s"adts: $adAgg (exp $expSamples / $expMs)")
-      println(f"adtsChains: $nAd%d ADTS streams -> sample/duration " +
-        f"sums exact in $tAd%.1f s (${nAd / tAd}%.0f files/s), " +
-        f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
-    }
-
-    // --- the COMPOSED nine-stage corpus build at 1M docs: a real WET
-    // drop dir streamed to disk, then buildCorpus end-to-end with
-    // exact planted attrition per stage + the all-skip resume — the
-    // constituent operators all have their own scale sections above;
-    // this drives their COMPOSITION (staged parquet, lineage tokens,
-    // the LM tier pass) at corpus scale.
-    CorpusBuildSmoke.run(spark,
-      nCb = args.lift(3).map(_.toInt).getOrElse(1000000))
-
-    // --- STREAMING multi-GiB tar shards: the path-level source walks
-    // shards far beyond any column-operator cap with ONE member
-    // resident — counts, byte sums, and planted bytes exact.
-    ShardStreamSmoke.run(spark, nShards = 4, membersPerShard = 1536,
-      memberBytes = 1 << 20)
-
-    // --- >4 GiB ZIP64 archive with bit-3 data descriptors: every
-    // local header lies, offsets cross the 4 GiB line, and the
-    // CD-authoritative seek walk reads every member CRC-exact.
-    ZipStreamSmoke.run(spark, nMembers = 66, memberBytes = 1 << 26)
-
-    // --- multi-GiB TS captures: ~24 h of PTS per capture streamed
-    // to disk PES-by-PES and walked back packet-by-packet — the
-    // multi-hour-recording shape no column operator can hold.
-    TsStreamSmoke.run(spark, nCaptures = 4, nPes = 2000000)
-
-    // --- multi-GiB trailing-moov MP4s: the archival layout no prefix
-    // read answers, seek-walked at O(headers + moov) residency — the
-    // census costs a few KB of reads per file whatever the mdat size.
-    Mp4StreamSmoke.run(spark, nFiles = 3, mdatBytes = 1536L << 20)
-
-    // --- multi-GiB Ogg dumps + many-frame GIFs: the census's last
-    // two whole-file reads, upgraded to page/sub-block hops — every
-    // page CRC still verified, every frame delay still summed, at a
-    // small fixed heap.
-    MediaStreamSmoke.run(spark, nFiles = 2, targetBytes = 1536L << 20)
-
-    spark.stop()
+    val nAd = 256000L
+    val rates = Array(48000L, 44100L, 32000L, 24000L)
+    val aacs = spark.range(0L, nAd).repartition(64)
+      .mapPartitions { it =>
+        it.map { id =>
+          val b = (id % 64).toInt
+          (id, graft.operators.MpegTs.buildAdts(b % 2, 3 + b % 4,
+            1 + b % 3, 3 + b % 5, 11 + b % 7, id % 3 == 0, b % 2))
+        }
+      }.toDF("id", "content")
+    val adAgg = graft.operators.MpegTs.adtsMetaScan(aacs, "id",
+        "content")
+      .agg(count(lit(1)), sum(when(col("parsed"), 1L).otherwise(0L)),
+        sum(col("samples")), sum(col("duration_ms")))
+      .collect()(0)
+    val expSamples = (0L until nAd).map { id =>
+      val b = (id % 64).toInt
+      (3L + b % 5) * (1L + b % 2) * 1024L
+    }.sum
+    val expMs = (0L until nAd).map { id =>
+      val b = (id % 64).toInt
+      (3L + b % 5) * (1L + b % 2) * 1024L * 1000L / rates(b % 4)
+    }.sum
+    require(adAgg.getLong(0) == nAd && adAgg.getLong(1) == nAd &&
+      adAgg.getLong(2) == expSamples && adAgg.getLong(3) == expMs,
+      s"adts: $adAgg (exp $expSamples / $expMs)")
+    report("adtsStreams" -> nAd)
   }
+
+  step("corpusBuild")(report(CorpusBuildSmoke.run(spark, nCb): _*))
+  step("shardStream")(report(ShardStreamSmoke.run(spark): _*))
+  step("zipStream")(report(ZipStreamSmoke.run(spark): _*))
+  step("tsStream")(report(TsStreamSmoke.run(spark): _*))
+  step("mp4Stream")(report(Mp4StreamSmoke.run(spark): _*))
+  step("mediaStream")(report(MediaStreamSmoke.run(spark): _*))
+
+  /** Each step by name, in run order, as a body that returns what it
+    * reported.
+    */
+  val steps: Seq[(String, () => Measure.Counts)] = all.result()
 }

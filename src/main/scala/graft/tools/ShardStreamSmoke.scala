@@ -8,31 +8,12 @@ import org.apache.spark.sql.functions._
   * member resident. Shards are written to disk member-by-member
   * (never a whole shard in memory on the writer side either), walked
   * via `TarShardSource.members`, and every count / byte sum / planted
-  * byte is verified exactly. Standalone main, and a section of
-  * [[ScaleSmoke]].
+  * byte is verified exactly. The `shardStream` step of [[ScaleSmoke]].
   */
 object ShardStreamSmoke {
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.configure(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark,
-      nShards = args.headOption.map(_.toInt).getOrElse(4),
-      membersPerShard = args.lift(1).map(_.toInt).getOrElse(1536),
-      memberBytes = args.lift(2).map(_.toInt).getOrElse(1 << 20))
-    spark.stop()
-  }
-
-  def run(spark: SparkSession, nShards: Int, membersPerShard: Int,
-      memberBytes: Int): Unit = {
-    val rt = Runtime.getRuntime
+  def run(spark: SparkSession, nShards: Int = 4, membersPerShard: Int = 1536,
+      memberBytes: Int = 1 << 20): Measure.Counts = {
     val dir = graft.Fixtures.scratchDir("scale-shards")
-    val t0 = System.nanoTime()
     // stream each shard to disk one MEMBER at a time: per-member
     // ustar blocks from the library builder, end marker appended once
     (0 until nShards).foreach { sIdx =>
@@ -54,11 +35,7 @@ object ShardStreamSmoke {
       out.close()
     }
     val totalBytes = nShards.toLong * membersPerShard * memberBytes
-    val built = (System.nanoTime() - t0) / 1e9
-    println(f"shardStream: wrote $nShards shards, " +
-      f"${totalBytes / 1e9}%.1f GB of member data in $built%.1f s")
 
-    val t1 = System.nanoTime()
     val members = graft.sources.TarShardSource.members(spark,
       dir.toString + "/big_*.tar", maxEntryBytes = 2 * memberBytes)
     val firstByte = udf((b: Array[Byte]) => (b(0) & 0xFF).toLong)
@@ -66,7 +43,6 @@ object ShardStreamSmoke {
       .agg(count(lit(1)), sum(col("size")),
         sum(firstByte(col("bytes"))))
       .collect()(0)
-    val tWalk = (System.nanoTime() - t1) / 1e9
     val expFirst = (0 until nShards).map { sIdx =>
       (0 until membersPerShard)
         .map(m => ((sIdx * 131 + m * 31) % 251).toLong).sum
@@ -83,18 +59,12 @@ object ShardStreamSmoke {
     require(probe(123456 % memberBytes) ==
       (((nShards / 2) * 131 + 77 * 31 + (123456 % memberBytes) * 7)
         % 251).toByte, "planted byte mismatch")
-    println(f"shardStream: ${nShards * membersPerShard}%d members " +
-      f"(${totalBytes / 1e9}%.1f GB) streamed off disk in $tWalk%.1f s " +
-      f"(${totalBytes / 1e9 / tWalk}%.2f GB/s), counts/sums/planted " +
-      f"bytes exact, " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
     // cleanup: 6 GiB of fixture must not outlive the smoke
     graft.Fixtures.delete(dir)
 
     // --- the ZIP counterpart: one multi-GiB archive walked off disk
     // via the random-access EOCD/CD path — CD + one member resident.
     val zdir = graft.Fixtures.scratchDir("scale-zip")
-    val t2 = System.nanoTime()
     val nZipMembers = 2048
     val zipMemberBytes = memberBytes
     // streamed writer: local headers + stored data to disk one member
@@ -148,16 +118,12 @@ object ShardStreamSmoke {
       f.close()
     }
     val zipTotal = nZipMembers.toLong * zipMemberBytes
-    println(f"shardStream(zip): wrote a ${zipTotal / 1e9}%.1f GB " +
-      f"archive in ${(System.nanoTime() - t2) / 1e9}%.1f s")
-    val t3 = System.nanoTime()
     val zMembers = graft.sources.ZipShardSource.members(spark,
       zdir.resolve("big.zip").toString,
       maxEntryBytes = 2 * zipMemberBytes)
     val zAgg = zMembers.toDF()
       .agg(count(lit(1)), sum(col("size")),
         sum(firstByte(col("bytes")))).collect()(0)
-    val tZ = (System.nanoTime() - t3) / 1e9
     val expZFirst = (0 until nZipMembers)
       .map(m => ((m * 31) % 251).toLong).sum
     require(zAgg.getLong(0) == nZipMembers.toLong,
@@ -165,10 +131,8 @@ object ShardStreamSmoke {
     require(zAgg.getLong(1) == zipTotal, s"zip byte sum ${zAgg.getLong(1)}")
     require(zAgg.getLong(2) == expZFirst,
       s"zip first-byte sum ${zAgg.getLong(2)} != $expZFirst")
-    println(f"shardStream(zip): $nZipMembers%d members " +
-      f"(${zipTotal / 1e9}%.1f GB, every CRC verified) walked off " +
-      f"disk in $tZ%.1f s (${zipTotal / 1e9 / tZ}%.2f GB/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
     graft.Fixtures.delete(zdir)
+    Seq("shards" -> nShards, "members" -> nShards * membersPerShard, "bytes" -> totalBytes,
+      "zipMembers" -> nZipMembers, "zipBytes" -> zipTotal)
   }
 }

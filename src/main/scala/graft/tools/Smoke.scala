@@ -73,9 +73,7 @@ object Smoke {
     Files.writeString(tmp, req)
     Files.move(tmp, reqDir.resolve("m2.json"))
     val q = sub.start()
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    while (engine.warehouse.table("response").filter("messageId = 'm2'").isEmpty
-        && System.nanoTime() < deadline) Thread.sleep(200)
+    q.processAllAvailable()
     sub.drain()
     println(s"drained: active=${q.isActive} exception=${q.exception}")
     engine.warehouse.table("response").show(false)

@@ -14,30 +14,12 @@ import org.apache.spark.sql.functions._
   * the tail routes sentinel classic EOCD → locator → ZIP64 EOCD.
   * A front-to-back reader believing local headers reads garbage
   * here; the CD-seeking walk reads every member CRC-exact with
-  * residency of CD + ONE member. Standalone main, and a section of
-  * [[ScaleSmoke]].
+  * residency of CD + ONE member. The `zipStream` step of [[ScaleSmoke]].
   */
 object ZipStreamSmoke {
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.configure(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    run(spark,
-      nMembers = args.headOption.map(_.toInt).getOrElse(66),
-      memberBytes = args.lift(1).map(_.toInt).getOrElse(1 << 26))
-    spark.stop()
-  }
-
-  def run(spark: SparkSession, nMembers: Int, memberBytes: Int): Unit = {
-    val rt = Runtime.getRuntime
+  def run(spark: SparkSession, nMembers: Int = 66, memberBytes: Int = 1 << 26): Measure.Counts = {
     val dir = graft.Fixtures.scratchDir("scale-zip64dd")
     val zipPath = dir.resolve("big_dd.zip")
-    val t0 = System.nanoTime()
     val out = new java.io.BufferedOutputStream(
       new java.io.FileOutputStream(zipPath.toFile), 1 << 20)
     var off = 0L
@@ -119,14 +101,9 @@ object ZipStreamSmoke {
     w16(0)
     out.close()
     val fileLen = zipPath.toFile.length()
-    val built = (System.nanoTime() - t0) / 1e9
     require(fileLen > (4L << 30),
       s"archive only $fileLen bytes — not a ZIP64-forcing smoke")
-    println(f"zip64ddStream: wrote ${fileLen / 1e9}%.2f GB archive " +
-      f"($nMembers members x ${memberBytes / 1e6}%.0f MB, bit-3 " +
-      f"lying local headers) in $built%.1f s")
 
-    val t1 = System.nanoTime()
     val members = graft.sources.ZipShardSource.members(spark,
       zipPath.toString, maxEntryBytes = memberBytes)
     val firstByte = udf((b: Array[Byte]) => (b(0) & 0xFF).toLong)
@@ -134,7 +111,6 @@ object ZipStreamSmoke {
       .agg(count(lit(1)), sum(col("size")),
         sum(firstByte(col("bytes"))))
       .collect()(0)
-    val tWalk = (System.nanoTime() - t1) / 1e9
     val expFirst = (0 until nMembers)
       .map(m => ((m * 131) % 251).toLong).sum
     require(agg.getLong(0) == nMembers.toLong,
@@ -152,10 +128,7 @@ object ZipStreamSmoke {
     val pos = memberBytes - 7
     val exp = (((nMembers - 1) * 131 + pos.toLong * 7) % 251).toByte
     require(deep(pos) == exp, s"deep byte ${deep(pos)} != $exp")
-    println(f"zip64ddStream: $nMembers%d members CRC-verified off the " +
-      f"CD-authoritative walk in $tWalk%.1f s " +
-      f"(${fileLen / 1e9 / tWalk}%.2f GB/s), " +
-      f"heapUsed=${(rt.totalMemory - rt.freeMemory) / 1e6}%.0f MB")
     graft.Fixtures.delete(dir)
+    Seq("archiveBytes" -> fileLen, "members" -> nMembers, "memberBytes" -> memberBytes)
   }
 }

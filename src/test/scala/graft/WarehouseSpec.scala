@@ -184,7 +184,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stagingLeft(wh).isEmpty, filesUnder(wh.root))
   }
 
-  test("writeFeatures and upsertByDataset replace exactly the partitions of their rows") {
+  test("writeFeatures replaces exactly the partitions of its rows") {
     import spark.implicits._
     val wh = freshWarehouse()
     val first = Seq(("a1", "u", "A"), ("b1", "u", "B"), ("b2", "u", "B"))
@@ -194,7 +194,7 @@ class WarehouseSpec extends AnyFunSuite with BeforeAndAfterAll {
     // columns in another order, and only dataset B
     wh.writeFeatures("node", Seq(("B", "b3", "u")).toDF("tdei_dataset_id", "feature", "requested_by"))
     assert(features(wh, "node", "A") == Set("a1") && features(wh, "node", "B") == Set("b3"))
-    wh.upsertByDataset("extension_file",
+    wh.writeFeatures("extension_file",
       Seq((1, "curbs", "{}", "u", "A")).toDF("id", "name", "file_meta", "requested_by", "tdei_dataset_id"))
     assert(wh.table("extension_file").collect().map(_.getAs[String]("name")).toSeq == Seq("curbs"))
     assert(stagingLeft(wh).isEmpty, stagingLeft(wh))
