@@ -29,6 +29,14 @@ import graft.service.ExtractLoadEngine
   * rows (`queue-service.ts:54-61` likewise catches and logs), and every
   * row of a batch reaches it, a row without a `messageId` included.
   *
+  * Checkpoint: Spark writes it through the session's `file:`
+  * implementation of Hadoop's `FileContext`
+  * (`fs.AbstractFileSystem.file.impl`). Under a session built through
+  * [[graft.GraftSession]] that is `sinks.ForkFreeLocalFs`, which starts
+  * no `chmod` or `readlink` process; Hadoop's stock `LocalFs` starts
+  * about 44 per drain without its native library. Both write the same
+  * files, so a checkpoint resumes under either.
+  *
   * Scale note: the micro-batch `collect()` pulls only job envelopes
   * (four short strings each — thousands of queued jobs are kilobytes);
   * all data-plane work stays distributed inside `processRequest`.

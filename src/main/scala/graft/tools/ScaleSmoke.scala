@@ -467,16 +467,17 @@ private final class ScaleSteps(spark: SparkSession, n: Int, nDocs: Int, nVec: In
   }
 
   step("tokenBudget") {
-    // token-budget sample at 1M docs: every doc is exactly 30
-    // tokens, so a 15M-token budget keeps EXACTLY 500k docs summing to
-    // exactly 15M — the histogram walk + boundary window must land the
-    // precise prefix.
+    // token-budget sample: every doc is exactly 30 tokens, so a budget
+    // of 15 tokens per doc (15M at 1M docs) keeps EXACTLY half the docs
+    // summing to exactly the budget — the histogram walk + boundary
+    // window must land the precise prefix.
     val docs = syntheticDocs()
+    val budget = 15L * nDocs
     val tb = graft.operators.DataSelection.sampleTokenBudget(
-      docs, "id", "text", budgetTokens = 15000000L)
+      docs, "id", "text", budgetTokens = budget)
       .agg(count(lit(1)), sum(col("n_tokens"))).collect()(0)
     require(tb.getLong(0) == nDocs / 2L, s"budget kept ${tb.getLong(0)}")
-    require(tb.getLong(1) == 15000000L, s"budget tokens ${tb.getLong(1)}")
+    require(tb.getLong(1) == budget, s"budget tokens ${tb.getLong(1)}")
     report("keptDocs" -> tb.getLong(0), "tokens" -> tb.getLong(1))
   }
 

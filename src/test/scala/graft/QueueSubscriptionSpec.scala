@@ -1,10 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.FileContext
+import org.apache.hadoop.fs.local.LocalFs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,19 +15,22 @@ import org.scalatest.BeforeAndAfterAll
 
 import graft.model.{ExtractLoadRequest, LoadResponse, QueueMessage}
 import graft.service.ExtractLoadEngine
+import graft.sinks.ForkFreeLocalFs
 import graft.streaming.QueueSubscription
 
 /** S1 streaming intake: file-drop requests → foreachBatch →
   * processRequest, bounded concurrency, checkpointed at-least-once
-  * resume, failure responses for bad requests.
+  * resume, failure responses for bad requests. The session is built
+  * through [[GraftSession]], so every checkpoint here is written through
+  * its fork-free `file:` implementation.
   */
 class QueueSubscriptionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = GraftSession.configure(SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+    .config("spark.ui.enabled", "false"))
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
@@ -84,6 +90,46 @@ class QueueSubscriptionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(all.length == 3)
     assert(all.count(_.getAs[Boolean]("success")) == 2)
     assert(engine.warehouse.table("node").count() == 2) // ds_ok + ds_ok2
+  }
+
+  test("a checkpoint written under Hadoop's stock LocalFs resumes under GraftSession's, and back") {
+    val stockSession = spark.newSession()
+    stockSession.conf.set("fs.AbstractFileSystem.file.impl", classOf[LocalFs].getName)
+    def checkpointFs(s: SparkSession) =
+      FileContext.getFileContext(Fixtures.root.toUri, s.sessionState.newHadoopConf()).getDefaultFileSystem.getClass
+    assert(checkpointFs(spark) == classOf[ForkFreeLocalFs])
+    assert(checkpointFs(stockSession) == classOf[LocalFs])
+
+    val processed = new ConcurrentLinkedQueue[String]()
+    val engine = new ExtractLoadEngine(spark, Fixtures.scratchDir("graft-wh-compat").toString) {
+      override def processRequest(msg: QueueMessage): LoadResponse = {
+        processed.add(msg.messageId)
+        super.processRequest(msg)
+      }
+    }
+    def drained(): Set[String] = {
+      val ids = processed.asScala.toList
+      processed.clear()
+      assert(ids.distinct == ids, ids)
+      ids.toSet
+    }
+    val zip = writeZip()
+    for ((first, second, tag) <- Seq((stockSession, spark, "to_graft"), (spark, stockSession, "to_stock"))) {
+      val reqDir = Fixtures.scratchDir(s"graft-req-$tag")
+      val ckDir = Fixtures.scratchDir(s"graft-ck-$tag").toString
+      dropRequest(reqDir, s"${tag}_1", "osw", zip)
+      runAvailable(new QueueSubscription(first, engine, reqDir.toString, ckDir))
+      assert(drained() == Set(s"${tag}_1"))
+      // the resume under the other file system processes exactly the new files
+      dropRequest(reqDir, s"${tag}_2", "osw", zip)
+      dropRequest(reqDir, s"${tag}_3", "osw", zip)
+      runAvailable(new QueueSubscription(second, engine, reqDir.toString, ckDir))
+      assert(drained() == Set(s"${tag}_2", s"${tag}_3"), tag)
+      runAvailable(new QueueSubscription(first, engine, reqDir.toString, ckDir))
+      assert(drained().isEmpty, tag)
+    }
+    val resp = engine.warehouse.table("response").collect()
+    assert(resp.length == 6 && resp.forall(_.getAs[Boolean]("success")), resp.toSeq)
   }
 
   test("drain: in-flight batch completes with its response row, then the query terminates") {
